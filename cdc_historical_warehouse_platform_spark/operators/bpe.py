@@ -108,8 +108,10 @@ def _safe_merge_prefix(
         if c < min_pair_count:
             # everything remaining (old: rank >= this row; new: bounded
             # by a conflicting old pair ranked here or later) is below
-            # the floor — training is finished after the accepted prefix
-            return accepted, True
+            # the floor — training is finished after the accepted prefix,
+            # unless a self-pair or result collision broke that bound:
+            # then the caller re-collects before deciding
+            return accepted, chain_ok
         if i > 0:
             nxt = int(rows[i + 1]["pair_count"]) if i + 1 < len(rows) else None
             strict = nxt is None or nxt < c

@@ -74,22 +74,6 @@ __all__ = [
 SUMMARY_MEASURE_TYPE = "decimal(28,2)"
 _SUM_TYPE = "decimal(38,2)"  # Spark's SUM(decimal(28,2)) result type
 
-# A/B switch for the staged-batch pin (r13 optimization round,
-# verdict task #3): plan-only — flipping it cannot change any result,
-# only whether the latest-per-key window re-runs per delta branch.
-# MEASURED (scripts/ab_ivm_pin.py, order-rotated interleaved, 4-6
-# rounds): at sf0.1 the pin is a small win (scd2_incremental_revenue
-# min 3.45 vs 3.86 s; histogram 4.08 vs 4.68), and at the sf1 10x
-# rehearsal it is decisive (revenue min 7.4 vs 11.7 s, median 8.7 vs
-# 14.4; histogram 9.9 vs 10.7) — the deduplicated window re-runs grow
-# with batch size while the pin's materialization stays one batch
-# write. KEPT on.
-_PIN_STAGED = True
-
-
-def _maybe_pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False) if _PIN_STAGED else df
-
 
 def _summary_schema(group_field: T.StructField) -> T.StructType:
     return T.StructType(
@@ -153,6 +137,10 @@ def summary_delta(
     exactly, deletes subtract, late events net to zero, and DELETEs of
     missing keys fall out silently — all matching the merge."""
     latest = dedupe_latest_per_key(changes, key=change_key)
+    # Pinned: the staged batch feeds several delta branches, and without
+    # the pin its latest-per-key window re-runs once per branch (sf1
+    # rehearsal, revenue batch: 7.4 s pinned vs 11.7 s unpinned).
+    # Batch-sized, so the checkpoint is bounded at any scale.
     staged = latest.select(
         F.col(change_key).cast("long").alias("__b_key"),
         F.col(group_col).alias("__b_group"),
@@ -161,15 +149,7 @@ def summary_delta(
         .alias("__b_measure"),
         F.col("operation_type").alias("__b_op"),
         F.col("cdc_timestamp").alias("__b_ts"),
-    # Pin the staged batch (r12 optimization round, guide §2.4): it
-    # feeds multiple delta branches (the batch-local term plus the
-    # current-slice probe's build side), and without the boundary the
-    # latest-per-key window (one sort + one exchange of the batch)
-    # re-runs once per branch. Batch-sized, never dimension-sized, so
-    # the checkpoint is bounded at any scale. _maybe_pin gates it for
-    # the r13 scale A/B (plan-only; results identical either way).
-    )
-    staged = _maybe_pin(staged)
+    ).localCheckpoint(eager=False)
     cur_slim = current.select(
         F.col(business_key).alias("__c_key"),
         F.col(group_col).alias("__c_group"),
@@ -321,6 +301,7 @@ def maintain_group_extrema(
     pure column arithmetic (count delta + least/greatest against the
     additions' per-group extrema)."""
     latest = dedupe_latest_per_key(changes, key=change_key)
+    # pinned for the same reason as in summary_delta
     staged = latest.select(
         F.col(change_key).cast("long").alias("__b_key"),
         F.col(group_col).alias("__b_group"),
@@ -329,15 +310,7 @@ def maintain_group_extrema(
         .alias("__b_measure"),
         F.col("operation_type").alias("__b_op"),
         F.col("cdc_timestamp").alias("__b_ts"),
-    # Pin the staged batch (r12 optimization round, guide §2.4): it
-    # feeds multiple delta branches (the batch-local term plus the
-    # current-slice probe's build side), and without the boundary the
-    # latest-per-key window (one sort + one exchange of the batch)
-    # re-runs once per branch. Batch-sized, never dimension-sized, so
-    # the checkpoint is bounded at any scale. _maybe_pin gates it for
-    # the r13 scale A/B (plan-only; results identical either way).
-    )
-    staged = _maybe_pin(staged)
+    ).localCheckpoint(eager=False)
     cur_slim = current.select(
         F.col(business_key).alias("__c_key"),
         F.col(group_col).alias("__c_group"),

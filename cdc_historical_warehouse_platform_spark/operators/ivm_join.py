@@ -19,8 +19,8 @@ Scale shape: each delta term probes the OPPOSITE side's state with the
 (micro-batch-sized) delta broadcast — the states are scanned, never
 shuffled. Consolidation (summing multiplicities and dropping zeros) is
 O(view), so it belongs at compaction cadence, not per batch: append
-the per-batch view deltas LSM-style (the MergeOnRead store pattern)
-and fold with :func:`consolidate` when the segment count grows —
+the per-batch view deltas LSM-style (log-structured merge: append
+deltas, fold them later) and fold with :func:`consolidate` when the segment count grows —
 read-time correctness never depends on consolidation because multiset
 semantics are additive.
 """

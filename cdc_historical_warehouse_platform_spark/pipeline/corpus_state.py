@@ -25,9 +25,9 @@ later epochs are protected).
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 from pathlib import Path
+
+from cdc_historical_warehouse_platform_spark.sources.tables import atomic_write_text
 
 __all__ = ["MARKER", "STATE_DIRS", "snapshot", "write_marker", "read_marker", "repair"]
 
@@ -97,15 +97,7 @@ def write_marker(
         marker["manifest"] = json.loads((out / "_manifest.json").read_text())
     except FileNotFoundError:
         pass
-    fd, tmp = tempfile.mkstemp(dir=out, prefix="._commit_")
-    try:
-        with os.fdopen(fd, "w") as f:
-            json.dump(marker, f, sort_keys=True)
-        os.replace(tmp, out / MARKER)
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+    atomic_write_text(out / MARKER, json.dumps(marker, sort_keys=True))
     return marker
 
 

@@ -44,8 +44,6 @@ would allow during a rebuild).
 from __future__ import annotations
 
 import json
-import os
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,7 +58,10 @@ from cdc_historical_warehouse_platform_spark.operators.similarity import (
     quantize_int8,
     sq_ivf_search,
 )
-from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
+from cdc_historical_warehouse_platform_spark.sources.tables import (
+    VersionedTable,
+    atomic_write_text,
+)
 
 __all__ = ["IVFIndex"]
 
@@ -82,15 +83,7 @@ class IVFIndex:
             return None
 
     def _write_pointer(self, meta: dict) -> None:
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._ptr_")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, self.path / _POINTER)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        atomic_write_text(self.path / _POINTER, json.dumps(meta))
 
     def exists(self) -> bool:
         meta = self._read_pointer()

@@ -21,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 import time
 from pathlib import Path
 
@@ -34,9 +33,12 @@ from cdc_historical_warehouse_platform_spark.operators.scd2 import (
     scd2_build_from_change_log,
     scd2_merge_tagged,
 )
-from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
+from cdc_historical_warehouse_platform_spark.sources.tables import (
+    VersionedTable,
+    atomic_write_text,
+)
 
-__all__ = ["SCD2DimStore", "BucketedSCD2DimStore", "MergeOnReadSCD2DimStore"]
+__all__ = ["SCD2DimStore"]
 
 _POINTER = "_LATEST"
 
@@ -51,23 +53,21 @@ def _pid_alive(pid: int) -> bool:
     return True
 
 
-
 def _seed_or_merge_tagged(
     cur: DataFrame, changes: DataFrame, batch_id: str | None, first: bool
 ) -> DataFrame:
-    """The tagged merge, with the bulk-seed fast path all three store
-    tiers share: a FIRST-EVER batch carrying at most one change per
-    key (the normal seed shape) routes through the one-pass change-log
-    builder — one business-key shuffle plus windows, no merge join
-    machinery (scd2.py: "Bulk HISTORY loads should use
-    scd2_build_from_change_log"). Output equality with the merge is
-    pinned by tests; rapid-update seeds fall back to the merge because
-    its collapse semantics differ from the builder's
-    version-per-change. The ≤1-per-key probe is one bounded aggregate,
-    paid once per store lifetime. Later batches keep the broadcast
-    micro-batch hint; a bulk first batch through the merge must not
-    force a dimension-sized broadcast (OOM), so the hint follows
-    ``first``."""
+    """The tagged merge, with the bulk-seed fast path: a FIRST-EVER
+    batch carrying at most one change per key (the normal seed shape)
+    routes through the one-pass change-log build — one business-key
+    shuffle plus windows, no merge join machinery (scd2.py: "Bulk
+    HISTORY loads should use scd2_build_from_change_log"). Output
+    equality with the merge is pinned by tests; rapid-update seeds fall
+    back to the merge because its collapse semantics differ from the
+    bulk build's version-per-change. The ≤1-per-key probe is one bounded
+    aggregate, paid once per store lifetime. Later batches keep the
+    broadcast micro-batch hint; a bulk first batch through the merge
+    must not force a dimension-sized broadcast (OOM), so the hint
+    follows ``first``."""
     if first:
         max_per_key = (
             changes.groupBy("id").count().agg(F.max("count")).first()[0] or 0
@@ -123,27 +123,18 @@ class SCD2DimStore:
         # pair (the sub-tables retain those versions until their own
         # vacuum), so read(version=N) can resolve a historical
         # consistent (current, history) snapshot
-        if "version" in meta and ("current_version" in meta or "buckets" in meta):
-            prev = self._read_pointer() or {}
-            log = dict(prev.get("pointer_log", {}))
-            log[str(meta["version"])] = {
-                "current_version": meta.get("current_version"),
-                "history_version": meta["history_version"],
-            }
-            for v in sorted(map(int, log)):
-                if len(log) <= 8:
-                    break
-                del log[str(v)]
-            meta = {**meta, "pointer_log": log}
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._ptr_")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, self.path / _POINTER)
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        prev = self._read_pointer() or {}
+        log = dict(prev.get("pointer_log", {}))
+        log[str(meta["version"])] = {
+            "current_version": meta["current_version"],
+            "history_version": meta["history_version"],
+        }
+        for v in sorted(map(int, log)):
+            if len(log) <= 8:
+                break
+            del log[str(v)]
+        meta = {**meta, "pointer_log": log}
+        atomic_write_text(self.path / _POINTER, json.dumps(meta))
 
     # --- table facade (VersionedTable-compatible where it matters) ---------
 
@@ -360,454 +351,3 @@ class SCD2DimStore:
             F.max("valid_from").alias("latest_record"),
         ).collect()[0]
         return row.asDict()
-
-
-class BucketedSCD2DimStore(SCD2DimStore):
-    """The key-clustered current slice: touched-range-only merge.
-
-    ``SCD2DimStore.apply_batch`` scans AND REWRITES the whole current
-    slice per batch — O(current) write amplification that the single
-    scan cannot hide once the dimension outgrows the batch by orders
-    of magnitude. This store RANGE-partitions the current slice into
-    immutable directories of ``key_span`` consecutive business keys
-    (bucket = key div span — the map grows with the key domain, no
-    modulo); a batch reads and rewrites ONLY the buckets its keys fall
-    in. CDC batches cluster by key recency (new orders insert at the
-    tail, mutations skew recent), so the touched set is a handful of
-    buckets and per-batch work is O(touched_buckets × key_span +
-    batch) — independent of total dimension size.
-
-    The earlier hash-bucketed variant of this store was measured and
-    rejected: xxhash spreads even a 250-key micro-batch over ~90% of
-    1024 buckets (coupon collector), so every batch churned hundreds
-    of tiny files and lost 10× to the full rewrite at 2M rows. Range
-    bucketing matches the workload's key locality instead; for
-    key-UNIFORM update patterns use MergeOnReadSCD2DimStore, whose
-    O(batch) delta appends don't depend on locality at all.
-
-    Pointer layout (one atomic ``_LATEST`` swap, same recovery story
-    as the base class): ``buckets`` maps bucket id → committed
-    directory name under ``current_buckets/``; untouched buckets keep
-    their directory BY REFERENCE across versions (never copied, never
-    rewritten). ``maps`` keeps the last few versions' maps so
-    ``vacuum_buckets`` can retire superseded directories without
-    racing a reader that resolved an older pointer.
-
-    Crash model: staged bucket dirs move into place under names keyed
-    to the NEW version, then the pointer swaps. A crash before the
-    swap leaves the old pointer consistent; the replay (same txn_id)
-    recomputes the stage and re-adopts over any half-moved dirs
-    (rmtree + move, idempotent), and the history sub-table's txn guard
-    makes its re-append a no-op. Orphaned dirs from an abandoned crash
-    are retired by ``vacuum_buckets`` — never on the hot path.
-
-    The merge itself is the same single-probe ``scd2_merge_tagged``;
-    correctness against the full-rewrite store is pinned by
-    tests/test_bucketed_dim.py's lockstep equality suite.
-    """
-
-    def __init__(self, path: str | Path, key_span: int = 1_000_000):
-        super().__init__(path)
-        if key_span < 1:
-            raise ValueError(f"key_span must be >= 1, got {key_span}")
-        self.key_span = key_span
-        self.buckets_dir = self.path / "current_buckets"
-        self.buckets_dir.mkdir(exist_ok=True)
-
-    def _bucket_of(self, col, span: int):
-        # floor-div keeps negative keys lawful (one bucket per span)
-        return F.floor(col.cast("long") / F.lit(span)).cast("long")
-
-    def read_current(self, spark: SparkSession) -> DataFrame:
-        meta = self._read_pointer()
-        if meta is None:
-            return empty_dim(spark)
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        dirs = [str(self.buckets_dir / d) for d in meta["buckets"].values()]
-        if not dirs:
-            return empty_dim(spark, schema)
-        return spark.read.schema(schema).parquet(*dirs)
-
-    def apply_batch(
-        self, spark: SparkSession, changes: DataFrame, txn_id: str, batch_id: str | None = None
-    ) -> bool:
-        from cdc_historical_warehouse_platform_spark.operators.scd2 import BUSINESS_KEY
-
-        meta = self._read_pointer()
-        txns = list(meta.get("txns", [])) if meta else []
-        if txn_id in txns:
-            return False
-        n = meta["key_span"] if meta else self.key_span
-
-        _reclaim_stages(self.path)
-
-        # the micro-batch names its touched buckets (tiny collect: ≤ n
-        # ints); only those current directories enter the merge
-        touched = sorted(
-            r["b"]
-            for r in changes.select(
-                self._bucket_of(F.col("id"), n).alias("b")
-            ).distinct().collect()
-        )
-        cur_map: dict = dict(meta["buckets"]) if meta else {}
-        touched_dirs = [
-            str(self.buckets_dir / cur_map[str(b)])
-            for b in touched
-            if str(b) in cur_map
-        ]
-        if meta is not None:
-            from pyspark.sql.types import StructType
-
-            schema = StructType.fromJson(json.loads(meta["schema"]))
-            cur = (
-                spark.read.schema(schema).parquet(*touched_dirs)
-                if touched_dirs
-                else empty_dim(spark, schema)
-            )
-        else:
-            cur = empty_dim(spark)
-
-        tagged = _seed_or_merge_tagged(
-            cur, changes, batch_id, first=meta is None
-        ).localCheckpoint(eager=True)  # touched-slice-sized; feeds 2 writes
-        dim_columns = [c for c in tagged.columns if c != PART_COLUMN]
-
-        expired = tagged.filter(F.col(PART_COLUMN) == "expired").drop(PART_COLUMN)
-        if expired.isEmpty():
-            hist_v = meta["history_version"] if meta else -1
-        else:
-            hist_v = self.history.append(expired, txn_id=txn_id)
-
-        new_version = (meta["version"] + 1) if meta else 0
-        stage = self.path / f"._stage_{os.getpid()}"
-        (
-            tagged.filter(F.col(PART_COLUMN) == "current")
-            .drop(PART_COLUMN)
-            .withColumn("__bucket", self._bucket_of(F.col(BUSINESS_KEY), n))
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(str(stage))
-        )
-        new_map = dict(cur_map)
-        for b in touched:  # emptied buckets leave the map entirely
-            new_map.pop(str(b), None)
-        for bdir in sorted(stage.glob("__bucket=*")):
-            b = bdir.name.split("=", 1)[1]
-            target = self.buckets_dir / f"b{b}_v{new_version}"
-            if target.exists():  # half-adopted replay
-                shutil.rmtree(target)
-            os.replace(bdir, target)
-            new_map[b] = target.name
-        shutil.rmtree(stage, ignore_errors=True)
-
-        schema_json = json.dumps(
-            json.loads(
-                tagged.drop(PART_COLUMN).schema.json()
-            )  # normalize formatting
-        )
-        maps = dict(meta.get("maps", {})) if meta else {}
-        maps[str(new_version)] = new_map
-        for v in sorted(map(int, maps)):  # bound pointer growth
-            if len(maps) <= 8:
-                break
-            del maps[str(v)]
-        self._write_pointer(
-            {
-                "version": new_version,
-                "key_span": n,
-                "buckets": new_map,
-                "maps": maps,
-                "history_version": hist_v,
-                "schema": schema_json,
-                "columns": dim_columns,
-                "committed_at": time.time(),
-                "txns": txns + [txn_id],
-            }
-        )
-        return True
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Time travel for the bucketed store: historical bucket maps
-        are retained in the pointer (last 8 versions, same budget as
-        the base store's pointer log) and superseded bucket dirs stay
-        on disk until vacuum_buckets — so a logged version resolves
-        exactly, or fails loudly after vacuum."""
-        meta = self._read_pointer()
-        if meta is None:
-            raise FileNotFoundError(f"dim store {self.path} is empty")
-        if version is None or version == meta["version"]:
-            return self.read_current(spark).unionByName(self.read_history(spark))
-        vmap = meta.get("maps", {}).get(str(version))
-        entry = meta.get("pointer_log", {}).get(str(version))
-        if vmap is None or entry is None:
-            raise ValueError(
-                f"version {version} not retained (maps kept: "
-                f"{sorted(map(int, meta.get('maps', {})))})"
-            )
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        dirs = [str(self.buckets_dir / d) for d in vmap.values()]
-        for d in dirs:
-            if not Path(d).exists():
-                raise ValueError(
-                    f"version {version}'s bucket {d} was vacuumed"
-                )
-        cur = (
-            spark.read.schema(schema).parquet(*dirs)
-            if dirs
-            else empty_dim(spark, schema)
-        )
-        if entry["history_version"] >= 0:
-            hist = self.history.read(spark, version=entry["history_version"])
-        else:
-            hist = empty_dim(spark, schema)
-        return cur.unionByName(hist)
-
-    def vacuum_buckets(self, keep_last: int = 2) -> list[str]:
-        """Retire bucket directories not referenced by any of the last
-        ``keep_last`` pointer maps (maintenance cadence, like
-        VersionedTable.vacuum — never on the write path)."""
-        meta = self._read_pointer()
-        if meta is None:
-            return []
-        maps = meta.get("maps", {str(meta["version"]): meta["buckets"]})
-        keep_versions = sorted(map(int, maps))[-keep_last:]
-        live = {
-            d for v in keep_versions for d in maps[str(v)].values()
-        }
-        removed = []
-        for d in sorted(self.buckets_dir.iterdir()):
-            if d.is_dir() and d.name not in live:
-                shutil.rmtree(d, ignore_errors=True)
-                removed.append(d.name)
-        return removed
-
-
-class MergeOnReadSCD2DimStore(SCD2DimStore):
-    """The write-amplification-optimal tier: O(batch) writes per batch.
-
-    Both siblings pay an O(current)-sized WRITE every batch (the full
-    store rewrites the slice; the bucketed store rewrites the touched
-    buckets, which a hash-spread batch makes most of them). This store
-    never rewrites the base on the hot path: each batch appends
-
-    - the merge's expired rows to ``history`` (as always),
-    - the touched keys' NEW current rows as one delta segment, and
-    - tombstone keys (DELETEs — expirations with no successor),
-
-    and read_current resolves ``base ∪ deltas − tombstones`` lazily:
-    base rows whose key appears in no delta/tombstone pass through; a
-    touched key takes its row from the HIGHEST-sequence event, absent
-    if that event is a tombstone. While deltas are compaction-bounded
-    the resolution is one window over the (small) delta union plus one
-    join of the base against the touched-key set — the base is scanned,
-    never shuffled, never rewritten.
-
-    ``compact_current`` folds the resolved view back into the base
-    (one O(current) job at maintenance cadence — the same posture as
-    compact_history / OPTIMIZE) and clears the delta list. The classic
-    LSM trade: per-batch I/O drops from O(current + batch) read +
-    O(current) write to O(current) read + O(batch) write, while reads
-    carry a delta-resolution surcharge until the next compaction.
-
-    The merge sees ONLY the batch keys' resolved current rows (a
-    semi-join — untouched keys never re-emit), so the delta segment is
-    batch-bounded by construction. Equality with the full-rewrite
-    store is pinned by tests/test_bucketed_dim.py's lockstep suite.
-    """
-
-    def __init__(self, path: str | Path):
-        super().__init__(path)
-        self.deltas_dir = self.path / "current_deltas"
-        self.deltas_dir.mkdir(exist_ok=True)
-
-    # --- resolution ---------------------------------------------------------
-
-    def _resolved(
-        self, spark: SparkSession, meta: dict, max_seq: int | None = None
-    ) -> DataFrame:
-        from pyspark.sql import Window as W
-
-        from cdc_historical_warehouse_platform_spark.operators.scd2 import BUSINESS_KEY
-        from pyspark.sql.types import StructType
-
-        base = (
-            self.current.read(spark, version=meta["current_version"])
-            if meta["current_version"] >= 0
-            else empty_dim(spark, StructType.fromJson(json.loads(meta["schema"])))
-        )
-        segments = meta["delta_segments"]
-        if max_seq is not None:
-            segments = [g for g in segments if g["seq"] <= max_seq]
-        if not segments:
-            return base
-        schema = StructType.fromJson(json.loads(meta["schema"]))
-        events = None
-        for seg in segments:
-            part = (
-                spark.read.schema(schema)
-                .parquet(str(self.deltas_dir / seg["dir"]))
-                .withColumn("__seq", F.lit(seg["seq"]).cast("long"))
-                .withColumn("__tomb", F.lit(False))
-            )
-            events = part if events is None else events.unionByName(part)
-            if seg.get("tombstones"):
-                null_row = [
-                    F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                    if f.name != BUSINESS_KEY
-                ]
-                tomb = (
-                    spark.read.schema(f"{BUSINESS_KEY} long")
-                    .parquet(str(self.deltas_dir / seg["tombstones"]))
-                    .select(F.col(BUSINESS_KEY), *null_row)
-                    .withColumn("__seq", F.lit(seg["seq"]).cast("long"))
-                    .withColumn("__tomb", F.lit(True))
-                )
-                events = events.unionByName(tomb.select(*events.columns))
-        w = W.partitionBy(BUSINESS_KEY).orderBy(F.desc("__seq"), F.desc("__tomb"))
-        latest = (
-            events.withColumn("__rn", F.row_number().over(w))
-            .filter((F.col("__rn") == 1) & ~F.col("__tomb"))
-            .drop("__rn", "__seq", "__tomb")
-        )
-        # broadcast the touched-key set: without the hint Catalyst picks
-        # a sort-merge anti-join and SHUFFLES the whole base per read —
-        # the very O(current) data movement this store exists to avoid.
-        # The set is delta-bounded; compaction keeps it broadcastable
-        # (a backlog too big to broadcast is a backlog overdue for
-        # compact_current, not a reason to shuffle the base).
-        touched_keys = events.select(BUSINESS_KEY).distinct()
-        untouched = base.join(F.broadcast(touched_keys), BUSINESS_KEY, "left_anti")
-        return untouched.unionByName(latest.select(*base.columns))
-
-    def read_current(self, spark: SparkSession) -> DataFrame:
-        meta = self._read_pointer()
-        if meta is None:
-            return empty_dim(spark)
-        return self._resolved(spark, meta)
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Time travel for the delta-log store: a historical version is
-        the base at that epoch plus the delta segments with seq ≤
-        version — valid only while the logged base matches the live
-        one (a later compact_current rewrote the base and the old
-        segments are gone)."""
-        meta = self._read_pointer()
-        if meta is None:
-            raise FileNotFoundError(f"dim store {self.path} is empty")
-        if version is None or version == meta["version"]:
-            return self.read_current(spark).unionByName(self.read_history(spark))
-        entry = meta.get("pointer_log", {}).get(str(version))
-        if entry is None:
-            raise ValueError(
-                f"version {version} not in the pointer log (kept: "
-                f"{sorted(map(int, meta.get('pointer_log', {})))})"
-            )
-        if entry["current_version"] != meta["current_version"]:
-            raise ValueError(
-                f"version {version} predates a compact_current fold — "
-                "its delta segments were retired"
-            )
-        cur = self._resolved(spark, meta, max_seq=version)
-        if entry["history_version"] >= 0:
-            hist = self.history.read(spark, version=entry["history_version"])
-        else:
-            hist = empty_dim(spark, cur.schema)
-        return cur.unionByName(hist)
-
-    # --- the O(batch)-write path ---------------------------------------------
-
-    def apply_batch(
-        self, spark: SparkSession, changes: DataFrame, txn_id: str, batch_id: str | None = None
-    ) -> bool:
-        from cdc_historical_warehouse_platform_spark.operators.scd2 import BUSINESS_KEY
-
-        meta = self._read_pointer()
-        txns = list(meta.get("txns", [])) if meta else []
-        if txn_id in txns:
-            return False
-        first = meta is None
-
-        changes = changes.localCheckpoint(eager=True)  # batch-sized; 3 consumers
-        if first:
-            relevant = empty_dim(spark)
-        else:
-            batch_keys = changes.select(F.col("id").alias(BUSINESS_KEY)).distinct()
-            # batch-key-bounded rows, pinned: the merge probes its
-            # current side twice (left join + the skinny new-key
-            # subtree) — without the checkpoint each probe re-derives
-            # the resolved view's O(current) base scan
-            relevant = (
-                self._resolved(spark, meta)
-                .join(F.broadcast(batch_keys), BUSINESS_KEY, "left_semi")
-                .localCheckpoint(eager=True)
-            )
-        tagged = _seed_or_merge_tagged(
-            relevant, changes, batch_id, first=first
-        ).localCheckpoint(eager=True)  # batch-key-bounded by construction
-        dim_columns = [c for c in tagged.columns if c != PART_COLUMN]
-
-        expired = tagged.filter(F.col(PART_COLUMN) == "expired").drop(PART_COLUMN)
-        if expired.isEmpty():
-            hist_v = meta["history_version"] if meta else -1
-        else:
-            hist_v = self.history.append(expired, txn_id=txn_id)
-
-        new_version = (meta["version"] + 1) if meta else 0
-        cur_part = tagged.filter(F.col(PART_COLUMN) == "current").drop(PART_COLUMN)
-        if first:
-            # the seed is dimension-sized: commit it AS the base, no delta
-            cur_v = self.current.commit(cur_part, txn_id=txn_id)
-            segs: list = []
-        else:
-            cur_v = meta["current_version"]
-            seg = {"seq": new_version, "dir": f"d{new_version}"}
-            cur_part.write.mode("overwrite").parquet(str(self.deltas_dir / seg["dir"]))
-            # tombstones: keys that had a row and now have none (DELETEs)
-            gone = expired.select(BUSINESS_KEY).exceptAll(
-                cur_part.select(BUSINESS_KEY)
-            ).distinct()
-            if not gone.isEmpty():
-                seg["tombstones"] = f"t{new_version}"
-                gone.write.mode("overwrite").parquet(
-                    str(self.deltas_dir / seg["tombstones"])
-                )
-            segs = list(meta["delta_segments"]) + [seg]
-
-        self._write_pointer(
-            {
-                "version": new_version,
-                "current_version": cur_v if first else meta["current_version"],
-                "delta_segments": segs,
-                "history_version": hist_v,
-                "schema": tagged.drop(PART_COLUMN).schema.json(),
-                "columns": dim_columns,
-                "committed_at": time.time(),
-                "txns": txns + [txn_id],
-            }
-        )
-        return True
-
-    def compact_current(self, spark: SparkSession, max_segments: int = 16) -> bool:
-        """Fold the delta segments into the base when their count
-        exceeds ``max_segments`` — one O(current) job at maintenance
-        cadence; superseded delta dirs are retired only AFTER the
-        pointer swap (readers on the old pointer stay consistent)."""
-        meta = self._read_pointer()
-        if meta is None or len(meta["delta_segments"]) <= max_segments:
-            return False
-        folded = self._resolved(spark, meta)
-        cur_v = self.current.commit(folded)
-        old = list(meta["delta_segments"])
-        self._write_pointer(
-            {**meta, "current_version": cur_v, "delta_segments": []}
-        )
-        for seg in old:
-            shutil.rmtree(self.deltas_dir / seg["dir"], ignore_errors=True)
-            if seg.get("tombstones"):
-                shutil.rmtree(self.deltas_dir / seg["tombstones"], ignore_errors=True)
-        return True

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
     "VersionedTable",
+    "atomic_write_text",
     "BucketedSegmentTable",
     "PrunedTxnVersionError",
     "register_bucketed_dir",
@@ -57,6 +58,22 @@ _POINTER = "_LATEST"
 # append instead of O(total appends) (the txns list itself is the
 # long-standing idempotence ledger and keeps its full history)
 _TXN_VERSION_RETENTION = 128
+
+
+def atomic_write_text(path: Path, text: str) -> None:
+    """Replace ``path`` with ``text`` atomically: write a temp file in
+    the same directory, then ``os.replace`` it over ``path`` (atomic on
+    POSIX) — a reader sees the old content or the new, never a partial
+    write. The temp file is removed if anything fails."""
+    fd, tmp = tempfile.mkstemp(dir=Path(path).parent, prefix="._tmp_")
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
 
 
 def _pruned_txn_versions(txn_versions: dict) -> dict:
@@ -86,16 +103,7 @@ class VersionedTable:
             return None
 
     def _write_pointer(self, meta: dict) -> None:
-        # temp-file + os.replace = atomic on POSIX
-        fd, tmp = tempfile.mkstemp(dir=self.path, prefix="._ptr_")
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, self._pointer_file())
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        atomic_write_text(self._pointer_file(), json.dumps(meta))
 
     # --- physical write hook --------------------------------------------------
 
@@ -162,6 +170,66 @@ class VersionedTable:
             )
         return v
 
+    def _publish(
+        self,
+        src: DataFrame | Path,
+        schema_json: str,
+        columns: list[str],
+        txn_id: str | None,
+        *,
+        extend: bool,
+        partition_by: list[str] | None = None,
+    ) -> int:
+        """The one commit protocol: read the pointer, skip a txn that is
+        already committed (the reference's ledger check,
+        scd2_loader.py:504-510), fill ``v{N}``, publish the pointer.
+
+        ``src`` fills ``v{N}``: a DataFrame is written by Spark; a Path
+        is an already-written parquet directory adopted by a move (no
+        Spark job), after clearing a torn adopt's leftovers. ``extend``
+        appends ``v{N}`` to the previous version's segments instead of
+        replacing them. Returns the new version, or the current one for
+        a replayed txn."""
+        meta = self._read_pointer()
+        if extend and meta and meta.get("partition_by"):
+            raise ValueError("append not supported on partitioned tables")
+        txns = list(meta.get("txns", [])) if meta else []
+        if txn_id is not None and txn_id in txns:
+            return meta["version"]
+
+        new_version = (meta["version"] + 1) if meta else 0
+        vdir = self.path / f"v{new_version}"
+        if isinstance(src, Path):
+            if vdir.exists():  # crash-replay leftovers from a torn adopt
+                shutil.rmtree(vdir)
+            shutil.move(str(src), str(vdir))
+        else:
+            self._write_version_dir(src, vdir, partition_by)
+        segments = [vdir.name]
+        if extend and meta:
+            segments = list(meta.get("segments", [meta["dir"]])) + segments
+        txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
+        if txn_id is not None:
+            txns.append(txn_id)
+            txn_versions[txn_id] = new_version
+        manifests = dict(meta.get("manifests", {})) if meta else {}
+        manifests[str(new_version)] = segments
+        self._write_pointer(
+            {
+                "version": new_version,
+                "dir": vdir.name,
+                "segments": segments,
+                "manifests": manifests,
+                "committed_at": time.time(),
+                "txns": txns,
+                "txn_versions": _pruned_txn_versions(txn_versions),
+                "schema": schema_json,
+                "columns": columns,
+                "partition_by": list(partition_by or []),
+            }
+        )
+        return new_version
+
     def commit(
         self,
         df: DataFrame,
@@ -169,40 +237,11 @@ class VersionedTable:
         partition_by: list[str] | None = None,
     ) -> int:
         """Write ``df`` as the next version; returns the version number.
-
-        If ``txn_id`` was already committed, skip (idempotent redelivery
-        — the reference's ledger check, scd2_loader.py:504-510) and
-        return the current version.
-        """
-        meta = self._read_pointer()
-        txns = list(meta.get("txns", [])) if meta else []
-        txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
-        if txn_id is not None and txn_id in txns:
-            return meta["version"]
-
-        new_version = (meta["version"] + 1) if meta else 0
-        vdir = self.path / f"v{new_version}"
-        self._write_version_dir(df, vdir, partition_by)
-        if txn_id is not None:
-            txns.append(txn_id)
-            txn_versions[txn_id] = new_version
-        manifests = dict(meta.get("manifests", {})) if meta else {}
-        manifests[str(new_version)] = [vdir.name]
-        self._write_pointer(
-            {
-                "version": new_version,
-                "dir": vdir.name,
-                "segments": [vdir.name],
-                "manifests": manifests,
-                "committed_at": time.time(),
-                "txns": txns,
-                "txn_versions": _pruned_txn_versions(txn_versions),
-                "schema": df.schema.json(),
-                "columns": list(df.columns),
-                "partition_by": list(partition_by or []),
-            }
+        A replayed ``txn_id`` is a no-op returning the current version."""
+        return self._publish(
+            df, df.schema.json(), list(df.columns), txn_id,
+            extend=False, partition_by=partition_by,
         )
-        return new_version
 
     def append(self, df: DataFrame, txn_id: str | None = None) -> int:
         """Append a segment WITHOUT rewriting existing data (manifest
@@ -213,39 +252,9 @@ class VersionedTable:
         Unpartitioned only (append + partition reconstruction would need
         per-segment metadata; history tables don't need partitions).
         """
-        meta = self._read_pointer()
-        if meta and meta.get("partition_by"):
-            raise ValueError("append not supported on partitioned tables")
-        txns = list(meta.get("txns", [])) if meta else []
-        txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
-        if txn_id is not None and txn_id in txns:
-            return meta["version"]
-        new_version = (meta["version"] + 1) if meta else 0
-        segdir = self.path / f"v{new_version}"
-        self._write_version_dir(df, segdir, None)
-        segments = (list(meta.get("segments", [meta["dir"]])) if meta else []) + [
-            segdir.name
-        ]
-        if txn_id is not None:
-            txns.append(txn_id)
-            txn_versions[txn_id] = new_version
-        manifests = dict(meta.get("manifests", {})) if meta else {}
-        manifests[str(new_version)] = segments
-        self._write_pointer(
-            {
-                "version": new_version,
-                "dir": segdir.name,
-                "segments": segments,
-                "manifests": manifests,
-                "committed_at": time.time(),
-                "txns": txns,
-                "txn_versions": _pruned_txn_versions(txn_versions),
-                "schema": df.schema.json(),
-                "columns": list(df.columns),
-                "partition_by": [],
-            }
+        return self._publish(
+            df, df.schema.json(), list(df.columns), txn_id, extend=True
         )
-        return new_version
 
     def commit_dir(
         self, src: Path, schema_json: str, columns: list[str], txn_id: str | None = None
@@ -258,37 +267,7 @@ class VersionedTable:
         and adopts each partition directory into its sub-table): the
         expensive scan happens exactly once, in the caller's job.
         """
-        meta = self._read_pointer()
-        txns = list(meta.get("txns", [])) if meta else []
-        txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
-        if txn_id is not None and txn_id in txns:
-            return meta["version"]
-
-        new_version = (meta["version"] + 1) if meta else 0
-        vdir = self.path / f"v{new_version}"
-        if vdir.exists():  # crash-replay leftovers from a torn adopt
-            shutil.rmtree(vdir)
-        shutil.move(str(src), str(vdir))
-        if txn_id is not None:
-            txns.append(txn_id)
-            txn_versions[txn_id] = new_version
-        manifests = dict(meta.get("manifests", {})) if meta else {}
-        manifests[str(new_version)] = [vdir.name]
-        self._write_pointer(
-            {
-                "version": new_version,
-                "dir": vdir.name,
-                "segments": [vdir.name],
-                "manifests": manifests,
-                "committed_at": time.time(),
-                "txns": txns,
-                "txn_versions": _pruned_txn_versions(txn_versions),
-                "schema": schema_json,
-                "columns": columns,
-                "partition_by": [],
-            }
-        )
-        return new_version
+        return self._publish(Path(src), schema_json, columns, txn_id, extend=False)
 
     def append_dir(
         self, src: Path, schema_json: str, columns: list[str], txn_id: str | None = None
@@ -296,41 +275,7 @@ class VersionedTable:
         """`append`'s twin of :meth:`commit_dir` — adopt a pre-written
         parquet directory as a new append segment (manifest grows by one
         directory; existing segments untouched)."""
-        meta = self._read_pointer()
-        if meta and meta.get("partition_by"):
-            raise ValueError("append not supported on partitioned tables")
-        txns = list(meta.get("txns", [])) if meta else []
-        txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
-        if txn_id is not None and txn_id in txns:
-            return meta["version"]
-        new_version = (meta["version"] + 1) if meta else 0
-        segdir = self.path / f"v{new_version}"
-        if segdir.exists():
-            shutil.rmtree(segdir)
-        shutil.move(str(src), str(segdir))
-        segments = (list(meta.get("segments", [meta["dir"]])) if meta else []) + [
-            segdir.name
-        ]
-        if txn_id is not None:
-            txns.append(txn_id)
-            txn_versions[txn_id] = new_version
-        manifests = dict(meta.get("manifests", {})) if meta else {}
-        manifests[str(new_version)] = segments
-        self._write_pointer(
-            {
-                "version": new_version,
-                "dir": segdir.name,
-                "segments": segments,
-                "manifests": manifests,
-                "committed_at": time.time(),
-                "txns": txns,
-                "txn_versions": _pruned_txn_versions(txn_versions),
-                "schema": schema_json,
-                "columns": columns,
-                "partition_by": [],
-            }
-        )
-        return new_version
+        return self._publish(Path(src), schema_json, columns, txn_id, extend=True)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read the latest (or a time-travel) version.

@@ -73,19 +73,13 @@ def _env(
     workdir: Path,
     source_url: str | None = None,
     source_table: str = "orders",
-    dim_store: str = "full",
-    dim_key_span: int = 1_000_000,
 ):
     from cdc_historical_warehouse_platform_spark.pipeline.extractor import CDCExtractor
     from cdc_historical_warehouse_platform_spark.pipeline.loader import SCD2Loader
     from cdc_historical_warehouse_platform_spark.pipeline.metadata import PipelineMetadataManager
     from cdc_historical_warehouse_platform_spark.pipeline.simulator import OrderSimulator
     from cdc_historical_warehouse_platform_spark.session import get_spark
-    from cdc_historical_warehouse_platform_spark.sources.dim_store import (
-        BucketedSCD2DimStore,
-        MergeOnReadSCD2DimStore,
-        SCD2DimStore,
-    )
+    from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimStore
     from cdc_historical_warehouse_platform_spark.sources.jdbc import JdbcSource
     from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
 
@@ -100,18 +94,7 @@ def _env(
     else:
         source = VersionedTable(workdir / "source_orders")
     deleted = VersionedTable(workdir / "deleted_orders")
-    # write-amplification tier: "full" rewrites the current slice per
-    # batch (one-job staged adopt), "bucketed" rewrites only touched
-    # key-range buckets, "mor" appends O(batch) delta segments (compact with
-    # the `optimize` command). All three are lockstep-equal
-    # (tests/test_bucketed_dim.py); the store layout self-describes, so
-    # later commands must pass the same choice.
-    dim_cls = {
-        "full": lambda p: SCD2DimStore(p),
-        "bucketed": lambda p: BucketedSCD2DimStore(p, key_span=dim_key_span),
-        "mor": lambda p: MergeOnReadSCD2DimStore(p),
-    }[dim_store]
-    dim = dim_cls(workdir / "dim_orders_history")
+    dim = SCD2DimStore(workdir / "dim_orders_history")
     meta = PipelineMetadataManager(spark, workdir / "pipeline_metadata")
     # production CLI can face arbitrarily large source tables, so it
     # opts into the bounded mutation-target sample (tests/parity runs
@@ -157,20 +140,6 @@ def main() -> int:
         action="store_true",
         help="load: also maintain the revenue-per-customer rollup "
         "incrementally from batch deltas (verify with the `summary` command)",
-    )
-    ap.add_argument(
-        "--dim-store",
-        choices=["full", "bucketed", "mor"],
-        default="full",
-        help="SCD2 current-slice layout: full rewrite-per-batch, "
-        "bucketed touched-buckets-only rewrite, or mor (merge-on-read "
-        "delta segments, O(batch) writes; compact via `optimize`)",
-    )
-    ap.add_argument(
-        "--dim-key-span",
-        type=int,
-        default=1_000_000,
-        help="bucketed dim store: consecutive business keys per range bucket",
     )
     ap.add_argument(
         "--csv-text-col", default="text",
@@ -460,8 +429,6 @@ def main() -> int:
         workdir,
         source_url=args.source_url,
         source_table=args.source_table,
-        dim_store=args.dim_store,
-        dim_key_span=args.dim_key_span,
     )
     if args.backfill:
         from cdc_historical_warehouse_platform_spark.pipeline.state import Watermark
@@ -1059,9 +1026,6 @@ def main() -> int:
         # classifier on a labeled seed rule, persist the tiny model as
         # an atomically-replaced JSON artifact, score whole corpora
         # with a map-only literal-weight expression
-        import os
-        import tempfile
-
         from pyspark.sql import functions as F
 
         from cdc_historical_warehouse_platform_spark.operators.classifier import (
@@ -1069,6 +1033,7 @@ def main() -> int:
             quality_features,
             score_logreg,
         )
+        from cdc_historical_warehouse_platform_spark.sources.tables import atomic_write_text
 
         if not args.input or not args.output:
             print(json.dumps({"error": f"{args.command} requires --input and --output"}))
@@ -1085,10 +1050,9 @@ def main() -> int:
                 label,
                 iters=args.iters,
             )
-            fd, tmp = tempfile.mkstemp(dir=out, prefix="._model_")
-            with os.fdopen(fd, "w") as f:
-                json.dump({**model, "label_sql": args.label_sql}, f)
-            os.replace(tmp, model_file)
+            atomic_write_text(
+                model_file, json.dumps({**model, "label_sql": args.label_sql})
+            )
             print(
                 json.dumps(
                     {

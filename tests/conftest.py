@@ -24,7 +24,6 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     s = get_spark(
         app_name="cdc-historical-warehouse-platform-tests",
-        master="local[8]",
         shuffle_partitions=8,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
@@ -71,24 +70,20 @@ def change_df(spark):
     return _make
 
 
-# --- driver-budget tiering (r13, verdict task #6) ---------------------------
-# The heavy integration/property tier (every test that measured >= 8 s
-# in the r13 full-suite duration profile; 54 tests, ~970 s of a
-# ~2000 s suite). pytest.ini deselects it by default so the DRIVER's
-# `pytest tests/ -x -q` gate finishes inside its budget; the full
-# suite stays the builder's local gate:  pytest -m "slow or not slow".
-# Criterion is mechanical (the duration profile), not semantic — every
-# operator family keeps its faster tests in the default tier.
+# --- test tiering -------------------------------------------------------------
+# The heavy integration/property tier: tests that measured >= 8 s in
+# the r13 full-suite duration profile. pytest.ini deselects it by
+# default so `pytest tests/ -q` fits its time budget; the full suite is
+# `pytest -m "slow or not slow"`. Every operator family keeps its faster
+# tests in the default tier, and so do the paper-core SCD2 store tests
+# (first-batch bulk path, end-to-end pipeline, availableNow stream)
+# whatever their duration.
 _SLOW_TESTS = {
     "test_ann_index.py::test_append_uses_stored_quantizer",
     "test_ann_index.py::test_build_once_probe_equals_inline_rebuild",
     "test_ann_index.py::test_int8_index_probe_matches_manual_sq_scoring",
     "test_ann_index.py::test_vacuum_never_deletes_pointer_pinned_version",
     "test_ann_index.py::test_vacuum_reclaims_old_epochs_keeps_live_pair",
-    "test_bucketed_dim.py::test_lockstep_equality_with_full_rewrite_store",
-    "test_bucketed_dim.py::test_mor_lockstep_equality_and_delta_bound",
-    "test_bucketed_dim.py::test_time_travel_reads_bucketed_store",
-    "test_bucketed_dim.py::test_time_travel_reads_mor_store",
     "test_datapipe.py::test_ann_lsh_finds_planted_neighbors",
     "test_datapipe.py::test_banded_near_dup_adapts_dim_to_wide_vectors",
     "test_datapipe.py::test_banded_near_dup_arrow_preserves_string_ids",
@@ -122,29 +117,23 @@ _SLOW_TESTS = {
     "test_incremental_agg.py::test_pipeline_load_maintains_summary_e2e",
     "test_ivm_join.py::test_two_sided_random_sequences_track_recompute",
     "test_pipeline.py::test_delete_flows_through_pipeline",
-    "test_pipeline.py::test_e2e_simulator_extractor_loader",
     "test_pipeline.py::test_lineage_report_artifact",
     "test_property_datapipe.py::test_incremental_dedup_invariants_for_random_batches",
     "test_property_datapipe.py::test_incremental_substr_any_split_any_probe_schedule",
     "test_property_scd2.py::test_random_sequences_hold_invariants_and_match_bulk_build",
     "test_rangejoin.py::test_matches_naive_on_boundary_dense_data",
     "test_scd2.py::test_build_from_change_log_matches_iterated_merges",
-    "test_scd2.py::test_dim_store_first_batch_bulk_path_equals_merge",
     "test_streaming.py::test_corpus_append_stream_matches_batch_and_survives_restart",
-    "test_streaming.py::test_scd2_stream_available_now",
     "test_streaming.py::test_scd2_stream_maintains_summary",
     "test_ann_index.py::test_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_pq_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_rebuild_crash_leaves_consistent_pair",
     "test_ann_index.py::test_semdedup_accepts_prebuilt_centroids",
     "test_ann_index.py::test_two_stage_probe_matryoshka_layout",
-    "test_bucketed_dim.py::test_mor_compaction_preserves_state_and_clears_deltas",
-    "test_bucketed_dim.py::test_vacuum_retires_only_superseded_dirs",
     "test_datapipe.py::test_incremental_minhash_segment_probe_matches_broadcast",
     "test_exact_substring.py::test_incremental_compact_preserves_spans_and_drops_dead_rows",
     "test_export.py::test_export_range_sharding_keeps_packs_contiguous",
     "test_sampling.py::test_write_training_shards_manifest_and_bounds",
-    "test_streaming.py::test_scd2_stream_into_mor_and_bucketed_stores",
 }
 
 

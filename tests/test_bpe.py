@@ -130,6 +130,7 @@ def test_batched_argmax_equals_sequential_on_adversarial_corpora(spark, monkeypa
     {a,b,c} alphabet with short random words maximizes all four."""
     import random
 
+    corpora = []
     for seed in range(4):
         rng = random.Random(seed)
         words = [
@@ -137,17 +138,28 @@ def test_batched_argmax_equals_sequential_on_adversarial_corpora(spark, monkeypa
             for _ in range(25)
         ]
         texts = [" ".join(rng.choices(words, k=8)) for _ in range(12)]
-        ref_merges, ref_vocab = _ref_bpe_train(texts, num_merges=10)
-        df = spark.createDataFrame([(t,) for t in texts], "text string")
-        merges_df, vocab_df = BPE.bpe_train(df, num_merges=10)
+        corpora.append((texts, 2))
+    # early stop after a self-pair: merging (a,a) turns 'aaaa' into
+    # [aa, aa], a new pair above the floor although the batch's next
+    # row (b,c,2) is below it
+    corpora.append((["aaaa"] * 10 + ["bc"] * 2, 3))
+    for i, (corpus, min_pair_count) in enumerate(corpora):
+        ref_merges, ref_vocab = _ref_bpe_train(
+            corpus, num_merges=10, min_pair_count=min_pair_count
+        )
+        df = spark.createDataFrame([(t,) for t in corpus], "text string")
+        merges_df, vocab_df = BPE.bpe_train(
+            df, num_merges=10, min_pair_count=min_pair_count
+        )
         got = [
             (r["left_sym"], r["right_sym"], r["pair_count"])
             for r in merges_df.orderBy("merge_rank").collect()
         ]
-        assert got == ref_merges, f"seed {seed}: batched != reference"
+        assert got == ref_merges, f"corpus {i}: batched != reference"
         got_vocab = {r["word"]: r["syms"] for r in vocab_df.collect()}
-        assert got_vocab == ref_vocab, f"seed {seed}: vocab mismatch"
+        assert got_vocab == ref_vocab, f"corpus {i}: vocab mismatch"
     # and _BATCH_COLLECT=1 degrades to the exact sequential protocol
+    ref_merges, _ = _ref_bpe_train(texts, num_merges=10)
     monkeypatch.setattr(BPE, "_BATCH_COLLECT", 1)
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     m_seq, _ = BPE.bpe_train(df, num_merges=10)

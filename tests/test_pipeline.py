@@ -344,6 +344,90 @@ def test_dim_store_history_compaction(tmp_path, spark):
     assert store.compact_history(spark, max_segments=2) is False
 
 
+DIM_BATCHES = [
+    [make_change(i, "INSERT", ts(i)) for i in range(1, 31)],
+    [make_change(3, "UPDATE", ts(100), quantity=7, status="shipped"),
+     make_change(11, "UPDATE", ts(101), quantity=2)],
+    [make_change(3, "UPDATE", ts(200), quantity=9),
+     make_change(40, "INSERT", ts(201)),
+     make_change(11, "DELETE", ts(202))],
+    [make_change(40, "UPDATE", ts(300), status="confirmed"),
+     make_change(41, "INSERT", ts(301))],
+]
+
+
+def _dim_rows(df):
+    return sorted(map(str, df.collect()))
+
+
+def test_time_travel_reads_base_store(spark, change_df, tmp_path):
+    """read(version=N) returns the dimension exactly as it stood after
+    batch N — the sub-tables retain those versions until vacuum."""
+    store = SCD2DimStore(tmp_path / "d")
+    snapshots = {}
+    for i, rows in enumerate(DIM_BATCHES):
+        store.apply_batch(spark, change_df(rows), txn_id=f"t{i}")
+        snapshots[i] = _dim_rows(store.read(spark))
+    for i in range(len(DIM_BATCHES)):
+        assert _dim_rows(store.read(spark, version=i)) == snapshots[i], i
+    with pytest.raises(ValueError, match="pointer log"):
+        store.read(spark, version=99)
+
+
+def test_delete_can_empty_the_current_slice(spark, change_df, tmp_path):
+    """A batch that deletes every live key leaves an empty current
+    version (the no-current-rows branch of apply_batch); the deleted
+    key's history survives and the store keeps accepting batches."""
+    store = SCD2DimStore(tmp_path / "d")
+    store.apply_batch(spark, change_df([make_change(1, "INSERT", ts(0))]), txn_id="t0")
+    store.apply_batch(spark, change_df([make_change(1, "DELETE", ts(10))]), txn_id="t1")
+    assert store.read_current(spark).count() == 0
+    assert store.read_history(spark).filter(F.col("order_key") == 1).count() >= 1
+    store.apply_batch(spark, change_df([make_change(2, "INSERT", ts(20))]), txn_id="t2")
+    assert [r["order_key"] for r in store.read_current(spark).collect()] == [2]
+
+
+def test_apply_batch_crash_windows_replay_exactly_once(spark, change_df, tmp_path):
+    """A crash in any step after the stage job — the history adopt, the
+    current adopt, or the store pointer swap — leaves readers on the
+    previous state; replaying the same txn_id from a fresh store object
+    then lands the batch exactly once: the dimension equals a clean
+    store's and the history manifest gained exactly one segment."""
+    import shutil
+
+    def history_segments(store):
+        hv = store._read_pointer()["history_version"]
+        return len(store.history._read_pointer()["manifests"][str(hv)])
+
+    seeded = SCD2DimStore(tmp_path / "seeded")
+    for i, rows in enumerate(DIM_BATCHES[:2]):
+        seeded.apply_batch(spark, change_df(rows), txn_id=f"t{i}")
+    before_rows = _dim_rows(seeded.read(spark))
+    before_segments = history_segments(seeded)
+    shutil.copytree(seeded.path, tmp_path / "clean")
+    clean = SCD2DimStore(tmp_path / "clean")
+    clean.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2")
+    expected = _dim_rows(clean.read(spark))
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    for step in ("history", "current", "store"):
+        shutil.copytree(seeded.path, tmp_path / step)
+        store = SCD2DimStore(tmp_path / step)
+        target = store if step == "store" else getattr(store, step)
+        target._write_pointer = boom  # the step's publish fails after its move
+        with pytest.raises(RuntimeError, match="injected crash"):
+            store.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2")
+
+        restarted = SCD2DimStore(tmp_path / step)
+        assert _dim_rows(restarted.read(spark)) == before_rows, step
+        assert restarted.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2"), step
+        assert _dim_rows(restarted.read(spark)) == expected, step
+        assert history_segments(restarted) == before_segments + 1, step
+        assert restarted.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2") is False
+
+
 def test_loader_reports_corrupt_batch(env, spark):
     """A malformed batch file must fail the run (status=failed, error
     recorded in metadata) without corrupting the dim."""

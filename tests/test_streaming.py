@@ -607,49 +607,6 @@ def test_sessionized_event_counts_streaming_matches_batch(tmp_path, spark):
     assert stream_out == batch_out
 
 
-def test_scd2_stream_into_mor_and_bucketed_stores(tmp_path, spark):
-    """The stream's foreachBatch drives apply_batch through the same
-    interface for every store tier — the three stores must end
-    row-identical from the same streamed batches (the streaming twin of
-    test_bucketed_dim's lockstep suite)."""
-    from cdc_historical_warehouse_platform_spark.sources.dim_store import (
-        BucketedSCD2DimStore,
-        MergeOnReadSCD2DimStore,
-    )
-
-    cdc_dir = tmp_path / "cdc"
-    cdc_dir.mkdir()
-    b1 = [make_change(i, "INSERT", ts(i)) for i in range(1, 6)]
-    b2 = [make_change(2, "UPDATE", ts(10), quantity=9),
-          make_change(3, "DELETE", ts(11))]
-    write_change_batch(
-        spark.createDataFrame(b1, CHANGE_SCHEMA), cdc_dir, extracted_at=ts(6), fmt="jsonl"
-    )
-    write_change_batch(
-        spark.createDataFrame(b2, CHANGE_SCHEMA), cdc_dir, extracted_at=ts(12), fmt="jsonl"
-    )
-    stores = {
-        "full": SCD2DimStore(tmp_path / "full"),
-        "bucketed": BucketedSCD2DimStore(tmp_path / "buck", key_span=2),
-        "mor": MergeOnReadSCD2DimStore(tmp_path / "mor"),
-    }
-    results = {}
-    for name, dim in stores.items():
-        q = start_scd2_stream(
-            spark, cdc_dir, dim, tmp_path / f"ckpt_{name}", available_now=True
-        )
-        q.awaitTermination(120)
-        results[name] = (
-            sorted(map(tuple, dim.read_current(spark).select(
-                "order_key", "quantity", "is_current").collect())),
-            sorted(map(tuple, dim.read_history(spark).select(
-                "order_key", "quantity", "is_current").collect())),
-        )
-    assert results["full"] == results["bucketed"] == results["mor"]
-    cur_keys = [r[0] for r in results["full"][0]]
-    assert cur_keys == [1, 2, 4, 5]  # key 3 deleted
-
-
 def test_substr_index_stream_matches_batch_and_survives_restart(spark, tmp_path):
     """r8 streaming-native incremental ExactSubstr: documents streamed
     as jsonl files through start_substr_index_stream must leave the
