@@ -12,6 +12,7 @@ batch publishes atomically at the store's pointer swap (V6 for free).
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -23,6 +24,7 @@ from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimSto
 
 __all__ = [
     "SCD2Loader",
+    "maintain_rollups",
     "maintain_summary_store",
     "maintain_distinct_sketch_store",
     "maintain_histogram_store",
@@ -42,15 +44,19 @@ def maintain_summary_store(spark, dim_store, summary_store, changes, txn_id: str
     """Incremental-view maintenance of a summary table for one batch,
     BEFORE the dimension advances (the delta is defined against the
     pre-batch current slice). Shared by the batch loader and the
-    streaming foreachBatch path so both engines carry ONE copy of the
-    bootstrap + commit-ordering rules.
+    streaming foreachBatch path (both through :func:`maintain_rollups`)
+    so both engines carry ONE copy of the bootstrap + commit-ordering
+    rules.
 
-    Crash/replay safety without a cross-store transaction: the summary
-    commits first under the same txn_id the dim uses.
-    - crash after summary, before dim: the replay's summary commit is a
-      txn no-op and the dim applies — converged.
-    - replay after both landed (ledger/checkpoint unmarked): both txn
-      no-ops.
+    Crash/replay safety without a cross-store transaction: the rollups
+    commit concurrently, the dimension commits last, all under the
+    same txn_id.
+    - crash after some rollups landed, before the dim: the dim still
+      holds the pre-batch current slice, so the replay's landed
+      rollups are txn no-ops, the others apply against the same
+      pre-batch state, and the dim applies — converged.
+    - replay after all landed (ledger/checkpoint unmarked): every
+      store is a txn no-op.
     The delta algebra itself is also idempotent against an
     already-advanced dimension (every term cancels), so even a lost
     summary txn file degrades to a zero-delta commit."""
@@ -81,8 +87,8 @@ def maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id:
     histogram tier), the distribution sibling of
     maintain_summary_store. Shared by the batch loader and the
     streaming foreachBatch path; identical crash/replay posture —
-    histogram commits first under the dim's txn_id, and the delta
-    algebra is idempotent against an already-advanced dimension."""
+    histogram commits before the dim under the dim's txn_id, and the
+    delta algebra is idempotent against an already-advanced dimension."""
     from pyspark.sql import functions as F
 
     from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
@@ -135,6 +141,50 @@ def maintain_distinct_sketch_store(spark, sketch_store, changes, txn_id: str) ->
     else:
         state = delta
     sketch_store.commit(state, txn_id=txn_id)
+
+
+def maintain_rollups(
+    spark,
+    dim_store,
+    changes,
+    txn_id: str,
+    summary_store=None,
+    sketch_store=None,
+    histogram_store=None,
+) -> None:
+    """Maintain every configured rollup store for one batch, BEFORE the
+    dimension advances — the one step the batch loader and the
+    streaming foreachBatch path share.
+
+    The maintainers run concurrently: each reads only the pre-batch
+    current slice and the batch, and writes only its own table, and
+    their jobs are small and bound by driver round trips, so running
+    them one after another leaves the cores idle. Every maintainer
+    finishes before this returns (the first error in submission order
+    is then re-raised), so the dimension's pointer swap stays the last
+    commit of the batch and the crash/replay argument in
+    :func:`maintain_summary_store` holds unchanged."""
+    calls = []
+    if summary_store is not None:
+        calls.append(
+            lambda: maintain_summary_store(spark, dim_store, summary_store, changes, txn_id)
+        )
+    if sketch_store is not None:
+        calls.append(
+            lambda: maintain_distinct_sketch_store(spark, sketch_store, changes, txn_id)
+        )
+    if histogram_store is not None:
+        calls.append(
+            lambda: maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id)
+        )
+    if not calls:
+        return
+    with ThreadPoolExecutor(max_workers=len(calls), thread_name_prefix="rollup") as pool:
+        futures = [pool.submit(call) for call in calls]
+    # leaving the block waited for every maintainer
+    for error in [f.exception() for f in futures]:
+        if error is not None:
+            raise error
 
 
 class SCD2Loader:
@@ -218,7 +268,8 @@ class SCD2Loader:
             changes, bad = read_change_batch_with_quarantine(self.spark, batch_path)
         else:
             changes = read_change_batch(self.spark, batch_path)
-        if changes.isEmpty():
+        batch_id = generate_batch_id(changes)
+        if batch_id is None:
             # no LOADABLE rows = no schema evidence; never a drift
             # event. Mark the file so later runs skip it by name —
             # otherwise every run re-reads it forever (in report mode
@@ -234,7 +285,6 @@ class SCD2Loader:
                 self._write_quarantine(bad, batch_path)
             self.ledger.mark(batch_path.name, mark)
             return True
-        batch_id = generate_batch_id(changes)
         if self.ledger.is_processed(batch_path.name, batch_id):
             return False
         n_rows = changes.count()
@@ -249,12 +299,15 @@ class SCD2Loader:
         if drift is not None and any(drift.values()):
             self.drift_events.append({"batch": batch_path.name, **drift})
         txn_id = f"{batch_path.name}|{batch_id}"
-        if self.summary is not None:
-            maintain_summary_store(self.spark, self.dim, self.summary, changes, txn_id)
-        if self.sketches is not None:
-            maintain_distinct_sketch_store(self.spark, self.sketches, changes, txn_id)
-        if self.histograms is not None:
-            maintain_histogram_store(self.spark, self.dim, self.histograms, changes, txn_id)
+        maintain_rollups(
+            self.spark,
+            self.dim,
+            changes,
+            txn_id,
+            summary_store=self.summary,
+            sketch_store=self.sketches,
+            histogram_store=self.histograms,
+        )
         # the store's txn guard backs the ledger: a crash between the
         # pointer swap and the mark leaves the replay a no-op
         applied = self.dim.apply_batch(

@@ -91,9 +91,11 @@ class ProcessedLedger:
         self._cache, self._cache_key = cache, (st.st_mtime_ns, st.st_size)
 
 
-def generate_batch_id(changes: DataFrame, id_col: str = "id") -> str:
+def generate_batch_id(changes: DataFrame, id_col: str = "id") -> str | None:
     """F7: deterministic content-hash batch id (the reference hashes
-    the JSON of the sorted id list, scd2_loader.py:184-187).
+    the JSON of the sorted id list, scd2_loader.py:184-187), or None
+    for an empty batch — the aggregate's row count doubles as the
+    emptiness check, so callers need no separate ``isEmpty`` job.
 
     Computed as an order-insensitive distributed digest: two
     independent per-row xxhash64 streams summed exactly in
@@ -109,6 +111,8 @@ def generate_batch_id(changes: DataFrame, id_col: str = "id") -> str:
         F.min(idc).alias("lo"),
         F.max(idc).alias("hi"),
     ).collect()[0]
+    if row["n"] == 0:
+        return None
     digest = json.dumps(
         [int(row["n"]), str(row["h1"]), str(row["h2"]), row["lo"], row["hi"]]
     )

@@ -280,6 +280,13 @@ class VersionedTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read the latest (or a time-travel) version.
 
+        The latest version is read at the schema its pointer records, so
+        the read launches no Spark job (inferring the schema from
+        parquet footers costs one). The pointer holds only the latest
+        version's schema, so a time-travel read of an older version,
+        which may predate a schema change, still infers from its
+        footers.
+
         Partitioned versions are reconstructed as a union of
         per-partition-directory reads with the partition column re-added
         at its ORIGINAL type (Spark's partition-value inference would
@@ -302,14 +309,17 @@ class VersionedTable:
                     f"segment {seg} of {self.path}@v{v} missing (vacuumed?)"
                 )
         vdir = self.path / segments[0]
-
-        part_cols = meta.get("partition_by") or []
-        if not part_cols:
-            if len(segments) == 1:
-                return spark.read.parquet(str(vdir))
-            return spark.read.parquet(*[str(self.path / s_) for s_ in segments])
-
         schema = T.StructType.fromJson(json.loads(meta["schema"]))
+        part_cols = meta.get("partition_by") or []
+        reader = spark.read
+        if v == meta["version"]:
+            reader = reader.schema(
+                T.StructType([f for f in schema.fields if f.name not in part_cols])
+            )
+
+        if not part_cols:
+            return reader.parquet(*[str(self.path / s_) for s_ in segments])
+
         if len(part_cols) != 1:
             raise NotImplementedError("only single-level partitioning supported")
         pcol = part_cols[0]
@@ -322,7 +332,7 @@ class VersionedTable:
             raw = sub.name.split("=", 1)[1]
             value = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
             parts.append(
-                spark.read.parquet(str(sub)).withColumn(
+                reader.parquet(str(sub)).withColumn(
                     pcol, F.lit(value).cast(ptype)
                 )
             )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from cdc_historical_warehouse_platform_spark.pipeline.loader import maintain_rollups
 from cdc_historical_warehouse_platform_spark.pipeline.state import generate_batch_id
 from cdc_historical_warehouse_platform_spark.schemas import CHANGE_JSON_SCHEMA
 from cdc_historical_warehouse_platform_spark.sources.change_batches import cast_json_changes
@@ -80,42 +81,34 @@ def start_scd2_stream(
 
     With ``summary_store`` (a VersionedTable) the stream ALSO maintains
     the revenue-per-customer rollup incrementally inside the same
-    micro-batch, via the shared loader helper
-    (pipeline/loader.maintain_summary_store): the summary commits first
-    under the epoch's txn id, so a crash anywhere in the epoch replays
-    to txn no-ops on both stores — streaming gets the batch path's
-    incremental-view-maintenance guarantee with zero new algebra.
-    ``sketch_store`` does the same for the mergeable-sketch
-    COUNT(DISTINCT) rollup (pipeline/loader.
-    maintain_distinct_sketch_store) — doubly replay-safe: txn guard
-    plus register-max idempotence of the sketch union itself.
-    ``histogram_store`` maintains the per-(customer, value-bucket)
-    distribution the same way (pipeline/loader.
-    maintain_histogram_store) — same txn-first commit ordering.
+    micro-batch. ``sketch_store`` does the same for the mergeable-sketch
+    COUNT(DISTINCT) rollup — doubly replay-safe: txn guard plus
+    register-max idempotence of the sketch union itself — and
+    ``histogram_store`` for the per-(customer, value-bucket)
+    distribution. All three go through the loader's shared step
+    (pipeline/loader.maintain_rollups): the rollups commit
+    concurrently, the dimension commits last, all under the epoch's txn
+    id, so a crash anywhere in the epoch replays to txn no-ops on the
+    stores that landed and a first apply on the rest — streaming gets
+    the batch path's incremental-view-maintenance guarantee with zero
+    new algebra.
     """
     changes = read_change_stream(spark, cdc_dir)
 
     def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_id = generate_batch_id(batch_df)
+        if batch_id is None:
+            return
         txn_id = f"epoch:{epoch_id}:{batch_id}"
-        if summary_store is not None:
-            from cdc_historical_warehouse_platform_spark.pipeline.loader import maintain_summary_store
-
-            maintain_summary_store(spark, dim_store, summary_store, batch_df, txn_id)
-        if sketch_store is not None:
-            from cdc_historical_warehouse_platform_spark.pipeline.loader import (
-                maintain_distinct_sketch_store,
-            )
-
-            maintain_distinct_sketch_store(spark, sketch_store, batch_df, txn_id)
-        if histogram_store is not None:
-            from cdc_historical_warehouse_platform_spark.pipeline.loader import (
-                maintain_histogram_store,
-            )
-
-            maintain_histogram_store(spark, dim_store, histogram_store, batch_df, txn_id)
+        maintain_rollups(
+            spark,
+            dim_store,
+            batch_df,
+            txn_id,
+            summary_store=summary_store,
+            sketch_store=sketch_store,
+            histogram_store=histogram_store,
+        )
         dim_store.apply_batch(
             spark,
             batch_df,

@@ -76,8 +76,9 @@ def change_df(spark):
 # default so `pytest tests/ -q` fits its time budget; the full suite is
 # `pytest -m "slow or not slow"`. Every operator family keeps its faster
 # tests in the default tier, and so do the paper-core SCD2 store tests
-# (first-batch bulk path, end-to-end pipeline, availableNow stream)
-# whatever their duration.
+# (first-batch bulk path, end-to-end pipeline, availableNow stream) and
+# the rollup-store tests that drive the loader's and the stream's
+# shared maintenance step, whatever their duration.
 _SLOW_TESTS = {
     "test_ann_index.py::test_append_uses_stored_quantizer",
     "test_ann_index.py::test_build_once_probe_equals_inline_rebuild",
@@ -112,9 +113,7 @@ _SLOW_TESTS = {
     "test_incremental_agg.py::test_extrema_insert_update_delete_matches_recompute",
     "test_incremental_agg.py::test_hint_broadcast_off_is_plan_only_not_semantics",
     "test_incremental_agg.py::test_histogram_matches_recompute_across_ops",
-    "test_incremental_agg.py::test_histogram_store_maintenance_batch_and_stream",
     "test_incremental_agg.py::test_insert_update_delete_matches_recompute",
-    "test_incremental_agg.py::test_pipeline_load_maintains_summary_e2e",
     "test_ivm_join.py::test_two_sided_random_sequences_track_recompute",
     "test_pipeline.py::test_delete_flows_through_pipeline",
     "test_pipeline.py::test_lineage_report_artifact",
@@ -124,7 +123,6 @@ _SLOW_TESTS = {
     "test_rangejoin.py::test_matches_naive_on_boundary_dense_data",
     "test_scd2.py::test_build_from_change_log_matches_iterated_merges",
     "test_streaming.py::test_corpus_append_stream_matches_batch_and_survives_restart",
-    "test_streaming.py::test_scd2_stream_maintains_summary",
     "test_ann_index.py::test_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_pq_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_rebuild_crash_leaves_consistent_pair",

@@ -569,6 +569,100 @@ def test_histogram_store_maintenance_batch_and_stream(tmp_path, spark):
     assert _hist_rows(unpack_histogram(hist2.read(spark))) == stream_rows
 
 
+def test_concurrent_rollups_crash_before_dim_replays_exactly_once(tmp_path, spark):
+    """The loader's concurrent rollup step under a crash: the histogram
+    store's commit fails while the summary and sketch maintainers run
+    beside it. The run fails only after every maintainer has finished
+    (the others' txns landed, no pool thread outlives the run) and the
+    dimension has not moved. A fresh loader's replay is a txn no-op on
+    the landed rollups, applies the histogram and the dimension once,
+    and converges to a clean run."""
+    import datetime as dt
+    import shutil
+    import threading
+
+    from cdc_historical_warehouse_platform_spark.pipeline.loader import SCD2Loader
+    from cdc_historical_warehouse_platform_spark.schemas import CHANGE_SCHEMA
+    from cdc_historical_warehouse_platform_spark.sources.change_batches import write_change_batch
+    from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimStore
+    from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
+
+    def sts(m):
+        return dt.datetime(2026, 6, 1, 8, 0, 0) + dt.timedelta(minutes=m)
+
+    b1 = [
+        make_change(i, "INSERT", sts(i), quantity=i, customer_id=100 + (i % 2), product_id=200 + i)
+        for i in range(1, 7)
+    ]
+    b2 = [
+        make_change(1, "UPDATE", sts(10), quantity=9, customer_id=101),
+        make_change(2, "DELETE", sts(11), customer_id=100),
+        make_change(8, "INSERT", sts(12), quantity=4, customer_id=102, product_id=208),
+    ]
+
+    def stores(root):
+        return (
+            SCD2DimStore(root / "dim"),
+            VersionedTable(root / "summary"),
+            VersionedTable(root / "sketch"),
+            VersionedTable(root / "hist"),
+        )
+
+    def loader(root):
+        dim, summary, sketch, hist = stores(root)
+        return SCD2Loader(
+            spark, dim, root / "cdc", summary_store=summary,
+            sketch_store=sketch, histogram_store=hist,
+        )
+
+    clean, crash = tmp_path / "clean", tmp_path / "crash"
+    write_change_batch(spark.createDataFrame(b1, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(9))
+    assert loader(clean).load_pending()["processed"] == 1
+    write_change_batch(spark.createDataFrame(b2, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(13))
+    shutil.copytree(clean, crash)
+    assert loader(clean).load_pending()["processed"] == 1
+
+    dim, summary, sketch, hist = stores(crash)
+    summary_txns, sketch_txns, hist_txns = (
+        t.committed_txns() for t in (summary, sketch, hist)
+    )
+    dim_version, dim_txns, hist_version = dim.version(), dim.committed_txns(), hist.version()
+
+    crashing = loader(crash)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    crashing.histograms.commit = boom
+    res = crashing.load_pending()
+    assert res["status"] == "failed" and "injected crash" in res["error"]
+    assert not [t for t in threading.enumerate() if t.name.startswith("rollup")]
+    (txn,) = summary.committed_txns() - summary_txns
+    assert sketch.committed_txns() - sketch_txns == {txn}
+    assert hist.committed_txns() == hist_txns
+    assert dim.version() == dim_version and dim.committed_txns() == dim_txns
+
+    summary_version, sketch_version = summary.version(), sketch.version()
+    res = loader(crash).load_pending()
+    assert res["status"] == "completed" and res["processed"] == 1
+    assert (summary.version(), sketch.version()) == (summary_version, sketch_version)
+    assert hist.version() == hist_version + 1 and txn in hist.committed_txns()
+    assert dim.version() == dim_version + 1 and dim.committed_txns() == dim_txns | {txn}
+
+    current = dim.read_current(spark)
+    assert _rows(summary.read(spark)) == _rows(group_summary(current))
+    assert _hist_rows(unpack_histogram(hist.read(spark))) == _hist_rows(
+        unpack_histogram(group_histogram(current))
+    )
+    clean_dim, _, clean_sketch, _ = stores(clean)
+    assert sorted(map(str, dim.read(spark).collect())) == sorted(
+        map(str, clean_dim.read(spark).collect())
+    )
+    assert sorted(map(str, sketch.read(spark).collect())) == sorted(
+        map(str, clean_sketch.read(spark).collect())
+    )
+
+
 def test_hint_broadcast_off_is_plan_only_not_semantics(spark, change_df):
     """hint_broadcast=False (the bulk-wave mode the r12 sf10 rehearsal
     forced — a forced broadcast of a dimension-sized batch OOMs the

@@ -243,7 +243,7 @@ def test_delete_flows_through_pipeline(env, spark):
 def test_batch_id_distributed_and_order_insensitive(tmp_path, spark):
     """Backfill-sized batch ids: no id array is collected, so the id
     must be stable under repartition/shuffle order and sensitive to
-    content."""
+    content; an empty batch has none."""
     from cdc_historical_warehouse_platform_spark.pipeline.state import ProcessedLedger, generate_batch_id
 
     big = spark.range(0, 200_000).select(F.col("id"))
@@ -255,6 +255,8 @@ def test_batch_id_distributed_and_order_insensitive(tmp_path, spark):
     # duplicate ids are content, not noise
     d = generate_batch_id(big.unionAll(big.limit(1)))
     assert d != a
+    # the aggregate's row count is the emptiness check: no id, no isEmpty job
+    assert generate_batch_id(spark.createDataFrame([], CHANGE_SCHEMA)) is None
 
     # ledger: one parse per run, cache tracks in-process appends and
     # survives external writers (stat-key invalidation)
@@ -264,6 +266,62 @@ def test_batch_id_distributed_and_order_insensitive(tmp_path, spark):
     other = ProcessedLedger(tmp_path / "ledger")  # external append
     other.mark("f2", c)
     assert led.is_processed("f2", c)
+
+
+def test_read_at_pointer_schema_launches_no_job(tmp_path, spark):
+    """Reading a table's latest version takes the schema its pointer
+    records instead of inferring it from parquet footers: no Spark job,
+    and the same schema inference gives — for an unpartitioned, a
+    multi-segment (append) and a partitioned table. An older version
+    keeps its own schema."""
+    from decimal import Decimal
+
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("v", T.StringType()),
+            T.StructField("amount", T.DecimalType(10, 2)),
+            T.StructField("at", T.TimestampType()),
+            T.StructField("p", T.IntegerType()),
+        ]
+    )
+    df = spark.createDataFrame(
+        [(i, f"s{i}", Decimal(f"{i}.25"), ts(i), i % 2) for i in range(6)], schema
+    )
+    plain = VersionedTable(tmp_path / "plain")
+    plain.commit(df)
+    appended = VersionedTable(tmp_path / "appended")
+    appended.append(df)
+    appended.append(df.filter(F.col("k") > 2))
+    parted = VersionedTable(tmp_path / "parted")
+    parted.commit(df, partition_by=["p"])
+
+    sc = spark.sparkContext
+    group = "versioned-table-read"
+    sc.setJobGroup(group, "VersionedTable.read")
+    try:
+        for table, dirs in [
+            (plain, ["v0"]),
+            (appended, ["v0", "v1"]),
+            (parted, ["v0"]),
+        ]:
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            got = table.read(spark)
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs, table.path.name
+            inferred = spark.read.parquet(*[str(table.path / d) for d in dirs]).schema
+            assert got.schema == inferred, table.path.name
+        # the job count does see this group's jobs
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) > jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    plain.commit(df.withColumn("extra", F.lit(1)))
+    assert plain.read(spark, version=0).schema == spark.read.parquet(
+        str(plain.path / "v0")
+    ).schema
+    assert "extra" in plain.read(spark).columns
 
 
 def test_partitioned_commit_type_fidelity_and_pruning(tmp_path, spark):
