@@ -46,84 +46,6 @@ __all__ = [
 # checkpoint cadence for the iterated vocab frame (plan-growth guard)
 _CHECKPOINT_EVERY = 4
 
-# pairs fetched per driver round trip (r13 optimization round): the
-# trainer's cost is ~1 vocab-sized pair-count job + 1 collect per
-# MERGE; fetching the top K+1 pairs at once and accepting the maximal
-# PROVABLY-SAFE prefix cuts both to one per accepted batch. 1 restores
-# the exact sequential protocol (the equivalence test pins batched ==
-# sequential == the pure-Python reference).
-_BATCH_COLLECT = 8
-
-
-def _safe_merge_prefix(
-    rows, symbols: set, min_pair_count: int, budget: int
-) -> tuple[list, bool]:
-    """The maximal prefix of a sorted pair-count table that provably
-    reproduces per-round argmax when applied as sequential merges —
-    the correctness core of the batched trainer.
-
-    ``rows`` are the top pairs sorted (count DESC, left ASC, right
-    ASC); ``symbols`` is the CURRENT symbol set (initial alphabet +
-    every merge result so far). Returns (accepted, stop) where
-    ``accepted`` is a list of (left, right, count) to apply in order
-    and ``stop`` means training is provably finished (the best
-    remaining pair after applying ``accepted`` is below
-    ``min_pair_count``).
-
-    Why the prefix is exact — invariants after applying accepted
-    merges m_1..m_j (each guaranteed below to be non-self-paired with
-    a brand-new result symbol):
-
-    - m_t's own pair count drops to 0 (the greedy fold leaves no
-      (l_t, r_t) adjacency when l_t != r_t);
-    - a pair type not sharing a symbol with any m_t keeps its count
-      EXACTLY (merges only touch adjacencies at their own symbols,
-      and its symbols cannot equal a result — results are brand-new);
-    - existing pair types only ever lose occurrences (no increments:
-      an increment would need the result string to equal an existing
-      symbol — excluded);
-    - every occurrence of a NEW pair type maps injectively to a
-      pre-batch occurrence of a pair q that shares a symbol with some
-      m_t (the boundary adjacency under the merged symbols), so
-      count(new) <= count_old(q); q conflicts with an accepted merge,
-      so q is NOT in the accepted prefix and ranks strictly after the
-      candidate — its count is <= the NEXT row's count.
-
-    Therefore candidate p_i (i >= 2) is the true post-merge argmax
-    whenever (a) it shares no symbol with the accepted prefix, (b)
-    every accepted merge is non-self-paired with a brand-new result,
-    and (c) the NEXT row's count is STRICTLY below p_i's (kills both
-    decreased-old and new-type ties; ties among UNCHANGED pairs are
-    already broken by the sort order, but a new type's lexicographic
-    position is unknowable without computing it). The first row needs
-    no conditions — it is the argmax of the table it came from.
-    """
-    accepted: list[tuple[str, str, int]] = []
-    used: set[str] = set()  # symbols of accepted merges
-    chain_ok = True  # every accepted merge: l != r and result brand-new
-    for i, row in enumerate(rows):
-        if len(accepted) >= budget or len(accepted) >= _BATCH_COLLECT:
-            return accepted, False
-        l, r, c = row["left_sym"], row["right_sym"], int(row["pair_count"])
-        if c < min_pair_count:
-            # everything remaining (old: rank >= this row; new: bounded
-            # by a conflicting old pair ranked here or later) is below
-            # the floor — training is finished after the accepted prefix,
-            # unless a self-pair or result collision broke that bound:
-            # then the caller re-collects before deciding
-            return accepted, chain_ok
-        if i > 0:
-            nxt = int(rows[i + 1]["pair_count"]) if i + 1 < len(rows) else None
-            strict = nxt is None or nxt < c
-            conflict = l in used or r in used
-            if not (chain_ok and strict and not conflict):
-                return accepted, False
-        accepted.append((l, r, c))
-        chain_ok = chain_ok and l != r and (l + r) not in symbols and (l + r) not in used
-        used.update((l, r))
-        used.add(l + r)  # a later result colliding with this one must stop the batch
-    return accepted, False
-
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The one corpus-sized pass: normalized-word frequencies.
@@ -208,17 +130,8 @@ def bpe_train(
     ``min_pair_count`` times. Deterministic: ties broken by
     (left_sym ASC, right_sym ASC); no floats anywhere.
 
-    Driver round-trips (r13 optimization round): each iteration
-    collects the top ``_BATCH_COLLECT + 1`` pairs in ONE job and
-    applies the maximal provably-safe prefix (:func:`_safe_merge_prefix`
-    — exact, never a heuristic: the merge sequence is byte-identical
-    to the one-collect-per-merge protocol, pinned by the batched==
-    sequential equivalence test and the pure-Python reference). The
-    pair-count job AND the collect now run once per accepted batch
-    instead of once per merge — the only remaining per-merge cost is
-    the vocab-sized fold, which is lazy. One extra vocab-sized
-    distinct-symbols job at train start seeds the alphabet the safety
-    rule needs.
+    Driver round-trips: each merge runs one vocab-sized pair-count job
+    and collects its single argmax row; the in-word fold is lazy.
     """
     spark = df.sparkSession
     vocab = (
@@ -226,42 +139,25 @@ def bpe_train(
         .withColumn("syms", split_chars(F.col("word")))
         .localCheckpoint(eager=True)
     )
-    # current symbol set, maintained driver-side (alphabet-sized — one
-    # new symbol per merge): the batched-acceptance rule must know
-    # whether a merge result collides with an EXISTING symbol (such a
-    # collision can increment an existing pair type's count, breaking
-    # the new-type bound; the batch stops at that merge instead).
-    symbols = {
-        r["s"]
-        for r in vocab.select(
-            F.explode("syms").alias("s")
-        ).distinct().collect()
-    }
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < num_merges:
-        rows = (
+        top = (
             pair_counts(vocab)
             .orderBy(F.col("pair_count").desc(), F.col("left_sym").asc(), F.col("right_sym").asc())
-            .limit(_BATCH_COLLECT + 1)
+            .limit(1)
             .collect()
         )
-        accepted, stop = _safe_merge_prefix(
-            rows, symbols, min_pair_count, num_merges - len(merges)
-        )
-        for l, r, c in accepted:
-            merges.append((len(merges), l, r, int(c)))
-            vocab = merge_pair(vocab, l, r)
-            symbols.add(l + r)
-            if len(merges) % _CHECKPOINT_EVERY == 0:
-                # lazy: the next round's argmax collect (or the caller's
-                # first action on vocab_df) materializes the pin inside a
-                # job that runs anyway — the eager form paid one extra
-                # driver round-trip per cadence for the same truncation
-                vocab = vocab.localCheckpoint(eager=False)
-        if stop or not accepted:
-            # stop: provably below min_pair_count after the prefix.
-            # not accepted: table exhausted (no rows at all).
+        if not top or int(top[0]["pair_count"]) < min_pair_count:
             break
+        l, r = top[0]["left_sym"], top[0]["right_sym"]
+        merges.append((len(merges), l, r, int(top[0]["pair_count"])))
+        vocab = merge_pair(vocab, l, r)
+        if len(merges) % _CHECKPOINT_EVERY == 0:
+            # lazy: the next round's argmax collect (or the caller's
+            # first action on vocab_df) materializes the pin inside a
+            # job that runs anyway — the eager form paid one extra
+            # driver round-trip per cadence for the same truncation
+            vocab = vocab.localCheckpoint(eager=False)
     merges_df = spark.createDataFrame(
         merges, "merge_rank int, left_sym string, right_sym string, pair_count bigint"
     )

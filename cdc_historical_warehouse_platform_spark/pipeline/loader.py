@@ -40,6 +40,30 @@ def _empty_mark(batch_path: Path) -> str:
     return f"empty:{st.st_size}:{st.st_mtime_ns}"
 
 
+def _maintain_delta_store(
+    spark, dim_store, store, changes, txn_id: str, empty, recompute, maintain
+) -> None:
+    """The one body of the delta-algebra rollups: read the pre-batch
+    current slice, bootstrap a missing ``store`` (``recompute`` over
+    the current slice when adopting an existing dimension, else
+    ``empty(spark)``), and commit ``maintain(prev, current, changes)``
+    under the dimension's txn_id."""
+    from pyspark.sql import functions as F
+
+    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim
+
+    has_dim = dim_store.exists()
+    if has_dim:
+        current = dim_store.read_current(spark)
+    else:
+        current = empty_dim(spark).filter(F.col("is_current"))
+    if store.exists():
+        prev = store.read(spark)
+    else:
+        prev = recompute(current) if has_dim else empty(spark)
+    store.commit(maintain(prev, current, changes), txn_id=txn_id)
+
+
 def maintain_summary_store(spark, dim_store, summary_store, changes, txn_id: str) -> None:
     """Incremental-view maintenance of a summary table for one batch,
     BEFORE the dimension advances (the delta is defined against the
@@ -60,25 +84,16 @@ def maintain_summary_store(spark, dim_store, summary_store, changes, txn_id: str
     The delta algebra itself is also idempotent against an
     already-advanced dimension (every term cancels), so even a lost
     summary txn file degrades to a zero-delta commit."""
-    from pyspark.sql import functions as F
-
     from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
         empty_summary,
         group_summary,
         maintain_group_summary,
     )
-    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim
 
-    if dim_store.exists():
-        current = dim_store.read_current(spark)
-    else:
-        current = empty_dim(spark).filter(F.col("is_current"))
-    if summary_store.exists():
-        prev = summary_store.read(spark)
-    else:
-        # adopting a pre-existing dimension: bootstrap from recompute
-        prev = group_summary(current) if dim_store.exists() else empty_summary(spark)
-    summary_store.commit(maintain_group_summary(prev, current, changes), txn_id=txn_id)
+    _maintain_delta_store(
+        spark, dim_store, summary_store, changes, txn_id,
+        empty_summary, group_summary, maintain_group_summary,
+    )
 
 
 def maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id: str) -> None:
@@ -89,26 +104,15 @@ def maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id:
     streaming foreachBatch path; identical crash/replay posture —
     histogram commits before the dim under the dim's txn_id, and the
     delta algebra is idempotent against an already-advanced dimension."""
-    from pyspark.sql import functions as F
-
     from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
         empty_histogram,
         group_histogram,
         maintain_group_histogram,
     )
-    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim
 
-    if dim_store.exists():
-        current = dim_store.read_current(spark)
-    else:
-        current = empty_dim(spark).filter(F.col("is_current"))
-    if histogram_store.exists():
-        prev = histogram_store.read(spark)
-    else:
-        # adopting a pre-existing dimension: bootstrap from recompute
-        prev = group_histogram(current) if dim_store.exists() else empty_histogram(spark)
-    histogram_store.commit(
-        maintain_group_histogram(prev, current, changes), txn_id=txn_id
+    _maintain_delta_store(
+        spark, dim_store, histogram_store, changes, txn_id,
+        empty_histogram, group_histogram, maintain_group_histogram,
     )
 
 

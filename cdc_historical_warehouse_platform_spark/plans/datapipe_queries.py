@@ -796,13 +796,14 @@ def corpus_keep_decisions_unsorted(spark: SparkSession, sf: str) -> DataFrame:
     dropping the higher id of each pair).
 
     Scale shape: quality + fingerprint are map-only projections; the
-    canonical id is one groupBy on a 16-byte fingerprint; near-dup
-    pairs come from the banded MinHash-LSH tier (two corpus passes,
-    candidate-only verification — the 100 TB path; its output equals
-    the exact Jaccard pair set, pinned by tests and the
-    dedup_minhash_lsh driver row); the verdict is two left joins on
+    canonical id is a min over a window partitioned by the 16-byte
+    fingerprint; near-dup pairs come from the banded MinHash-LSH tier
+    (two corpus passes, candidate-only verification — the 100 TB path;
+    its output equals the exact Jaccard pair set, pinned by tests and
+    the dedup_minhash_lsh registry row); the verdict is a left join on
     doc_id. Priority is low_quality > exact_dup > near_dup so the
-    decision is deterministic and SQL-expressible."""
+    decision is deterministic and SQL-expressible. A NULL-text document
+    has a NULL fingerprint and gets no decision, as in the SQL twin."""
     from cdc_historical_warehouse_platform_spark.operators import text as _T
 
     from pyspark.sql import Window
@@ -814,7 +815,7 @@ def corpus_keep_decisions_unsorted(spark: SparkSession, sf: str) -> DataFrame:
         "lang",
         _T.quality_score(t).alias("__q"),
         _T.fingerprint(t).alias("__fp"),
-    )
+    ).filter(F.col("__fp").isNotNull())
     # Canonical id as a WINDOW over the fingerprint, not a groupBy +
     # self-join (r13 optimization round, guide §2.4): the join form
     # evaluated ``base`` — the regex-heavy quality cascade + md5 over
@@ -823,8 +824,9 @@ def corpus_keep_decisions_unsorted(spark: SparkSession, sf: str) -> DataFrame:
     # The window computes the same min-per-fingerprint in ONE pass over
     # base with ONE narrow shuffle (doc_id, lang, __q, __fp — no text).
     # Same rows, same values: the inner join on __fp kept every base
-    # row (canon keys ⊆ base keys by construction), so this is
-    # plan-only; oracle hash-exact at all three SFs.
+    # row with a non-NULL fingerprint (canon keys ⊆ base keys by
+    # construction) and dropped the NULL ones, as the oracle's
+    # ``JOIN canon`` does — hence the NULL filter on base above.
     base = base.withColumn(
         "__canonical", F.min("doc_id").over(Window.partitionBy("__fp"))
     )

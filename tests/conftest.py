@@ -75,10 +75,12 @@ def change_df(spark):
 # the r13 full-suite duration profile. pytest.ini deselects it by
 # default so `pytest tests/ -q` fits its time budget; the full suite is
 # `pytest -m "slow or not slow"`. Every operator family keeps its faster
-# tests in the default tier, and so do the paper-core SCD2 store tests
-# (first-batch bulk path, end-to-end pipeline, availableNow stream) and
-# the rollup-store tests that drive the loader's and the stream's
-# shared maintenance step, whatever their duration.
+# tests in the default tier, and so does every paper-core test, whatever
+# its duration: the SCD2 store and merge tests (first-batch bulk path,
+# change-log bulk build, random-sequence property invariants), the
+# end-to-end pipeline tests (deletes, lineage report), the availableNow
+# stream, and the incremental-view-maintenance tests that check the
+# rollups and the join view against a recompute.
 _SLOW_TESTS = {
     "test_ann_index.py::test_append_uses_stored_quantizer",
     "test_ann_index.py::test_build_once_probe_equals_inline_rebuild",
@@ -107,21 +109,9 @@ _SLOW_TESTS = {
     "test_forget.py::test_concurrent_epoch_writes_crash_before_marker_repairs_exactly",
     "test_forget.py::test_corpus_forget_end_to_end",
     "test_forget.py::test_corpus_forget_returns_quota_headroom",
-    "test_incremental_agg.py::test_bootstrap_from_existing_dimension",
-    "test_incremental_agg.py::test_delete_then_reinsert",
-    "test_incremental_agg.py::test_extrema_group_move_and_late_events",
-    "test_incremental_agg.py::test_extrema_insert_update_delete_matches_recompute",
-    "test_incremental_agg.py::test_hint_broadcast_off_is_plan_only_not_semantics",
-    "test_incremental_agg.py::test_histogram_matches_recompute_across_ops",
-    "test_incremental_agg.py::test_insert_update_delete_matches_recompute",
-    "test_ivm_join.py::test_two_sided_random_sequences_track_recompute",
-    "test_pipeline.py::test_delete_flows_through_pipeline",
-    "test_pipeline.py::test_lineage_report_artifact",
     "test_property_datapipe.py::test_incremental_dedup_invariants_for_random_batches",
     "test_property_datapipe.py::test_incremental_substr_any_split_any_probe_schedule",
-    "test_property_scd2.py::test_random_sequences_hold_invariants_and_match_bulk_build",
     "test_rangejoin.py::test_matches_naive_on_boundary_dense_data",
-    "test_scd2.py::test_build_from_change_log_matches_iterated_merges",
     "test_streaming.py::test_corpus_append_stream_matches_batch_and_survives_restart",
     "test_ann_index.py::test_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_pq_bulk_probe_matches_broadcast_and_avoids_query_broadcast",

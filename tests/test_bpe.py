@@ -122,12 +122,11 @@ def test_early_stop_on_min_pair_count(spark):
     }
 
 
-def test_batched_argmax_equals_sequential_on_adversarial_corpora(spark, monkeypatch):
-    """The r13 batched-collect trainer must reproduce the exact
-    sequential merge sequence on corpora built to stress every guard
-    of _safe_merge_prefix: dense count ties, self-pairs (runs of one
-    char), shared-symbol chains, and result-symbol collisions — a tiny
-    {a,b,c} alphabet with short random words maximizes all four."""
+def test_train_matches_reference_on_adversarial_corpora(spark):
+    """The trainer reproduces the reference merge sequence on corpora
+    built for dense count ties, self-pairs (runs of one char),
+    shared-symbol chains and result-symbol collisions — a tiny {a,b,c}
+    alphabet with short random words maximizes all four."""
     import random
 
     corpora = []
@@ -140,8 +139,8 @@ def test_batched_argmax_equals_sequential_on_adversarial_corpora(spark, monkeypa
         texts = [" ".join(rng.choices(words, k=8)) for _ in range(12)]
         corpora.append((texts, 2))
     # early stop after a self-pair: merging (a,a) turns 'aaaa' into
-    # [aa, aa], a new pair above the floor although the batch's next
-    # row (b,c,2) is below it
+    # [aa, aa], a new pair above the floor although the next-ranked
+    # pair (b,c,2) is below it
     corpora.append((["aaaa"] * 10 + ["bc"] * 2, 3))
     for i, (corpus, min_pair_count) in enumerate(corpora):
         ref_merges, ref_vocab = _ref_bpe_train(
@@ -155,19 +154,9 @@ def test_batched_argmax_equals_sequential_on_adversarial_corpora(spark, monkeypa
             (r["left_sym"], r["right_sym"], r["pair_count"])
             for r in merges_df.orderBy("merge_rank").collect()
         ]
-        assert got == ref_merges, f"corpus {i}: batched != reference"
+        assert got == ref_merges, f"corpus {i}: merges != reference"
         got_vocab = {r["word"]: r["syms"] for r in vocab_df.collect()}
         assert got_vocab == ref_vocab, f"corpus {i}: vocab mismatch"
-    # and _BATCH_COLLECT=1 degrades to the exact sequential protocol
-    ref_merges, _ = _ref_bpe_train(texts, num_merges=10)
-    monkeypatch.setattr(BPE, "_BATCH_COLLECT", 1)
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    m_seq, _ = BPE.bpe_train(df, num_merges=10)
-    got_seq = [
-        (r["left_sym"], r["right_sym"], r["pair_count"])
-        for r in m_seq.orderBy("merge_rank").collect()
-    ]
-    assert got_seq == ref_merges
 
 
 def test_train_is_deterministic_across_partitionings(spark, docs):

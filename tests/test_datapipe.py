@@ -384,6 +384,43 @@ def test_corpus_keep_decisions_partition_docs(spark):
             assert did not in near_b
 
 
+def test_corpus_keep_decisions_null_text_matches_oracle(spark, tmp_path):
+    """A NULL-text document has a NULL fingerprint. The SQL twin's
+    ``JOIN canon c ON fp.f = c.f`` drops it (NULL never equi-joins), so
+    the Spark decision table must drop it too; every other document,
+    including a planted exact duplicate, keeps the oracle's verdict."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_historical_warehouse_platform_spark.plans.datapipe_queries import (
+        SQL_CORPUS_KEEP,
+        q_corpus_keep_decisions,
+    )
+
+    src = pq.read_table(f"{SF_DIR}/documents.parquet").slice(0, 12).to_pylist()
+    dup = dict(src[0], doc_id=10_001)
+    null_text = dict(src[1], doc_id=10_002, text=None)
+    pq.write_table(
+        pa.Table.from_pylist(src + [dup, null_text], schema=pq.read_schema(
+            f"{SF_DIR}/documents.parquet"
+        )),
+        tmp_path / "documents.parquet",
+    )
+
+    got = sorted(
+        tuple(r) for r in q_corpus_keep_decisions(spark, str(tmp_path)).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = sorted(con.execute(SQL_CORPUS_KEEP).fetchall())
+    assert got == want
+    assert 10_002 not in {doc_id for doc_id, _, _ in got}
+
+
 def test_multimodal_resize_and_frame_sample(spark, docs):
     """Resize: one row per payload, exact target geometry, md5 stable
     across repartitioning. Frame sampling: the row-expanding Arrow
@@ -1827,143 +1864,6 @@ def test_corpus_append_tolerates_missing_legacy_manifest(spark, tmp_path):
     assert m["total_rows"] == n_after
 
 
-def _encode_bmp24(arr):
-    """Genuine uncompressed 24-bit BMP bytes from an (H, W, 3) RGB
-    array — hand-built headers, bottom-up rows, BGR pixels, 4-byte row
-    padding (the real on-disk format, not a fixture shortcut)."""
-    import struct
-
-    import numpy as np
-
-    h, w, _ = arr.shape
-    row_bytes = ((24 * w + 31) // 32) * 4
-    pad = row_bytes - w * 3
-    body = b"".join(
-        arr[y, :, ::-1].astype(np.uint8).tobytes() + b"\x00" * pad
-        for y in range(h - 1, -1, -1)
-    )
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + info + body
-
-
-def _encode_ppm(arr):
-    import numpy as np
-
-    h, w, c = arr.shape
-    magic = b"P6" if c == 3 else b"P5"
-    return magic + f"\n# test\n{w} {h}\n255\n".encode() + arr.astype(np.uint8).tobytes()
-
-
-def test_stdlib_image_decoders_real_formats(spark):
-    """r8: the DEFAULT image path decodes genuine BMP and PPM/PGM
-    payloads with zero external codecs — the array round-trips
-    bit-exactly, and the full Arrow decode→resize→feature pipeline
-    pins against the same numpy ground truth the raw-decoder twin
-    uses. This runs REAL decodes in this container (no importorskip)."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-        decode_image,
-        extract_image_features,
-        ppm_decoder,
-    )
-
-    h, w = 11, 7  # odd width: exercises BMP row padding
-    rgb = ((np.arange(h * w * 3, dtype=np.uint32) * 7) % 251).astype(
-        np.uint8
-    ).reshape(h, w, 3)
-    gray = rgb[:, :, :1]
-
-    assert np.array_equal(bmp_decoder(_encode_bmp24(rgb)), rgb)
-    assert np.array_equal(ppm_decoder(_encode_ppm(rgb)), rgb)
-    assert np.array_equal(ppm_decoder(_encode_ppm(gray)), gray)
-    # magic dispatch through the public seam
-    assert np.array_equal(decode_image(_encode_bmp24(rgb)), rgb)
-    assert np.array_equal(decode_image(_encode_ppm(rgb)), rgb)
-
-    df = spark.createDataFrame(
-        [
-            (0, bytearray(_encode_bmp24(rgb))),
-            (1, bytearray(_encode_ppm(rgb))),
-            (2, bytearray(_encode_ppm(gray))),
-        ],
-        ["doc_id", "payload"],
-    )
-    rows = {
-        r["doc_id"]: r
-        for r in extract_image_features(df, out_w=4, out_h=4).collect()
-    }
-    ys = (np.arange(4) * h) // 4
-    xs = (np.arange(4) * w) // 4
-    for i, arr in ((0, rgb), (1, rgb), (2, gray)):
-        r = rows[i]
-        assert (r["width"], r["height"], r["channels"]) == (w, h, arr.shape[2])
-        assert r["mean_intensity"] == round(float(arr.mean()), 6)
-        assert r["resized_md5"] == hashlib.md5(
-            np.ascontiguousarray(arr[ys][:, xs]).tobytes()
-        ).hexdigest()
-
-
-def test_stdlib_wav_decoder_real_format(spark):
-    """r8: the DEFAULT audio path decodes genuine PCM WAV (16-bit mono
-    AND stereo-averaged, plus 8-bit) with the stdlib wave module — no
-    librosa — and the Arrow feature pipeline matches numpy ground
-    truth computed from the source arrays."""
-    import io
-    import wave as _w
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_audio,
-        extract_audio_features,
-        wav_decoder,
-    )
-
-    def pcm16(arr, sr, nch=1):
-        buf = io.BytesIO()
-        with _w.open(buf, "wb") as f:
-            f.setnchannels(nch)
-            f.setsampwidth(2)
-            f.setframerate(sr)
-            f.writeframes(arr.astype("<i2").tobytes())
-        return buf.getvalue()
-
-    sr = 8000
-    mono = (np.sin(np.arange(sr) / 8.0) * 20000).astype("<i2")
-    stereo = np.stack(
-        [mono, (mono.astype(np.int32) // 2).astype("<i2")], axis=1
-    ).reshape(-1)
-
-    wv, got_sr = wav_decoder(pcm16(mono, sr))
-    assert got_sr == sr
-    assert np.allclose(wv, mono.astype(np.float64) / 32768.0)
-    wv2, _ = decode_audio(pcm16(stereo, sr, nch=2))  # magic dispatch
-    expect2 = (
-        mono.astype(np.float64) / 32768.0
-        + (mono.astype(np.int32) // 2).astype(np.float64) / 32768.0
-    ) / 2.0
-    assert np.allclose(wv2, expect2)
-
-    df = spark.createDataFrame(
-        [(1, bytearray(pcm16(mono, sr))), (2, bytearray(pcm16(stereo, sr, 2)))],
-        ["doc_id", "payload"],
-    )
-    rows = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
-    for i, w_arr in ((1, mono.astype(np.float64) / 32768.0), (2, expect2)):
-        r = rows[i]
-        assert r["n_samples"] == sr and r["sample_rate"] == sr
-        assert r["duration_sec"] == 1.0
-        assert r["rms"] == round(float(np.sqrt(np.mean(w_arr**2))), 9)
-        assert r["zero_crossings"] == int(
-            np.count_nonzero(np.diff(np.signbit(w_arr)))
-        )
-
-
 def test_incremental_minhash_segment_probe_matches_broadcast(spark, tmp_path):
     """r8 bulk-append probes: the co-partitioned segment path
     (fp_segments clustered on fp, bucket_segments clustered on bucket)
@@ -2232,238 +2132,6 @@ def test_corpus_compact_state_dirs(spark, tmp_path):
     } == corpus_ids
 
 
-def test_stdlib_codec_unsupported_subformats_fall_through(spark):
-    """Review fix (r8): stdlib-magic payloads whose SUB-format the
-    stdlib tier can't parse (palette BMP, float WAV) must fall through
-    to the Pillow/librosa tier — raising the codec env stub here (no
-    libs in this container), NOT the stdlib ValueError. Installing the
-    libs therefore never decodes LESS than before the stdlib tier."""
-    import importlib.util
-    import io
-    import struct
-    import wave as _w
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_audio,
-        decode_image,
-    )
-
-    # 8-bit (palette) BMP header: stdlib tier refuses bpp != 24
-    hdr = struct.pack("<2sIHHI", b"BM", 200, 0, 0, 54) + struct.pack(
-        "<IiiHHIIiiII", 40, 4, 4, 1, 8, 0, 64, 2835, 2835, 0, 0
-    )
-    # float32 WAV (format tag 3): stdlib wave module refuses it
-    buf = io.BytesIO()
-    with _w.open(buf, "wb") as f:
-        f.setnchannels(1)
-        f.setsampwidth(2)
-        f.setframerate(8000)
-        f.writeframes(np.zeros(16, "<i2").tobytes())
-    float_wav = bytearray(buf.getvalue())
-    float_wav[20:22] = struct.pack("<H", 3)  # IEEE float format tag
-
-    if importlib.util.find_spec("PIL") is None:
-        with _pytest.raises(NotImplementedError, match="Pillow"):
-            decode_image(bytes(hdr) + b"\x00" * 146)
-    if importlib.util.find_spec("librosa") is None:
-        with _pytest.raises(NotImplementedError, match="librosa"):
-            decode_audio(bytes(float_wav))
-    # and the supported sub-formats still decode via the stdlib tier
-    assert decode_audio(buf.getvalue())[1] == 8000
-
-
-def test_ppm_decoder_exact_raster_guard():
-    """ADVICE r8: a PPM header terminated by '\\r\\n' (some Windows
-    netpbm writers) shifts the raster offset by one byte — the stdlib
-    tier must refuse (raster-size mismatch) rather than silently decode
-    shifted pixels, letting the Pillow fall-through own the payload."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        ppm_decoder,
-    )
-
-    h, w = 5, 4
-    rgb = (np.arange(h * w * 3) % 251).astype(np.uint8).reshape(h, w, 3)
-    good = b"P6" + f"\n{w} {h}\n255\n".encode() + rgb.tobytes()
-    assert np.array_equal(ppm_decoder(good), rgb)
-    crlf = b"P6" + f"\n{w} {h}\n255\r\n".encode() + rgb.tobytes()
-    with _pytest.raises(ValueError, match="raster size mismatch"):
-        ppm_decoder(crlf)
-    with _pytest.raises(ValueError, match="raster size mismatch"):
-        ppm_decoder(good[:-7])  # truncated raster
-
-
-def test_decode_image_stub_chains_stdlib_parse_error():
-    """ADVICE r8: with Pillow absent, a corrupt BMP must surface the
-    REAL stdlib parse error chained into the env stub — not just the
-    misleading 'compressed formats need Pillow' text."""
-    import importlib.util
-
-    import pytest as _pytest
-
-    if importlib.util.find_spec("PIL") is not None:
-        _pytest.skip("Pillow present: the fall-through decodes instead")
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    with _pytest.raises(NotImplementedError) as ei:
-        decode_image(b"BM" + b"\x01" * 16)  # truncated/corrupt header
-    assert ei.value.__cause__ is not None
-    assert "stdlib tier first failed" in str(ei.value)
-
-
-def _encode_png(arr, filters=None):
-    """Minimal test-side PNG writer (struct + zlib, stdlib only) with a
-    CHOSEN filter type per scanline — forward-filters the ground-truth
-    array so the decoder must invert every filter the schedule names."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, c = arr.shape
-    ct = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    bpp = c
-    filters = filters or [0] * h
-    raw = bytearray()
-    prev = np.zeros(w * c, dtype=np.int32)
-    for y in range(h):
-        cur = arr[y].reshape(-1).astype(np.int32)
-        f = filters[y]
-        raw.append(f)
-        if f == 0:
-            out = cur
-        elif f == 1:  # Sub
-            left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
-            out = cur - left
-        elif f == 2:  # Up
-            out = cur - prev
-        elif f == 3:  # Average
-            left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
-            out = cur - ((left + prev) >> 1)
-        elif f == 4:  # Paeth
-            a = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
-            b = prev
-            cc = np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]])
-            p = a + b - cc
-            pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - cc)
-            pred = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, cc))
-            out = cur - pred
-        raw.extend((out % 256).astype(np.uint8).tobytes())
-        prev = cur
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return (
-            struct.pack(">I", len(data)) + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_stdlib_png_decoder_all_filters_all_color_types(spark):
-    """r9 (verdict task #3): genuine PNG payloads decode in THIS
-    container via stdlib zlib + filter inversion — bit-exact against
-    the numpy ground truth for every filter type (None/Sub/Up/Average/
-    Paeth) and every 8-bit color type (gray, gray+alpha, RGB, RGBA),
-    through the raw decoder, the magic dispatch, AND the full Arrow
-    decode→resize→feature pipeline."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        extract_image_features,
-        png_decoder,
-    )
-
-    h, w = 7, 5
-    rng = (np.arange(h * w * 4, dtype=np.uint32) * 31 % 253).astype(np.uint8)
-    rgba = rng.reshape(h, w, 4)
-    sched = [0, 1, 2, 3, 4, 2, 1]  # every filter type appears
-    for c in (1, 2, 3, 4):
-        arr = rgba[:, :, :c]
-        payload = _encode_png(arr, filters=sched)
-        assert np.array_equal(png_decoder(payload), arr), f"channels={c}"
-        assert np.array_equal(decode_image(payload), arr), f"dispatch c={c}"
-
-    rgb = rgba[:, :, :3]
-    df = spark.createDataFrame(
-        [(7, bytearray(_encode_png(rgb, filters=sched)))], ["doc_id", "payload"]
-    )
-    (r,) = extract_image_features(df, out_w=4, out_h=4).collect()
-    ys, xs = (np.arange(4) * h) // 4, (np.arange(4) * w) // 4
-    assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-    assert r["mean_intensity"] == round(float(rgb.mean()), 6)
-    assert r["resized_md5"] == hashlib.md5(
-        np.ascontiguousarray(rgb[ys][:, xs]).tobytes()
-    ).hexdigest()
-
-
-def test_stdlib_png_unsupported_subformats_fall_through():
-    """Palette / 16-bit / interlaced PNG refuse in the stdlib tier
-    (ValueError) and route to the Pillow env stub via decode_image —
-    same fall-through contract as the BMP/PPM sub-formats."""
-    import importlib.util
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        png_decoder,
-    )
-
-    def png_with_ihdr(w, h, depth, ct, interlace):
-        ihdr = struct.pack(">IIBBBBB", w, h, depth, ct, 0, 0, interlace)
-        body = b"IHDR" + ihdr
-        c1 = struct.pack(">I", len(ihdr)) + body + struct.pack(
-            ">I", zlib.crc32(body) & 0xFFFFFFFF
-        )
-        data = zlib.compress(b"\x00" * ((w + 1) * h))
-        body2 = b"IDAT" + data
-        c2 = struct.pack(">I", len(data)) + body2 + struct.pack(
-            ">I", zlib.crc32(body2) & 0xFFFFFFFF
-        )
-        return b"\x89PNG\r\n\x1a\n" + c1 + c2
-
-    for kwargs, msg in (
-        (dict(depth=8, ct=5, interlace=0), "color type"),   # reserved type
-        (dict(depth=3, ct=0, interlace=0), "bit depth"),    # invalid depth
-        (dict(depth=4, ct=2, interlace=0), "depth/color"),  # invalid combo
-        (dict(depth=16, ct=3, interlace=0), "palette depth"),
-        (dict(depth=8, ct=0, interlace=2), "interlace method"),
-    ):
-        payload = png_with_ihdr(4, 4, **kwargs)
-        with _pytest.raises(ValueError, match=msg):
-            png_decoder(payload)
-        if importlib.util.find_spec("PIL") is None:
-            with _pytest.raises(NotImplementedError, match="Pillow"):
-                decode_image(payload)
-
-    # truncated IDAT (inflate ok, wrong raster size) also refuses
-    good = _encode_png(np.zeros((3, 3, 1), np.uint8))
-    with _pytest.raises(ValueError, match="not a PNG"):
-        png_decoder(good[1:])
-
-
 def test_resolve_state_buckets_auto_thresholds():
     """r9 (verdict task #4): 'auto' keeps small corpora flat, buckets
     large ones ~1 bucket/1M kept docs clamped to [32, 4096]; explicit
@@ -2577,413 +2245,6 @@ def test_corpus_compact_migrates_flat_state_to_bucketed(spark, tmp_path):
     assert corpus_append(spark, new, out)["appended"] == 0
 
 
-def _jpeg_tools():
-    """Test-side baseline JPEG encoder (stdlib struct + numpy) with
-    CUSTOM canonical Huffman tables (12×4-bit DC codes, all-256×8-bit
-    AC codes), so the decoder's generic table reader is exercised, not
-    just the spec's example tables. Returns (encode, idct, A)."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import _ZIGZAG
-
-    A = np.zeros((8, 8))
-    for u in range(8):
-        cu = (1 / np.sqrt(2)) if u == 0 else 1.0
-        for x in range(8):
-            A[u, x] = 0.5 * cu * np.cos((2 * x + 1) * u * np.pi / 16.0)
-
-    dc_bits = [0, 0, 0, 12] + [0] * 12          # 12 symbols, length 4
-    dc_vals = bytes(range(12))
-    # all 256 AC symbols: 255 at length 8 + the last at length 9 (a
-    # BITS entry is one byte, so 256-at-8 can't be expressed)
-    ac_bits = [0] * 7 + [255, 1] + [0] * 7
-    ac_vals = bytes(range(256))
-
-    def _codes(bits, vals):
-        out, code, k = {}, 0, 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                out[vals[k]] = (length, code)
-                k += 1
-                code += 1
-            code <<= 1
-        return out
-
-    dc_codes, ac_codes = _codes(dc_bits, dc_vals), _codes(ac_bits, ac_vals)
-
-    class _BW:
-        def __init__(self):
-            self.out = bytearray()
-            self.acc = 0
-            self.n = 0
-
-        def put(self, val, nbits):
-            for i in range(nbits - 1, -1, -1):
-                self.acc = (self.acc << 1) | ((val >> i) & 1)
-                self.n += 1
-                if self.n == 8:
-                    self.out.append(self.acc)
-                    if self.acc == 0xFF:
-                        self.out.append(0x00)
-                    self.acc = 0
-                    self.n = 0
-
-        def pad(self):
-            while self.n:
-                self.put(1, 1)
-
-    def _seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def _dqt(tid, q):
-        zz = q.reshape(-1)[list(_ZIGZAG)]
-        return _seg(0xDB, bytes([tid]) + bytes(int(v) for v in zz))
-
-    def _dht(tc, th, bits, vals):
-        return _seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + vals)
-
-    def _magnitude(v):
-        t, a = 0, abs(v)
-        while a:
-            t += 1
-            a >>= 1
-        return t, (v if v >= 0 else v + (1 << t) - 1)
-
-    def _encode_block(bw, coefs_zz, pred):
-        diff = int(coefs_zz[0]) - pred
-        t, bitsv = _magnitude(diff)
-        l, c = dc_codes[t]
-        bw.put(c, l)
-        if t:
-            bw.put(bitsv, t)
-        run = 0
-        for k in range(1, 64):
-            v = int(coefs_zz[k])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                l, c = ac_codes[0xF0]
-                bw.put(c, l)
-                run -= 16
-            t, bitsv = _magnitude(v)
-            l, c = ac_codes[(run << 4) | t]
-            bw.put(c, l)
-            bw.put(bitsv, t)
-            run = 0
-        if run:
-            l, c = ac_codes[0x00]
-            bw.put(c, l)
-        return int(coefs_zz[0])
-
-    def _plane_blocks(plane, q):
-        """plane (multiple-of-8 dims) -> quantized zigzag blocks grid."""
-        h, w = plane.shape
-        blocks = plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3)
-        coef = np.einsum("ux,mnxy,yv->mnuv", A, blocks - 128.0, A.T)
-        qz = np.round(coef / q).astype(np.int64)
-        # zigzag: transmission position i carries block index ZIGZAG[i]
-        return qz.reshape(h // 8, w // 8, 64)[:, :, list(_ZIGZAG)]
-
-    def encode(arr, qy, qc, subsample=False, restart=0):
-        """arr (H,W,1|3) uint8 -> (payload, quantized blocks per comp,
-        padded plane dims per comp)."""
-        h, w, nc = arr.shape
-        if nc == 3:
-            rgb = arr.astype(np.float64)
-            y = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
-            cb = -0.168736 * rgb[:, :, 0] - 0.331264 * rgb[:, :, 1] + 0.5 * rgb[:, :, 2] + 128
-            cr = 0.5 * rgb[:, :, 0] - 0.418688 * rgb[:, :, 1] - 0.081312 * rgb[:, :, 2] + 128
-            planes = [np.clip(np.round(p), 0, 255) for p in (y, cb, cr)]
-        else:
-            planes = [arr[:, :, 0].astype(np.float64)]
-        if subsample and nc == 3:
-            for i in (1, 2):
-                p = planes[i]
-                ph = -(-p.shape[0] // 2) * 2
-                pw = -(-p.shape[1] // 2) * 2
-                p = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])), mode="edge")
-                planes[i] = np.round(
-                    p.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-                )
-        samp = [(2, 2), (1, 1), (1, 1)] if (subsample and nc == 3) else [(1, 1)] * nc
-        hmax = max(s[0] for s in samp[:nc])
-        vmax = max(s[1] for s in samp[:nc])
-        mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-        padded, grids = [], []
-        for i in range(nc):
-            sh, sv = samp[i]
-            ph, pw = mcuy * sv * 8, mcux * sh * 8
-            p = planes[i]
-            p = np.pad(p, ((0, ph - p.shape[0]), (0, pw - p.shape[1])), mode="edge")
-            padded.append(p)
-            grids.append(_plane_blocks(p, qy if i == 0 else qc))
-
-        out = bytearray(b"\xff\xd8")
-        out += _dqt(0, qy)
-        if nc == 3:
-            out += _dqt(1, qc)
-        sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nc])
-        for i in range(nc):
-            sof += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], 0 if i == 0 else 1])
-        out += _seg(0xC0, sof)
-        out += _dht(0, 0, dc_bits, dc_vals)
-        out += _dht(1, 0, ac_bits, ac_vals)
-        if nc == 3:
-            out += _dht(0, 1, dc_bits, dc_vals)
-            out += _dht(1, 1, ac_bits, ac_vals)
-        if restart:
-            out += _seg(0xDD, struct.pack(">H", restart))
-        sos = bytes([nc])
-        for i in range(nc):
-            sos += bytes([i + 1, 0 if i == 0 else 0x11])
-        sos += bytes([0, 63, 0])
-        out += _seg(0xDA, sos)
-
-        bw = _BW()
-        pred = [0] * nc
-        mcu, rst = 0, 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart and mcu and mcu % restart == 0:
-                    bw.pad()
-                    out += bw.out
-                    bw = _BW()
-                    out += bytes([0xFF, 0xD0 + rst])
-                    rst = (rst + 1) % 8
-                    pred = [0] * nc
-                for i in range(nc):
-                    sh, sv = samp[i]
-                    for by in range(sv):
-                        for bx in range(sh):
-                            pred[i] = _encode_block(
-                                bw, grids[i][my * sv + by, mx * sh + bx], pred[i]
-                            )
-                mcu += 1
-        bw.pad()
-        out += bw.out
-        out += b"\xff\xd9"
-        return bytes(out), grids, samp
-
-    def idct(coefs_8x8):
-        return A.T @ coefs_8x8 @ A
-
-    # expose the low-level pieces for the progressive encoder
-    encode.helpers = {
-        "BW": _BW,
-        "dc_codes": dc_codes,
-        "ac_codes": ac_codes,
-        "seg": _seg,
-        "dqt": _dqt,
-        "dht": _dht,
-        "dc_bits": dc_bits,
-        "dc_vals": dc_vals,
-        "ac_bits": ac_bits,
-        "ac_vals": ac_vals,
-        "magnitude": _magnitude,
-    }
-    return encode, idct, A
-
-
-def test_stdlib_jpeg_decoder_baseline_end_to_end(spark):
-    """r9: baseline JPEG decodes dependency-free — grayscale, 4:4:4
-    RGB, 4:2:0 subsampled, and restart markers — pinned BIT-EXACT
-    against the expected reconstruction computed independently from
-    the encoder's quantized coefficients (dequant → IDCT → color →
-    round), plus a PSNR floor vs the original (catches a transform
-    that's self-consistently wrong), plus the Arrow feature pipeline."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import (
-        _ZIGZAG,
-        jpeg_decoder,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        extract_image_features,
-    )
-
-    encode, idct, _ = _jpeg_tools()
-    rng = np.random.RandomState(7)
-    qy = np.clip(np.arange(64).reshape(8, 8) + 4, 4, 40)
-    qc = np.clip(np.arange(64).reshape(8, 8) * 2 + 6, 6, 60)
-
-    def expected_planes(grids, samp, h, w, qtabs):
-        zig = np.asarray(_ZIGZAG)
-        hmax = max(s[0] for s in samp)
-        vmax = max(s[1] for s in samp)
-        planes = []
-        for gi, g in enumerate(grids):
-            bh, bw_ = g.shape[:2]
-            dez = np.zeros_like(g)
-            dez[:, :, zig] = g
-            coef = dez.reshape(bh, bw_, 8, 8).astype(np.float64) * qtabs[gi]
-            samp_blocks = np.array(
-                [[idct(coef[i, j]) for j in range(bw_)] for i in range(bh)]
-            ) + 128.0
-            plane = samp_blocks.transpose(0, 2, 1, 3).reshape(bh * 8, bw_ * 8)
-            sh, sv = samp[gi]
-            plane = np.repeat(np.repeat(plane, vmax // sv, axis=0), hmax // sh, axis=1)
-            planes.append(plane[:h, :w])
-        return planes
-
-    def expected_rgb(grids, samp, h, w, qtabs):
-        p = expected_planes(grids, samp, h, w, qtabs)
-        if len(p) == 1:
-            return np.clip(np.round(p[0]), 0, 255).astype(np.uint8)[:, :, None]
-        y, cb, cr = p
-        r = y + 1.402 * (cr - 128.0)
-        g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-        b = y + 1.772 * (cb - 128.0)
-        return np.clip(np.round(np.stack([r, g, b], 2)), 0, 255).astype(np.uint8)
-
-    def psnr(a, b):
-        mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
-        return 99.0 if mse == 0 else 10 * np.log10(255.0**2 / mse)
-
-    # smooth gradient + mild noise: realistic spectra, nonzero AC runs
-    h, w = 21, 18  # non-multiple-of-8: exercises edge padding/cropping
-    base = (
-        np.linspace(0, 200, h)[:, None, None]
-        + np.linspace(0, 55, w)[None, :, None]
-        + rng.randint(-12, 13, (h, w, 3))
-    )
-    rgb = np.clip(base, 0, 255).astype(np.uint8)
-    gray = rgb[:, :, :1]
-
-    # grayscale
-    payload, grids, samp = encode(gray, qy, qc)
-    got = jpeg_decoder(payload)
-    want = expected_rgb(grids, samp, h, w, [qy])
-    assert got.shape == (h, w, 1)
-    assert np.array_equal(got, want)
-    assert psnr(got, gray) > 30, psnr(got, gray)
-
-    # 4:4:4 color through the magic dispatch
-    payload, grids, samp = encode(rgb, qy, qc)
-    got = decode_image(payload)
-    want = expected_rgb(grids, samp, h, w, [qy, qc, qc])
-    assert got.shape == (h, w, 3)
-    assert np.array_equal(got, want)
-    assert psnr(got, rgb) > 25, psnr(got, rgb)
-
-    # 4:2:0 subsampled
-    payload, grids, samp = encode(rgb, qy, qc, subsample=True)
-    got = jpeg_decoder(payload)
-    want = expected_rgb(grids, samp, h, w, [qy, qc, qc])
-    assert np.array_equal(got, want)
-    assert psnr(got, rgb) > 20, psnr(got, rgb)
-
-    # restart markers (4:4:4, DRI=2): predictors reset per interval
-    payload, grids, samp = encode(rgb, qy, qc, restart=2)
-    got = jpeg_decoder(payload)
-    want = expected_rgb(grids, samp, h, w, [qy, qc, qc])
-    assert np.array_equal(got, want)
-
-    # Arrow pipeline end-to-end on the JPEG payload
-    df = spark.createDataFrame([(3, bytearray(payload))], ["doc_id", "payload"])
-    (r,) = extract_image_features(df, out_w=4, out_h=4).collect()
-    assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-    assert r["mean_intensity"] == round(float(want.mean()), 6)
-
-
-def test_stdlib_jpeg_unsupported_subformats_fall_through():
-    """Lossless-SOF / 12-bit / arithmetic JPEG refuse in the stdlib
-    tier (ValueError) and route to the Pillow env stub via
-    decode_image — same contract as the PNG/BMP sub-format gaps
-    (progressive SOF2 is SUPPORTED as of late r9)."""
-    import importlib.util
-    import struct
-
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    def sof(marker, precision=8):
-        body = bytes([precision]) + struct.pack(">HH", 8, 8) + bytes([1, 1, 0x11, 0])
-        return (
-            b"\xff\xd8"
-            + bytes([0xFF, marker])
-            + struct.pack(">H", len(body) + 2)
-            + body
-        )
-
-    for payload, msg in (
-        (sof(0xC3), "SOF0"),                 # lossless SOF
-        (sof(0xC0, precision=12), "8-bit"),  # 12-bit
-        (b"\xff\xd8\xff\xcc\x00\x04\x00\x00", "arithmetic"),
-    ):
-        with _pytest.raises(ValueError, match=msg):
-            jpeg_decoder(payload)
-        if importlib.util.find_spec("PIL") is None:
-            with _pytest.raises(NotImplementedError, match="Pillow"):
-                decode_image(payload)
-
-
-def test_g711_wav_decoder_mu_and_a_law():
-    """r9: G.711 mu-law/A-law WAV (telephony codecs the stdlib wave
-    module refuses) decode natively — pinned bit-exact against the
-    reference scalar expansion routines (CCITT G.711 ulaw2linear /
-    alaw2linear transliterated below), through the raw decoder AND
-    the decode_audio dispatch; stereo averages to mono."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_audio,
-        g711_wav_decoder,
-    )
-
-    def ulaw2linear(u):
-        u = ~u & 0xFF
-        t = ((u & 0x0F) << 3) + 0x84
-        t <<= (u & 0x70) >> 4
-        return (0x84 - t) if (u & 0x80) else (t - 0x84)
-
-    def alaw2linear(a):
-        a ^= 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        return t if (a & 0x80) else -t
-
-    def wav(tag, sr, frames, nch=1):
-        fmt = struct.pack("<HHIIHH", tag, nch, sr, sr * nch, nch, 8)
-        data = bytes(frames)
-        riff = (
-            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-    codes = list(range(256))
-    for tag, ref in ((7, ulaw2linear), (6, alaw2linear)):
-        wv, sr = g711_wav_decoder(wav(tag, 8000, codes))
-        assert sr == 8000 and len(wv) == 256
-        expect = np.array([ref(c) for c in codes], dtype=np.float64) / 32768.0
-        assert np.array_equal(wv, expect), f"tag {tag}"
-        # dispatch: the stdlib wave module refuses tag 6/7, the G.711
-        # tier owns it
-        wv2, _ = decode_audio(wav(tag, 8000, codes))
-        assert np.array_equal(wv2, expect)
-    # stereo -> mono average
-    stereo = [c for pair in zip(codes, codes[::-1]) for c in pair]
-    wv, _ = g711_wav_decoder(wav(7, 16000, stereo, nch=2))
-    mono = np.array([ulaw2linear(c) for c in codes], dtype=np.float64) / 32768.0
-    assert np.allclose(wv, (mono + mono[::-1]) / 2.0)
-
-
 def test_state_migration_crash_windows(spark, tmp_path, monkeypatch):
     """r9 crash protocol for the layout migration: a crash BEFORE the
     compaction marker rolls the bucketed rewrite back (repair deletes
@@ -3059,2482 +2320,6 @@ def test_state_migration_crash_windows(spark, tmp_path, monkeypatch):
     assert state_rows("_fp_index") == fp_before
     # bucketed corpus fully usable through the forced bulk probe
     assert cb.corpus_append(spark, same, out, bulk_probe_doc_limit=0)["appended"] == 0
-
-
-def _flac_tools():
-    """Test-side FLAC encoder (pure Python): STREAMINFO + frames with
-    a per-subframe strategy chosen by the test — CONSTANT, VERBATIM,
-    FIXED(0-4) and LPC subframes with single-partition RICE residuals
-    (escape partitions on request). CRCs computed with the decoder's
-    polynomial helpers (the correctness pin is the SAMPLES — FLAC is
-    lossless, so decode must reproduce the encoder's input exactly)."""
-    import struct
-
-    from cdc_historical_warehouse_platform_spark.operators.flac import (
-        _FIXED_COEFS,
-        _crc8,
-        _crc16,
-    )
-
-    class BW:
-        def __init__(self):
-            self.out = bytearray()
-            self.acc = 0
-            self.n = 0
-
-        def put(self, val, nbits):
-            val &= (1 << nbits) - 1 if nbits else 0
-            for i in range(nbits - 1, -1, -1):
-                self.acc = (self.acc << 1) | ((val >> i) & 1)
-                self.n += 1
-                if self.n == 8:
-                    self.out.append(self.acc)
-                    self.acc = 0
-                    self.n = 0
-
-        def align(self):
-            while self.n:
-                self.put(0, 1)
-
-    def rice(bw, residuals, param, escape_bits=None):
-        bw.put(0, 2)  # RICE4 method
-        bw.put(0, 4)  # partition order 0 -> one partition
-        if escape_bits is not None:
-            bw.put(15, 4)  # escape code
-            bw.put(escape_bits, 5)
-            for r in residuals:
-                bw.put(r, escape_bits)
-            return
-        bw.put(param, 4)
-        for r in residuals:
-            zz = (r << 1) if r >= 0 else ((-r) << 1) - 1
-            q, rem = zz >> param, zz & ((1 << param) - 1)
-            for _ in range(q):
-                bw.put(0, 1)
-            bw.put(1, 1)
-            bw.put(rem, param)
-
-    def subframe(bw, samples, bps, kind, param=3, escape_bits=None):
-        bw.put(0, 1)
-        if kind == "constant":
-            bw.put(0, 6)
-            bw.put(0, 1)
-            bw.put(samples[0], bps)
-            return
-        if kind == "verbatim":
-            bw.put(1, 6)
-            bw.put(0, 1)
-            for s in samples:
-                bw.put(s, bps)
-            return
-        if kind.startswith("fixed"):
-            order = int(kind[-1])
-            bw.put(8 | order, 6)
-            bw.put(0, 1)
-            for s in samples[:order]:
-                bw.put(s, bps)
-            coefs = _FIXED_COEFS[order]
-            res = [
-                samples[i] - sum(c * samples[i - 1 - j] for j, c in enumerate(coefs))
-                for i in range(order, len(samples))
-            ]
-            rice(bw, res, param, escape_bits)
-            return
-        if kind == "lpc2":  # LPC path with the FIXED-2 predictor
-            order, prec, shift, coefs = 2, 4, 0, [2, -1]
-            bw.put(32 | (order - 1), 6)
-            bw.put(0, 1)
-            for s in samples[:order]:
-                bw.put(s, bps)
-            bw.put(prec - 1, 4)
-            bw.put(shift, 5)
-            for c in coefs:
-                bw.put(c, prec)
-            res = [
-                samples[i]
-                - (sum(c * samples[i - 1 - j] for j, c in enumerate(coefs)) >> shift)
-                for i in range(order, len(samples))
-            ]
-            rice(bw, res, param, escape_bits)
-            return
-        raise ValueError(kind)
-
-    def encode(channels, sr, bps, kinds, assign="independent", frame_size=None, **kw):
-        """channels: list of per-channel int sample lists (equal len)."""
-        nch = len(channels)
-        total = len(channels[0])
-        frame_size = frame_size or total
-        si = bytearray()
-        si += struct.pack(">HH", frame_size, frame_size)
-        si += b"\x00" * 6  # min/max frame size unknown
-        si += bytes(
-            [
-                (sr >> 12) & 0xFF,
-                (sr >> 4) & 0xFF,
-                ((sr & 0xF) << 4) | ((nch - 1) << 1) | (((bps - 1) >> 4) & 1),
-                ((bps - 1) & 0xF) << 4,
-            ]
-        )
-        si += b"\x00" * 4 + b"\x00" * 16  # total samples (36 bits total w/ prev nibble) + md5
-        out = bytearray(b"fLaC")
-        out += bytes([0x80]) + struct.pack(">I", len(si))[1:] + si
-
-        ch_code = {"independent": nch - 1, "left_side": 8, "right_side": 9, "mid_side": 10}[assign]
-        for fi, start in enumerate(range(0, total, frame_size)):
-            n = min(frame_size, total - start)
-            bw = BW()
-            bw.put(0x3FFE, 14)
-            bw.put(0, 1)
-            bw.put(0, 1)  # fixed blocking
-            bw.put(7, 4)  # 16-bit block-size-1 at end of header
-            bw.put(0, 4)  # sample rate from STREAMINFO
-            bw.put(ch_code, 4)
-            bw.put(0, 3)  # bps from STREAMINFO
-            bw.put(0, 1)
-            assert fi < 128
-            bw.put(fi, 8)  # UTF-8 frame number (single byte)
-            bw.put(n - 1, 16)
-            hdr = bytes(bw.out)
-            assert bw.n == 0
-            bw.put(_crc8(hdr), 8)
-
-            segs = [ch[start : start + n] for ch in channels]
-            if assign == "left_side":
-                subs = [segs[0], [l - r for l, r in zip(segs[0], segs[1])]]
-                bits = [bps, bps + 1]
-            elif assign == "right_side":
-                subs = [[l - r for l, r in zip(segs[0], segs[1])], segs[1]]
-                bits = [bps + 1, bps]
-            elif assign == "mid_side":
-                subs = [
-                    [(l + r) >> 1 for l, r in zip(segs[0], segs[1])],
-                    [l - r for l, r in zip(segs[0], segs[1])],
-                ]
-                bits = [bps, bps + 1]
-            else:
-                subs, bits = segs, [bps] * nch
-            for c, sub in enumerate(subs):
-                subframe(bw, sub, bits[c], kinds[c % len(kinds)], **kw)
-            bw.align()
-            frame = bytes(bw.out)
-            bw.put(_crc16(frame), 16)
-            out += bw.out
-        return bytes(out)
-
-    return encode
-
-
-def test_flac_decoder_lossless_end_to_end(spark):
-    """r9: FLAC decodes dependency-free and LOSSLESSLY — every
-    subframe kind (CONSTANT / VERBATIM / FIXED-0..4 / LPC), rice +
-    escape residuals, multi-frame streams, all three stereo side
-    codings, 8/16-bit depths — samples reproduced EXACTLY, plus the
-    Arrow audio pipeline."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.flac import flac_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_audio,
-        extract_audio_features,
-    )
-
-    encode = _flac_tools()
-    rng = np.random.RandomState(11)
-    n = 96
-    smooth = np.cumsum(rng.randint(-40, 41, n)).astype(np.int64)
-    smooth = np.clip(smooth, -30000, 30000).tolist()
-
-    # every subframe kind, mono 16-bit
-    for kind in ("verbatim", "fixed0", "fixed1", "fixed2", "fixed3", "fixed4", "lpc2"):
-        payload = encode([smooth], 8000, 16, [kind], param=6)
-        wv, sr = flac_decoder(payload)
-        assert sr == 8000
-        assert np.array_equal(wv, np.array(smooth, dtype=np.float64) / 32768.0), kind
-    # constant + escape partitions + multi-frame
-    const = [123] * n
-    payload = encode([const], 8000, 16, ["constant"], frame_size=32)
-    wv, _ = flac_decoder(payload)
-    assert np.array_equal(wv, np.array(const, dtype=np.float64) / 32768.0)
-    payload = encode([smooth], 8000, 16, ["fixed1"], escape_bits=17, frame_size=48)
-    wv, _ = flac_decoder(payload)
-    assert np.array_equal(wv, np.array(smooth, dtype=np.float64) / 32768.0)
-
-    # stereo: all three side codings + independent, 16-bit
-    left = smooth
-    right = np.clip(np.array(smooth) // 2 + 7, -30000, 30000).astype(np.int64).tolist()
-    expect = (np.array(left, dtype=np.float64) + np.array(right)) / 2.0 / 32768.0
-    for assign in ("independent", "left_side", "right_side", "mid_side"):
-        payload = encode([left, right], 16000, 16, ["fixed2", "verbatim"], assign=assign, param=7)
-        wv, sr = flac_decoder(payload)
-        assert sr == 16000
-        assert np.array_equal(wv, expect), assign
-        wv2, _ = decode_audio(payload)  # dispatch
-        assert np.array_equal(wv2, expect), assign
-
-    # 8-bit depth
-    small = (np.array(smooth) // 256).astype(np.int64).tolist()
-    payload = encode([small], 4000, 8, ["fixed2"], param=3)
-    wv, sr = flac_decoder(payload)
-    assert sr == 4000 and np.array_equal(wv, np.array(small, dtype=np.float64) / 128.0)
-
-    # Arrow pipeline end-to-end
-    payload = encode([left, right], 16000, 16, ["lpc2", "fixed3"], assign="mid_side", param=7)
-    df = spark.createDataFrame([(5, bytearray(payload))], ["doc_id", "payload"])
-    (r,) = extract_audio_features(df).collect()
-    assert r["sample_rate"] == 16000 and r["n_samples"] == n
-
-    # corrupt CRC refuses (falls to the librosa seam via decode_audio)
-    import pytest as _pytest
-
-    bad = bytearray(encode([smooth], 8000, 16, ["fixed2"]))
-    bad[-1] ^= 0xFF  # frame CRC-16
-    with _pytest.raises(ValueError, match="CRC-16"):
-        flac_decoder(bytes(bad))
-
-
-def test_stdlib_png_palette_decode():
-    """r9: palette PNG (color type 3) decodes via the PLTE lookup —
-    bit-exact RGB vs the source palette image — while out-of-range
-    indexes and a missing PLTE refuse to the Pillow seam."""
-    import struct
-    import zlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        png_decoder,
-    )
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return (
-            struct.pack(">I", len(data)) + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
-    h, w = 6, 5
-    rng = np.random.RandomState(5)
-    palette = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.randint(0, 16, (h, w)).astype(np.uint8)
-    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
-
-    def png(with_plte=True, indexes=idx):
-        raw_ = b"".join(b"\x00" + indexes[y].tobytes() for y in range(h))
-        out = b"\x89PNG\r\n\x1a\n" + chunk(
-            b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
-        )
-        if with_plte:
-            out += chunk(b"PLTE", palette.tobytes())
-        return out + chunk(b"IDAT", zlib.compress(raw_)) + chunk(b"IEND", b"")
-
-    got = png_decoder(png())
-    assert got.shape == (h, w, 3)
-    assert np.array_equal(got, palette[idx])
-    assert np.array_equal(decode_image(png()), palette[idx])
-
-    with _pytest.raises(ValueError, match="missing PLTE"):
-        png_decoder(png(with_plte=False))
-    bad_idx = idx.copy()
-    bad_idx[0, 0] = 200  # past the 16-entry palette
-    with _pytest.raises(ValueError, match="out of PLTE range"):
-        png_decoder(png(indexes=bad_idx))
-
-
-def test_jpeg_fill_bytes_before_markers():
-    """T.81 B.1.1.2: optional 0xFF fill bytes may precede any marker —
-    a writer padding before DQT/SOS must not break the segment walk."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-
-    encode, _, _ = _jpeg_tools()
-    arr = (np.arange(64, dtype=np.uint8).reshape(8, 8, 1) * 3 % 251)
-    qy = np.full((8, 8), 6, dtype=np.int64)
-    payload, grids, samp = encode(arr, qy, qy)
-    base = jpeg_decoder(payload)
-    # inject fill bytes before the first DQT marker (right after SOI)
-    padded = payload[:2] + b"\xff\xff\xff" + payload[2:]
-    assert np.array_equal(jpeg_decoder(padded), base)
-
-
-def _png_forward_filter(arr_bytes, bpp, filters):
-    """Byte-level forward filtering for the test encoders: arr_bytes
-    (H, stride) uint8 -> raw scanline stream with the CHOSEN filter
-    per row (the decoder must invert them)."""
-    import numpy as np
-
-    h, stride = arr_bytes.shape
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        cur = arr_bytes[y].astype(np.int32)
-        f = filters[y % len(filters)]
-        raw.append(f)
-        left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]]) if stride >= bpp else cur * 0
-        pl = np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]]) if stride >= bpp else prev * 0
-        if f == 0:
-            out = cur
-        elif f == 1:
-            out = cur - left
-        elif f == 2:
-            out = cur - prev
-        elif f == 3:
-            out = cur - ((left + prev) >> 1)
-        else:  # Paeth
-            p = left + prev - pl
-            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - pl)
-            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, pl))
-            out = cur - pred
-        raw.extend((out % 256).astype(np.uint8).tobytes())
-        prev = cur
-    return bytes(raw)
-
-
-def _png_chunks(w, h, depth, ct, interlace, raw, plte=None):
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        body = ctype + data
-        return (
-            struct.pack(">I", len(data)) + body
-            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
-        )
-
-    out = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ct, 0, 0, interlace)
-    )
-    if plte is not None:
-        out += chunk(b"PLTE", plte.tobytes())
-    return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-
-
-def test_stdlib_png_16bit_decode():
-    """r9: 16-bit PNG decodes in the stdlib tier — filters operate on
-    BYTES with bpp = 2*channels per the spec, samples downscale to the
-    high byte (Pillow's convert-to-8-bit contract) — for gray and RGB,
-    across None/Sub/Up/Average/Paeth rows."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        png_decoder,
-    )
-
-    h, w = 7, 5
-    rng = np.random.RandomState(9)
-    for c in (1, 3):
-        samples = rng.randint(0, 65536, (h, w, c)).astype(">u2")
-        arr_bytes = samples.view(np.uint8).reshape(h, w * c * 2)
-        raw = _png_forward_filter(arr_bytes, 2 * c, [0, 1, 2, 3, 4])
-        payload = _png_chunks(w, h, 16, {1: 0, 3: 2}[c], 0, raw)
-        want = (samples >> 8).astype(np.uint8)
-        got = png_decoder(payload)
-        assert got.shape == (h, w, c)
-        assert np.array_equal(got, want), f"channels={c}"
-        assert np.array_equal(decode_image(payload), want)
-
-
-def test_stdlib_png_adam7_interlaced_decode():
-    """r9: Adam7-interlaced PNG assembles from the seven
-    independently-filtered passes — bit-exact vs the source array for
-    RGB and palette variants, including a tiny image with EMPTY
-    passes."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        png_decoder,
-    )
-
-    ADAM7 = (
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    )
-
-    def interlaced_raw(arr, bpp, filters):
-        h, w, _ = arr.shape
-        raw = bytearray()
-        for x0, y0, dx, dy in ADAM7:
-            sub = arr[y0::dy, x0::dx]
-            if sub.size == 0:
-                continue
-            ph, pw = sub.shape[:2]
-            raw += _png_forward_filter(
-                sub.reshape(ph, pw * bpp), bpp, filters
-            )
-        return bytes(raw)
-
-    rng = np.random.RandomState(13)
-    # 10x9 RGB: every pass non-empty; mixed filters per pass
-    h, w = 9, 10
-    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    payload = _png_chunks(w, h, 8, 2, 1, interlaced_raw(rgb, 3, [0, 2, 1, 4, 3]))
-    assert np.array_equal(png_decoder(payload), rgb)
-
-    # 3x2 palette: passes 2/4 (x0 >= width) and more are EMPTY
-    palette = rng.randint(0, 256, (8, 3)).astype(np.uint8)
-    idx = rng.randint(0, 8, (2, 3, 1)).astype(np.uint8)
-    payload = _png_chunks(
-        3, 2, 8, 3, 1, interlaced_raw(idx, 1, [0]), plte=palette
-    )
-    got = png_decoder(payload)
-    assert np.array_equal(got, palette[idx[:, :, 0]])
-
-
-def test_stdlib_png_subbyte_depths():
-    """r9: 1/2/4-bit PNG decodes in the stdlib tier — packed rows
-    unpack MSB-first with row padding dropped; grayscale scales to the
-    full 8-bit range (Pillow's convert contract) and palette indexes
-    look up PLTE directly. This closes the PNG format: every legal
-    depth/color combination now decodes natively."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        png_decoder,
-    )
-
-    rng = np.random.RandomState(21)
-    h, w = 5, 7  # 7 pixels -> packed rows carry padding bits at 1/2/4-bit
-    for depth in (1, 2, 4):
-        maxv = (1 << depth) - 1
-        gray = rng.randint(0, maxv + 1, (h, w, 1)).astype(np.uint8)
-        # pack rows MSB-first
-        raw = bytearray()
-        for y in range(h):
-            bits = np.unpackbits(
-                gray[y, :, 0][:, None] << (8 - depth), axis=1, count=depth
-            ).reshape(-1)
-            pad = (-len(bits)) % 8
-            bits = np.concatenate([bits, np.zeros(pad, np.uint8)])
-            raw.append(0)  # filter None
-            raw.extend(np.packbits(bits).tobytes())
-        payload = _png_chunks(w, h, depth, 0, 0, bytes(raw))
-        want = (gray.astype(np.uint16) * 255 // maxv).astype(np.uint8)
-        got = png_decoder(payload)
-        assert got.shape == (h, w, 1), depth
-        assert np.array_equal(got, want), f"depth={depth}"
-        assert np.array_equal(decode_image(payload), want)
-
-    # 4-bit palette
-    palette = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idx = rng.randint(0, 16, (h, w)).astype(np.uint8)
-    raw = bytearray()
-    for y in range(h):
-        row = idx[y]
-        raw.append(0)
-        packed = bytearray()
-        for i in range(0, w, 2):
-            hi = row[i] << 4
-            lo = row[i + 1] if i + 1 < w else 0
-            packed.append(hi | lo)
-        raw.extend(packed)
-    payload = _png_chunks(w, h, 4, 3, 0, bytes(raw), plte=palette)
-    assert np.array_equal(png_decoder(payload), palette[idx])
-
-
-def test_ima_adpcm_wav_decoder():
-    """r9: IMA/DVI ADPCM WAV (tag 0x11) — a genuinely COMPRESSED audio
-    codec — decodes natively, pinned bit-exact against the reference
-    scalar expansion (the IMA step/index algorithm transliterated
-    below) for mono multi-block and stereo interleaved-chunk layouts,
-    through the raw decoder AND the decode_audio dispatch."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        _IMA_INDEX_ADJUST,
-        _IMA_STEPS,
-        decode_audio,
-        ima_adpcm_wav_decoder,
-    )
-
-    def ref_decode_nibbles(nibbles, pred, idx):
-        out = []
-        for nib in nibbles:
-            step = _IMA_STEPS[idx]
-            diff = step >> 3
-            if nib & 1:
-                diff += step >> 2
-            if nib & 2:
-                diff += step >> 1
-            if nib & 4:
-                diff += step
-            pred = pred - diff if nib & 8 else pred + diff
-            pred = max(-32768, min(32767, pred))
-            idx = max(0, min(88, idx + _IMA_INDEX_ADJUST[nib & 7]))
-            out.append(pred)
-        return out
-
-    def wav(nch, sr, blocks):
-        """blocks: list of per-block [(pred, idx, nibbles_per_channel)]"""
-        body_len = len(blocks[0][0][2]) // 2  # bytes per channel payload
-        balign = 4 * nch + body_len * nch
-        fmt = struct.pack("<HHIIHH", 0x11, nch, sr, sr, balign, 4)
-        data = bytearray()
-        for chans in blocks:
-            for pred, idx, _ in chans:
-                data += struct.pack("<hBx", pred, idx)
-            # interleave 4-byte chunks per channel
-            per_ch = []
-            for _, _, nibs in chans:
-                b = bytearray()
-                for i in range(0, len(nibs), 2):
-                    b.append((nibs[i + 1] << 4) | nibs[i])
-                per_ch.append(bytes(b))
-            for w_i in range(body_len // 4):
-                for c in range(nch):
-                    data += per_ch[c][w_i * 4 : w_i * 4 + 4]
-        riff = (
-            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + bytes(data)
-        )
-        return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-    rng = np.random.RandomState(17)
-    nibs1 = rng.randint(0, 16, 64).tolist()
-    nibs2 = rng.randint(0, 16, 64).tolist()
-
-    # mono, two blocks with different (pred, idx) headers
-    payload = wav(1, 8000, [
-        [(100, 5, nibs1)],
-        [(-2000, 30, nibs2)],
-    ])
-    wv, sr = ima_adpcm_wav_decoder(payload)
-    expect = (
-        [100] + ref_decode_nibbles(nibs1, 100, 5)
-        + [-2000] + ref_decode_nibbles(nibs2, -2000, 30)
-    )
-    assert sr == 8000
-    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
-
-    # stereo interleaved chunks, averaged to mono; dispatch too
-    payload = wav(2, 16000, [[(0, 10, nibs1), (500, 40, nibs2)]])
-    wv, sr = ima_adpcm_wav_decoder(payload)
-    l = [0] + ref_decode_nibbles(nibs1, 0, 10)
-    r = [500] + ref_decode_nibbles(nibs2, 500, 40)
-    expect = (np.array(l, dtype=np.float64) + np.array(r)) / 2.0 / 32768.0
-    assert sr == 16000 and np.array_equal(wv, expect)
-    wv2, _ = decode_audio(payload)
-    assert np.array_equal(wv2, expect)
-
-
-def _encode_progressive_jpeg(arr, qy, qc, bands=((1, 5), (6, 63)), subsample=False):
-    """Test-side PROGRESSIVE encoder (SOF2): DC first (Al=1,
-    interleaved for color / single-component for gray) + DC refine,
-    then per-component AC first and AC refinement scans over the
-    spectral bands, following the T.81 G.1.2.3 bit-buffering
-    discipline (ZRL emitted at the first nonzero absvalue once the
-    zero-history run exceeds 15, buffered correction bits flushed
-    after each symbol). Reuses the baseline encoder for the quantized
-    coefficient grids, so progressive-decode == baseline-decode is an
-    exact equality pin."""
-    import struct
-
-    encode, _idct, _A = _jpeg_tools()
-    H = encode.helpers
-    h, w, nc = arr.shape
-    _, grids, samp = encode(arr, qy, qc, subsample=subsample)
-    hmax = max(s[0] for s in samp[:nc])
-    vmax = max(s[1] for s in samp[:nc])
-
-    def comp_blocks(ci):
-        sh, sv = samp[ci]
-        cw = -(-(w * sh) // hmax)
-        ch = -(-(h * sv) // vmax)
-        return -(-ch // 8), -(-cw // 8)  # (block rows, block cols)
-
-    out = bytearray(b"\xff\xd8")
-    out += H["dqt"](0, qy)
-    if nc == 3:
-        out += H["dqt"](1, qc)
-    sof = bytes([8]) + struct.pack(">HH", h, w) + bytes([nc])
-    for i in range(nc):
-        sof += bytes([i + 1, (samp[i][0] << 4) | samp[i][1], 0 if i == 0 else 1])
-    out += H["seg"](0xC2, sof)
-    out += H["dht"](0, 0, H["dc_bits"], H["dc_vals"])
-    out += H["dht"](1, 0, H["ac_bits"], H["ac_vals"])
-
-    def sos(comp_ids, ss, se, ah, al):
-        b = bytes([len(comp_ids)])
-        for cid in comp_ids:
-            b += bytes([cid, 0x00])
-        b += bytes([ss, se, (ah << 4) | al])
-        return H["seg"](0xDA, b)
-
-    BW, dc_codes, ac_codes, mag = H["BW"], H["dc_codes"], H["ac_codes"], H["magnitude"]
-
-    def dc_first_scan(interleaved):
-        nonlocal out
-        if interleaved:
-            bw_ = BW()
-            pred = [0] * nc
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(nc):
-                        sh, sv = samp[ci]
-                        for by in range(sv):
-                            for bx in range(sh):
-                                v = int(grids[ci][my * sv + by, mx * sh + bx, 0]) >> 1
-                                diff = v - pred[ci]
-                                pred[ci] = v
-                                t, bits_v = mag(diff)
-                                l, c = dc_codes[t]
-                                bw_.put(c, l)
-                                if t:
-                                    bw_.put(bits_v, t)
-            bw_.pad()
-            out += sos(list(range(1, nc + 1)), 0, 0, 0, 1) + bw_.out
-        else:
-            for ci in range(nc):
-                bw_ = BW()
-                pred = 0
-                brows, bcols = comp_blocks(ci)
-                for by in range(brows):
-                    for bx in range(bcols):
-                        v = int(grids[ci][by, bx, 0]) >> 1
-                        diff = v - pred
-                        pred = v
-                        t, bits_v = mag(diff)
-                        l, c = dc_codes[t]
-                        bw_.put(c, l)
-                        if t:
-                            bw_.put(bits_v, t)
-                bw_.pad()
-                out += sos([ci + 1], 0, 0, 0, 1) + bw_.out
-
-    def dc_refine_scan(interleaved):
-        nonlocal out
-        if interleaved:
-            bw_ = BW()
-            mcux = -(-w // (8 * hmax))
-            mcuy = -(-h // (8 * vmax))
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    for ci in range(nc):
-                        sh, sv = samp[ci]
-                        for by in range(sv):
-                            for bx in range(sh):
-                                bw_.put(int(grids[ci][my * sv + by, mx * sh + bx, 0]) & 1, 1)
-            bw_.pad()
-            out += sos(list(range(1, nc + 1)), 0, 0, 1, 0) + bw_.out
-        else:
-            for ci in range(nc):
-                bw_ = BW()
-                brows, bcols = comp_blocks(ci)
-                for by in range(brows):
-                    for bx in range(bcols):
-                        bw_.put(int(grids[ci][by, bx, 0]) & 1, 1)
-                bw_.pad()
-                out += sos([ci + 1], 0, 0, 1, 0) + bw_.out
-
-    interleaved_dc = nc == 3 and not subsample
-    dc_first_scan(interleaved_dc)
-    dc_refine_scan(interleaved_dc)
-
-    # AC first scans, Al=1
-    for ci in range(nc):
-        brows, bcols = comp_blocks(ci)
-        for ss, se in bands:
-            bw_ = BW()
-            for by in range(brows):
-                for bx in range(bcols):
-                    blk = grids[ci][by, bx]
-                    r = 0
-                    for k in range(ss, se + 1):
-                        t0 = int(blk[k])
-                        va = abs(t0) >> 1
-                        v = va if t0 >= 0 else -va
-                        if v == 0:
-                            r += 1
-                            continue
-                        while r > 15:
-                            l, c = ac_codes[0xF0]
-                            bw_.put(c, l)
-                            r -= 16
-                        s, bits_v = mag(v)
-                        l, c = ac_codes[(r << 4) | s]
-                        bw_.put(c, l)
-                        bw_.put(bits_v, s)
-                        r = 0
-                    if r:
-                        l, c = ac_codes[0x00]
-                        bw_.put(c, l)
-            bw_.pad()
-            out += sos([ci + 1], ss, se, 0, 1) + bw_.out
-
-    # AC refinement scans, Ah=1 -> Al=0 (the G.1.2.3 discipline)
-    for ci in range(nc):
-        brows, bcols = comp_blocks(ci)
-        for ss, se in bands:
-            bw_ = BW()
-            for by in range(brows):
-                for bx in range(bcols):
-                    blk = grids[ci][by, bx]
-                    absv = [abs(int(blk[k])) for k in range(ss, se + 1)]
-                    eob_rel = -1
-                    for i2, a2 in enumerate(absv):
-                        if a2 == 1:
-                            eob_rel = i2
-                    r = 0
-                    pending: list[int] = []
-                    for i2, a2 in enumerate(absv):
-                        if a2 == 0:
-                            r += 1
-                            continue
-                        while r > 15 and i2 <= eob_rel:
-                            l, c = ac_codes[0xF0]
-                            bw_.put(c, l)
-                            r -= 16
-                            for b2 in pending:
-                                bw_.put(b2, 1)
-                            pending = []
-                        if a2 > 1:
-                            pending.append(a2 & 1)
-                            continue
-                        l, c = ac_codes[(r << 4) | 1]
-                        bw_.put(c, l)
-                        r = 0
-                        bw_.put(1 if int(blk[ss + i2]) > 0 else 0, 1)
-                        for b2 in pending:
-                            bw_.put(b2, 1)
-                        pending = []
-                    if r > 0 or pending:
-                        l, c = ac_codes[0x00]
-                        bw_.put(c, l)
-                        for b2 in pending:
-                            bw_.put(b2, 1)
-            bw_.pad()
-            out += sos([ci + 1], ss, se, 1, 0) + bw_.out
-
-    out += b"\xff\xd9"
-    return bytes(out), grids
-
-
-def test_progressive_jpeg_decodes_equal_to_baseline():
-    """late r9: PROGRESSIVE JPEG (SOF2) decodes in the stdlib tier —
-    DC first/refine (interleaved and non-interleaved), spectral
-    selection across two AC bands, successive approximation (Al=1→0)
-    with EOB runs, ZRL-in-refinement, and correction-bit buffering —
-    pinned by EXACT equality with the baseline decode of the same
-    quantized coefficient grids (the baseline path is itself pinned
-    against independent reconstruction), for grayscale, 4:4:4, and
-    4:2:0 subsampled images."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-    )
-
-    encode, _, _ = _jpeg_tools()
-    rng = np.random.RandomState(23)
-    qy = np.clip(np.arange(64).reshape(8, 8) + 3, 3, 24)
-    qc = np.clip(np.arange(64).reshape(8, 8) * 2 + 4, 4, 40)
-    h, w = 19, 22  # non-multiple-of-8
-    base = (
-        np.linspace(0, 180, h)[:, None, None]
-        + np.linspace(0, 70, w)[None, :, None]
-        + rng.randint(-25, 26, (h, w, 3))  # noisy: dense AC spectra
-    )
-    rgb = np.clip(base, 0, 255).astype(np.uint8)
-    gray = rgb[:, :, :1]
-
-    # three quantizer regimes steer the refinement machinery into its
-    # different branches: small q -> large |t| (correction-bit-heavy),
-    # large q -> |t| mostly 0/1 (newly-significant + long EOB runs +
-    # ZRL-in-refinement), mixed q -> everything interleaved
-    regimes = [
-        (qy, qc),
-        (np.full((8, 8), 2, dtype=np.int64), np.full((8, 8), 3, dtype=np.int64)),
-        (np.full((8, 8), 48, dtype=np.int64), np.full((8, 8), 64, dtype=np.int64)),
-    ]
-    for qy_, qc_ in regimes:
-        for arr, subsample in ((gray, False), (rgb, False), (rgb, True)):
-            baseline_payload, grids_b, _ = encode(arr, qy_, qc_, subsample=subsample)
-            prog_payload, grids_p = _encode_progressive_jpeg(
-                arr, qy_, qc_, subsample=subsample
-            )
-            for gb, gp in zip(grids_b, grids_p):
-                assert np.array_equal(gb, gp)  # same coefficients by construction
-            want = jpeg_decoder(baseline_payload)
-            got = jpeg_decoder(prog_payload)
-            assert got.shape == want.shape
-            assert np.array_equal(got, want), (arr.shape, subsample)
-            assert np.array_equal(decode_image(prog_payload), want)
-
-
-def _encode_avi(frames_payloads, w, h, compression):
-    """Test-side AVI writer: RIFF(AVI ) / LIST(hdrl: avih +
-    LIST(strl: strh+strf)) / LIST(movi: 00db|00dc chunks). A second
-    (audio) stream precedes the video stream so the parser's
-    stream-numbering logic is exercised."""
-    import struct
-
-    def chunk(cc, body):
-        return cc + struct.pack("<I", len(body)) + body + (b"\x00" if len(body) & 1 else b"")
-
-    def lst(lt, body):
-        return chunk(b"LIST", lt + body)
-
-    comp = 0 if compression == "raw" else struct.unpack("<I", b"MJPG")[0]
-    strh_v = b"vids" + (b"MJPG" if compression == "mjpg" else b"\x00" * 4) + b"\x00" * 48
-    strf_v = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, comp, 0, 0, 0, 0, 0)
-    strh_a = b"auds" + b"\x00" * 52  # decoy stream 0: audio
-    strf_a = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", b"\x00" * 56)
-        + lst(b"strl", chunk(b"strh", strh_a) + chunk(b"strf", strf_a))
-        + lst(b"strl", chunk(b"strh", strh_v) + chunk(b"strf", strf_v)),
-    )
-    tag = b"01db" if compression == "raw" else b"01dc"  # video = stream 1
-    movi = lst(b"movi", b"".join(chunk(tag, p) for p in frames_payloads))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def test_avi_video_decode_raw_and_mjpeg(spark):
-    """late r9: REAL video decode — AVI containers with raw-DIB frames
-    reproduce the source arrays exactly, MJPEG frames decode through
-    the stdlib JPEG tier (frame md5 == jpeg_decoder of the chunk), a
-    decoy audio stream is skipped, every_n sampling holds, and the
-    Arrow row-expanding pipeline emits one row per sampled frame."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.video import avi_decoder
-
-    rng = np.random.RandomState(31)
-    h, w = 11, 10
-    frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(5)]
-
-    # raw DIB: bottom-up BGR rows padded to 4 bytes
-    row_bytes = ((24 * w + 31) // 32) * 4
-    pad = row_bytes - w * 3
-
-    def dib(arr):
-        return b"".join(
-            arr[y, :, ::-1].tobytes() + b"\x00" * pad for y in range(h - 1, -1, -1)
-        )
-
-    payload = _encode_avi([dib(f) for f in frames], w, h, "raw")
-    got = avi_decoder(payload)
-    assert [i for i, _ in got] == [0, 1, 2, 3, 4]
-    for (_, img), src in zip(got, frames):
-        assert np.array_equal(img, src)
-    # every_n sampling
-    got2 = avi_decoder(payload, every_n=2)
-    assert [i for i, _ in got2] == [0, 2, 4]
-
-    # MJPEG: each frame is a full baseline JPEG
-    encode, _, _ = _jpeg_tools()
-    qy = np.full((8, 8), 5, dtype=np.int64)
-    jpegs = [encode(f, qy, qy * 2)[0] for f in frames]
-    payload_mj = _encode_avi(jpegs, w, h, "mjpg")
-    got_mj = avi_decoder(payload_mj)
-    for (_, img), jp in zip(got_mj, jpegs):
-        assert np.array_equal(img, jpeg_decoder(jp))
-
-    # Arrow pipeline: one row per sampled frame, decoded-pixel md5s
-    df = spark.createDataFrame(
-        [(1, bytearray(payload)), (2, bytearray(payload_mj))], ["doc_id", "payload"]
-    )
-    rows = extract_video_frames(df, every_n=2).collect()
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert sorted(r["frame_idx"] for r in by_doc[1]) == [0, 2, 4]
-    for r in by_doc[1]:
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["frame_md5"] == hashlib.md5(frames[r["frame_idx"]].tobytes()).hexdigest()
-    for r in by_doc[2]:
-        want = jpeg_decoder(jpegs[r["frame_idx"]])
-        assert r["frame_md5"] == hashlib.md5(want.tobytes()).hexdigest()
-
-    # unsupported codec refuses cleanly
-    import struct as _s
-
-    import pytest as _pytest
-
-    strf_pos = payload.find(_s.pack("<IiiHH", 40, w, h, 1, 24))
-    assert strf_pos > 0
-    bad = bytearray(payload)
-    bad[strf_pos + 16 : strf_pos + 20] = b"XVID"
-    with _pytest.raises(ValueError, match="raw DIB and MJPG"):
-        avi_decoder(bytes(bad))
-
-
-# --- GIF (r9 continuation): independent encoder for the decode pins --------
-
-
-def _gif_lzw_encode(min_code_size, indices):
-    """Independent GIF-variant LZW compressor (from the GIF89a spec):
-    LSB-first packing, variable width, deferred clear when the table
-    fills. Built here so the decoder is pinned against a SEPARATE
-    implementation, the same pattern as the JPEG tests."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    out = bytearray()
-    acc = nacc = 0
-
-    def emit(code):
-        nonlocal acc, nacc
-        acc |= code << nacc
-        nacc += width
-        while nacc >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nacc -= 8
-
-    table = {bytes((i,)): i for i in range(clear)}
-    next_code = end + 1
-    emit(clear)
-    buf = b""
-    for px in indices:
-        cand = buf + bytes((int(px),))
-        if cand in table:
-            buf = cand
-            continue
-        emit(table[buf])
-        if next_code < 4096:
-            table[cand] = next_code
-            next_code += 1
-            if next_code > (1 << width) and width < 12:
-                width += 1
-        # else: deferred clear — keep coding with the frozen table
-        buf = bytes((int(px),))
-    if buf:
-        emit(table[buf])
-    emit(end)
-    if nacc:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_interlace_rows(h):
-    rows = []
-    for first, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-        rows.extend(range(first, h, step))
-    return rows
-
-
-def _encode_gif(sw, sh, frames, gct=None, bg=0, version=b"GIF89a"):
-    """Independent GIF container writer. ``frames`` is a list of dicts:
-    idx (2-D uint8 index array), left, top, lct (palette or None),
-    interlace (bool), transparent (index or None), disposal (int)."""
-    import struct as s
-
-    out = bytearray(version)
-
-    def pal_bits(p):
-        n = len(p)
-        b = 0
-        while (2 << b) < n:
-            b += 1
-        assert 2 << b == n, "palette length must be a power of two >= 2"
-        return b
-
-    packed = 0
-    if gct is not None:
-        packed = 0x80 | pal_bits(gct)
-    out += s.pack("<HHBBB", sw, sh, packed, bg, 0)
-    if gct is not None:
-        out += bytes(gct.astype("uint8").ravel())
-    for fr in frames:
-        if fr.get("transparent") is not None or fr.get("disposal", 0):
-            gp = (fr.get("disposal", 0) & 7) << 2
-            tr = fr.get("transparent")
-            if tr is not None:
-                gp |= 1
-            out += bytes([0x21, 0xF9, 4, gp, 0, 0, tr or 0, 0])
-        arr = fr["idx"]
-        h, w = arr.shape
-        ip = 0
-        lct = fr.get("lct")
-        if lct is not None:
-            ip |= 0x80 | pal_bits(lct)
-        if fr.get("interlace"):
-            ip |= 0x40
-        out += bytes([0x2C]) + s.pack(
-            "<HHHHB", fr.get("left", 0), fr.get("top", 0), w, h, ip
-        )
-        if lct is not None:
-            out += bytes(lct.astype("uint8").ravel())
-        if fr.get("interlace"):
-            arr = arr[_gif_interlace_rows(h)]
-        mcs = max(2, pal_bits(gct if lct is None else lct) + 1)
-        out += bytes([mcs])
-        data = _gif_lzw_encode(mcs, arr.ravel().tolist())
-        for i in range(0, len(data), 255):
-            chunk = data[i : i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3B"
-    return bytes(out)
-
-
-def test_stdlib_gif_decoder_single_frame(spark):
-    """r9 continuation: genuine GIF payloads decode natively — LZW
-    with table growth past several width bumps, global palette,
-    interlacing, GIF87a and GIF89a, and the magic dispatch through
-    decode_image + the Arrow feature pipeline."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.gif import gif_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        extract_image_features,
-    )
-
-    rng = np.random.RandomState(97)
-    pal = rng.randint(0, 256, (256, 3)).astype(np.uint8)
-    h, w = 23, 17
-    idx = rng.randint(0, 256, (h, w)).astype(np.uint8)
-    want = pal[idx]
-
-    payload = _encode_gif(w, h, [{"idx": idx}], gct=pal)
-    assert np.array_equal(gif_decoder(payload), want)
-    assert np.array_equal(decode_image(payload), want)
-
-    # GIF87a + interlaced + small palette (width starts at 3 bits)
-    pal8 = rng.randint(0, 256, (8, 3)).astype(np.uint8)
-    idx8 = rng.randint(0, 8, (19, 13)).astype(np.uint8)
-    pay87 = _encode_gif(
-        13, 19, [{"idx": idx8, "interlace": True}], gct=pal8, version=b"GIF87a"
-    )
-    assert np.array_equal(gif_decoder(pay87), pal8[idx8])
-
-    # a LONG low-entropy image: forces LZW table past 9/10/11-bit
-    # widths and into the deferred-clear regime
-    big = (np.arange(128 * 96, dtype=np.uint32) % 7).astype(np.uint8).reshape(96, 128)
-    paybig = _encode_gif(128, 96, [{"idx": big}], gct=pal8)
-    assert np.array_equal(gif_decoder(paybig), pal8[big])
-
-    # Arrow pipeline end-to-end on the default decoder
-    df = spark.createDataFrame([(0, bytearray(payload))], ["doc_id", "payload"])
-    r = extract_image_features(df, out_w=4, out_h=4).collect()[0]
-    ys, xs = (np.arange(4) * h) // 4, (np.arange(4) * w) // 4
-    assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-    assert r["mean_intensity"] == round(float(want.mean()), 6)
-    assert r["resized_md5"] == hashlib.md5(
-        np.ascontiguousarray(want[ys][:, xs]).tobytes()
-    ).hexdigest()
-
-
-def test_stdlib_gif_animation_composite(spark):
-    """Animated GIF: transparency + all three disposal methods
-    composite exactly as an independent numpy compositor computes,
-    local palettes override the global one, and the payload rides
-    extract_video_frames like an AVI."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.gif import (
-        gif_animation_decoder,
-        gif_decoder,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-
-    rng = np.random.RandomState(7)
-    sw, sh = 12, 10
-    gct = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    lct = rng.randint(0, 256, (4, 3)).astype(np.uint8)
-    bg = 5
-
-    f0 = rng.randint(0, 16, (sh, sw)).astype(np.uint8)  # full screen, keep
-    f1 = rng.randint(0, 4, (4, 6)).astype(np.uint8)  # patch, lct, restore-bg
-    f2 = rng.randint(0, 16, (5, 5)).astype(np.uint8)  # transparent=3, restore-prev
-    f3 = rng.randint(0, 16, (3, 7)).astype(np.uint8)  # final patch
-
-    payload = _encode_gif(
-        sw,
-        sh,
-        [
-            {"idx": f0, "disposal": 1},
-            {"idx": f1, "left": 3, "top": 2, "lct": lct, "disposal": 2},
-            {"idx": f2, "left": 6, "top": 4, "transparent": 3, "disposal": 3},
-            {"idx": f3, "left": 1, "top": 6},
-        ],
-        gct=gct,
-        bg=bg,
-    )
-
-    # independent compositor
-    canvas = np.zeros((sh, sw, 3), np.uint8)
-    canvas[:, :] = gct[bg]
-    want = []
-    canvas[:, :] = gct[f0]  # frame 0 (full screen)
-    want.append(canvas.copy())
-    canvas[2:6, 3:9] = lct[f1]  # frame 1 (local palette)
-    want.append(canvas.copy())
-    after1 = canvas.copy()
-    after1[2:6, 3:9] = gct[bg]  # disposal 2: region -> background
-    canvas = after1.copy()
-    saved = canvas.copy()
-    rgb2 = gct[f2]
-    m = f2 != 3
-    canvas[4:9, 6:11][m] = rgb2[m]  # frame 2 (transparency)
-    want.append(canvas.copy())
-    canvas = saved  # disposal 3: restore previous
-    canvas[6:9, 1:8] = gct[f3]  # frame 3
-    want.append(canvas.copy())
-
-    got = gif_animation_decoder(payload)
-    assert [i for i, _ in got] == [0, 1, 2, 3]
-    for (_, img), exp in zip(got, want):
-        assert np.array_equal(img, exp)
-    # first-frame contract == animation frame 0
-    assert np.array_equal(gif_decoder(payload), want[0])
-    # every_n sampling
-    assert [i for i, _ in gif_animation_decoder(payload, every_n=2)] == [0, 2]
-
-    # video pipeline: animated GIF rows next to an AVI-shaped contract
-    df = spark.createDataFrame([(9, bytearray(payload))], ["doc_id", "payload"])
-    rows = sorted(
-        extract_video_frames(df, every_n=2).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2]
-    for r, exp in zip(rows, (want[0], want[2])):
-        assert (r["width"], r["height"]) == (sw, sh)
-        assert r["frame_md5"] == hashlib.md5(exp.tobytes()).hexdigest()
-
-
-def test_stdlib_gif_corrupt_payloads_raise():
-    """Corrupt GIFs fail loudly (and decode_image chains the parse
-    error into the Pillow env stub rather than swallowing it)."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.gif import gif_decoder
-
-    pal = np.zeros((4, 3), np.uint8)
-    idx = np.zeros((3, 3), np.uint8)
-    good = _encode_gif(3, 3, [{"idx": idx}], gct=pal)
-
-    with _pytest.raises(ValueError, match="magic"):
-        gif_decoder(b"GIF99a" + good[6:])
-    with _pytest.raises(ValueError):
-        gif_decoder(good[:-5])  # truncated mid-image
-    # image rectangle outside the logical screen
-    bad = bytearray(good)
-    pos = bad.find(b"\x2c")
-    bad[pos + 5 : pos + 7] = (99).to_bytes(2, "little")
-    with _pytest.raises(ValueError, match="exceeds logical screen"):
-        gif_decoder(bytes(bad))
-
-
-# --- TIFF (r9 continuation): independent encoder for the decode pins -------
-
-
-def _tiff_lzw_encode(data):
-    """Independent TIFF-variant LZW compressor (TIFF 6.0 spec §13):
-    MSB-first packing, clear=256/EOI=257, early-change width bumps
-    (encoder widens when its next free code reaches 512/1024/2048),
-    clear emitted before the table overflows."""
-    out = bytearray()
-    acc = nacc = 0
-    width = 9
-
-    def emit(code):
-        nonlocal acc, nacc
-        acc = (acc << width) | code
-        nacc += width
-        while nacc >= 8:
-            out.append((acc >> (nacc - 8)) & 0xFF)
-            nacc -= 8
-
-    def fresh():
-        return {bytes((i,)): i for i in range(256)}
-
-    table = fresh()
-    next_code = 258
-    emit(256)
-    buf = b""
-    for b in data:
-        cand = buf + bytes((b,))
-        if cand in table:
-            buf = cand
-            continue
-        emit(table[buf])
-        if next_code < 4093:
-            table[cand] = next_code
-            next_code += 1
-            if next_code in (512, 1024, 2048):
-                width += 1
-        else:
-            emit(256)
-            table = fresh()
-            next_code = 258
-            width = 9
-        buf = bytes((b,))
-    if buf:
-        emit(table[buf])
-    emit(257)
-    if nacc:
-        out.append((acc << (8 - nacc)) & 0xFF)
-    return bytes(out)
-
-
-def _packbits_encode(data):
-    """Independent PackBits compressor: replicate runs >= 3, literals
-    otherwise (chunks capped at 128)."""
-    out = bytearray()
-    i = 0
-    n = len(data)
-    while i < n:
-        run = 1
-        while i + run < n and run < 128 and data[i + run] == data[i]:
-            run += 1
-        if run >= 3:
-            out += bytes([257 - run, data[i]])
-            i += run
-            continue
-        lit_start = i
-        i += run
-        while i < n and i - lit_start < 128:
-            run = 1
-            while i + run < n and run < 128 and data[i + run] == data[i]:
-                run += 1
-            if run >= 3:
-                break
-            i += run
-            if i - lit_start >= 128:
-                i = lit_start + 128
-                break
-        out += bytes([i - lit_start - 1]) + data[lit_start:i]
-    return bytes(out)
-
-
-def _encode_tiff(
-    arr,
-    endian="<",
-    compression=1,
-    photometric=1,
-    rows_per_strip=None,
-    predictor=1,
-    colormap=None,
-    bits=8,
-    tiles=None,
-):
-    """Independent strip- or tile-organized TIFF writer (header +
-    sorted IFD + value area), built from the TIFF 6.0 structure
-    description. ``bits=16`` packs uint16 samples in the file's byte
-    order; ``tiles=(tw, tl)`` writes tile organization (tags 322-325,
-    edge tiles zero-padded per §15)."""
-    import struct as s
-
-    import numpy as np
-
-    h, w, spp = arr.shape
-    rps = rows_per_strip or h
-    mask = 0xFF if bits == 8 else 0xFFFF
-    out_dtype = np.uint8 if bits == 8 else np.dtype(endian + "u2")
-
-    def apply_pred(a):
-        if predictor != 2:
-            return a.astype(out_dtype)
-        d = a.astype(np.int64).copy()
-        d[:, 1:, :] -= a.astype(np.int64)[:, :-1, :]
-        return (d & mask).astype(out_dtype)
-
-    def pack(raw):
-        if compression == 5:
-            return _tiff_lzw_encode(raw)
-        if compression == 32773:
-            return _packbits_encode(raw)
-        if compression in (8, 32946):
-            import zlib as _z
-
-            return _z.compress(raw)
-        return raw
-
-    strips = []
-    if tiles is not None:
-        tw, tl = tiles
-        across = (w + tw - 1) // tw
-        down = (h + tl - 1) // tl
-        for ty in range(down):
-            for tx in range(across):
-                tile = np.zeros((tl, tw, spp), dtype=arr.dtype)
-                block = arr[ty * tl : ty * tl + tl, tx * tw : tx * tw + tw]
-                tile[: block.shape[0], : block.shape[1]] = block
-                strips.append(pack(apply_pred(tile).tobytes()))
-    else:
-        src = apply_pred(arr)
-        for top in range(0, h, rps):
-            strips.append(pack(src[top : top + rps].tobytes()))
-
-    pos = 8
-    strip_offsets = []
-    for st in strips:
-        strip_offsets.append(pos)
-        pos += len(st)
-    value_area = bytearray()
-
-    def tag(tid, ftype, vals):
-        nonlocal value_area
-        size = {1: 1, 3: 2, 4: 4}[ftype]
-        fmt = {1: "B", 3: "H", 4: "I"}[ftype]
-        packed = b"".join(s.pack(endian + fmt, v) for v in vals)
-        if len(packed) <= 4:
-            return s.pack(endian + "HHI", tid, ftype, len(vals)) + packed.ljust(4, b"\0")
-        off = pos + len(value_area)
-        value_area += packed
-        return s.pack(endian + "HHII", tid, ftype, len(vals), off)
-
-    entries = [
-        (256, 4, [w]),
-        (257, 4, [h]),
-        (258, 3, [bits] * spp),
-        (259, 3, [compression]),
-        (262, 3, [photometric]),
-        (277, 3, [spp]),
-    ]
-    if tiles is not None:
-        entries += [
-            (322, 3, [tiles[0]]),
-            (323, 3, [tiles[1]]),
-            (324, 4, strip_offsets),
-            (325, 4, [len(st) for st in strips]),
-        ]
-    else:
-        entries += [
-            (273, 4, strip_offsets),
-            (278, 4, [rps]),
-            (279, 4, [len(st) for st in strips]),
-        ]
-    if predictor == 2:
-        entries.append((317, 3, [2]))
-    if colormap is not None:
-        cm16 = (colormap.astype(np.uint16) << 8).T.ravel().tolist()
-        entries.append((320, 3, cm16))
-    # two passes: value-area offsets depend on pos only (fixed), IFD last
-    ifd = s.pack(endian + "H", len(entries))
-    for tid, ftype, vals in sorted(entries):
-        ifd += tag(tid, ftype, vals)
-    ifd += s.pack(endian + "I", 0)
-    ifd_off = pos + len(value_area)
-    magic = b"II*\x00" if endian == "<" else b"MM\x00*"
-    return (
-        magic
-        + s.pack(endian + "I", ifd_off)
-        + b"".join(strips)
-        + bytes(value_area)
-        + ifd
-    )
-
-
-def test_stdlib_tiff_decoder_all_baseline_shapes(spark):
-    """r9 continuation: genuine baseline TIFFs decode natively — both
-    endians, multi-strip, gray/inverted-gray/RGB/RGBA/palette,
-    uncompressed + PackBits + LZW (+ horizontal predictor), pinned
-    bit-exact against an independent in-test TIFF writer, through the
-    magic dispatch and the Arrow feature pipeline."""
-    import hashlib
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        extract_image_features,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    rng = np.random.RandomState(41)
-    h, w = 21, 13
-    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    gray = rgb[:, :, :1]
-
-    # uncompressed, big-endian, multi-strip grayscale
-    pay = _encode_tiff(gray, endian=">", rows_per_strip=4)
-    assert np.array_equal(tiff_decoder(pay), gray)
-    # WhiteIsZero inverts
-    pay0 = _encode_tiff(255 - gray, endian="<", photometric=0)
-    assert np.array_equal(tiff_decoder(pay0), gray)
-
-    # PackBits RGB with genuine runs (stripes force replicate blocks)
-    stripes = np.repeat(
-        rng.randint(0, 256, (h, 4, 3)).astype(np.uint8), [4, 4, 4, 1], axis=1
-    )
-    pay_pb = _encode_tiff(stripes, compression=32773, photometric=2, rows_per_strip=6)
-    assert np.array_equal(tiff_decoder(pay_pb), stripes)
-
-    # LZW big random RGB: pushes the table past the 511/1023/2047
-    # early-change bumps; with and without the horizontal predictor
-    big = rng.randint(0, 256, (40, 60, 3)).astype(np.uint8)
-    pay_lzw = _encode_tiff(big, compression=5, photometric=2, rows_per_strip=16)
-    assert np.array_equal(tiff_decoder(pay_lzw), big)
-    pay_pred = _encode_tiff(
-        big, endian=">", compression=5, photometric=2, predictor=2
-    )
-    assert np.array_equal(tiff_decoder(pay_pred), big)
-    # low-entropy LZW long enough to force the in-stream clear reset
-    flat = np.tile(np.arange(8, dtype=np.uint8), 40 * 200 // 8).reshape(40, 200, 1)
-    noisy = (flat + rng.randint(0, 3, flat.shape).astype(np.uint8)) % 251
-    pay_clear = _encode_tiff(noisy, compression=5)
-    assert np.array_equal(tiff_decoder(pay_clear), noisy)
-
-    # palette + RGBA
-    pal = rng.randint(0, 256, (256, 3)).astype(np.uint8)
-    idx = rng.randint(0, 256, (h, w, 1)).astype(np.uint8)
-    pay_pal = _encode_tiff(idx, photometric=3, colormap=pal)
-    assert np.array_equal(tiff_decoder(pay_pal), pal[idx[:, :, 0]])
-    rgba = rng.randint(0, 256, (h, w, 4)).astype(np.uint8)
-    pay_rgba = _encode_tiff(rgba, photometric=2, compression=32773)
-    assert np.array_equal(tiff_decoder(pay_rgba), rgba)
-
-    # magic dispatch + Arrow pipeline
-    assert np.array_equal(decode_image(pay_lzw), big)
-    df = spark.createDataFrame([(0, bytearray(pay_lzw))], ["doc_id", "payload"])
-    r = extract_image_features(df, out_w=4, out_h=4).collect()[0]
-    ys, xs = (np.arange(4) * 40) // 4, (np.arange(4) * 60) // 4
-    assert (r["width"], r["height"], r["channels"]) == (60, 40, 3)
-    assert r["mean_intensity"] == round(float(big.mean()), 6)
-    assert r["resized_md5"] == hashlib.md5(
-        np.ascontiguousarray(big[ys][:, xs]).tobytes()
-    ).hexdigest()
-
-
-def test_stdlib_tiff_unsupported_subformats_raise():
-    """Exotic-compression / odd-bit-depth TIFFs refuse loudly so the
-    Pillow env seam owns them (tiled/deflate/16-bit are REAL decodes
-    as of r10 — pinned in their own tests)."""
-    import struct as s
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    gray = np.zeros((4, 4, 1), np.uint8)
-    good = _encode_tiff(gray)
-
-    with _pytest.raises(ValueError, match="magic"):
-        tiff_decoder(b"IX*\x00" + good[4:])
-
-    def patch_tag(payload, tid, new_short):
-        (ifd_off,) = s.unpack_from("<I", payload, 4)
-        (n,) = s.unpack_from("<H", payload, ifd_off)
-        b = bytearray(payload)
-        for i in range(n):
-            base = ifd_off + 2 + 12 * i
-            if s.unpack_from("<H", payload, base)[0] == tid:
-                b[base + 8 : base + 12] = s.pack("<HH", new_short, 0)
-                return bytes(b)
-        raise AssertionError(f"tag {tid} not found")
-
-    # JPEG-in-TIFF DECODES as of r11 (its own test); tag 7 over
-    # non-JPEG segment bytes refuses at the missing SOI
-    with _pytest.raises(ValueError, match="SOI"):
-        tiff_decoder(patch_tag(good, 259, 7))
-    with _pytest.raises(ValueError, match="compression"):
-        tiff_decoder(patch_tag(good, 259, 2))  # CCITT
-    with _pytest.raises(ValueError, match="8- or 16-bit"):
-        tiff_decoder(patch_tag(good, 258, 12))  # odd bit depth
-    # deflate tag over NON-deflate bytes refuses cleanly (bad stream)
-    with _pytest.raises(ValueError, match="deflate"):
-        tiff_decoder(patch_tag(good, 259, 8))
-
-    # half-tiled file (TileWidth without TileLength) refuses
-    (ifd_off,) = s.unpack_from("<I", good, 4)
-    (n,) = s.unpack_from("<H", good, ifd_off)
-    b = bytearray(good)
-    for i in range(n):
-        base = ifd_off + 2 + 12 * i
-        if s.unpack_from("<H", good, base)[0] == 278:
-            b[base : base + 2] = s.pack("<H", 322)
-    with _pytest.raises(ValueError, match="323"):
-        tiff_decoder(bytes(b))
-
-
-# --- AIFF / AU (r9 continuation): independent encoders for the pins --------
-
-
-def _ext80(rate):
-    """Independent 80-bit IEEE extended encoder (AIFF sample rate)."""
-    import math
-
-    if rate == 0:
-        return b"\x00" * 10
-    m, e = math.frexp(float(rate))
-    return (e - 1 + 16383).to_bytes(2, "big") + int(m * (1 << 64)).to_bytes(8, "big")
-
-
-def _encode_aiff(frames_bytes, nch, bits, rate, form=b"AIFF", ctype=None):
-    import struct as s
-
-    comm = s.pack(">hIh", nch, len(frames_bytes) // (nch * bits // 8), bits)
-    comm += _ext80(rate)
-    if ctype is not None:
-        comm += ctype + b"\x04name"  # compression fourcc + pstring
-    ssnd = s.pack(">II", 0, 0) + frames_bytes
-    body = b""
-    for cid, c in ((b"COMM", comm), (b"SSND", ssnd)):
-        body += cid + s.pack(">I", len(c)) + c + (b"\x00" if len(c) & 1 else b"")
-    return b"FORM" + s.pack(">I", 4 + len(body)) + form + body
-
-
-def _encode_au(data, enc, rate, nch):
-    import struct as s
-
-    return b".snd" + s.pack(">IIIII", 24, len(data), enc, rate, nch) + data
-
-
-def test_tiff_deflate_strips_decode():
-    """r10 seam shrink: Adobe-deflate (8) and legacy-zlib (32946) TIFF
-    strips decode natively via stdlib zlib — multi-strip, RGB and
-    gray, both tags, bit-exact vs the independent writer; corrupt
-    deflate streams refuse cleanly."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    rng = np.random.RandomState(13)
-    rgb = rng.randint(0, 256, (12, 9, 3)).astype(np.uint8)
-    gray = rng.randint(0, 256, (7, 5, 1)).astype(np.uint8)
-    for comp in (8, 32946):
-        pay = _encode_tiff(rgb, compression=comp, photometric=2, rows_per_strip=5)
-        assert np.array_equal(tiff_decoder(pay), rgb), f"comp {comp}"
-        payg = _encode_tiff(gray, compression=comp, photometric=1)
-        assert np.array_equal(tiff_decoder(payg), gray), f"comp {comp} gray"
-    bad = bytearray(_encode_tiff(rgb, compression=8, photometric=2))
-    # corrupt the strip data (starts right after the 8-byte header)
-    bad[12] ^= 0xFF
-    with _pytest.raises(ValueError):
-        tiff_decoder(bytes(bad))
-
-
-def test_tiff_tiled_and_16bit_decode():
-    """r10 seam shrink: tile-organized TIFFs (tags 322-325, padded edge
-    tiles, per-tile predictor reset) and 16-bit samples (high-byte
-    fold — the Pillow convert contract) decode natively, in every
-    compression × endian combination the strip tier supports; 16-bit
-    palette indices still refuse."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    rng = np.random.RandomState(17)
-    # 13×11 forces ragged edge tiles with 5×4 tiling
-    rgb = rng.randint(0, 256, (13, 11, 3)).astype(np.uint8)
-    for comp in (1, 5, 8, 32773):
-        for endian in ("<", ">"):
-            pay = _encode_tiff(
-                rgb, endian=endian, compression=comp, photometric=2, tiles=(4, 5)
-            )
-            assert np.array_equal(tiff_decoder(pay), rgb), (comp, endian)
-    # tiled + predictor: differencing must reset at tile seams
-    pay = _encode_tiff(rgb, compression=5, photometric=2, tiles=(4, 5), predictor=2)
-    assert np.array_equal(tiff_decoder(pay), rgb)
-
-    # 16-bit: decoded full-width, returned as the high byte
-    deep = rng.randint(0, 65536, (9, 7, 3)).astype(np.uint16)
-    want = (deep >> 8).astype(np.uint8)
-    for comp in (1, 8):
-        for endian in ("<", ">"):
-            pay = _encode_tiff(
-                deep, endian=endian, compression=comp, photometric=2, bits=16
-            )
-            assert np.array_equal(tiff_decoder(pay), want), (comp, endian)
-    # 16-bit + predictor (mod-65536 differencing) + tiles together
-    pay = _encode_tiff(
-        deep, compression=8, photometric=2, bits=16, predictor=2, tiles=(4, 4)
-    )
-    assert np.array_equal(tiff_decoder(pay), want)
-    # 16-bit grayscale incl. WhiteIsZero inversion
-    gray = rng.randint(0, 65536, (6, 5, 1)).astype(np.uint16)
-    pay = _encode_tiff(gray, compression=1, photometric=0, bits=16)
-    assert np.array_equal(tiff_decoder(pay), 255 - (gray >> 8).astype(np.uint8))
-
-    # 16-bit palette indices refuse to the env seam
-    idx16 = rng.randint(0, 16, (4, 4, 1)).astype(np.uint16)
-    cmap = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    pay = _encode_tiff(idx16, compression=1, photometric=3, bits=16, colormap=cmap)
-    with _pytest.raises(ValueError, match="palette"):
-        tiff_decoder(pay)
-
-
-def test_float_audio_decoders():
-    """r10 seam shrink: IEEE-float audio decodes natively — WAV format
-    tag 3 (32/64-bit, stereo averaging), AIFC fl32/fl64, AU encodings
-    6/7 — all through decode_audio's magic dispatch with the native
-    sample rate."""
-    import struct as s
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        aiff_decoder,
-        au_decoder,
-        decode_audio,
-        float_wav_decoder,
-    )
-
-    rng = np.random.RandomState(6)
-    mono = (rng.rand(64) * 2 - 1).astype(np.float64)
-
-    def wav(data, nch, sr, bits):
-        fmt = s.pack("<HHIIHH", 3, nch, sr, sr * nch * bits // 8, nch * bits // 8, bits)
-        body = b"WAVE" + b"fmt " + s.pack("<I", len(fmt)) + fmt
-        body += b"data" + s.pack("<I", len(data)) + data
-        return b"RIFF" + s.pack("<I", len(body)) + body
-
-    w, sr = float_wav_decoder(wav(mono.astype("<f4").tobytes(), 1, 48000, 32))
-    assert sr == 48000 and np.allclose(w, mono, atol=1e-6)
-    w, sr = decode_audio(wav(mono.astype("<f8").tobytes(), 1, 8000, 64))
-    assert sr == 8000 and np.array_equal(w, mono)
-    # stereo averages
-    stereo = np.repeat(mono, 2).astype("<f4").tobytes()
-    w, _ = float_wav_decoder(wav(stereo, 2, 48000, 32))
-    assert np.allclose(w, mono, atol=1e-6)
-
-    # AIFC float variants (big-endian IEEE; numSampleFrames bounds pads)
-    pay32 = _encode_aiff(mono.astype(">f4").tobytes(), 1, 32, 44100,
-                         form=b"AIFC", ctype=b"fl32")
-    w, sr = aiff_decoder(pay32)
-    assert sr == 44100 and np.allclose(w, mono, atol=1e-6)
-    pay64 = _encode_aiff(mono.astype(">f8").tobytes(), 1, 64, 22050,
-                         form=b"AIFC", ctype=b"fl64")
-    w, sr = decode_audio(pay64)
-    assert sr == 22050 and np.array_equal(w, mono)
-
-    # AU float encodings
-    w, sr = au_decoder(_encode_au(mono.astype(">f4").tobytes(), 6, 16000, 1))
-    assert sr == 16000 and np.allclose(w, mono, atol=1e-6)
-    w, sr = decode_audio(_encode_au(mono.astype(">f8").tobytes(), 7, 11025, 1))
-    assert sr == 11025 and np.array_equal(w, mono)
-
-    # AIFC G.711 (ulaw/alaw fourccs): same expansion as the WAV/AU
-    # telephony tiers — pin against the AU decoder on identical codes
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        _g711_table,
-    )
-
-    codes = bytes(range(256))
-    # the in-test COMM helper derives numSampleFrames from bits — pass
-    # 8 so it counts one frame per G.711 code byte (real files carry
-    # the true frame count with sampleSize=16; the decoder reads only
-    # numSampleFrames in this branch)
-    for cc, enc in ((b"ulaw", 1), (b"ALAW", 27)):
-        pay = _encode_aiff(codes, 1, 8, 8000, form=b"AIFC", ctype=cc)
-        w, sr = aiff_decoder(pay)
-        want, _ = au_decoder(_encode_au(codes, enc, 8000, 1))
-        assert sr == 8000 and np.array_equal(w, want), cc
-    # via the public dispatch too
-    w2, _ = decode_audio(_encode_aiff(codes, 1, 8, 8000, form=b"AIFC", ctype=b"ulaw"))
-    assert np.array_equal(w2, _g711_table("mu")[np.frombuffer(codes, np.uint8)])
-
-
-def test_wav_extensible_and_24bit():
-    """r10 seam shrink: WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE — the
-    standard >2ch/24-bit container; effective codec from the SubFormat
-    GUID) and 24-bit PCM decode natively; AIFC 'twos' (== NONE) and
-    'raw ' (offset-binary 8-bit) variants too."""
-    import struct as s
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        aiff_decoder,
-        decode_audio,
-        manual_wav_decoder,
-    )
-
-    rng = np.random.RandomState(8)
-    mono = (rng.rand(64) * 2 - 1).astype(np.float64)
-
-    def wav(data, tag, nch, sr, bits, sub=None):
-        fmt = s.pack("<HHIIHH", tag, nch, sr, sr * nch * bits // 8,
-                     nch * bits // 8, bits)
-        if sub is not None:  # extensible: cbSize + validBits + mask + GUID
-            guid = s.pack("<H", sub) + bytes.fromhex(
-                "0000000010800080" + "00AA00389B71"
-            )
-            fmt += s.pack("<HHI", 22, bits, 0) + guid
-        body = b"WAVE" + b"fmt " + s.pack("<I", len(fmt)) + fmt
-        body += b"data" + s.pack("<I", len(data)) + data
-        return b"RIFF" + s.pack("<I", len(body)) + body
-
-    # 24-bit PCM through BOTH the stdlib wave path and the manual walk
-    s24 = (mono * 8388607).astype(np.int64)
-    raw24 = b"".join(s.pack("<i", v << 8)[1:] for v in s24)
-    w, sr = decode_audio(wav(raw24, 1, 1, 48000, 24))
-    assert sr == 48000 and np.allclose(w, s24 / 8388608.0, atol=2e-7)
-    w2, _ = manual_wav_decoder(wav(raw24, 1, 1, 48000, 24))
-    assert np.allclose(w, w2)
-
-    # extensible PCM-16 and float-32 (stdlib wave refuses 0xFFFE)
-    s16 = (mono * 32767).astype("<i2")
-    w, sr = decode_audio(wav(s16.tobytes(), 0xFFFE, 1, 44100, 16, sub=1))
-    assert sr == 44100 and np.allclose(w, s16 / 32768.0)
-    w, sr = decode_audio(
-        wav(mono.astype("<f4").tobytes(), 0xFFFE, 1, 96000, 32, sub=3)
-    )
-    assert sr == 96000 and np.allclose(w, mono, atol=1e-6)
-    # extensible stereo averages
-    st = np.repeat(s16, 2).astype("<i2").tobytes()
-    w, _ = manual_wav_decoder(wav(st, 0xFFFE, 2, 44100, 16, sub=1))
-    assert np.allclose(w, s16 / 32768.0)
-
-    # AIFC twos == NONE; raw = offset-binary 8-bit
-    sb = (mono * 127).astype(np.int8)
-    w_t, _ = aiff_decoder(_encode_aiff(sb.astype(">i1").tobytes(), 1, 8, 8000,
-                                       form=b"AIFC", ctype=b"twos"))
-    w_n, _ = aiff_decoder(_encode_aiff(sb.astype(">i1").tobytes(), 1, 8, 8000,
-                                       form=b"AIFC", ctype=b"NONE"))
-    assert np.array_equal(w_t, w_n)
-    u8 = (sb.astype(np.int16) + 128).astype(np.uint8)
-    w_r, _ = aiff_decoder(_encode_aiff(u8.tobytes(), 1, 8, 8000,
-                                       form=b"AIFC", ctype=b"raw "))
-    assert np.allclose(w_r, sb / 128.0)
-
-
-def test_stdlib_aiff_decoder():
-    """AIFF / AIFF-C PCM decodes natively: 8 (signed!) / 16 / 24 /
-    32-bit, stereo averaging, the 80-bit-extended sample rate, and the
-    AIFC 'sowt' little-endian variant; compressed AIFC raises."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        aiff_decoder,
-        decode_audio,
-    )
-
-    rng = np.random.RandomState(3)
-
-    s16 = rng.randint(-32768, 32768, 64).astype(np.int16)
-    pay = _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 44100)
-    w, sr = aiff_decoder(pay)
-    assert sr == 44100
-    assert np.allclose(w, s16 / 32768.0)
-    # magic dispatch through the public seam
-    w2, sr2 = decode_audio(pay)
-    assert sr2 == 44100 and np.array_equal(w, w2)
-
-    # stereo averaging
-    st = rng.randint(-32768, 32768, 64).astype(np.int16)
-    inter = np.empty(128, np.int16)
-    inter[0::2], inter[1::2] = s16, st
-    w, sr = aiff_decoder(_encode_aiff(inter.astype(">i2").tobytes(), 2, 16, 8000))
-    assert sr == 8000
-    assert np.allclose(w, (s16 / 32768.0 + st / 32768.0) / 2)
-
-    # signed 8-bit (WAV's is unsigned — conventions differ)
-    s8 = rng.randint(-128, 128, 33).astype(np.int8)
-    w, sr = aiff_decoder(_encode_aiff(s8.tobytes(), 1, 8, 22050))
-    assert np.allclose(w, s8 / 128.0)
-
-    # 24-bit: value == int24 / 2^23
-    v24 = rng.randint(-(1 << 23), 1 << 23, 21)
-    raw24 = b"".join(int(v).to_bytes(3, "big", signed=True) for v in v24)
-    w, sr = aiff_decoder(_encode_aiff(raw24, 1, 24, 48000))
-    assert np.allclose(w, v24 / 8388608.0)
-
-    # 32-bit
-    v32 = rng.randint(-(1 << 31), 1 << 31, 17, dtype=np.int64).astype(np.int32)
-    w, _ = aiff_decoder(_encode_aiff(v32.astype(">i4").tobytes(), 1, 32, 16000))
-    assert np.allclose(w, v32 / 2147483648.0)
-
-    # AIFC sowt = little-endian frames
-    w, sr = aiff_decoder(
-        _encode_aiff(s16.astype("<i2").tobytes(), 1, 16, 11025, b"AIFC", b"sowt")
-    )
-    assert sr == 11025 and np.allclose(w, s16 / 32768.0)
-    # AIFC NONE = big-endian, same as plain AIFF
-    w, _ = aiff_decoder(
-        _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 11025, b"AIFC", b"NONE")
-    )
-    assert np.allclose(w, s16 / 32768.0)
-
-    # ima4 DECODES as of r11 (its own test); MACE 3:1 still refuses
-    with _pytest.raises(ValueError, match="PCM/float only"):
-        aiff_decoder(
-            _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 8000, b"AIFC", b"MAC3")
-        )
-    with _pytest.raises(ValueError, match="magic"):
-        aiff_decoder(b"FORM\x00\x00\x00\x04WAVE")
-
-
-def test_stdlib_au_decoder(spark):
-    """Sun AU decodes natively: big-endian PCM 8/16/24/32, G.711
-    mu-law/A-law (cross-container equal to the WAV G.711 tier, whose
-    tables are pinned independently), stereo averaging, and the Arrow
-    feature pipeline on the default decoder."""
-    import struct as s
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        au_decoder,
-        decode_audio,
-        extract_audio_features,
-        g711_wav_decoder,
-    )
-
-    rng = np.random.RandomState(5)
-
-    s16 = rng.randint(-32768, 32768, 50).astype(np.int16)
-    w, sr = au_decoder(_encode_au(s16.astype(">i2").tobytes(), 3, 16000, 1))
-    assert sr == 16000 and np.allclose(w, s16 / 32768.0)
-
-    s8 = rng.randint(-128, 128, 40).astype(np.int8)
-    w, _ = au_decoder(_encode_au(s8.tobytes(), 2, 8000, 1))
-    assert np.allclose(w, s8 / 128.0)
-
-    v24 = rng.randint(-(1 << 23), 1 << 23, 15)
-    raw24 = b"".join(int(v).to_bytes(3, "big", signed=True) for v in v24)
-    w, _ = au_decoder(_encode_au(raw24, 4, 8000, 1))
-    assert np.allclose(w, v24 / 8388608.0)
-
-    v32 = rng.randint(-(1 << 31), 1 << 31, 11, dtype=np.int64).astype(np.int32)
-    w, _ = au_decoder(_encode_au(v32.astype(">i4").tobytes(), 5, 8000, 1))
-    assert np.allclose(w, v32 / 2147483648.0)
-
-    # G.711: all 256 codes, equal to the WAV G.711 tier (tables pinned
-    # independently by test_g711_wav_decoder_mu_and_a_law)
-    codes = bytes(range(256))
-    for au_enc, wav_tag in ((1, 7), (27, 6)):
-        wav = (
-            b"RIFF"
-            + s.pack("<I", 36 + len(codes))
-            + b"WAVEfmt "
-            + s.pack("<IHHIIHH", 16, wav_tag, 1, 8000, 8000, 1, 8)
-            + b"data"
-            + s.pack("<I", len(codes))
-            + codes
-        )
-        w_au, sr_au = au_decoder(_encode_au(codes, au_enc, 8000, 1))
-        w_wav, _ = g711_wav_decoder(wav)
-        assert sr_au == 8000 and np.array_equal(w_au, w_wav)
-
-    # stereo averaging
-    inter = np.empty(100, np.int16)
-    inter[0::2], inter[1::2] = s16, s16[::-1]
-    w, _ = au_decoder(_encode_au(inter.astype(">i2").tobytes(), 3, 8000, 2))
-    assert np.allclose(w, (s16.astype(np.int64) + s16[::-1]) / 2 / 32768.0)
-
-    with _pytest.raises(ValueError, match="unsupported encoding"):
-        au_decoder(_encode_au(b"\x00" * 8, 23, 8000, 1))  # G.721 ADPCM
-    with _pytest.raises(ValueError, match="magic"):
-        au_decoder(b"!snd" + b"\x00" * 20)
-
-    # Arrow feature pipeline on the DEFAULT decoder: one AIFF + one AU
-    aiff = _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 44100)
-    au = _encode_au(s16.astype(">i2").tobytes(), 3, 16000, 1)
-    wave = s16 / 32768.0
-    df = spark.createDataFrame(
-        [(0, bytearray(aiff)), (1, bytearray(au))], ["doc_id", "payload"]
-    )
-    rows = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
-    for i, sr_want in ((0, 44100), (1, 16000)):
-        r = rows[i]
-        assert r["n_samples"] == 50
-        assert r["sample_rate"] == sr_want
-        assert r["rms"] == round(float(np.sqrt(np.mean(wave**2))), 9)
-        assert r["zero_crossings"] == int(
-            np.count_nonzero(np.diff(np.signbit(wave)))
-        )
-    # decode_audio magic dispatch consistency
-    assert np.array_equal(decode_audio(au)[0], decode_audio(aiff)[0])
-
-
-# --- MP4 / ISO BMFF (r9 continuation): independent writer for the pins ------
-
-
-def _box(btype, payload):
-    import struct as s
-
-    return s.pack(">I", 8 + len(payload)) + btype + payload
-
-
-def _encode_mp4(samples, w, h, fourcc=b"jpeg", chunking=None, audio_decoy=True, depth=24):
-    """Minimal ISO BMFF writer: ftyp + mdat + moov/trak/mdia/minf/stbl
-    with the real sample-table machinery (stsd/stsz/stsc/stco);
-    ``chunking`` is a list of samples-per-chunk (default one chunk)."""
-    import struct as s
-
-    chunking = chunking or [len(samples)]
-    assert sum(chunking) == len(samples)
-    ftyp = _box(b"ftyp", b"isom" + s.pack(">I", 0) + b"isom")
-    mdat_body = b"".join(samples)
-    mdat_start = len(ftyp) + 8  # absolute offset of the first sample
-
-    # chunk offsets: cumulative sample sizes at each chunk boundary
-    offsets, pos, si = [], mdat_start, 0
-    for n in chunking:
-        offsets.append(pos)
-        for _ in range(n):
-            pos += len(samples[si])
-            si += 1
-    # stsc runs: compress equal samples-per-chunk runs (1-based)
-    stsc_rows = []
-    for ci, n in enumerate(chunking):
-        if not stsc_rows or stsc_rows[-1][1] != n:
-            stsc_rows.append((ci + 1, n, 1))
-
-    entry = (
-        fourcc
-        + b"\x00" * 6
-        + s.pack(">H", 1)
-        + b"\x00" * 16
-        + s.pack(">HH", w, h)
-        + s.pack(">II", 0x00480000, 0x00480000)
-        + s.pack(">I", 0)
-        + s.pack(">H", 1)
-        + b"\x00" * 32
-        + s.pack(">Hh", depth, -1)
-    )
-    stsd = _box(b"stsd", s.pack(">II", 0, 1) + s.pack(">I", 8 + len(entry)) + entry)
-    stsz = _box(
-        b"stsz",
-        s.pack(">III", 0, 0, len(samples))
-        + b"".join(s.pack(">I", len(x)) for x in samples),
-    )
-    stsc = _box(
-        b"stsc",
-        s.pack(">II", 0, len(stsc_rows))
-        + b"".join(s.pack(">III", *r) for r in stsc_rows),
-    )
-    stco = _box(
-        b"stco",
-        s.pack(">II", 0, len(offsets)) + b"".join(s.pack(">I", o) for o in offsets),
-    )
-    stbl = _box(b"stbl", stsd + stsz + stsc + stco)
-    trak = _box(b"trak", _box(b"mdia", _box(b"minf", stbl)))
-    traks = trak
-    if audio_decoy:
-        a_entry = b"mp4a" + b"\x00" * 6 + s.pack(">H", 1) + b"\x00" * 20
-        a_stsd = _box(
-            b"stsd", s.pack(">II", 0, 1) + s.pack(">I", 8 + len(a_entry)) + a_entry
-        )
-        a_trak = _box(b"trak", _box(b"mdia", _box(b"minf", _box(b"stbl", a_stsd))))
-        traks = a_trak + traks  # decoy FIRST: the walk must skip it
-    moov = _box(b"moov", traks)
-    return ftyp + _box(b"mdat", mdat_body) + moov
-
-
-def test_mp4_video_decode_jpeg_and_raw(spark):
-    """r9 continuation: MP4/QuickTime frame sampling — the BMFF
-    sample-table walk (stsd/stsz/stsc/stco, multi-chunk layouts,
-    1-based stsc runs) resolves samples exactly; jpeg samples decode
-    through the stdlib JPEG tier, raw samples as top-down RGB; an
-    audio decoy track is skipped; the Arrow pipeline row-expands MP4
-    next to AVI and GIF."""
-    import hashlib
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.video import mp4_decoder
-
-    rng = np.random.RandomState(77)
-    h, w = 13, 9
-    frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(5)]
-
-    # raw RGB track, uneven chunking to exercise the stsc expansion
-    raws = [f.tobytes() for f in frames]
-    pay_raw = _encode_mp4(raws, w, h, b"raw ", chunking=[2, 2, 1])
-    got = mp4_decoder(pay_raw)
-    assert [i for i, _ in got] == [0, 1, 2, 3, 4]
-    for (_, img), src in zip(got, frames):
-        assert np.array_equal(img, src)
-    assert [i for i, _ in mp4_decoder(pay_raw, every_n=2)] == [0, 2, 4]
-
-    # MJPEG track: every sample a full baseline JPEG
-    encode, _, _ = _jpeg_tools()
-    qy = np.full((8, 8), 5, dtype=np.int64)
-    jpegs = [encode(f, qy, qy * 2)[0] for f in frames]
-    pay_j = _encode_mp4(jpegs, w, h, b"jpeg", chunking=[1, 4])
-    for (_, img), jp in zip(mp4_decoder(pay_j), jpegs):
-        assert np.array_equal(img, jpeg_decoder(jp))
-
-    # Arrow pipeline: MP4 rides extract_video_frames via the ftyp magic
-    df = spark.createDataFrame([(3, bytearray(pay_raw))], ["doc_id", "payload"])
-    rows = sorted(
-        extract_video_frames(df, every_n=2).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2, 4]
-    for r in rows:
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["frame_md5"] == hashlib.md5(frames[r["frame_idx"]].tobytes()).hexdigest()
-
-    # a compressed-codec track (avc1) refuses to the env seam
-    pay_avc = _encode_mp4(raws, w, h, b"avc1")
-    with _pytest.raises(ValueError, match="no jpeg/raw video track"):
-        mp4_decoder(pay_avc)
-    with _pytest.raises(ValueError, match="top-level box"):
-        mp4_decoder(b"\x00\x00\x00\x08junk" + pay_raw[8:])
-
-
-def test_mp4_review_fixes_depth_mjpa_and_quicktime_layout():
-    """Review fixes: 32-bit 'raw ' tracks refuse (no scrambled RGB),
-    mjpa refuses (two-field samples would decode half-height),
-    ftyp-less classic QuickTime layouts (free/moov-first) decode."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.video import mp4_decoder
-
-    rng = np.random.RandomState(5)
-    h, w = 6, 5
-    frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(2)]
-    raws = [f.tobytes() for f in frames]
-
-    with _pytest.raises(ValueError, match="24-bit raw"):
-        mp4_decoder(_encode_mp4([b"\x00" * (h * w * 4)] * 2, w, h, b"raw ", depth=32))
-    # mjpa DECODES as of r10 (two woven field JPEGs — its own test);
-    # raw bytes in an mjpa track refuse cleanly (no JPEG fields)
-    with _pytest.raises(ValueError, match="mjpa sample"):
-        mp4_decoder(_encode_mp4(raws, w, h, b"mjpa"))
-
-    # classic QuickTime: no ftyp — replace it with a same-size 'free'
-    # box so every stco offset stays valid
-    pay = _encode_mp4(raws, w, h, b"raw ")
-    (ftyp_size,) = __import__("struct").unpack(">I", pay[:4])
-    qt = pay[:4] + b"free" + pay[8:]
-    assert qt[4:8] == b"free" and len(qt) == len(pay)
-    got = mp4_decoder(qt)
-    assert [i for i, _ in got] == [0, 1]
-    for (_, img), src in zip(got, frames):
-        assert np.array_equal(img, src)
-
-
-def test_ico_la_png_entry_returns_real_rgba():
-    """r10 ADVICE fix: a gray+alpha (color type 4) PNG wrapped in an
-    ICO must honor the RGBA contract — luma repeated to RGB, the REAL
-    alpha kept — not the [luma, alpha, 255] garbage the opaque-fill
-    path produced."""
-    import struct as s
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import ico_decoder
-
-    rng = np.random.RandomState(7)
-    la = rng.randint(0, 256, (6, 5, 2)).astype(np.uint8)
-    png = _encode_png(la, filters=[0, 1, 2, 3, 4, 0])
-    entry = s.pack("<BBBBHHII", 5, 6, 0, 0, 1, 32, len(png), 6 + 16)
-    pay = s.pack("<HHH", 0, 1, 1) + entry + png
-    out = ico_decoder(pay)
-    assert out.shape == (6, 5, 4)
-    for ch in range(3):
-        assert np.array_equal(out[:, :, ch], la[:, :, 0]), "luma plane"
-    assert np.array_equal(out[:, :, 3], la[:, :, 1]), "real alpha kept"
-
-
-def test_video_dispatch_routes_ftypless_quicktime(spark):
-    """r10 ADVICE fix: the extract_video_frames dispatcher must match
-    mp4_decoder's own magic — a classic QuickTime payload opening with
-    'free'/'moov' (no ftyp) used to fall into avi_decoder and kill the
-    whole Arrow batch with 'not an AVI'."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        extract_video_frames,
-    )
-
-    rng = np.random.RandomState(9)
-    h, w = 6, 5
-    frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(2)]
-    pay = _encode_mp4([f.tobytes() for f in frames], w, h, b"raw ")
-    qt = pay[:4] + b"free" + pay[8:]  # same-size box keeps stco valid
-    assert qt[4:8] == b"free"
-
-    df = spark.createDataFrame([(1, bytearray(qt))], "doc_id long, payload binary")
-    rows = sorted(
-        extract_video_frames(df, every_n=1).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 1]
-    import hashlib
-
-    assert [r["frame_md5"] for r in rows] == [
-        hashlib.md5(f.tobytes()).hexdigest() for f in frames
-    ]
-
-
-def test_mjpa_two_field_samples_decode():
-    """r10 seam shrink: Motion-JPEG A samples (two half-height field
-    JPEGs back-to-back) decode by weaving the independently-decoded
-    fields — field 1 → even rows, field 2 → odd — pinned exact against
-    jpeg_decoder run on each field; geometry mismatches refuse."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.video import (
-        _decode_mjpa_sample,
-        mp4_decoder,
-    )
-
-    rng = np.random.RandomState(21)
-    h, w = 12, 9  # full height 12 → two 6-row fields
-    encode, _, _ = _jpeg_tools()
-    qy = np.full((8, 8), 5, dtype=np.int64)
-
-    samples = []
-    wants = []
-    for _ in range(3):
-        full = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-        f1_jpeg = encode(full[0::2], qy, qy * 2)[0]
-        f2_jpeg = encode(full[1::2], qy, qy * 2)[0]
-        samples.append(f1_jpeg + f2_jpeg)
-        want = np.empty((h, w, 3), dtype=np.uint8)
-        want[0::2] = jpeg_decoder(f1_jpeg)
-        want[1::2] = jpeg_decoder(f2_jpeg)
-        wants.append(want)
-
-    # unit: sample splitter + weave
-    for sample, want in zip(samples, wants):
-        assert np.array_equal(_decode_mjpa_sample(sample), want)
-
-    # through the BMFF walk with an mjpa sample entry
-    pay = _encode_mp4(samples, w, h, b"mjpa", chunking=[1, 2])
-    got = mp4_decoder(pay)
-    assert [i for i, _ in got] == [0, 1, 2]
-    for (_, img), want in zip(got, wants):
-        assert np.array_equal(img, want)
-
-    # mismatched field geometry refuses
-    bad = encode(wants[0][0::2], qy, qy * 2)[0] + encode(
-        wants[0][1::2][:4], qy, qy * 2
-    )[0]
-    with _pytest.raises(ValueError, match="geometry mismatch"):
-        _decode_mjpa_sample(bad)
-
-
-def test_mjpa_app1_payload_containing_eoi_bytes_does_not_mis_split():
-    """r11 ADVICE fix: the field-1/field-2 boundary must come from a
-    marker-segment walk, not a raw find(FFD9) — Motion-JPEG A's own
-    mandatory APP1 'mjpg' marker carries 32-bit binary field-size/
-    offset values that can contain the byte pair FF D9, and APPn
-    thumbnails end with a literal EOI. Plant both shapes in field 1's
-    APP1 payload and pin the woven decode unchanged."""
-    import struct as _struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.video import (
-        _decode_mjpa_sample,
-        _jpeg_stream_end,
-    )
-
-    rng = np.random.RandomState(37)
-    h, w = 12, 9
-    encode, _, _ = _jpeg_tools()
-    qy = np.full((8, 8), 5, dtype=np.int64)
-    full = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    f1 = encode(full[0::2], qy, qy * 2)[0]
-    f2 = encode(full[1::2], qy, qy * 2)[0]
-
-    # APP1 'mjpg' with binary fields deliberately containing FF D9 —
-    # the Motion-JPEG A shape (field size / padded size / next-field
-    # offset as big-endian u32s whose bytes are attacker^Wcodec-chosen)
-    app1_payload = b"mjpg" + _struct.pack(">IIII", 0xFFD90000, 0x00FFD900, 7, 1)
-    assert b"\xff\xd9" in app1_payload
-    app1 = b"\xff\xe1" + _struct.pack(">H", 2 + len(app1_payload)) + app1_payload
-    f1_marked = f1[:2] + app1 + f1[2:]
-
-    # the marker walk finds field 1's TRUE end, not the planted pair
-    end1 = _jpeg_stream_end(f1_marked)
-    assert end1 == len(f1_marked)
-
-    sample = f1_marked + f2
-    want = np.empty((h, w, 3), dtype=np.uint8)
-    want[0::2] = jpeg_decoder(f1)  # jpeg_decoder skips APPn by length
-    want[1::2] = jpeg_decoder(f2)
-    assert np.array_equal(_decode_mjpa_sample(sample), want)
-
-
-def test_aiff_ssnd_padding_not_decoded_as_audio():
-    """Review fix: SSND block-alignment pad bytes past COMM's
-    numSampleFrames must not become spurious samples."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import aiff_decoder
-
-    s16 = np.arange(-20, 20, dtype=np.int16)
-    raw = s16.astype(">i2").tobytes()
-    padded = raw + b"\x7f" * 6  # alignment junk after the real frames
-    pay = _encode_aiff(raw, 1, 16, 8000)
-    pay_padded = _encode_aiff(padded, 1, 16, 8000)
-    # the padded SSND must decode to the SAME waveform: nframes in the
-    # in-test COMM writer is derived from the REAL byte count
-    import struct as _s
-
-    # patch COMM numSampleFrames back to the true frame count (the
-    # helper computed it from the padded length)
-    comm_pos = pay_padded.find(b"COMM") + 8
-    pay_padded = (
-        pay_padded[: comm_pos + 2]
-        + _s.pack(">I", len(s16))
-        + pay_padded[comm_pos + 6 :]
-    )
-    w1, _ = aiff_decoder(pay)
-    w2, _ = aiff_decoder(pay_padded)
-    assert np.array_equal(w1, w2)
-    assert len(w2) == len(s16)
-
-
-# --- ICO / TGA (r9 continuation): independent writers for the pins ----------
-
-
-def _encode_ico(images):
-    """Independent ICO writer. images: list of dicts — either
-    {"png": bytes, "w", "h"} or {"rgb": HxWx3, "alpha": HxW bool
-    opaque-mask or None, "bpp": 24|32|8|4|1, "pal": palette or None,
-    "idx": index array for paletted}."""
-    import struct as s
-
-    import numpy as np
-
-    blobs = []
-    for im in images:
-        if "png" in im:
-            blobs.append((im["w"], im["h"], im["png"]))
-            continue
-        bpp = im["bpp"]
-        h, w = (
-            im["idx"].shape if im.get("idx") is not None else im["rgb"].shape[:2]
-        )
-        opaque = (
-            im["alpha"]
-            if im.get("alpha") is not None
-            else np.ones((h, w), dtype=bool)
-        )
-        hdr = s.pack(
-            "<IiiHHIIiiII", 40, w, h * 2, 1, bpp, 0, 0, 0, 0,
-            (len(im["pal"]) if im.get("pal") is not None else 0), 0,
-        )
-        body = bytearray(hdr)
-        if im.get("pal") is not None:
-            for r, g, b in im["pal"]:
-                body += bytes([b, g, r, 0])
-        xor_rb = ((bpp * w + 31) // 32) * 4
-        for y in range(h - 1, -1, -1):
-            row = bytearray()
-            if bpp == 32:
-                for x in range(w):
-                    r, g, b = im["rgb"][y, x]
-                    row += bytes([b, g, r, 255 if opaque[y, x] else 0])
-            elif bpp == 24:
-                for x in range(w):
-                    r, g, b = im["rgb"][y, x]
-                    row += bytes([b, g, r])
-            elif bpp == 8:
-                row += bytes(int(v) for v in im["idx"][y])
-            else:  # 4 or 1: MSB-first packing
-                bits = "".join(
-                    format(int(v), f"0{bpp}b") for v in im["idx"][y]
-                )
-                bits += "0" * (-len(bits) % 8)
-                row += bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-            row += b"\x00" * (xor_rb - len(row))
-            body += row
-        and_rb = ((w + 31) // 32) * 4
-        for y in range(h - 1, -1, -1):
-            bits = "".join("0" if opaque[y, x] else "1" for x in range(w))
-            bits += "0" * (-len(bits) % 8)
-            row = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
-            body += row + b"\x00" * (and_rb - len(row))
-        blobs.append((w, h, bytes(body)))
-
-    out = bytearray(s.pack("<HHH", 0, 1, len(blobs)))
-    off = 6 + 16 * len(blobs)
-    for w, h, blob in blobs:
-        out += s.pack(
-            "<BBBBHHII", w % 256, h % 256, 0, 0, 1, 0, len(blob), off
-        )
-        off += len(blob)
-    for _w, _h, blob in blobs:
-        out += blob
-    return bytes(out)
-
-
-def _tga_rle(pix_bytes, depth):
-    """Independent TGA RLE compressor: runs >= 2 as run packets."""
-    out = bytearray()
-    px = [pix_bytes[i : i + depth] for i in range(0, len(pix_bytes), depth)]
-    i = 0
-    while i < len(px):
-        run = 1
-        while i + run < len(px) and run < 128 and px[i + run] == px[i]:
-            run += 1
-        if run >= 2:
-            out += bytes([0x80 | (run - 1)]) + px[i]
-            i += run
-            continue
-        start = i
-        i += 1
-        while (
-            i < len(px)
-            and i - start < 128
-            and not (i + 1 < len(px) and px[i + 1] == px[i])
-        ):
-            i += 1
-        out += bytes([i - start - 1]) + b"".join(px[start:i])
-    return bytes(out)
-
-
-def _encode_tga(
-    arr=None, idx=None, pal=None, rle=False, top_down=False, footer=True
-):
-    """Independent TGA writer: truecolor/gray/paletted, raw or RLE."""
-    import numpy as np
-
-    if idx is not None:
-        h, w = idx.shape
-        base, depth = 1, 1
-        pix = bytes(int(v) for v in idx.ravel())
-        cmtype, cm_len, cm_bits = 1, len(pal), 8 * pal.shape[1]
-    else:
-        h, w = arr.shape[:2]
-        c = arr.shape[2]
-        if c == 1:
-            base, depth = 3, 1
-            pix = arr.tobytes()
-        else:
-            base, depth = 2, c
-            pix = arr[:, :, [2, 1, 0] + ([3] if c == 4 else [])].tobytes()
-        cmtype, cm_len, cm_bits = 0, 0, 0
-    rows = [pix[y * w * depth : (y + 1) * w * depth] for y in range(h)]
-    if not top_down:
-        rows = rows[::-1]
-    pix = b"".join(rows)
-    body = _tga_rle(pix, depth) if rle else pix
-    import struct as s
-
-    hdr = s.pack(
-        "<BBBHHBHHHHBB", 0, cmtype, base | (8 if rle else 0),
-        0, cm_len, cm_bits, 0, 0, w, h, depth * 8,
-        0x20 if top_down else 0,
-    )
-    palette = b""
-    if pal is not None:
-        es = pal.shape[1]
-        for row in pal:
-            palette += bytes(
-                [row[2], row[1], row[0]] + ([row[3]] if es == 4 else [])
-            )
-    out = hdr + palette + body
-    if footer:
-        out += b"\x00" * 8 + b"TRUEVISION-XFILE.\x00"
-    return out
-
-
-def test_ico_decoder_all_depths():
-    """ICO: PNG entries, 32/24-bpp DIBs with AND masks, 8/4/1-bpp
-    paletted DIBs, largest-entry selection, through decode_image."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        ico_decoder,
-    )
-
-    rng = np.random.RandomState(11)
-    h, w = 10, 9
-    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    alpha = rng.rand(h, w) > 0.3
-
-    for bpp in (32, 24):
-        pay = _encode_ico([{"rgb": rgb, "alpha": alpha, "bpp": bpp}])
-        out = ico_decoder(pay)
-        assert out.shape == (h, w, 4)
-        assert np.array_equal(out[:, :, :3], rgb)
-        assert np.array_equal(out[:, :, 3] == 255, alpha)
-
-    for bpp in (8, 4, 1):
-        n = 1 << min(bpp, 4)
-        pal = rng.randint(0, 256, (n, 3)).astype(np.uint8)
-        idx = rng.randint(0, n, (h, w)).astype(np.uint8)
-        pay = _encode_ico(
-            [{"idx": idx, "pal": pal, "alpha": alpha, "bpp": bpp}]
-        )
-        out = ico_decoder(pay)
-        assert np.array_equal(out[:, :, :3], pal[idx]), f"bpp {bpp}"
-        assert np.array_equal(out[:, :, 3] == 255, alpha)
-
-    # largest entry wins; PNG entries route through the PNG tier
-    small = rng.randint(0, 256, (4, 4, 3)).astype(np.uint8)
-    pay = _encode_ico(
-        [{"rgb": small, "bpp": 24}, {"rgb": rgb, "alpha": alpha, "bpp": 32}]
-    )
-    assert np.array_equal(ico_decoder(pay)[:, :, :3], rgb)
-    # decode_image magic dispatch
-    out = decode_image(_encode_ico([{"rgb": rgb, "alpha": alpha, "bpp": 32}]))
-    assert np.array_equal(out[:, :, :3], rgb)
-
-
-def test_tga_decoder_all_variants():
-    """TGA: truecolor 24/32 raw+RLE, grayscale, paletted (24/32-bit
-    palettes), both origins; footer-bearing files dispatch through
-    decode_image; 16-bpp refuses."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        tga_decoder,
-    )
-
-    rng = np.random.RandomState(13)
-    h, w = 11, 7
-    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
-    rgba = rng.randint(0, 256, (h, w, 4)).astype(np.uint8)
-    gray = rng.randint(0, 256, (h, w, 1)).astype(np.uint8)
-
-    for arr in (rgb, rgba, gray):
-        for rle in (False, True):
-            for td in (False, True):
-                got = tga_decoder(_encode_tga(arr, rle=rle, top_down=td))
-                assert np.array_equal(got, arr), f"{arr.shape} rle={rle} td={td}"
-
-    # RLE with genuine runs (stripes)
-    stripes = np.repeat(rng.randint(0, 256, (h, 3, 3)).astype(np.uint8), 3, axis=1)[:, :w]
-    assert np.array_equal(tga_decoder(_encode_tga(stripes, rle=True)), stripes)
-
-    # paletted, 24- and 32-bit palette entries
-    for es in (3, 4):
-        pal = rng.randint(0, 256, (32, es)).astype(np.uint8)
-        idx = rng.randint(0, 32, (h, w)).astype(np.uint8)
-        got = tga_decoder(_encode_tga(idx=idx, pal=pal, rle=True))
-        assert np.array_equal(got, pal[idx])
-
-    # footer dispatch through decode_image; footerless needs explicit call
-    assert np.array_equal(decode_image(_encode_tga(rgb)), rgb)
-    bare = _encode_tga(rgb, footer=False)
-    assert np.array_equal(tga_decoder(bare), rgb)
-
-    with _pytest.raises(ValueError, match="pixel depth"):
-        bad = bytearray(_encode_tga(rgb))
-        bad[16] = 16
-        tga_decoder(bytes(bad))
 
 
 def test_containment_pairs_catches_subdocument_duplication(spark):
@@ -5646,824 +2431,6 @@ def test_bm25_topk_empty_corpus_returns_empty_with_schema(spark):
     assert got.count() == 0
 
 
-def test_aifc_ima4_decodes():
-    """r11 seam shrink: Apple IMA4 AIFC ('ima4' — QuickTime's ADPCM)
-    decodes natively: 34-byte packets (2-byte BE state header: top 9
-    predictor bits + 7-bit step index; 32 nibble bytes = 64 samples),
-    channel packets interleaved per 64-frame group, header predictor
-    as STATE ONLY (not emitted, unlike WAV IMA blocks). Pinned exact
-    against the reference IMA step walk; numSampleFrames truncates
-    the final packet's padding; decode_audio dispatches."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        _IMA_INDEX_ADJUST,
-        _IMA_STEPS,
-        aiff_decoder,
-        decode_audio,
-    )
-
-    def ref_decode(nibbles, pred, idx):
-        out = []
-        for nib in nibbles:
-            step = _IMA_STEPS[idx]
-            diff = step >> 3
-            if nib & 1:
-                diff += step >> 2
-            if nib & 2:
-                diff += step >> 1
-            if nib & 4:
-                diff += step
-            pred = pred - diff if nib & 8 else pred + diff
-            pred = max(-32768, min(32767, pred))
-            idx = max(0, min(88, idx + _IMA_INDEX_ADJUST[nib & 7]))
-            out.append(pred)
-        return out
-
-    def packet(pred, idx, nibs):
-        assert len(nibs) == 64 and pred % 128 == 0
-        h = (pred & 0xFFFF) & 0xFF80 | idx
-        body = bytearray(struct.pack(">H", h))
-        for i in range(0, 64, 2):
-            body.append((nibs[i + 1] << 4) | nibs[i])
-        return bytes(body)
-
-    def aifc_ima4(nch, rate, nframes, packets):
-        comm = struct.pack(">hIh", nch, nframes, 16) + _ext80(rate)
-        comm += b"ima4" + b"\x04name"
-        ssnd = struct.pack(">II", 0, 0) + b"".join(packets)
-        body = b""
-        for cid, c in ((b"COMM", comm), (b"SSND", ssnd)):
-            body += cid + struct.pack(">I", len(c)) + c + (
-                b"\x00" if len(c) & 1 else b""
-            )
-        return b"FORM" + struct.pack(">I", 4 + len(body)) + b"AIFC" + body
-
-    rng = np.random.RandomState(23)
-    nibs1 = rng.randint(0, 16, 64).tolist()
-    nibs2 = rng.randint(0, 16, 64).tolist()
-
-    # mono, two packets with distinct state headers (seek property)
-    pay = aifc_ima4(1, 22050, 128, [packet(256, 5, nibs1), packet(-2048, 30, nibs2)])
-    wv, sr = aiff_decoder(pay)
-    expect = ref_decode(nibs1, 256, 5) + ref_decode(nibs2, -2048, 30)
-    assert sr == 22050
-    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
-
-    # numSampleFrames truncates the final packet's alignment padding
-    pay = aifc_ima4(1, 22050, 100, [packet(256, 5, nibs1), packet(-2048, 30, nibs2)])
-    wv, _ = aiff_decoder(pay)
-    assert np.array_equal(wv, np.array(expect[:100], dtype=np.float64) / 32768.0)
-
-    # stereo: per-channel packets interleave per 64-frame group
-    pay = aifc_ima4(
-        2, 8000, 64, [packet(0, 10, nibs1), packet(-128, 40, nibs2)]
-    )
-    wv, sr = aiff_decoder(pay)
-    l = np.array(ref_decode(nibs1, 0, 10), dtype=np.float64)
-    r = np.array(ref_decode(nibs2, -128, 40), dtype=np.float64)
-    assert sr == 8000
-    assert np.array_equal(wv, (l + r) / 2.0 / 32768.0)
-    wv2, _ = decode_audio(pay)
-    assert np.array_equal(wv2, wv)
-
-    # out-of-range step index refuses cleanly
-    bad = bytearray(packet(0, 10, nibs1))
-    bad[1] = 0x7F  # index 127 > 88
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="step index"):
-        aiff_decoder(aifc_ima4(1, 8000, 64, [bytes(bad)]))
-
-
-def test_ms_adpcm_wav_decoder():
-    """r11 seam shrink: Microsoft ADPCM WAV (tag 0x02) decodes
-    natively — per-block per-channel (predictor idx, idelta, two seed
-    samples emitted older-first), HIGH-nibble-first 4-bit codes,
-    channels alternating per nibble in stereo — pinned bit-exact
-    against the reference scalar walk, through the raw decoder AND
-    decode_audio dispatch; bad predictor indexes refuse."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        _MS_ADPCM_ADAPT,
-        _MS_ADPCM_COEF1,
-        _MS_ADPCM_COEF2,
-        decode_audio,
-        ms_adpcm_wav_decoder,
-    )
-
-    def ref_walk(codes, pidx, idelta, s1, s2):
-        out = [s2, s1]
-        for code in codes:
-            signed = code - 16 if code >= 8 else code
-            pred = (
-                (s1 * _MS_ADPCM_COEF1[pidx] + s2 * _MS_ADPCM_COEF2[pidx]) >> 8
-            ) + signed * idelta
-            pred = max(-32768, min(32767, pred))
-            s2, s1 = s1, pred
-            idelta = max(16, (_MS_ADPCM_ADAPT[code] * idelta) >> 8)
-            out.append(pred)
-        return out
-
-    def wav(nch, sr, blocks):
-        """blocks: per block, per channel (pidx, idelta, s1, s2, codes)."""
-        n_codes = len(blocks[0][0][4])
-        balign = 7 * nch + (n_codes * nch) // 2
-        fmt = struct.pack("<HHIIHH", 0x02, nch, sr, sr, balign, 4)
-        data = bytearray()
-        for chans in blocks:
-            for p, _, _, _, _ in chans:
-                data.append(p)
-            for _, idelta, _, _, _ in chans:
-                data += struct.pack("<h", idelta)
-            for _, _, s1, _, _ in chans:
-                data += struct.pack("<h", s1)
-            for _, _, _, s2, _ in chans:
-                data += struct.pack("<h", s2)
-            # codes: channels alternate per nibble, HIGH nibble first
-            inter = []
-            for i in range(n_codes):
-                for c in range(nch):
-                    inter.append(chans[c][4][i])
-            for i in range(0, len(inter), 2):
-                data.append((inter[i] << 4) | inter[i + 1])
-        riff = (
-            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-            + b"data" + struct.pack("<I", len(data)) + bytes(data)
-        )
-        return b"RIFF" + struct.pack("<I", len(riff)) + riff
-
-    rng = np.random.RandomState(31)
-    codes1 = rng.randint(0, 16, 40).tolist()
-    codes2 = rng.randint(0, 16, 40).tolist()
-
-    # mono, two blocks with different predictors/states
-    pay = wav(1, 8000, [
-        [(0, 200, 300, 100, codes1)],
-        [(3, 5000, -8000, -7000, codes2)],
-    ])
-    wv, sr = ms_adpcm_wav_decoder(pay)
-    expect = ref_walk(codes1, 0, 200, 300, 100) + ref_walk(codes2, 3, 5000, -8000, -7000)
-    assert sr == 8000
-    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
-
-    # stereo: nibbles alternate channels; averaged to mono; dispatch
-    pay = wav(2, 16000, [[(1, 64, 1000, 900, codes1), (6, 300, -50, -40, codes2)]])
-    wv, sr = ms_adpcm_wav_decoder(pay)
-    l = np.array(ref_walk(codes1, 1, 64, 1000, 900), dtype=np.float64)
-    r = np.array(ref_walk(codes2, 6, 300, -50, -40), dtype=np.float64)
-    assert sr == 16000 and np.array_equal(wv, (l + r) / 2.0 / 32768.0)
-    wv2, _ = decode_audio(pay)
-    assert np.array_equal(wv2, wv)
-
-    # predictor index out of range refuses
-    import pytest as _pytest
-
-    bad = wav(1, 8000, [[(7, 200, 300, 100, codes1)]])
-    with _pytest.raises(ValueError, match="predictor index"):
-        ms_adpcm_wav_decoder(bad)
-
-
-def test_ms_adpcm_wsamples_per_block_and_partial_tail():
-    """r12 ADVICE fix: wSamplesPerBlock (fmt extension) truncates each
-    block's output so pad nibbles in a not-fully-populated final block
-    never emit spurious samples; a trailing PARTIAL block (full header,
-    short code body) decodes instead of being dropped; a fact chunk
-    caps the total frame count; an out-of-range wSamplesPerBlock
-    refuses."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        _MS_ADPCM_ADAPT,
-        _MS_ADPCM_COEF1,
-        _MS_ADPCM_COEF2,
-        ms_adpcm_wav_decoder,
-    )
-
-    def ref_walk(codes, pidx, idelta, s1, s2):
-        out = [s2, s1]
-        for code in codes:
-            signed = code - 16 if code >= 8 else code
-            pred = (
-                (s1 * _MS_ADPCM_COEF1[pidx] + s2 * _MS_ADPCM_COEF2[pidx]) >> 8
-            ) + signed * idelta
-            pred = max(-32768, min(32767, pred))
-            s2, s1 = s1, pred
-            idelta = max(16, (_MS_ADPCM_ADAPT[code] * idelta) >> 8)
-            out.append(pred)
-        return out
-
-    def wav(balign, spb, data, fact=None):
-        """Mono, explicit nBlockAlign + wSamplesPerBlock ext, raw data."""
-        fmt = struct.pack("<HHIIHH", 0x02, 1, 8000, 8000, balign, 4)
-        fmt += struct.pack("<HH", 2, spb)  # cbSize=2, wSamplesPerBlock
-        chunks = b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
-        if fact is not None:
-            chunks += b"fact" + struct.pack("<I", 4) + struct.pack("<I", fact)
-        chunks += b"data" + struct.pack("<I", len(data)) + bytes(data)
-        return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
-
-    def block(pidx, idelta, s1, s2, codes, pad_bytes=0):
-        b = bytearray([pidx])
-        b += struct.pack("<hhh", idelta, s1, s2)
-        for i in range(0, len(codes), 2):
-            lo = codes[i + 1] if i + 1 < len(codes) else 0
-            b.append((codes[i] << 4) | lo)
-        b += b"\x0f" * pad_bytes  # pad nibbles that must NOT decode
-        return bytes(b)
-
-    rng = np.random.RandomState(7)
-    codes = rng.randint(0, 16, 10).tolist()
-
-    # balign 7+8=15 holds up to 2+16 samples; spb=12 says only 10
-    # code nibbles are real — the last 3 pad bytes must not emit
-    balign = 7 + 8
-    pay = wav(balign, 12, block(0, 256, 500, 400, codes, pad_bytes=3))
-    wv, sr = ms_adpcm_wav_decoder(pay)
-    want = np.array(ref_walk(codes, 0, 256, 500, 400), dtype=np.float64) / 32768.0
-    assert sr == 8000 and np.array_equal(wv, want)
-
-    # trailing partial block: full 15-byte first block (12 samples by
-    # spb) + a 10-byte tail (header + 3 code bytes = 6 nibbles)
-    tail_codes = rng.randint(0, 16, 6).tolist()
-    data = block(0, 256, 500, 400, codes, pad_bytes=3) + block(
-        1, 300, -100, -200, tail_codes
-    )
-    pay = wav(balign, 12, data)
-    wv, _ = ms_adpcm_wav_decoder(pay)
-    want2 = np.concatenate(
-        [want, np.array(ref_walk(tail_codes, 1, 300, -100, -200)) / 32768.0]
-    )
-    assert np.array_equal(wv, want2)
-
-    # fact chunk caps the total (12 + 8 decoded, fact says 15)
-    pay = wav(balign, 12, data, fact=15)
-    wv, _ = ms_adpcm_wav_decoder(pay)
-    assert np.array_equal(wv, want2[:15])
-
-    # wSamplesPerBlock beyond the block geometry refuses
-    with _pytest.raises(ValueError, match="wSamplesPerBlock"):
-        ms_adpcm_wav_decoder(wav(balign, 99, block(0, 256, 500, 400, codes)))
-
-
-def test_jpeg_in_tiff_decodes():
-    """r11 seam shrink: new-style JPEG-in-TIFF (compression 7) decodes
-    through the stdlib JPEG tier — per-strip and per-tile JPEG
-    streams, plus the ABBREVIATED layout where shared DQT/DHT tables
-    live once in JPEGTables (tag 347) — pinned exact against
-    jpeg_decoder run on the same streams; missing SOI refuses."""
-    import struct as s
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.jpeg import jpeg_decoder
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    def tiff7(w, h, segs, tiles=None, jpeg_tables=None, spp=3):
-        pos = 8
-        offs = []
-        for seg in segs:
-            offs.append(pos)
-            pos += len(seg)
-        value_area = bytearray()
-
-        def tag(tid, ftype, vals, raw=None):
-            nonlocal value_area
-            if raw is not None:
-                packed = raw
-            else:
-                fmt = {3: "H", 4: "I"}[ftype]
-                packed = b"".join(s.pack("<" + fmt, v) for v in vals)
-            count = len(raw) if raw is not None else len(vals)
-            if len(packed) <= 4:
-                return s.pack("<HHI", tid, ftype, count) + packed.ljust(4, b"\0")
-            off = pos + len(value_area)
-            value_area.extend(packed)
-            return s.pack("<HHII", tid, ftype, count, off)
-
-        entries = [
-            (256, 4, [w], None), (257, 4, [h], None), (258, 3, [8] * spp, None),
-            (259, 3, [7], None), (262, 3, [6 if spp == 3 else 1], None),
-            (277, 3, [spp], None),
-        ]
-        if tiles is not None:
-            entries += [(322, 3, [tiles[0]], None), (323, 3, [tiles[1]], None),
-                        (324, 4, offs, None), (325, 4, [len(x) for x in segs], None)]
-        else:
-            entries += [(273, 4, offs, None), (278, 4, [tiles_rps], None),
-                        (279, 4, [len(x) for x in segs], None)]
-        if jpeg_tables is not None:
-            entries.append((347, 7, None, jpeg_tables))
-        ifd = s.pack("<H", len(entries))
-        for tid, ftype, vals, raw in sorted(entries):
-            ifd += tag(tid, ftype, vals, raw)
-        ifd += s.pack("<I", 0)
-        ifd_off = pos + len(value_area)
-        return (b"II*\x00" + s.pack("<I", ifd_off) + b"".join(segs)
-                + bytes(value_area) + ifd)
-
-    def split_markers(jpg):
-        """(marker, full segment bytes) list; entropy data rides SOS."""
-        out = []
-        p = 2
-        while p < len(jpg):
-            assert jpg[p] == 0xFF
-            m = jpg[p + 1]
-            if m == 0xD9:
-                break
-            (ln,) = s.unpack(">H", jpg[p + 2 : p + 4])
-            end = p + 2 + ln
-            if m == 0xDA:  # SOS: runs to EOI
-                out.append((m, jpg[p : len(jpg) - 2]))
-                break
-            out.append((m, jpg[p:end]))
-            p = end
-        return out
-
-    rng = np.random.RandomState(41)
-    encode, _, _ = _jpeg_tools()
-    qy = np.full((8, 8), 6, dtype=np.int64)
-
-    # strips: 16x12 RGB, two 8-row strip JPEGs
-    full_img = rng.randint(0, 256, (16, 12, 3)).astype(np.uint8)
-    tiles_rps = 8
-    strip_jpegs = [encode(full_img[0:8], qy, qy * 2)[0],
-                   encode(full_img[8:16], qy, qy * 2)[0]]
-    want = np.concatenate([jpeg_decoder(j) for j in strip_jpegs], axis=0)
-    got = tiff_decoder(tiff7(12, 16, strip_jpegs))
-    assert np.array_equal(got, want)
-
-    # abbreviated streams: shared DQT/DHT hoisted into JPEGTables
-    tables = b"".join(seg for m, seg in split_markers(strip_jpegs[0])
-                      if m in (0xDB, 0xC4))
-    jt = b"\xff\xd8" + tables + b"\xff\xd9"
-    abbrev = []
-    for j in strip_jpegs:
-        body = b"".join(seg for m, seg in split_markers(j) if m not in (0xDB, 0xC4))
-        abbrev.append(b"\xff\xd8" + body + b"\xff\xd9")
-    got = tiff_decoder(tiff7(12, 16, abbrev, jpeg_tables=jt))
-    assert np.array_equal(got, want)
-
-    # tiles: 14x12 RGB in 8x8 tiles (edge tiles padded, cropped after)
-    img2 = rng.randint(0, 256, (14, 12, 3)).astype(np.uint8)
-    tile_jpegs, tile_dec = [], []
-    for ty in range(2):
-        for tx in range(2):
-            t = np.zeros((8, 8, 3), dtype=np.uint8)
-            block = img2[ty * 8 : ty * 8 + 8, tx * 8 : tx * 8 + 8]
-            t[: block.shape[0], : block.shape[1]] = block
-            j = encode(t, qy, qy * 2)[0]
-            tile_jpegs.append(j)
-            tile_dec.append(jpeg_decoder(j))
-    want2 = np.zeros((16, 16, 3), dtype=np.uint8)
-    for ti, d in enumerate(tile_dec):
-        want2[(ti // 2) * 8 : (ti // 2) * 8 + 8, (ti % 2) * 8 : (ti % 2) * 8 + 8] = d
-    got2 = tiff_decoder(tiff7(12, 14, tile_jpegs, tiles=(8, 8)))
-    assert np.array_equal(got2, want2[:14, :12])
-
-    # a segment without SOI refuses cleanly
-    with _pytest.raises(ValueError, match="SOI"):
-        tiff_decoder(tiff7(12, 16, [b"nope", strip_jpegs[1]]))
-
-
-def test_bmp_palette_and_rle8_decode():
-    """r11 seam shrink: 8-bit paletted BMP (BI_RGB) and RLE8 BMP
-    decode natively — encoded runs, absolute runs (word-aligned),
-    end-of-line, delta skips, end-of-bitmap — pinned against an
-    independent writer; 4-bit BMP keeps refusing."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-    )
-
-    def bmp8(idx_rows, pal, rle_stream=None, n_colors=None):
-        h, w = idx_rows.shape
-        pal_bytes = b"".join(
-            bytes([b, g, r, 0]) for r, g, b in pal
-        )
-        if rle_stream is None:
-            row_bytes = ((8 * w + 31) // 32) * 4
-            raster = b"".join(
-                idx_rows[y].tobytes().ljust(row_bytes, b"\0")
-                for y in range(h - 1, -1, -1)
-            )
-            comp = 0
-        else:
-            raster = rle_stream
-            comp = 1
-        off = 14 + 40 + len(pal_bytes)
-        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
-        info = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, 8, comp, len(raster), 0, 0,
-            n_colors if n_colors is not None else len(pal), 0,
-        )
-        return hdr + info + pal_bytes + raster
-
-    rng = np.random.RandomState(43)
-    pal = [(rng.randint(256), rng.randint(256), rng.randint(256)) for _ in range(16)]
-    idx = rng.randint(0, 16, (5, 7)).astype(np.uint8)
-    want = np.array(pal, dtype=np.uint8)[idx]
-
-    # uncompressed paletted (explicit and zero biClrUsed=256 default)
-    assert np.array_equal(bmp_decoder(bmp8(idx, pal)), want)
-    pal256 = pal + [(0, 0, 0)] * 240
-    assert np.array_equal(bmp_decoder(bmp8(idx, pal256, n_colors=0)), want)
-
-    # RLE8: encoded run + absolute run + delta + EOL + EOB
-    # target 4x6 image, rows encoded bottom-up
-    pal2 = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)]
-    want2 = np.zeros((4, 6), dtype=np.uint8)
-    stream = bytearray()
-    # bottom row (y buffer 0): run of 4 x color1, then 2 x color2
-    stream += bytes([4, 1, 2, 2, 0, 0])
-    want2[0, :4] = 1
-    want2[0, 4:6] = 2
-    # next row: absolute run of 3 literals (padded to word), rest 0
-    stream += bytes([0, 3, 3, 1, 2, 0]) + bytes([0, 0])
-    want2[1, :3] = [3, 1, 2]
-    # delta: skip 2 right, 1 row up (buffer y 2 -> 3), then 2 x color3
-    stream += bytes([0, 2, 2, 1, 2, 3])
-    want2[3, 2:4] = 3
-    stream += bytes([0, 1])  # end of bitmap
-    got = bmp_decoder(bmp8(np.zeros((4, 6), np.uint8), pal2, bytes(stream)))
-    assert np.array_equal(got, np.array(pal2, dtype=np.uint8)[want2[::-1]])
-
-    # an unsupported pairing (8-bit + RLE4 tag) still refuses to the
-    # Pillow seam (every standard BMP shape DECODES as of r11)
-    bad = bytearray(bmp8(idx, pal))
-    struct.pack_into("<I", bad, 30, 2)  # RLE4 tag on an 8-bit image
-    with _pytest.raises(ValueError, match="stdlib BMP tier"):
-        bmp_decoder(bytes(bad))
-
-
-def test_ppm_16bit_decodes():
-    """r11 seam shrink: maxval-65535 netpbm (16-bit P5/P6) decodes
-    big-endian wide samples with the high-byte fold (the PNG16/TIFF16
-    contract); other >255 maxvals keep refusing."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_image,
-        ppm_decoder,
-    )
-
-    rng = np.random.RandomState(47)
-    wide = rng.randint(0, 65536, (3, 4, 3)).astype(">u2")
-    pay = b"P6\n4 3\n65535\n" + wide.tobytes()
-    want = (wide >> 8).astype(np.uint8)
-    assert np.array_equal(ppm_decoder(pay), want)
-    assert np.array_equal(decode_image(pay), want)
-
-    gray = rng.randint(0, 65536, (2, 5, 1)).astype(">u2")
-    pay = b"P5\n5 2\n65535\n" + gray.tobytes()
-    assert np.array_equal(ppm_decoder(pay), (gray >> 8).astype(np.uint8))
-
-    with _pytest.raises(ValueError, match="65535"):
-        ppm_decoder(b"P6\n1 1\n1023\n\x00\x00\x00\x00\x00\x00")
-    with _pytest.raises(ValueError, match="raster size mismatch"):
-        ppm_decoder(b"P6\n4 3\n65535\n" + wide.tobytes()[:-3])
-
-
-def test_bmp_1_and_4_bit_palette_decode():
-    """r11: sub-byte paletted BMP — 1-bit (MSB-first bits) and 4-bit
-    (high nibble first) indexes, 4-byte-padded bottom-up rows —
-    decode against an independent writer; 16-bit bitfield refuses."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-    )
-
-    def bmp_sub(idx_rows, pal, bpp):
-        h, w = idx_rows.shape
-        pal_bytes = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
-        row_bytes = ((bpp * w + 31) // 32) * 4
-        raster = bytearray()
-        for y in range(h - 1, -1, -1):
-            row = bytearray()
-            if bpp == 1:
-                for i in range(0, w, 8):
-                    byte = 0
-                    for j, v in enumerate(idx_rows[y, i : i + 8]):
-                        byte |= int(v) << (7 - j)
-                    row.append(byte)
-            else:
-                for i in range(0, w, 2):
-                    hi = int(idx_rows[y, i]) << 4
-                    lo = int(idx_rows[y, i + 1]) if i + 1 < w else 0
-                    row.append(hi | lo)
-            raster += bytes(row).ljust(row_bytes, b"\0")
-        off = 14 + 40 + len(pal_bytes)
-        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
-        info = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, bpp, 0, len(raster), 0, 0, len(pal), 0
-        )
-        return hdr + info + pal_bytes + bytes(raster)
-
-    rng = np.random.RandomState(53)
-    mono = rng.randint(0, 2, (6, 11)).astype(np.uint8)
-    pal1 = [(255, 255, 255), (10, 20, 30)]
-    assert np.array_equal(
-        bmp_decoder(bmp_sub(mono, pal1, 1)), np.array(pal1, np.uint8)[mono]
-    )
-
-    idx4 = rng.randint(0, 16, (5, 7)).astype(np.uint8)
-    pal4 = [(rng.randint(256), rng.randint(256), rng.randint(256)) for _ in range(16)]
-    assert np.array_equal(
-        bmp_decoder(bmp_sub(idx4, pal4, 4)), np.array(pal4, np.uint8)[idx4]
-    )
-
-    bad = bytearray(bmp_sub(idx4, pal4, 4))
-    struct.pack_into("<H", bad, 28, 2)  # 2-bit: not a BMP bit depth
-    with _pytest.raises(ValueError, match="stdlib BMP tier"):
-        bmp_decoder(bytes(bad))
-
-
-def test_bmp_16_and_32_bit_direct_color_decode():
-    """r11: 16-bit XRGB555 / RGB565-bitfields and 32-bit BGRX BMPs
-    decode with round-trip-exact channel expansion (x*255/maxval,
-    rounded) — pinned against an independent writer."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-    )
-
-    def bmp_direct(words, bpp, masks=None):
-        h, w = words.shape
-        extra = struct.pack("<III", *masks) if masks else b""
-        row_raw = words.astype("<u2" if bpp == 16 else "<u4").tobytes()
-        row_bytes = ((bpp * w + 31) // 32) * 4
-        stride = w * (bpp // 8)
-        raster = b"".join(
-            row_raw[y * stride : (y + 1) * stride].ljust(row_bytes, b"\0")
-            for y in range(h - 1, -1, -1)
-        )
-        off = 14 + 40 + len(extra)
-        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
-        info = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, bpp, 3 if masks else 0,
-            len(raster), 0, 0, 0, 0,
-        )
-        return hdr + info + extra + raster
-
-    def expand(v, mask):
-        shift = (mask & -mask).bit_length() - 1
-        mx = mask >> shift
-        return ((((v >> shift) & mx) * 255 + mx // 2) // mx).astype(np.uint8)
-
-    rng = np.random.RandomState(59)
-    # 16-bit default XRGB555
-    w555 = rng.randint(0, 1 << 15, (4, 5)).astype(np.uint32)
-    want = np.stack(
-        [expand(w555, m) for m in (0x7C00, 0x03E0, 0x001F)], axis=2
-    )
-    assert np.array_equal(bmp_decoder(bmp_direct(w555, 16)), want)
-
-    # 16-bit RGB565 via BI_BITFIELDS
-    w565 = rng.randint(0, 1 << 16, (3, 6)).astype(np.uint32)
-    masks = (0xF800, 0x07E0, 0x001F)
-    want = np.stack([expand(w565, m) for m in masks], axis=2)
-    assert np.array_equal(bmp_decoder(bmp_direct(w565, 16, masks)), want)
-
-    # 32-bit BGRX (default masks are byte-aligned: exact passthrough)
-    w32 = rng.randint(0, 1 << 31, (2, 3)).astype(np.uint32)
-    want = np.stack(
-        [expand(w32, m) for m in (0x00FF0000, 0x0000FF00, 0x000000FF)], axis=2
-    )
-    assert np.array_equal(bmp_decoder(bmp_direct(w32, 32)), want)
-
-
-def _jdk_ccitt_tiff(spark, ink, ctype):
-    """Independent CCITT reference encoder: the JDK's javax.imageio
-    TIFF writer (com.sun.imageio ships CCITT RLE/T.4/T.6), reached
-    through the Spark JVM. ink: (H, W) uint8, 1 = black."""
-    import numpy as np
-
-    jvm = spark._jvm
-    h, w = ink.shape
-    rgb = (
-        np.where(ink[:, :, None].astype(bool), 0, 255)
-        .astype(np.uint8)
-        .repeat(3, axis=2)
-    )
-    src = jvm.javax.imageio.ImageIO.read(
-        jvm.java.io.ByteArrayInputStream(bytearray(_encode_bmp24(rgb)))
-    )
-    img = jvm.java.awt.image.BufferedImage(w, h, 12)  # TYPE_BYTE_BINARY
-    g = img.createGraphics()
-    g.drawImage(src, 0, 0, None)
-    g.dispose()
-    baos = jvm.java.io.ByteArrayOutputStream()
-    ios = jvm.javax.imageio.ImageIO.createImageOutputStream(baos)
-    wr = jvm.javax.imageio.ImageIO.getImageWritersByFormatName("tiff").next()
-    wr.setOutput(ios)
-    p = wr.getDefaultWriteParam()
-    p.setCompressionMode(jvm.javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-    p.setCompressionType(ctype)
-    wr.write(None, jvm.javax.imageio.IIOImage(img, None, None), p)
-    ios.flush()
-    wr.dispose()
-    return bytes(baos.toByteArray())
-
-
-def test_ccitt_fax_tiff_decodes_against_jdk_encoder(spark):
-    """r11 seam shrink: bilevel CCITT fax TIFF decodes natively —
-    compression 2 (Modified Huffman), 3 (Group 3 / T.4, the JDK
-    writes 2-D lines per T4Options=1), and 4 (Group 4 / T.6 MMR) —
-    pinned bit-exact against the JDK's INDEPENDENT javax.imageio
-    encoders, so the hand-typed ITU-T T.4/T.6 code tables cannot hide
-    behind a self-consistent in-repo encoder. Cases exercise every
-    table tier: short runs (speckle/checkerboard), make-ups, the
-    extended 1792-2560 make-ups (2800-wide solid rows), zero-length
-    leading white runs, and the 2-D vertical/horizontal/pass modes."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    rng = np.random.RandomState(67)
-    cases = {
-        "speckle": (rng.rand(40, 61) < 0.12).astype(np.uint8),
-        "dense": (rng.rand(33, 47) < 0.7).astype(np.uint8),
-        "all_white_wide": np.zeros((5, 2800), dtype=np.uint8),
-        "all_black_wide": np.ones((4, 2900), dtype=np.uint8),
-        "long_runs": np.zeros((6, 2700), dtype=np.uint8),
-        "checker": (
-            (np.arange(32)[:, None] + np.arange(96)[None, :]) & 1
-        ).astype(np.uint8),
-    }
-    cases["long_runs"][:, 2000:2650] = 1
-    for name, ink in cases.items():
-        want = np.where(ink[:, :, None].astype(bool), 0, 255).astype(np.uint8)
-        for ctype in ("CCITT RLE", "CCITT T.4", "CCITT T.6"):
-            got = tiff_decoder(_jdk_ccitt_tiff(spark, ink, ctype))
-            assert np.array_equal(got, want), (name, ctype)
-
-
-def test_ccitt_refusals():
-    """CCITT guards: FillOrder 2, T.6 uncompressed mode, non-CCITT
-    1-bit compression, and bad codes refuse cleanly."""
-    import numpy as np
-    import pytest as _pytest
-
-    from cdc_historical_warehouse_platform_spark.operators.ccitt import ccitt_decode
-
-    with _pytest.raises(ValueError, match="uncompressed mode"):
-        ccitt_decode(b"\x00\x00", 8, 1, 4, options=0b10)
-    # r12 ADVICE fix: G3 with T4Options bit 1 (uncompressed segments
-    # allowed) refuses by NAME instead of a misleading run-length error
-    with _pytest.raises(ValueError, match="G3: uncompressed mode"):
-        ccitt_decode(b"\x00\x00", 8, 1, 3, options=0b10)
-    with _pytest.raises(ValueError, match="invalid|exhausted"):
-        # 0x00-only stream: no valid T.6 mode code ever forms
-        ccitt_decode(b"\x00\x00\x00\x00", 8, 1, 4)
-    # MH: a run overflowing the row refuses (white 64+ makeup then 63
-    # terminating = 127 > 8)
-    bits = "11011" + "00110100"
-    pay = int(bits + "0" * (16 - len(bits)), 2).to_bytes(2, "big")
-    with _pytest.raises(ValueError, match="overflows"):
-        ccitt_decode(pay, 8, 1, 2)
-    assert np.array_equal(
-        ccitt_decode(pay, 127, 1, 2), np.zeros((1, 127), dtype=np.uint8)
-    )
-
-
-def test_stdlib_decoders_match_jdk_imageio_encoders(spark):
-    """r11 cross-validation: the lossless stdlib decoders (PNG, BMP,
-    TIFF LZW/PackBits/Deflate/ZLib) decode files produced by a fully
-    INDEPENDENT implementation — the JDK's javax.imageio writers —
-    bit-exact, on random RGB content. (CCITT has its own JDK-pinned
-    test; JPEG is excluded: decoders legitimately differ in IDCT
-    rounding.)"""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-        png_decoder,
-    )
-    from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-
-    jvm = spark._jvm
-
-    def jdk_encode(rgb, fmt, compression=None):
-        src = jvm.javax.imageio.ImageIO.read(
-            jvm.java.io.ByteArrayInputStream(bytearray(_encode_bmp24(rgb)))
-        )
-        baos = jvm.java.io.ByteArrayOutputStream()
-        ios = jvm.javax.imageio.ImageIO.createImageOutputStream(baos)
-        wr = jvm.javax.imageio.ImageIO.getImageWritersByFormatName(fmt).next()
-        wr.setOutput(ios)
-        p = wr.getDefaultWriteParam()
-        if compression is not None:
-            p.setCompressionMode(jvm.javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-            p.setCompressionType(compression)
-        wr.write(None, jvm.javax.imageio.IIOImage(src, None, None), p)
-        ios.flush()
-        wr.dispose()
-        return bytes(baos.toByteArray())
-
-    rng = np.random.RandomState(71)
-    for rgb in (
-        rng.randint(0, 256, (23, 31, 3)).astype(np.uint8),
-        np.repeat(rng.randint(0, 256, (9, 40, 1)), 3, axis=2).astype(np.uint8),
-    ):
-        for fmt, comp, dec in (
-            ("png", None, png_decoder),
-            ("bmp", None, bmp_decoder),
-            ("tiff", "LZW", tiff_decoder),
-            ("tiff", "PackBits", tiff_decoder),
-            ("tiff", "Deflate", tiff_decoder),
-            ("tiff", "ZLib", tiff_decoder),
-        ):
-            got = dec(jdk_encode(rgb, fmt, comp))[:, :, :3]
-            assert np.array_equal(got, rgb), (fmt, comp)
-
-
-def test_stdlib_audio_decoders_match_jdk_sound_api(spark):
-    """r11 cross-validation: the audio tier decodes files produced by
-    the fully independent javax.sound.sampled writers bit-exact — WAV
-    PCM16, AIFF PCM16 (big-endian), AU PCM16, and G.711 (mu-law AU,
-    A-law WAV; ours compared against the JDK's own expansion of the
-    same bytes, both normalized s16/32768)."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        decode_audio,
-    )
-
-    jvm = spark._jvm
-    AS = jvm.javax.sound.sampled.AudioSystem
-    Enc = jvm.javax.sound.sampled.AudioFormat.Encoding
-    Types = jvm.javax.sound.sampled.AudioFileFormat.Type
-
-    def ais_from(pcm_bytes, rate, big):
-        fmt = jvm.javax.sound.sampled.AudioFormat(
-            Enc.PCM_SIGNED, float(rate), 16, 1, 2, float(rate), big
-        )
-        bais = jvm.java.io.ByteArrayInputStream(bytearray(pcm_bytes))
-        return jvm.javax.sound.sampled.AudioInputStream(
-            bais, fmt, len(pcm_bytes) // 2
-        )
-
-    def write(ais, ftype):
-        baos = jvm.java.io.ByteArrayOutputStream()
-        AS.write(ais, ftype, baos)
-        return bytes(baos.toByteArray())
-
-    def jdk_decode(payload):
-        src = AS.getAudioInputStream(
-            jvm.java.io.ByteArrayInputStream(bytearray(payload))
-        )
-        f = src.getFormat()
-        tgt = jvm.javax.sound.sampled.AudioFormat(
-            Enc.PCM_SIGNED, f.getSampleRate(), 16, f.getChannels(),
-            2 * f.getChannels(), f.getSampleRate(), False,
-        )
-        raw = bytes(AS.getAudioInputStream(tgt, src).readAllBytes())
-        return np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
-
-    rng = np.random.RandomState(73)
-    s16 = rng.randint(-32768, 32768, 256).astype(np.int16)
-
-    for pcm, big, ftype in (
-        (s16.astype("<i2").tobytes(), False, Types.WAVE),
-        (s16.astype(">i2").tobytes(), True, Types.AIFF),
-        (s16.astype(">i2").tobytes(), True, Types.AU),
-    ):
-        wv, sr = decode_audio(write(ais_from(pcm, 8000, big), ftype))
-        assert sr == 8000 and np.array_equal(wv, s16 / 32768.0)
-
-    for enc, ftype in ((Enc.ULAW, Types.AU), (Enc.ALAW, Types.WAVE)):
-        g711_fmt = jvm.javax.sound.sampled.AudioFormat(
-            enc, 8000.0, 8, 1, 1, 8000.0, False
-        )
-        conv = AS.getAudioInputStream(
-            g711_fmt, ais_from(s16.astype("<i2").tobytes(), 8000, False)
-        )
-        pay = write(conv, ftype)
-        wv, sr = decode_audio(pay)
-        assert sr == 8000 and np.array_equal(wv, jdk_decode(pay))
-
-
 def test_events_ewma_matches_recursive_definition(spark):
     """r11: the closed-form integer-shift EWMA (plans/
     relational_queries.q_events_ewma_smoothing) equals the recursive
@@ -6505,84 +2472,6 @@ def test_events_ewma_matches_recursive_definition(spark):
         r = got[uid]
         assert r["n_events_used"] == min(len(xs), 32)
         assert abs(r["ewma_value"] - s) < 1e-9, (uid, r["ewma_value"], s)
-
-
-def test_gif_decoder_matches_jdk_imageio_encoder(spark):
-    """r11 cross-validation for GIF: an indexed image with an explicit
-    palette written by the JDK's independent GIF encoder decodes to
-    the identical RGB raster through the stdlib GIF tier (the encoder
-    may reorder the palette — RGB output is what's pinned)."""
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.gif import gif_decoder
-
-    jvm = spark._jvm
-    rng = np.random.RandomState(83)
-    n_colors = 16
-    pal = rng.randint(0, 256, (n_colors, 3)).astype(np.uint8)
-    idx = rng.randint(0, n_colors, (17, 23)).astype(np.uint8)
-
-    cm = jvm.java.awt.image.IndexColorModel(
-        8, n_colors,
-        bytearray(pal[:, 0].tobytes()),
-        bytearray(pal[:, 1].tobytes()),
-        bytearray(pal[:, 2].tobytes()),
-    )
-    img = jvm.java.awt.image.BufferedImage(23, 17, 13, cm)  # TYPE_BYTE_INDEXED
-    raster = img.getRaster()
-    for y in range(17):
-        for x in range(23):
-            raster.setSample(x, y, 0, int(idx[y, x]))
-    baos = jvm.java.io.ByteArrayOutputStream()
-    ios = jvm.javax.imageio.ImageIO.createImageOutputStream(baos)
-    wr = jvm.javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-    wr.setOutput(ios)
-    wr.write(img)
-    ios.flush()
-    wr.dispose()
-    pay = bytes(baos.toByteArray())
-
-    got = gif_decoder(pay)
-    if got.shape[2] == 4:
-        got = got[:, :, :3]
-    assert np.array_equal(got, pal[idx])
-
-
-def test_bmp_rle4_decodes():
-    """r11: RLE4 BMP — encoded runs alternating val's two nibbles,
-    hi-first word-aligned absolute runs, EOL/delta/EOB — against an
-    independent stream."""
-    import struct
-
-    import numpy as np
-
-    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
-        bmp_decoder,
-    )
-
-    pal = [(200, 0, 0), (0, 200, 0), (0, 0, 200), (7, 7, 7)]
-    h, w = 3, 7
-    want = np.zeros((h, w), dtype=np.uint8)
-    stream = bytearray()
-    # bottom row: 5-px encoded run of val 0x12 -> 1,2,1,2,1; then 2 px of 3
-    stream += bytes([5, 0x12, 2, 0x33, 0, 0])
-    want[0, :5] = [1, 2, 1, 2, 1]
-    want[0, 5:7] = 3
-    # middle row: absolute 3 px [2,0,1] (2 bytes, padded to word)
-    stream += bytes([0, 3, 0x20, 0x10, 0, 0])
-    want[1, :3] = [2, 0, 1]
-    # top row (y already 2 after the second EOL): delta dx=1, then 2 px of 2
-    stream += bytes([0, 2, 1, 0, 2, 0x22, 0, 1])
-    want[2, 1:3] = 2
-
-    pal_bytes = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
-    off = 14 + 40 + len(pal_bytes)
-    hdr = b"BM" + struct.pack("<IHHI", off + len(stream), 0, 0, off)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 4, 2, len(stream), 0, 0, len(pal), 0
-    )
-    got = bmp_decoder(hdr + info + pal_bytes + bytes(stream))
-    assert np.array_equal(got, np.array(pal, np.uint8)[want[::-1]])
 
 
 def test_bloom_prefilter_no_false_negatives_and_exact_flags(spark):
