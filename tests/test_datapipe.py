@@ -1864,6 +1864,143 @@ def test_corpus_append_tolerates_missing_legacy_manifest(spark, tmp_path):
     assert m["total_rows"] == n_after
 
 
+def _encode_bmp24(arr):
+    """Genuine uncompressed 24-bit BMP bytes from an (H, W, 3) RGB
+    array — hand-built headers, bottom-up rows, BGR pixels, 4-byte row
+    padding (the real on-disk format, not a fixture shortcut)."""
+    import struct
+
+    import numpy as np
+
+    h, w, _ = arr.shape
+    row_bytes = ((24 * w + 31) // 32) * 4
+    pad = row_bytes - w * 3
+    body = b"".join(
+        arr[y, :, ::-1].astype(np.uint8).tobytes() + b"\x00" * pad
+        for y in range(h - 1, -1, -1)
+    )
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
+    return header + info + body
+
+
+def _encode_ppm(arr):
+    import numpy as np
+
+    h, w, c = arr.shape
+    magic = b"P6" if c == 3 else b"P5"
+    return magic + f"\n# test\n{w} {h}\n255\n".encode() + arr.astype(np.uint8).tobytes()
+
+
+def test_stdlib_image_decoders_real_formats(spark):
+    """r8: the DEFAULT image path decodes genuine BMP and PPM/PGM
+    payloads with zero external codecs — the array round-trips
+    bit-exactly, and the full Arrow decode→resize→feature pipeline
+    pins against the same numpy ground truth the raw-decoder twin
+    uses. This runs REAL decodes in this container (no importorskip)."""
+    import hashlib
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+        decode_image,
+        extract_image_features,
+        ppm_decoder,
+    )
+
+    h, w = 11, 7  # odd width: exercises BMP row padding
+    rgb = ((np.arange(h * w * 3, dtype=np.uint32) * 7) % 251).astype(
+        np.uint8
+    ).reshape(h, w, 3)
+    gray = rgb[:, :, :1]
+
+    assert np.array_equal(bmp_decoder(_encode_bmp24(rgb)), rgb)
+    assert np.array_equal(ppm_decoder(_encode_ppm(rgb)), rgb)
+    assert np.array_equal(ppm_decoder(_encode_ppm(gray)), gray)
+    # magic dispatch through the public seam
+    assert np.array_equal(decode_image(_encode_bmp24(rgb)), rgb)
+    assert np.array_equal(decode_image(_encode_ppm(rgb)), rgb)
+
+    df = spark.createDataFrame(
+        [
+            (0, bytearray(_encode_bmp24(rgb))),
+            (1, bytearray(_encode_ppm(rgb))),
+            (2, bytearray(_encode_ppm(gray))),
+        ],
+        ["doc_id", "payload"],
+    )
+    rows = {
+        r["doc_id"]: r
+        for r in extract_image_features(df, out_w=4, out_h=4).collect()
+    }
+    ys = (np.arange(4) * h) // 4
+    xs = (np.arange(4) * w) // 4
+    for i, arr in ((0, rgb), (1, rgb), (2, gray)):
+        r = rows[i]
+        assert (r["width"], r["height"], r["channels"]) == (w, h, arr.shape[2])
+        assert r["mean_intensity"] == round(float(arr.mean()), 6)
+        assert r["resized_md5"] == hashlib.md5(
+            np.ascontiguousarray(arr[ys][:, xs]).tobytes()
+        ).hexdigest()
+
+
+def test_stdlib_wav_decoder_real_format(spark):
+    """r8: the DEFAULT audio path decodes genuine PCM WAV (16-bit mono
+    AND stereo-averaged, plus 8-bit) with the stdlib wave module — no
+    librosa — and the Arrow feature pipeline matches numpy ground
+    truth computed from the source arrays."""
+    import io
+    import wave as _w
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_audio,
+        extract_audio_features,
+        wav_decoder,
+    )
+
+    def pcm16(arr, sr, nch=1):
+        buf = io.BytesIO()
+        with _w.open(buf, "wb") as f:
+            f.setnchannels(nch)
+            f.setsampwidth(2)
+            f.setframerate(sr)
+            f.writeframes(arr.astype("<i2").tobytes())
+        return buf.getvalue()
+
+    sr = 8000
+    mono = (np.sin(np.arange(sr) / 8.0) * 20000).astype("<i2")
+    stereo = np.stack(
+        [mono, (mono.astype(np.int32) // 2).astype("<i2")], axis=1
+    ).reshape(-1)
+
+    wv, got_sr = wav_decoder(pcm16(mono, sr))
+    assert got_sr == sr
+    assert np.allclose(wv, mono.astype(np.float64) / 32768.0)
+    wv2, _ = decode_audio(pcm16(stereo, sr, nch=2))  # magic dispatch
+    expect2 = (
+        mono.astype(np.float64) / 32768.0
+        + (mono.astype(np.int32) // 2).astype(np.float64) / 32768.0
+    ) / 2.0
+    assert np.allclose(wv2, expect2)
+
+    df = spark.createDataFrame(
+        [(1, bytearray(pcm16(mono, sr))), (2, bytearray(pcm16(stereo, sr, 2)))],
+        ["doc_id", "payload"],
+    )
+    rows = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
+    for i, w_arr in ((1, mono.astype(np.float64) / 32768.0), (2, expect2)):
+        r = rows[i]
+        assert r["n_samples"] == sr and r["sample_rate"] == sr
+        assert r["duration_sec"] == 1.0
+        assert r["rms"] == round(float(np.sqrt(np.mean(w_arr**2))), 9)
+        assert r["zero_crossings"] == int(
+            np.count_nonzero(np.diff(np.signbit(w_arr)))
+        )
+
+
 def test_incremental_minhash_segment_probe_matches_broadcast(spark, tmp_path):
     """r8 bulk-append probes: the co-partitioned segment path
     (fp_segments clustered on fp, bucket_segments clustered on bucket)
@@ -2132,6 +2269,238 @@ def test_corpus_compact_state_dirs(spark, tmp_path):
     } == corpus_ids
 
 
+def test_stdlib_codec_unsupported_subformats_fall_through(spark):
+    """Review fix (r8): stdlib-magic payloads whose SUB-format the
+    stdlib tier can't parse (palette BMP, float WAV) must fall through
+    to the Pillow/librosa tier — raising the codec env stub here (no
+    libs in this container), NOT the stdlib ValueError. Installing the
+    libs therefore never decodes LESS than before the stdlib tier."""
+    import importlib.util
+    import io
+    import struct
+    import wave as _w
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_audio,
+        decode_image,
+    )
+
+    # 8-bit (palette) BMP header: stdlib tier refuses bpp != 24
+    hdr = struct.pack("<2sIHHI", b"BM", 200, 0, 0, 54) + struct.pack(
+        "<IiiHHIIiiII", 40, 4, 4, 1, 8, 0, 64, 2835, 2835, 0, 0
+    )
+    # float32 WAV (format tag 3): stdlib wave module refuses it
+    buf = io.BytesIO()
+    with _w.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(2)
+        f.setframerate(8000)
+        f.writeframes(np.zeros(16, "<i2").tobytes())
+    float_wav = bytearray(buf.getvalue())
+    float_wav[20:22] = struct.pack("<H", 3)  # IEEE float format tag
+
+    if importlib.util.find_spec("PIL") is None:
+        with _pytest.raises(NotImplementedError, match="Pillow"):
+            decode_image(bytes(hdr) + b"\x00" * 146)
+    if importlib.util.find_spec("librosa") is None:
+        with _pytest.raises(NotImplementedError, match="librosa"):
+            decode_audio(bytes(float_wav))
+    # and the supported sub-formats still decode via the stdlib tier
+    assert decode_audio(buf.getvalue())[1] == 8000
+
+
+def test_ppm_decoder_exact_raster_guard():
+    """ADVICE r8: a PPM header terminated by '\\r\\n' (some Windows
+    netpbm writers) shifts the raster offset by one byte — the stdlib
+    tier must refuse (raster-size mismatch) rather than silently decode
+    shifted pixels, letting the Pillow fall-through own the payload."""
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        ppm_decoder,
+    )
+
+    h, w = 5, 4
+    rgb = (np.arange(h * w * 3) % 251).astype(np.uint8).reshape(h, w, 3)
+    good = b"P6" + f"\n{w} {h}\n255\n".encode() + rgb.tobytes()
+    assert np.array_equal(ppm_decoder(good), rgb)
+    crlf = b"P6" + f"\n{w} {h}\n255\r\n".encode() + rgb.tobytes()
+    with _pytest.raises(ValueError, match="raster size mismatch"):
+        ppm_decoder(crlf)
+    with _pytest.raises(ValueError, match="raster size mismatch"):
+        ppm_decoder(good[:-7])  # truncated raster
+
+
+def test_decode_image_stub_chains_stdlib_parse_error():
+    """ADVICE r8: with Pillow absent, a corrupt BMP must surface the
+    REAL stdlib parse error chained into the env stub — not just the
+    misleading 'compressed formats need Pillow' text."""
+    import importlib.util
+
+    import pytest as _pytest
+
+    if importlib.util.find_spec("PIL") is not None:
+        _pytest.skip("Pillow present: the fall-through decodes instead")
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+    )
+
+    with _pytest.raises(NotImplementedError) as ei:
+        decode_image(b"BM" + b"\x01" * 16)  # truncated/corrupt header
+    assert ei.value.__cause__ is not None
+    assert "stdlib tier first failed" in str(ei.value)
+
+
+def _encode_png(arr, filters=None):
+    """Minimal test-side PNG writer (struct + zlib, stdlib only) with a
+    CHOSEN filter type per scanline — forward-filters the ground-truth
+    array so the decoder must invert every filter the schedule names."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    h, w, c = arr.shape
+    ct = {1: 0, 2: 4, 3: 2, 4: 6}[c]
+    bpp = c
+    filters = filters or [0] * h
+    raw = bytearray()
+    prev = np.zeros(w * c, dtype=np.int32)
+    for y in range(h):
+        cur = arr[y].reshape(-1).astype(np.int32)
+        f = filters[y]
+        raw.append(f)
+        if f == 0:
+            out = cur
+        elif f == 1:  # Sub
+            left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
+            out = cur - left
+        elif f == 2:  # Up
+            out = cur - prev
+        elif f == 3:  # Average
+            left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
+            out = cur - ((left + prev) >> 1)
+        elif f == 4:  # Paeth
+            a = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]])
+            b = prev
+            cc = np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]])
+            p = a + b - cc
+            pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - cc)
+            pred = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, cc))
+            out = cur - pred
+        raw.extend((out % 256).astype(np.uint8).tobytes())
+        prev = cur
+
+    def chunk(ctype, data):
+        body = ctype + data
+        return (
+            struct.pack(">I", len(data)) + body
+            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, ct, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
+
+
+def test_stdlib_png_decoder_all_filters_all_color_types(spark):
+    """r9 (verdict task #3): genuine PNG payloads decode in THIS
+    container via stdlib zlib + filter inversion — bit-exact against
+    the numpy ground truth for every filter type (None/Sub/Up/Average/
+    Paeth) and every 8-bit color type (gray, gray+alpha, RGB, RGBA),
+    through the raw decoder, the magic dispatch, AND the full Arrow
+    decode→resize→feature pipeline."""
+    import hashlib
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        extract_image_features,
+        png_decoder,
+    )
+
+    h, w = 7, 5
+    rng = (np.arange(h * w * 4, dtype=np.uint32) * 31 % 253).astype(np.uint8)
+    rgba = rng.reshape(h, w, 4)
+    sched = [0, 1, 2, 3, 4, 2, 1]  # every filter type appears
+    for c in (1, 2, 3, 4):
+        arr = rgba[:, :, :c]
+        payload = _encode_png(arr, filters=sched)
+        assert np.array_equal(png_decoder(payload), arr), f"channels={c}"
+        assert np.array_equal(decode_image(payload), arr), f"dispatch c={c}"
+
+    rgb = rgba[:, :, :3]
+    df = spark.createDataFrame(
+        [(7, bytearray(_encode_png(rgb, filters=sched)))], ["doc_id", "payload"]
+    )
+    (r,) = extract_image_features(df, out_w=4, out_h=4).collect()
+    ys, xs = (np.arange(4) * h) // 4, (np.arange(4) * w) // 4
+    assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
+    assert r["mean_intensity"] == round(float(rgb.mean()), 6)
+    assert r["resized_md5"] == hashlib.md5(
+        np.ascontiguousarray(rgb[ys][:, xs]).tobytes()
+    ).hexdigest()
+
+
+def test_stdlib_png_unsupported_subformats_fall_through():
+    """Palette / 16-bit / interlaced PNG refuse in the stdlib tier
+    (ValueError) and route to the Pillow env stub via decode_image —
+    same fall-through contract as the BMP/PPM sub-formats."""
+    import importlib.util
+    import struct
+    import zlib
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        png_decoder,
+    )
+
+    def png_with_ihdr(w, h, depth, ct, interlace):
+        ihdr = struct.pack(">IIBBBBB", w, h, depth, ct, 0, 0, interlace)
+        body = b"IHDR" + ihdr
+        c1 = struct.pack(">I", len(ihdr)) + body + struct.pack(
+            ">I", zlib.crc32(body) & 0xFFFFFFFF
+        )
+        data = zlib.compress(b"\x00" * ((w + 1) * h))
+        body2 = b"IDAT" + data
+        c2 = struct.pack(">I", len(data)) + body2 + struct.pack(
+            ">I", zlib.crc32(body2) & 0xFFFFFFFF
+        )
+        return b"\x89PNG\r\n\x1a\n" + c1 + c2
+
+    for kwargs, msg in (
+        (dict(depth=8, ct=5, interlace=0), "color type"),   # reserved type
+        (dict(depth=3, ct=0, interlace=0), "bit depth"),    # invalid depth
+        (dict(depth=4, ct=2, interlace=0), "depth/color"),  # invalid combo
+        (dict(depth=16, ct=3, interlace=0), "palette depth"),
+        (dict(depth=8, ct=0, interlace=2), "interlace method"),
+    ):
+        payload = png_with_ihdr(4, 4, **kwargs)
+        with _pytest.raises(ValueError, match=msg):
+            png_decoder(payload)
+        if importlib.util.find_spec("PIL") is None:
+            with _pytest.raises(NotImplementedError, match="Pillow"):
+                decode_image(payload)
+
+    # truncated IDAT (inflate ok, wrong raster size) also refuses
+    good = _encode_png(np.zeros((3, 3, 1), np.uint8))
+    with _pytest.raises(ValueError, match="not a PNG"):
+        png_decoder(good[1:])
+
+
 def test_resolve_state_buckets_auto_thresholds():
     """r9 (verdict task #4): 'auto' keeps small corpora flat, buckets
     large ones ~1 bucket/1M kept docs clamped to [32, 4096]; explicit
@@ -2245,6 +2614,65 @@ def test_corpus_compact_migrates_flat_state_to_bucketed(spark, tmp_path):
     assert corpus_append(spark, new, out)["appended"] == 0
 
 
+def test_g711_wav_decoder_mu_and_a_law():
+    """r9: G.711 mu-law/A-law WAV (telephony codecs the stdlib wave
+    module refuses) decode natively — pinned bit-exact against the
+    reference scalar expansion routines (CCITT G.711 ulaw2linear /
+    alaw2linear transliterated below), through the raw decoder AND
+    the decode_audio dispatch; stereo averages to mono."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_audio,
+        g711_wav_decoder,
+    )
+
+    def ulaw2linear(u):
+        u = ~u & 0xFF
+        t = ((u & 0x0F) << 3) + 0x84
+        t <<= (u & 0x70) >> 4
+        return (0x84 - t) if (u & 0x80) else (t - 0x84)
+
+    def alaw2linear(a):
+        a ^= 0x55
+        t = (a & 0x0F) << 4
+        seg = (a & 0x70) >> 4
+        if seg == 0:
+            t += 8
+        elif seg == 1:
+            t += 0x108
+        else:
+            t = (t + 0x108) << (seg - 1)
+        return t if (a & 0x80) else -t
+
+    def wav(tag, sr, frames, nch=1):
+        fmt = struct.pack("<HHIIHH", tag, nch, sr, sr * nch, nch, 8)
+        data = bytes(frames)
+        riff = (
+            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+    codes = list(range(256))
+    for tag, ref in ((7, ulaw2linear), (6, alaw2linear)):
+        wv, sr = g711_wav_decoder(wav(tag, 8000, codes))
+        assert sr == 8000 and len(wv) == 256
+        expect = np.array([ref(c) for c in codes], dtype=np.float64) / 32768.0
+        assert np.array_equal(wv, expect), f"tag {tag}"
+        # dispatch: the stdlib wave module refuses tag 6/7, the G.711
+        # tier owns it
+        wv2, _ = decode_audio(wav(tag, 8000, codes))
+        assert np.array_equal(wv2, expect)
+    # stereo -> mono average
+    stereo = [c for pair in zip(codes, codes[::-1]) for c in pair]
+    wv, _ = g711_wav_decoder(wav(7, 16000, stereo, nch=2))
+    mono = np.array([ulaw2linear(c) for c in codes], dtype=np.float64) / 32768.0
+    assert np.allclose(wv, (mono + mono[::-1]) / 2.0)
+
+
 def test_state_migration_crash_windows(spark, tmp_path, monkeypatch):
     """r9 crash protocol for the layout migration: a crash BEFORE the
     compaction marker rolls the bucketed rewrite back (repair deletes
@@ -2320,6 +2748,927 @@ def test_state_migration_crash_windows(spark, tmp_path, monkeypatch):
     assert state_rows("_fp_index") == fp_before
     # bucketed corpus fully usable through the forced bulk probe
     assert cb.corpus_append(spark, same, out, bulk_probe_doc_limit=0)["appended"] == 0
+
+
+def test_stdlib_png_palette_decode():
+    """r9: palette PNG (color type 3) decodes via the PLTE lookup —
+    bit-exact RGB vs the source palette image — while out-of-range
+    indexes and a missing PLTE refuse to the Pillow seam."""
+    import struct
+    import zlib
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        png_decoder,
+    )
+
+    def chunk(ctype, data):
+        body = ctype + data
+        return (
+            struct.pack(">I", len(data)) + body
+            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
+        )
+
+    h, w = 6, 5
+    rng = np.random.RandomState(5)
+    palette = rng.randint(0, 256, (16, 3)).astype(np.uint8)
+    idx = rng.randint(0, 16, (h, w)).astype(np.uint8)
+    raw = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
+
+    def png(with_plte=True, indexes=idx):
+        raw_ = b"".join(b"\x00" + indexes[y].tobytes() for y in range(h))
+        out = b"\x89PNG\r\n\x1a\n" + chunk(
+            b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0)
+        )
+        if with_plte:
+            out += chunk(b"PLTE", palette.tobytes())
+        return out + chunk(b"IDAT", zlib.compress(raw_)) + chunk(b"IEND", b"")
+
+    got = png_decoder(png())
+    assert got.shape == (h, w, 3)
+    assert np.array_equal(got, palette[idx])
+    assert np.array_equal(decode_image(png()), palette[idx])
+
+    with _pytest.raises(ValueError, match="missing PLTE"):
+        png_decoder(png(with_plte=False))
+    bad_idx = idx.copy()
+    bad_idx[0, 0] = 200  # past the 16-entry palette
+    with _pytest.raises(ValueError, match="out of PLTE range"):
+        png_decoder(png(indexes=bad_idx))
+
+
+def _png_forward_filter(arr_bytes, bpp, filters):
+    """Byte-level forward filtering for the test encoders: arr_bytes
+    (H, stride) uint8 -> raw scanline stream with the CHOSEN filter
+    per row (the decoder must invert them)."""
+    import numpy as np
+
+    h, stride = arr_bytes.shape
+    raw = bytearray()
+    prev = np.zeros(stride, dtype=np.int32)
+    for y in range(h):
+        cur = arr_bytes[y].astype(np.int32)
+        f = filters[y % len(filters)]
+        raw.append(f)
+        left = np.concatenate([np.zeros(bpp, np.int32), cur[:-bpp]]) if stride >= bpp else cur * 0
+        pl = np.concatenate([np.zeros(bpp, np.int32), prev[:-bpp]]) if stride >= bpp else prev * 0
+        if f == 0:
+            out = cur
+        elif f == 1:
+            out = cur - left
+        elif f == 2:
+            out = cur - prev
+        elif f == 3:
+            out = cur - ((left + prev) >> 1)
+        else:  # Paeth
+            p = left + prev - pl
+            pa, pb, pc = np.abs(p - left), np.abs(p - prev), np.abs(p - pl)
+            pred = np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, prev, pl))
+            out = cur - pred
+        raw.extend((out % 256).astype(np.uint8).tobytes())
+        prev = cur
+    return bytes(raw)
+
+
+def _png_chunks(w, h, depth, ct, interlace, raw, plte=None):
+    import struct
+    import zlib
+
+    def chunk(ctype, data):
+        body = ctype + data
+        return (
+            struct.pack(">I", len(data)) + body
+            + struct.pack(">I", zlib.crc32(body) & 0xFFFFFFFF)
+        )
+
+    out = b"\x89PNG\r\n\x1a\n" + chunk(
+        b"IHDR", struct.pack(">IIBBBBB", w, h, depth, ct, 0, 0, interlace)
+    )
+    if plte is not None:
+        out += chunk(b"PLTE", plte.tobytes())
+    return out + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
+
+
+def test_stdlib_png_16bit_decode():
+    """r9: 16-bit PNG decodes in the stdlib tier — filters operate on
+    BYTES with bpp = 2*channels per the spec, samples downscale to the
+    high byte (Pillow's convert-to-8-bit contract) — for gray and RGB,
+    across None/Sub/Up/Average/Paeth rows."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        png_decoder,
+    )
+
+    h, w = 7, 5
+    rng = np.random.RandomState(9)
+    for c in (1, 3):
+        samples = rng.randint(0, 65536, (h, w, c)).astype(">u2")
+        arr_bytes = samples.view(np.uint8).reshape(h, w * c * 2)
+        raw = _png_forward_filter(arr_bytes, 2 * c, [0, 1, 2, 3, 4])
+        payload = _png_chunks(w, h, 16, {1: 0, 3: 2}[c], 0, raw)
+        want = (samples >> 8).astype(np.uint8)
+        got = png_decoder(payload)
+        assert got.shape == (h, w, c)
+        assert np.array_equal(got, want), f"channels={c}"
+        assert np.array_equal(decode_image(payload), want)
+
+
+def test_stdlib_png_adam7_interlaced_decode():
+    """r9: Adam7-interlaced PNG assembles from the seven
+    independently-filtered passes — bit-exact vs the source array for
+    RGB and palette variants, including a tiny image with EMPTY
+    passes."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        png_decoder,
+    )
+
+    ADAM7 = (
+        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+    )
+
+    def interlaced_raw(arr, bpp, filters):
+        h, w, _ = arr.shape
+        raw = bytearray()
+        for x0, y0, dx, dy in ADAM7:
+            sub = arr[y0::dy, x0::dx]
+            if sub.size == 0:
+                continue
+            ph, pw = sub.shape[:2]
+            raw += _png_forward_filter(
+                sub.reshape(ph, pw * bpp), bpp, filters
+            )
+        return bytes(raw)
+
+    rng = np.random.RandomState(13)
+    # 10x9 RGB: every pass non-empty; mixed filters per pass
+    h, w = 9, 10
+    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
+    payload = _png_chunks(w, h, 8, 2, 1, interlaced_raw(rgb, 3, [0, 2, 1, 4, 3]))
+    assert np.array_equal(png_decoder(payload), rgb)
+
+    # 3x2 palette: passes 2/4 (x0 >= width) and more are EMPTY
+    palette = rng.randint(0, 256, (8, 3)).astype(np.uint8)
+    idx = rng.randint(0, 8, (2, 3, 1)).astype(np.uint8)
+    payload = _png_chunks(
+        3, 2, 8, 3, 1, interlaced_raw(idx, 1, [0]), plte=palette
+    )
+    got = png_decoder(payload)
+    assert np.array_equal(got, palette[idx[:, :, 0]])
+
+
+def test_stdlib_png_subbyte_depths():
+    """r9: 1/2/4-bit PNG decodes in the stdlib tier — packed rows
+    unpack MSB-first with row padding dropped; grayscale scales to the
+    full 8-bit range (Pillow's convert contract) and palette indexes
+    look up PLTE directly. This closes the PNG format: every legal
+    depth/color combination now decodes natively."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        png_decoder,
+    )
+
+    rng = np.random.RandomState(21)
+    h, w = 5, 7  # 7 pixels -> packed rows carry padding bits at 1/2/4-bit
+    for depth in (1, 2, 4):
+        maxv = (1 << depth) - 1
+        gray = rng.randint(0, maxv + 1, (h, w, 1)).astype(np.uint8)
+        # pack rows MSB-first
+        raw = bytearray()
+        for y in range(h):
+            bits = np.unpackbits(
+                gray[y, :, 0][:, None] << (8 - depth), axis=1, count=depth
+            ).reshape(-1)
+            pad = (-len(bits)) % 8
+            bits = np.concatenate([bits, np.zeros(pad, np.uint8)])
+            raw.append(0)  # filter None
+            raw.extend(np.packbits(bits).tobytes())
+        payload = _png_chunks(w, h, depth, 0, 0, bytes(raw))
+        want = (gray.astype(np.uint16) * 255 // maxv).astype(np.uint8)
+        got = png_decoder(payload)
+        assert got.shape == (h, w, 1), depth
+        assert np.array_equal(got, want), f"depth={depth}"
+        assert np.array_equal(decode_image(payload), want)
+
+    # 4-bit palette
+    palette = rng.randint(0, 256, (16, 3)).astype(np.uint8)
+    idx = rng.randint(0, 16, (h, w)).astype(np.uint8)
+    raw = bytearray()
+    for y in range(h):
+        row = idx[y]
+        raw.append(0)
+        packed = bytearray()
+        for i in range(0, w, 2):
+            hi = row[i] << 4
+            lo = row[i + 1] if i + 1 < w else 0
+            packed.append(hi | lo)
+        raw.extend(packed)
+    payload = _png_chunks(w, h, 4, 3, 0, bytes(raw), plte=palette)
+    assert np.array_equal(png_decoder(payload), palette[idx])
+
+
+def test_ima_adpcm_wav_decoder():
+    """r9: IMA/DVI ADPCM WAV (tag 0x11) — a genuinely COMPRESSED audio
+    codec — decodes natively, pinned bit-exact against the reference
+    scalar expansion (the IMA step/index algorithm transliterated
+    below) for mono multi-block and stereo interleaved-chunk layouts,
+    through the raw decoder AND the decode_audio dispatch."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        _IMA_INDEX_ADJUST,
+        _IMA_STEPS,
+        decode_audio,
+        ima_adpcm_wav_decoder,
+    )
+
+    def ref_decode_nibbles(nibbles, pred, idx):
+        out = []
+        for nib in nibbles:
+            step = _IMA_STEPS[idx]
+            diff = step >> 3
+            if nib & 1:
+                diff += step >> 2
+            if nib & 2:
+                diff += step >> 1
+            if nib & 4:
+                diff += step
+            pred = pred - diff if nib & 8 else pred + diff
+            pred = max(-32768, min(32767, pred))
+            idx = max(0, min(88, idx + _IMA_INDEX_ADJUST[nib & 7]))
+            out.append(pred)
+        return out
+
+    def wav(nch, sr, blocks):
+        """blocks: list of per-block [(pred, idx, nibbles_per_channel)]"""
+        body_len = len(blocks[0][0][2]) // 2  # bytes per channel payload
+        balign = 4 * nch + body_len * nch
+        fmt = struct.pack("<HHIIHH", 0x11, nch, sr, sr, balign, 4)
+        data = bytearray()
+        for chans in blocks:
+            for pred, idx, _ in chans:
+                data += struct.pack("<hBx", pred, idx)
+            # interleave 4-byte chunks per channel
+            per_ch = []
+            for _, _, nibs in chans:
+                b = bytearray()
+                for i in range(0, len(nibs), 2):
+                    b.append((nibs[i + 1] << 4) | nibs[i])
+                per_ch.append(bytes(b))
+            for w_i in range(body_len // 4):
+                for c in range(nch):
+                    data += per_ch[c][w_i * 4 : w_i * 4 + 4]
+        riff = (
+            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + bytes(data)
+        )
+        return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+    rng = np.random.RandomState(17)
+    nibs1 = rng.randint(0, 16, 64).tolist()
+    nibs2 = rng.randint(0, 16, 64).tolist()
+
+    # mono, two blocks with different (pred, idx) headers
+    payload = wav(1, 8000, [
+        [(100, 5, nibs1)],
+        [(-2000, 30, nibs2)],
+    ])
+    wv, sr = ima_adpcm_wav_decoder(payload)
+    expect = (
+        [100] + ref_decode_nibbles(nibs1, 100, 5)
+        + [-2000] + ref_decode_nibbles(nibs2, -2000, 30)
+    )
+    assert sr == 8000
+    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
+
+    # stereo interleaved chunks, averaged to mono; dispatch too
+    payload = wav(2, 16000, [[(0, 10, nibs1), (500, 40, nibs2)]])
+    wv, sr = ima_adpcm_wav_decoder(payload)
+    l = [0] + ref_decode_nibbles(nibs1, 0, 10)
+    r = [500] + ref_decode_nibbles(nibs2, 500, 40)
+    expect = (np.array(l, dtype=np.float64) + np.array(r)) / 2.0 / 32768.0
+    assert sr == 16000 and np.array_equal(wv, expect)
+    wv2, _ = decode_audio(payload)
+    assert np.array_equal(wv2, expect)
+
+
+def _ext80(rate):
+    """Independent 80-bit IEEE extended encoder (AIFF sample rate)."""
+    import math
+
+    if rate == 0:
+        return b"\x00" * 10
+    m, e = math.frexp(float(rate))
+    return (e - 1 + 16383).to_bytes(2, "big") + int(m * (1 << 64)).to_bytes(8, "big")
+
+
+def _encode_aiff(frames_bytes, nch, bits, rate, form=b"AIFF", ctype=None):
+    import struct as s
+
+    comm = s.pack(">hIh", nch, len(frames_bytes) // (nch * bits // 8), bits)
+    comm += _ext80(rate)
+    if ctype is not None:
+        comm += ctype + b"\x04name"  # compression fourcc + pstring
+    ssnd = s.pack(">II", 0, 0) + frames_bytes
+    body = b""
+    for cid, c in ((b"COMM", comm), (b"SSND", ssnd)):
+        body += cid + s.pack(">I", len(c)) + c + (b"\x00" if len(c) & 1 else b"")
+    return b"FORM" + s.pack(">I", 4 + len(body)) + form + body
+
+
+def _encode_au(data, enc, rate, nch):
+    import struct as s
+
+    return b".snd" + s.pack(">IIIII", 24, len(data), enc, rate, nch) + data
+
+
+def test_float_audio_decoders():
+    """r10 seam shrink: IEEE-float audio decodes natively — WAV format
+    tag 3 (32/64-bit, stereo averaging), AIFC fl32/fl64, AU encodings
+    6/7 — all through decode_audio's magic dispatch with the native
+    sample rate."""
+    import struct as s
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        aiff_decoder,
+        au_decoder,
+        decode_audio,
+        float_wav_decoder,
+    )
+
+    rng = np.random.RandomState(6)
+    mono = (rng.rand(64) * 2 - 1).astype(np.float64)
+
+    def wav(data, nch, sr, bits):
+        fmt = s.pack("<HHIIHH", 3, nch, sr, sr * nch * bits // 8, nch * bits // 8, bits)
+        body = b"WAVE" + b"fmt " + s.pack("<I", len(fmt)) + fmt
+        body += b"data" + s.pack("<I", len(data)) + data
+        return b"RIFF" + s.pack("<I", len(body)) + body
+
+    w, sr = float_wav_decoder(wav(mono.astype("<f4").tobytes(), 1, 48000, 32))
+    assert sr == 48000 and np.allclose(w, mono, atol=1e-6)
+    w, sr = decode_audio(wav(mono.astype("<f8").tobytes(), 1, 8000, 64))
+    assert sr == 8000 and np.array_equal(w, mono)
+    # stereo averages
+    stereo = np.repeat(mono, 2).astype("<f4").tobytes()
+    w, _ = float_wav_decoder(wav(stereo, 2, 48000, 32))
+    assert np.allclose(w, mono, atol=1e-6)
+
+    # AIFC float variants (big-endian IEEE; numSampleFrames bounds pads)
+    pay32 = _encode_aiff(mono.astype(">f4").tobytes(), 1, 32, 44100,
+                         form=b"AIFC", ctype=b"fl32")
+    w, sr = aiff_decoder(pay32)
+    assert sr == 44100 and np.allclose(w, mono, atol=1e-6)
+    pay64 = _encode_aiff(mono.astype(">f8").tobytes(), 1, 64, 22050,
+                         form=b"AIFC", ctype=b"fl64")
+    w, sr = decode_audio(pay64)
+    assert sr == 22050 and np.array_equal(w, mono)
+
+    # AU float encodings
+    w, sr = au_decoder(_encode_au(mono.astype(">f4").tobytes(), 6, 16000, 1))
+    assert sr == 16000 and np.allclose(w, mono, atol=1e-6)
+    w, sr = decode_audio(_encode_au(mono.astype(">f8").tobytes(), 7, 11025, 1))
+    assert sr == 11025 and np.array_equal(w, mono)
+
+    # AIFC G.711 (ulaw/alaw fourccs): same expansion as the WAV/AU
+    # telephony tiers — pin against the AU decoder on identical codes
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        _g711_table,
+    )
+
+    codes = bytes(range(256))
+    # the in-test COMM helper derives numSampleFrames from bits — pass
+    # 8 so it counts one frame per G.711 code byte (real files carry
+    # the true frame count with sampleSize=16; the decoder reads only
+    # numSampleFrames in this branch)
+    for cc, enc in ((b"ulaw", 1), (b"ALAW", 27)):
+        pay = _encode_aiff(codes, 1, 8, 8000, form=b"AIFC", ctype=cc)
+        w, sr = aiff_decoder(pay)
+        want, _ = au_decoder(_encode_au(codes, enc, 8000, 1))
+        assert sr == 8000 and np.array_equal(w, want), cc
+    # via the public dispatch too
+    w2, _ = decode_audio(_encode_aiff(codes, 1, 8, 8000, form=b"AIFC", ctype=b"ulaw"))
+    assert np.array_equal(w2, _g711_table("mu")[np.frombuffer(codes, np.uint8)])
+
+
+def test_wav_extensible_and_24bit():
+    """r10 seam shrink: WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE — the
+    standard >2ch/24-bit container; effective codec from the SubFormat
+    GUID) and 24-bit PCM decode natively; AIFC 'twos' (== NONE) and
+    'raw ' (offset-binary 8-bit) variants too."""
+    import struct as s
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        aiff_decoder,
+        decode_audio,
+        manual_wav_decoder,
+    )
+
+    rng = np.random.RandomState(8)
+    mono = (rng.rand(64) * 2 - 1).astype(np.float64)
+
+    def wav(data, tag, nch, sr, bits, sub=None):
+        fmt = s.pack("<HHIIHH", tag, nch, sr, sr * nch * bits // 8,
+                     nch * bits // 8, bits)
+        if sub is not None:  # extensible: cbSize + validBits + mask + GUID
+            guid = s.pack("<H", sub) + bytes.fromhex(
+                "0000000010800080" + "00AA00389B71"
+            )
+            fmt += s.pack("<HHI", 22, bits, 0) + guid
+        body = b"WAVE" + b"fmt " + s.pack("<I", len(fmt)) + fmt
+        body += b"data" + s.pack("<I", len(data)) + data
+        return b"RIFF" + s.pack("<I", len(body)) + body
+
+    # 24-bit PCM through BOTH the stdlib wave path and the manual walk
+    s24 = (mono * 8388607).astype(np.int64)
+    raw24 = b"".join(s.pack("<i", v << 8)[1:] for v in s24)
+    w, sr = decode_audio(wav(raw24, 1, 1, 48000, 24))
+    assert sr == 48000 and np.allclose(w, s24 / 8388608.0, atol=2e-7)
+    w2, _ = manual_wav_decoder(wav(raw24, 1, 1, 48000, 24))
+    assert np.allclose(w, w2)
+
+    # extensible PCM-16 and float-32 (stdlib wave refuses 0xFFFE)
+    s16 = (mono * 32767).astype("<i2")
+    w, sr = decode_audio(wav(s16.tobytes(), 0xFFFE, 1, 44100, 16, sub=1))
+    assert sr == 44100 and np.allclose(w, s16 / 32768.0)
+    w, sr = decode_audio(
+        wav(mono.astype("<f4").tobytes(), 0xFFFE, 1, 96000, 32, sub=3)
+    )
+    assert sr == 96000 and np.allclose(w, mono, atol=1e-6)
+    # extensible stereo averages
+    st = np.repeat(s16, 2).astype("<i2").tobytes()
+    w, _ = manual_wav_decoder(wav(st, 0xFFFE, 2, 44100, 16, sub=1))
+    assert np.allclose(w, s16 / 32768.0)
+
+    # AIFC twos == NONE; raw = offset-binary 8-bit
+    sb = (mono * 127).astype(np.int8)
+    w_t, _ = aiff_decoder(_encode_aiff(sb.astype(">i1").tobytes(), 1, 8, 8000,
+                                       form=b"AIFC", ctype=b"twos"))
+    w_n, _ = aiff_decoder(_encode_aiff(sb.astype(">i1").tobytes(), 1, 8, 8000,
+                                       form=b"AIFC", ctype=b"NONE"))
+    assert np.array_equal(w_t, w_n)
+    u8 = (sb.astype(np.int16) + 128).astype(np.uint8)
+    w_r, _ = aiff_decoder(_encode_aiff(u8.tobytes(), 1, 8, 8000,
+                                       form=b"AIFC", ctype=b"raw "))
+    assert np.allclose(w_r, sb / 128.0)
+
+
+def test_stdlib_aiff_decoder():
+    """AIFF / AIFF-C PCM decodes natively: 8 (signed!) / 16 / 24 /
+    32-bit, stereo averaging, the 80-bit-extended sample rate, and the
+    AIFC 'sowt' little-endian variant; compressed AIFC raises."""
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        aiff_decoder,
+        decode_audio,
+    )
+
+    rng = np.random.RandomState(3)
+
+    s16 = rng.randint(-32768, 32768, 64).astype(np.int16)
+    pay = _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 44100)
+    w, sr = aiff_decoder(pay)
+    assert sr == 44100
+    assert np.allclose(w, s16 / 32768.0)
+    # magic dispatch through the public seam
+    w2, sr2 = decode_audio(pay)
+    assert sr2 == 44100 and np.array_equal(w, w2)
+
+    # stereo averaging
+    st = rng.randint(-32768, 32768, 64).astype(np.int16)
+    inter = np.empty(128, np.int16)
+    inter[0::2], inter[1::2] = s16, st
+    w, sr = aiff_decoder(_encode_aiff(inter.astype(">i2").tobytes(), 2, 16, 8000))
+    assert sr == 8000
+    assert np.allclose(w, (s16 / 32768.0 + st / 32768.0) / 2)
+
+    # signed 8-bit (WAV's is unsigned — conventions differ)
+    s8 = rng.randint(-128, 128, 33).astype(np.int8)
+    w, sr = aiff_decoder(_encode_aiff(s8.tobytes(), 1, 8, 22050))
+    assert np.allclose(w, s8 / 128.0)
+
+    # 24-bit: value == int24 / 2^23
+    v24 = rng.randint(-(1 << 23), 1 << 23, 21)
+    raw24 = b"".join(int(v).to_bytes(3, "big", signed=True) for v in v24)
+    w, sr = aiff_decoder(_encode_aiff(raw24, 1, 24, 48000))
+    assert np.allclose(w, v24 / 8388608.0)
+
+    # 32-bit
+    v32 = rng.randint(-(1 << 31), 1 << 31, 17, dtype=np.int64).astype(np.int32)
+    w, _ = aiff_decoder(_encode_aiff(v32.astype(">i4").tobytes(), 1, 32, 16000))
+    assert np.allclose(w, v32 / 2147483648.0)
+
+    # AIFC sowt = little-endian frames
+    w, sr = aiff_decoder(
+        _encode_aiff(s16.astype("<i2").tobytes(), 1, 16, 11025, b"AIFC", b"sowt")
+    )
+    assert sr == 11025 and np.allclose(w, s16 / 32768.0)
+    # AIFC NONE = big-endian, same as plain AIFF
+    w, _ = aiff_decoder(
+        _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 11025, b"AIFC", b"NONE")
+    )
+    assert np.allclose(w, s16 / 32768.0)
+
+    # ima4 DECODES as of r11 (its own test); MACE 3:1 still refuses
+    with _pytest.raises(ValueError, match="PCM/float only"):
+        aiff_decoder(
+            _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 8000, b"AIFC", b"MAC3")
+        )
+    with _pytest.raises(ValueError, match="magic"):
+        aiff_decoder(b"FORM\x00\x00\x00\x04WAVE")
+
+
+def test_stdlib_au_decoder(spark):
+    """Sun AU decodes natively: big-endian PCM 8/16/24/32, G.711
+    mu-law/A-law (cross-container equal to the WAV G.711 tier, whose
+    tables are pinned independently), stereo averaging, and the Arrow
+    feature pipeline on the default decoder."""
+    import struct as s
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        au_decoder,
+        decode_audio,
+        extract_audio_features,
+        g711_wav_decoder,
+    )
+
+    rng = np.random.RandomState(5)
+
+    s16 = rng.randint(-32768, 32768, 50).astype(np.int16)
+    w, sr = au_decoder(_encode_au(s16.astype(">i2").tobytes(), 3, 16000, 1))
+    assert sr == 16000 and np.allclose(w, s16 / 32768.0)
+
+    s8 = rng.randint(-128, 128, 40).astype(np.int8)
+    w, _ = au_decoder(_encode_au(s8.tobytes(), 2, 8000, 1))
+    assert np.allclose(w, s8 / 128.0)
+
+    v24 = rng.randint(-(1 << 23), 1 << 23, 15)
+    raw24 = b"".join(int(v).to_bytes(3, "big", signed=True) for v in v24)
+    w, _ = au_decoder(_encode_au(raw24, 4, 8000, 1))
+    assert np.allclose(w, v24 / 8388608.0)
+
+    v32 = rng.randint(-(1 << 31), 1 << 31, 11, dtype=np.int64).astype(np.int32)
+    w, _ = au_decoder(_encode_au(v32.astype(">i4").tobytes(), 5, 8000, 1))
+    assert np.allclose(w, v32 / 2147483648.0)
+
+    # G.711: all 256 codes, equal to the WAV G.711 tier (tables pinned
+    # independently by test_g711_wav_decoder_mu_and_a_law)
+    codes = bytes(range(256))
+    for au_enc, wav_tag in ((1, 7), (27, 6)):
+        wav = (
+            b"RIFF"
+            + s.pack("<I", 36 + len(codes))
+            + b"WAVEfmt "
+            + s.pack("<IHHIIHH", 16, wav_tag, 1, 8000, 8000, 1, 8)
+            + b"data"
+            + s.pack("<I", len(codes))
+            + codes
+        )
+        w_au, sr_au = au_decoder(_encode_au(codes, au_enc, 8000, 1))
+        w_wav, _ = g711_wav_decoder(wav)
+        assert sr_au == 8000 and np.array_equal(w_au, w_wav)
+
+    # stereo averaging
+    inter = np.empty(100, np.int16)
+    inter[0::2], inter[1::2] = s16, s16[::-1]
+    w, _ = au_decoder(_encode_au(inter.astype(">i2").tobytes(), 3, 8000, 2))
+    assert np.allclose(w, (s16.astype(np.int64) + s16[::-1]) / 2 / 32768.0)
+
+    with _pytest.raises(ValueError, match="unsupported encoding"):
+        au_decoder(_encode_au(b"\x00" * 8, 23, 8000, 1))  # G.721 ADPCM
+    with _pytest.raises(ValueError, match="magic"):
+        au_decoder(b"!snd" + b"\x00" * 20)
+
+    # Arrow feature pipeline on the DEFAULT decoder: one AIFF + one AU
+    aiff = _encode_aiff(s16.astype(">i2").tobytes(), 1, 16, 44100)
+    au = _encode_au(s16.astype(">i2").tobytes(), 3, 16000, 1)
+    wave = s16 / 32768.0
+    df = spark.createDataFrame(
+        [(0, bytearray(aiff)), (1, bytearray(au))], ["doc_id", "payload"]
+    )
+    rows = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
+    for i, sr_want in ((0, 44100), (1, 16000)):
+        r = rows[i]
+        assert r["n_samples"] == 50
+        assert r["sample_rate"] == sr_want
+        assert r["rms"] == round(float(np.sqrt(np.mean(wave**2))), 9)
+        assert r["zero_crossings"] == int(
+            np.count_nonzero(np.diff(np.signbit(wave)))
+        )
+    # decode_audio magic dispatch consistency
+    assert np.array_equal(decode_audio(au)[0], decode_audio(aiff)[0])
+
+
+# --- MP4 / ISO BMFF (r9 continuation): independent writer for the pins ------
+
+
+def test_ico_la_png_entry_returns_real_rgba():
+    """r10 ADVICE fix: a gray+alpha (color type 4) PNG wrapped in an
+    ICO must honor the RGBA contract — luma repeated to RGB, the REAL
+    alpha kept — not the [luma, alpha, 255] garbage the opaque-fill
+    path produced."""
+    import struct as s
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import ico_decoder
+
+    rng = np.random.RandomState(7)
+    la = rng.randint(0, 256, (6, 5, 2)).astype(np.uint8)
+    png = _encode_png(la, filters=[0, 1, 2, 3, 4, 0])
+    entry = s.pack("<BBBBHHII", 5, 6, 0, 0, 1, 32, len(png), 6 + 16)
+    pay = s.pack("<HHH", 0, 1, 1) + entry + png
+    out = ico_decoder(pay)
+    assert out.shape == (6, 5, 4)
+    for ch in range(3):
+        assert np.array_equal(out[:, :, ch], la[:, :, 0]), "luma plane"
+    assert np.array_equal(out[:, :, 3], la[:, :, 1]), "real alpha kept"
+
+
+def test_aiff_ssnd_padding_not_decoded_as_audio():
+    """Review fix: SSND block-alignment pad bytes past COMM's
+    numSampleFrames must not become spurious samples."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import aiff_decoder
+
+    s16 = np.arange(-20, 20, dtype=np.int16)
+    raw = s16.astype(">i2").tobytes()
+    padded = raw + b"\x7f" * 6  # alignment junk after the real frames
+    pay = _encode_aiff(raw, 1, 16, 8000)
+    pay_padded = _encode_aiff(padded, 1, 16, 8000)
+    # the padded SSND must decode to the SAME waveform: nframes in the
+    # in-test COMM writer is derived from the REAL byte count
+    import struct as _s
+
+    # patch COMM numSampleFrames back to the true frame count (the
+    # helper computed it from the padded length)
+    comm_pos = pay_padded.find(b"COMM") + 8
+    pay_padded = (
+        pay_padded[: comm_pos + 2]
+        + _s.pack(">I", len(s16))
+        + pay_padded[comm_pos + 6 :]
+    )
+    w1, _ = aiff_decoder(pay)
+    w2, _ = aiff_decoder(pay_padded)
+    assert np.array_equal(w1, w2)
+    assert len(w2) == len(s16)
+
+
+# --- ICO / TGA (r9 continuation): independent writers for the pins ----------
+
+
+def _encode_ico(images):
+    """Independent ICO writer. images: list of dicts — either
+    {"png": bytes, "w", "h"} or {"rgb": HxWx3, "alpha": HxW bool
+    opaque-mask or None, "bpp": 24|32|8|4|1, "pal": palette or None,
+    "idx": index array for paletted}."""
+    import struct as s
+
+    import numpy as np
+
+    blobs = []
+    for im in images:
+        if "png" in im:
+            blobs.append((im["w"], im["h"], im["png"]))
+            continue
+        bpp = im["bpp"]
+        h, w = (
+            im["idx"].shape if im.get("idx") is not None else im["rgb"].shape[:2]
+        )
+        opaque = (
+            im["alpha"]
+            if im.get("alpha") is not None
+            else np.ones((h, w), dtype=bool)
+        )
+        hdr = s.pack(
+            "<IiiHHIIiiII", 40, w, h * 2, 1, bpp, 0, 0, 0, 0,
+            (len(im["pal"]) if im.get("pal") is not None else 0), 0,
+        )
+        body = bytearray(hdr)
+        if im.get("pal") is not None:
+            for r, g, b in im["pal"]:
+                body += bytes([b, g, r, 0])
+        xor_rb = ((bpp * w + 31) // 32) * 4
+        for y in range(h - 1, -1, -1):
+            row = bytearray()
+            if bpp == 32:
+                for x in range(w):
+                    r, g, b = im["rgb"][y, x]
+                    row += bytes([b, g, r, 255 if opaque[y, x] else 0])
+            elif bpp == 24:
+                for x in range(w):
+                    r, g, b = im["rgb"][y, x]
+                    row += bytes([b, g, r])
+            elif bpp == 8:
+                row += bytes(int(v) for v in im["idx"][y])
+            else:  # 4 or 1: MSB-first packing
+                bits = "".join(
+                    format(int(v), f"0{bpp}b") for v in im["idx"][y]
+                )
+                bits += "0" * (-len(bits) % 8)
+                row += bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+            row += b"\x00" * (xor_rb - len(row))
+            body += row
+        and_rb = ((w + 31) // 32) * 4
+        for y in range(h - 1, -1, -1):
+            bits = "".join("0" if opaque[y, x] else "1" for x in range(w))
+            bits += "0" * (-len(bits) % 8)
+            row = bytes(int(bits[i : i + 8], 2) for i in range(0, len(bits), 8))
+            body += row + b"\x00" * (and_rb - len(row))
+        blobs.append((w, h, bytes(body)))
+
+    out = bytearray(s.pack("<HHH", 0, 1, len(blobs)))
+    off = 6 + 16 * len(blobs)
+    for w, h, blob in blobs:
+        out += s.pack(
+            "<BBBBHHII", w % 256, h % 256, 0, 0, 1, 0, len(blob), off
+        )
+        off += len(blob)
+    for _w, _h, blob in blobs:
+        out += blob
+    return bytes(out)
+
+
+def _tga_rle(pix_bytes, depth):
+    """Independent TGA RLE compressor: runs >= 2 as run packets."""
+    out = bytearray()
+    px = [pix_bytes[i : i + depth] for i in range(0, len(pix_bytes), depth)]
+    i = 0
+    while i < len(px):
+        run = 1
+        while i + run < len(px) and run < 128 and px[i + run] == px[i]:
+            run += 1
+        if run >= 2:
+            out += bytes([0x80 | (run - 1)]) + px[i]
+            i += run
+            continue
+        start = i
+        i += 1
+        while (
+            i < len(px)
+            and i - start < 128
+            and not (i + 1 < len(px) and px[i + 1] == px[i])
+        ):
+            i += 1
+        out += bytes([i - start - 1]) + b"".join(px[start:i])
+    return bytes(out)
+
+
+def _encode_tga(
+    arr=None, idx=None, pal=None, rle=False, top_down=False, footer=True
+):
+    """Independent TGA writer: truecolor/gray/paletted, raw or RLE."""
+    import numpy as np
+
+    if idx is not None:
+        h, w = idx.shape
+        base, depth = 1, 1
+        pix = bytes(int(v) for v in idx.ravel())
+        cmtype, cm_len, cm_bits = 1, len(pal), 8 * pal.shape[1]
+    else:
+        h, w = arr.shape[:2]
+        c = arr.shape[2]
+        if c == 1:
+            base, depth = 3, 1
+            pix = arr.tobytes()
+        else:
+            base, depth = 2, c
+            pix = arr[:, :, [2, 1, 0] + ([3] if c == 4 else [])].tobytes()
+        cmtype, cm_len, cm_bits = 0, 0, 0
+    rows = [pix[y * w * depth : (y + 1) * w * depth] for y in range(h)]
+    if not top_down:
+        rows = rows[::-1]
+    pix = b"".join(rows)
+    body = _tga_rle(pix, depth) if rle else pix
+    import struct as s
+
+    hdr = s.pack(
+        "<BBBHHBHHHHBB", 0, cmtype, base | (8 if rle else 0),
+        0, cm_len, cm_bits, 0, 0, w, h, depth * 8,
+        0x20 if top_down else 0,
+    )
+    palette = b""
+    if pal is not None:
+        es = pal.shape[1]
+        for row in pal:
+            palette += bytes(
+                [row[2], row[1], row[0]] + ([row[3]] if es == 4 else [])
+            )
+    out = hdr + palette + body
+    if footer:
+        out += b"\x00" * 8 + b"TRUEVISION-XFILE.\x00"
+    return out
+
+
+def test_ico_decoder_all_depths():
+    """ICO: PNG entries, 32/24-bpp DIBs with AND masks, 8/4/1-bpp
+    paletted DIBs, largest-entry selection, through decode_image."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        ico_decoder,
+    )
+
+    rng = np.random.RandomState(11)
+    h, w = 10, 9
+    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
+    alpha = rng.rand(h, w) > 0.3
+
+    for bpp in (32, 24):
+        pay = _encode_ico([{"rgb": rgb, "alpha": alpha, "bpp": bpp}])
+        out = ico_decoder(pay)
+        assert out.shape == (h, w, 4)
+        assert np.array_equal(out[:, :, :3], rgb)
+        assert np.array_equal(out[:, :, 3] == 255, alpha)
+
+    for bpp in (8, 4, 1):
+        n = 1 << min(bpp, 4)
+        pal = rng.randint(0, 256, (n, 3)).astype(np.uint8)
+        idx = rng.randint(0, n, (h, w)).astype(np.uint8)
+        pay = _encode_ico(
+            [{"idx": idx, "pal": pal, "alpha": alpha, "bpp": bpp}]
+        )
+        out = ico_decoder(pay)
+        assert np.array_equal(out[:, :, :3], pal[idx]), f"bpp {bpp}"
+        assert np.array_equal(out[:, :, 3] == 255, alpha)
+
+    # largest entry wins; PNG entries route through the PNG tier
+    small = rng.randint(0, 256, (4, 4, 3)).astype(np.uint8)
+    pay = _encode_ico(
+        [{"rgb": small, "bpp": 24}, {"rgb": rgb, "alpha": alpha, "bpp": 32}]
+    )
+    assert np.array_equal(ico_decoder(pay)[:, :, :3], rgb)
+    # decode_image magic dispatch
+    out = decode_image(_encode_ico([{"rgb": rgb, "alpha": alpha, "bpp": 32}]))
+    assert np.array_equal(out[:, :, :3], rgb)
+
+
+def test_tga_decoder_all_variants():
+    """TGA: truecolor 24/32 raw+RLE, grayscale, paletted (24/32-bit
+    palettes), both origins; footer-bearing files dispatch through
+    decode_image; 16-bpp refuses."""
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        tga_decoder,
+    )
+
+    rng = np.random.RandomState(13)
+    h, w = 11, 7
+    rgb = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
+    rgba = rng.randint(0, 256, (h, w, 4)).astype(np.uint8)
+    gray = rng.randint(0, 256, (h, w, 1)).astype(np.uint8)
+
+    for arr in (rgb, rgba, gray):
+        for rle in (False, True):
+            for td in (False, True):
+                got = tga_decoder(_encode_tga(arr, rle=rle, top_down=td))
+                assert np.array_equal(got, arr), f"{arr.shape} rle={rle} td={td}"
+
+    # RLE with genuine runs (stripes)
+    stripes = np.repeat(rng.randint(0, 256, (h, 3, 3)).astype(np.uint8), 3, axis=1)[:, :w]
+    assert np.array_equal(tga_decoder(_encode_tga(stripes, rle=True)), stripes)
+
+    # paletted, 24- and 32-bit palette entries
+    for es in (3, 4):
+        pal = rng.randint(0, 256, (32, es)).astype(np.uint8)
+        idx = rng.randint(0, 32, (h, w)).astype(np.uint8)
+        got = tga_decoder(_encode_tga(idx=idx, pal=pal, rle=True))
+        assert np.array_equal(got, pal[idx])
+
+    # footer dispatch through decode_image; footerless needs explicit call
+    assert np.array_equal(decode_image(_encode_tga(rgb)), rgb)
+    bare = _encode_tga(rgb, footer=False)
+    assert np.array_equal(tga_decoder(bare), rgb)
+
+    with _pytest.raises(ValueError, match="pixel depth"):
+        bad = bytearray(_encode_tga(rgb))
+        bad[16] = 16
+        tga_decoder(bytes(bad))
 
 
 def test_containment_pairs_catches_subdocument_duplication(spark):
@@ -2431,6 +3780,600 @@ def test_bm25_topk_empty_corpus_returns_empty_with_schema(spark):
     assert got.count() == 0
 
 
+def test_aifc_ima4_decodes():
+    """r11 seam shrink: Apple IMA4 AIFC ('ima4' — QuickTime's ADPCM)
+    decodes natively: 34-byte packets (2-byte BE state header: top 9
+    predictor bits + 7-bit step index; 32 nibble bytes = 64 samples),
+    channel packets interleaved per 64-frame group, header predictor
+    as STATE ONLY (not emitted, unlike WAV IMA blocks). Pinned exact
+    against the reference IMA step walk; numSampleFrames truncates
+    the final packet's padding; decode_audio dispatches."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        _IMA_INDEX_ADJUST,
+        _IMA_STEPS,
+        aiff_decoder,
+        decode_audio,
+    )
+
+    def ref_decode(nibbles, pred, idx):
+        out = []
+        for nib in nibbles:
+            step = _IMA_STEPS[idx]
+            diff = step >> 3
+            if nib & 1:
+                diff += step >> 2
+            if nib & 2:
+                diff += step >> 1
+            if nib & 4:
+                diff += step
+            pred = pred - diff if nib & 8 else pred + diff
+            pred = max(-32768, min(32767, pred))
+            idx = max(0, min(88, idx + _IMA_INDEX_ADJUST[nib & 7]))
+            out.append(pred)
+        return out
+
+    def packet(pred, idx, nibs):
+        assert len(nibs) == 64 and pred % 128 == 0
+        h = (pred & 0xFFFF) & 0xFF80 | idx
+        body = bytearray(struct.pack(">H", h))
+        for i in range(0, 64, 2):
+            body.append((nibs[i + 1] << 4) | nibs[i])
+        return bytes(body)
+
+    def aifc_ima4(nch, rate, nframes, packets):
+        comm = struct.pack(">hIh", nch, nframes, 16) + _ext80(rate)
+        comm += b"ima4" + b"\x04name"
+        ssnd = struct.pack(">II", 0, 0) + b"".join(packets)
+        body = b""
+        for cid, c in ((b"COMM", comm), (b"SSND", ssnd)):
+            body += cid + struct.pack(">I", len(c)) + c + (
+                b"\x00" if len(c) & 1 else b""
+            )
+        return b"FORM" + struct.pack(">I", 4 + len(body)) + b"AIFC" + body
+
+    rng = np.random.RandomState(23)
+    nibs1 = rng.randint(0, 16, 64).tolist()
+    nibs2 = rng.randint(0, 16, 64).tolist()
+
+    # mono, two packets with distinct state headers (seek property)
+    pay = aifc_ima4(1, 22050, 128, [packet(256, 5, nibs1), packet(-2048, 30, nibs2)])
+    wv, sr = aiff_decoder(pay)
+    expect = ref_decode(nibs1, 256, 5) + ref_decode(nibs2, -2048, 30)
+    assert sr == 22050
+    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
+
+    # numSampleFrames truncates the final packet's alignment padding
+    pay = aifc_ima4(1, 22050, 100, [packet(256, 5, nibs1), packet(-2048, 30, nibs2)])
+    wv, _ = aiff_decoder(pay)
+    assert np.array_equal(wv, np.array(expect[:100], dtype=np.float64) / 32768.0)
+
+    # stereo: per-channel packets interleave per 64-frame group
+    pay = aifc_ima4(
+        2, 8000, 64, [packet(0, 10, nibs1), packet(-128, 40, nibs2)]
+    )
+    wv, sr = aiff_decoder(pay)
+    l = np.array(ref_decode(nibs1, 0, 10), dtype=np.float64)
+    r = np.array(ref_decode(nibs2, -128, 40), dtype=np.float64)
+    assert sr == 8000
+    assert np.array_equal(wv, (l + r) / 2.0 / 32768.0)
+    wv2, _ = decode_audio(pay)
+    assert np.array_equal(wv2, wv)
+
+    # out-of-range step index refuses cleanly
+    bad = bytearray(packet(0, 10, nibs1))
+    bad[1] = 0x7F  # index 127 > 88
+    import pytest as _pytest
+
+    with _pytest.raises(ValueError, match="step index"):
+        aiff_decoder(aifc_ima4(1, 8000, 64, [bytes(bad)]))
+
+
+def test_ms_adpcm_wav_decoder():
+    """r11 seam shrink: Microsoft ADPCM WAV (tag 0x02) decodes
+    natively — per-block per-channel (predictor idx, idelta, two seed
+    samples emitted older-first), HIGH-nibble-first 4-bit codes,
+    channels alternating per nibble in stereo — pinned bit-exact
+    against the reference scalar walk, through the raw decoder AND
+    decode_audio dispatch; bad predictor indexes refuse."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        _MS_ADPCM_ADAPT,
+        _MS_ADPCM_COEF1,
+        _MS_ADPCM_COEF2,
+        decode_audio,
+        ms_adpcm_wav_decoder,
+    )
+
+    def ref_walk(codes, pidx, idelta, s1, s2):
+        out = [s2, s1]
+        for code in codes:
+            signed = code - 16 if code >= 8 else code
+            pred = (
+                (s1 * _MS_ADPCM_COEF1[pidx] + s2 * _MS_ADPCM_COEF2[pidx]) >> 8
+            ) + signed * idelta
+            pred = max(-32768, min(32767, pred))
+            s2, s1 = s1, pred
+            idelta = max(16, (_MS_ADPCM_ADAPT[code] * idelta) >> 8)
+            out.append(pred)
+        return out
+
+    def wav(nch, sr, blocks):
+        """blocks: per block, per channel (pidx, idelta, s1, s2, codes)."""
+        n_codes = len(blocks[0][0][4])
+        balign = 7 * nch + (n_codes * nch) // 2
+        fmt = struct.pack("<HHIIHH", 0x02, nch, sr, sr, balign, 4)
+        data = bytearray()
+        for chans in blocks:
+            for p, _, _, _, _ in chans:
+                data.append(p)
+            for _, idelta, _, _, _ in chans:
+                data += struct.pack("<h", idelta)
+            for _, _, s1, _, _ in chans:
+                data += struct.pack("<h", s1)
+            for _, _, _, s2, _ in chans:
+                data += struct.pack("<h", s2)
+            # codes: channels alternate per nibble, HIGH nibble first
+            inter = []
+            for i in range(n_codes):
+                for c in range(nch):
+                    inter.append(chans[c][4][i])
+            for i in range(0, len(inter), 2):
+                data.append((inter[i] << 4) | inter[i + 1])
+        riff = (
+            b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + bytes(data)
+        )
+        return b"RIFF" + struct.pack("<I", len(riff)) + riff
+
+    rng = np.random.RandomState(31)
+    codes1 = rng.randint(0, 16, 40).tolist()
+    codes2 = rng.randint(0, 16, 40).tolist()
+
+    # mono, two blocks with different predictors/states
+    pay = wav(1, 8000, [
+        [(0, 200, 300, 100, codes1)],
+        [(3, 5000, -8000, -7000, codes2)],
+    ])
+    wv, sr = ms_adpcm_wav_decoder(pay)
+    expect = ref_walk(codes1, 0, 200, 300, 100) + ref_walk(codes2, 3, 5000, -8000, -7000)
+    assert sr == 8000
+    assert np.array_equal(wv, np.array(expect, dtype=np.float64) / 32768.0)
+
+    # stereo: nibbles alternate channels; averaged to mono; dispatch
+    pay = wav(2, 16000, [[(1, 64, 1000, 900, codes1), (6, 300, -50, -40, codes2)]])
+    wv, sr = ms_adpcm_wav_decoder(pay)
+    l = np.array(ref_walk(codes1, 1, 64, 1000, 900), dtype=np.float64)
+    r = np.array(ref_walk(codes2, 6, 300, -50, -40), dtype=np.float64)
+    assert sr == 16000 and np.array_equal(wv, (l + r) / 2.0 / 32768.0)
+    wv2, _ = decode_audio(pay)
+    assert np.array_equal(wv2, wv)
+
+    # predictor index out of range refuses
+    import pytest as _pytest
+
+    bad = wav(1, 8000, [[(7, 200, 300, 100, codes1)]])
+    with _pytest.raises(ValueError, match="predictor index"):
+        ms_adpcm_wav_decoder(bad)
+
+
+def test_ms_adpcm_wsamples_per_block_and_partial_tail():
+    """r12 ADVICE fix: wSamplesPerBlock (fmt extension) truncates each
+    block's output so pad nibbles in a not-fully-populated final block
+    never emit spurious samples; a trailing PARTIAL block (full header,
+    short code body) decodes instead of being dropped; a fact chunk
+    caps the total frame count; an out-of-range wSamplesPerBlock
+    refuses."""
+    import struct
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        _MS_ADPCM_ADAPT,
+        _MS_ADPCM_COEF1,
+        _MS_ADPCM_COEF2,
+        ms_adpcm_wav_decoder,
+    )
+
+    def ref_walk(codes, pidx, idelta, s1, s2):
+        out = [s2, s1]
+        for code in codes:
+            signed = code - 16 if code >= 8 else code
+            pred = (
+                (s1 * _MS_ADPCM_COEF1[pidx] + s2 * _MS_ADPCM_COEF2[pidx]) >> 8
+            ) + signed * idelta
+            pred = max(-32768, min(32767, pred))
+            s2, s1 = s1, pred
+            idelta = max(16, (_MS_ADPCM_ADAPT[code] * idelta) >> 8)
+            out.append(pred)
+        return out
+
+    def wav(balign, spb, data, fact=None):
+        """Mono, explicit nBlockAlign + wSamplesPerBlock ext, raw data."""
+        fmt = struct.pack("<HHIIHH", 0x02, 1, 8000, 8000, balign, 4)
+        fmt += struct.pack("<HH", 2, spb)  # cbSize=2, wSamplesPerBlock
+        chunks = b"WAVEfmt " + struct.pack("<I", len(fmt)) + fmt
+        if fact is not None:
+            chunks += b"fact" + struct.pack("<I", 4) + struct.pack("<I", fact)
+        chunks += b"data" + struct.pack("<I", len(data)) + bytes(data)
+        return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
+
+    def block(pidx, idelta, s1, s2, codes, pad_bytes=0):
+        b = bytearray([pidx])
+        b += struct.pack("<hhh", idelta, s1, s2)
+        for i in range(0, len(codes), 2):
+            lo = codes[i + 1] if i + 1 < len(codes) else 0
+            b.append((codes[i] << 4) | lo)
+        b += b"\x0f" * pad_bytes  # pad nibbles that must NOT decode
+        return bytes(b)
+
+    rng = np.random.RandomState(7)
+    codes = rng.randint(0, 16, 10).tolist()
+
+    # balign 7+8=15 holds up to 2+16 samples; spb=12 says only 10
+    # code nibbles are real — the last 3 pad bytes must not emit
+    balign = 7 + 8
+    pay = wav(balign, 12, block(0, 256, 500, 400, codes, pad_bytes=3))
+    wv, sr = ms_adpcm_wav_decoder(pay)
+    want = np.array(ref_walk(codes, 0, 256, 500, 400), dtype=np.float64) / 32768.0
+    assert sr == 8000 and np.array_equal(wv, want)
+
+    # trailing partial block: full 15-byte first block (12 samples by
+    # spb) + a 10-byte tail (header + 3 code bytes = 6 nibbles)
+    tail_codes = rng.randint(0, 16, 6).tolist()
+    data = block(0, 256, 500, 400, codes, pad_bytes=3) + block(
+        1, 300, -100, -200, tail_codes
+    )
+    pay = wav(balign, 12, data)
+    wv, _ = ms_adpcm_wav_decoder(pay)
+    want2 = np.concatenate(
+        [want, np.array(ref_walk(tail_codes, 1, 300, -100, -200)) / 32768.0]
+    )
+    assert np.array_equal(wv, want2)
+
+    # fact chunk caps the total (12 + 8 decoded, fact says 15)
+    pay = wav(balign, 12, data, fact=15)
+    wv, _ = ms_adpcm_wav_decoder(pay)
+    assert np.array_equal(wv, want2[:15])
+
+    # wSamplesPerBlock beyond the block geometry refuses
+    with _pytest.raises(ValueError, match="wSamplesPerBlock"):
+        ms_adpcm_wav_decoder(wav(balign, 99, block(0, 256, 500, 400, codes)))
+
+
+def test_bmp_palette_and_rle8_decode():
+    """r11 seam shrink: 8-bit paletted BMP (BI_RGB) and RLE8 BMP
+    decode natively — encoded runs, absolute runs (word-aligned),
+    end-of-line, delta skips, end-of-bitmap — pinned against an
+    independent writer; 4-bit BMP keeps refusing."""
+    import struct
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+    )
+
+    def bmp8(idx_rows, pal, rle_stream=None, n_colors=None):
+        h, w = idx_rows.shape
+        pal_bytes = b"".join(
+            bytes([b, g, r, 0]) for r, g, b in pal
+        )
+        if rle_stream is None:
+            row_bytes = ((8 * w + 31) // 32) * 4
+            raster = b"".join(
+                idx_rows[y].tobytes().ljust(row_bytes, b"\0")
+                for y in range(h - 1, -1, -1)
+            )
+            comp = 0
+        else:
+            raster = rle_stream
+            comp = 1
+        off = 14 + 40 + len(pal_bytes)
+        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, 8, comp, len(raster), 0, 0,
+            n_colors if n_colors is not None else len(pal), 0,
+        )
+        return hdr + info + pal_bytes + raster
+
+    rng = np.random.RandomState(43)
+    pal = [(rng.randint(256), rng.randint(256), rng.randint(256)) for _ in range(16)]
+    idx = rng.randint(0, 16, (5, 7)).astype(np.uint8)
+    want = np.array(pal, dtype=np.uint8)[idx]
+
+    # uncompressed paletted (explicit and zero biClrUsed=256 default)
+    assert np.array_equal(bmp_decoder(bmp8(idx, pal)), want)
+    pal256 = pal + [(0, 0, 0)] * 240
+    assert np.array_equal(bmp_decoder(bmp8(idx, pal256, n_colors=0)), want)
+
+    # RLE8: encoded run + absolute run + delta + EOL + EOB
+    # target 4x6 image, rows encoded bottom-up
+    pal2 = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)]
+    want2 = np.zeros((4, 6), dtype=np.uint8)
+    stream = bytearray()
+    # bottom row (y buffer 0): run of 4 x color1, then 2 x color2
+    stream += bytes([4, 1, 2, 2, 0, 0])
+    want2[0, :4] = 1
+    want2[0, 4:6] = 2
+    # next row: absolute run of 3 literals (padded to word), rest 0
+    stream += bytes([0, 3, 3, 1, 2, 0]) + bytes([0, 0])
+    want2[1, :3] = [3, 1, 2]
+    # delta: skip 2 right, 1 row up (buffer y 2 -> 3), then 2 x color3
+    stream += bytes([0, 2, 2, 1, 2, 3])
+    want2[3, 2:4] = 3
+    stream += bytes([0, 1])  # end of bitmap
+    got = bmp_decoder(bmp8(np.zeros((4, 6), np.uint8), pal2, bytes(stream)))
+    assert np.array_equal(got, np.array(pal2, dtype=np.uint8)[want2[::-1]])
+
+    # an unsupported pairing (8-bit + RLE4 tag) still refuses to the
+    # Pillow seam (every standard BMP shape DECODES as of r11)
+    bad = bytearray(bmp8(idx, pal))
+    struct.pack_into("<I", bad, 30, 2)  # RLE4 tag on an 8-bit image
+    with _pytest.raises(ValueError, match="stdlib BMP tier"):
+        bmp_decoder(bytes(bad))
+
+
+def test_ppm_16bit_decodes():
+    """r11 seam shrink: maxval-65535 netpbm (16-bit P5/P6) decodes
+    big-endian wide samples with the high-byte fold (the PNG16/TIFF16
+    contract); other >255 maxvals keep refusing."""
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_image,
+        ppm_decoder,
+    )
+
+    rng = np.random.RandomState(47)
+    wide = rng.randint(0, 65536, (3, 4, 3)).astype(">u2")
+    pay = b"P6\n4 3\n65535\n" + wide.tobytes()
+    want = (wide >> 8).astype(np.uint8)
+    assert np.array_equal(ppm_decoder(pay), want)
+    assert np.array_equal(decode_image(pay), want)
+
+    gray = rng.randint(0, 65536, (2, 5, 1)).astype(">u2")
+    pay = b"P5\n5 2\n65535\n" + gray.tobytes()
+    assert np.array_equal(ppm_decoder(pay), (gray >> 8).astype(np.uint8))
+
+    with _pytest.raises(ValueError, match="65535"):
+        ppm_decoder(b"P6\n1 1\n1023\n\x00\x00\x00\x00\x00\x00")
+    with _pytest.raises(ValueError, match="raster size mismatch"):
+        ppm_decoder(b"P6\n4 3\n65535\n" + wide.tobytes()[:-3])
+
+
+def test_bmp_1_and_4_bit_palette_decode():
+    """r11: sub-byte paletted BMP — 1-bit (MSB-first bits) and 4-bit
+    (high nibble first) indexes, 4-byte-padded bottom-up rows —
+    decode against an independent writer; 16-bit bitfield refuses."""
+    import struct
+
+    import numpy as np
+    import pytest as _pytest
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+    )
+
+    def bmp_sub(idx_rows, pal, bpp):
+        h, w = idx_rows.shape
+        pal_bytes = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
+        row_bytes = ((bpp * w + 31) // 32) * 4
+        raster = bytearray()
+        for y in range(h - 1, -1, -1):
+            row = bytearray()
+            if bpp == 1:
+                for i in range(0, w, 8):
+                    byte = 0
+                    for j, v in enumerate(idx_rows[y, i : i + 8]):
+                        byte |= int(v) << (7 - j)
+                    row.append(byte)
+            else:
+                for i in range(0, w, 2):
+                    hi = int(idx_rows[y, i]) << 4
+                    lo = int(idx_rows[y, i + 1]) if i + 1 < w else 0
+                    row.append(hi | lo)
+            raster += bytes(row).ljust(row_bytes, b"\0")
+        off = 14 + 40 + len(pal_bytes)
+        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, bpp, 0, len(raster), 0, 0, len(pal), 0
+        )
+        return hdr + info + pal_bytes + bytes(raster)
+
+    rng = np.random.RandomState(53)
+    mono = rng.randint(0, 2, (6, 11)).astype(np.uint8)
+    pal1 = [(255, 255, 255), (10, 20, 30)]
+    assert np.array_equal(
+        bmp_decoder(bmp_sub(mono, pal1, 1)), np.array(pal1, np.uint8)[mono]
+    )
+
+    idx4 = rng.randint(0, 16, (5, 7)).astype(np.uint8)
+    pal4 = [(rng.randint(256), rng.randint(256), rng.randint(256)) for _ in range(16)]
+    assert np.array_equal(
+        bmp_decoder(bmp_sub(idx4, pal4, 4)), np.array(pal4, np.uint8)[idx4]
+    )
+
+    bad = bytearray(bmp_sub(idx4, pal4, 4))
+    struct.pack_into("<H", bad, 28, 2)  # 2-bit: not a BMP bit depth
+    with _pytest.raises(ValueError, match="stdlib BMP tier"):
+        bmp_decoder(bytes(bad))
+
+
+def test_bmp_16_and_32_bit_direct_color_decode():
+    """r11: 16-bit XRGB555 / RGB565-bitfields and 32-bit BGRX BMPs
+    decode with round-trip-exact channel expansion (x*255/maxval,
+    rounded) — pinned against an independent writer."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+    )
+
+    def bmp_direct(words, bpp, masks=None):
+        h, w = words.shape
+        extra = struct.pack("<III", *masks) if masks else b""
+        row_raw = words.astype("<u2" if bpp == 16 else "<u4").tobytes()
+        row_bytes = ((bpp * w + 31) // 32) * 4
+        stride = w * (bpp // 8)
+        raster = b"".join(
+            row_raw[y * stride : (y + 1) * stride].ljust(row_bytes, b"\0")
+            for y in range(h - 1, -1, -1)
+        )
+        off = 14 + 40 + len(extra)
+        hdr = b"BM" + struct.pack("<IHHI", off + len(raster), 0, 0, off)
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, w, h, 1, bpp, 3 if masks else 0,
+            len(raster), 0, 0, 0, 0,
+        )
+        return hdr + info + extra + raster
+
+    def expand(v, mask):
+        shift = (mask & -mask).bit_length() - 1
+        mx = mask >> shift
+        return ((((v >> shift) & mx) * 255 + mx // 2) // mx).astype(np.uint8)
+
+    rng = np.random.RandomState(59)
+    # 16-bit default XRGB555
+    w555 = rng.randint(0, 1 << 15, (4, 5)).astype(np.uint32)
+    want = np.stack(
+        [expand(w555, m) for m in (0x7C00, 0x03E0, 0x001F)], axis=2
+    )
+    assert np.array_equal(bmp_decoder(bmp_direct(w555, 16)), want)
+
+    # 16-bit RGB565 via BI_BITFIELDS
+    w565 = rng.randint(0, 1 << 16, (3, 6)).astype(np.uint32)
+    masks = (0xF800, 0x07E0, 0x001F)
+    want = np.stack([expand(w565, m) for m in masks], axis=2)
+    assert np.array_equal(bmp_decoder(bmp_direct(w565, 16, masks)), want)
+
+    # 32-bit BGRX (default masks are byte-aligned: exact passthrough)
+    w32 = rng.randint(0, 1 << 31, (2, 3)).astype(np.uint32)
+    want = np.stack(
+        [expand(w32, m) for m in (0x00FF0000, 0x0000FF00, 0x000000FF)], axis=2
+    )
+    assert np.array_equal(bmp_decoder(bmp_direct(w32, 32)), want)
+
+
+def test_stdlib_decoders_match_jdk_imageio_encoders(spark):
+    """r11 cross-validation: the lossless stdlib decoders (PNG, BMP)
+    decode files produced by a fully INDEPENDENT implementation — the
+    JDK's javax.imageio writers — bit-exact, on random RGB content."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+        png_decoder,
+    )
+    jvm = spark._jvm
+
+    def jdk_encode(rgb, fmt, compression=None):
+        src = jvm.javax.imageio.ImageIO.read(
+            jvm.java.io.ByteArrayInputStream(bytearray(_encode_bmp24(rgb)))
+        )
+        baos = jvm.java.io.ByteArrayOutputStream()
+        ios = jvm.javax.imageio.ImageIO.createImageOutputStream(baos)
+        wr = jvm.javax.imageio.ImageIO.getImageWritersByFormatName(fmt).next()
+        wr.setOutput(ios)
+        p = wr.getDefaultWriteParam()
+        if compression is not None:
+            p.setCompressionMode(jvm.javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+            p.setCompressionType(compression)
+        wr.write(None, jvm.javax.imageio.IIOImage(src, None, None), p)
+        ios.flush()
+        wr.dispose()
+        return bytes(baos.toByteArray())
+
+    rng = np.random.RandomState(71)
+    for rgb in (
+        rng.randint(0, 256, (23, 31, 3)).astype(np.uint8),
+        np.repeat(rng.randint(0, 256, (9, 40, 1)), 3, axis=2).astype(np.uint8),
+    ):
+        for fmt, comp, dec in (
+            ("png", None, png_decoder),
+            ("bmp", None, bmp_decoder),
+        ):
+            got = dec(jdk_encode(rgb, fmt, comp))[:, :, :3]
+            assert np.array_equal(got, rgb), (fmt, comp)
+
+
+def test_stdlib_audio_decoders_match_jdk_sound_api(spark):
+    """r11 cross-validation: the audio tier decodes files produced by
+    the fully independent javax.sound.sampled writers bit-exact — WAV
+    PCM16, AIFF PCM16 (big-endian), AU PCM16, and G.711 (mu-law AU,
+    A-law WAV; ours compared against the JDK's own expansion of the
+    same bytes, both normalized s16/32768)."""
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        decode_audio,
+    )
+
+    jvm = spark._jvm
+    AS = jvm.javax.sound.sampled.AudioSystem
+    Enc = jvm.javax.sound.sampled.AudioFormat.Encoding
+    Types = jvm.javax.sound.sampled.AudioFileFormat.Type
+
+    def ais_from(pcm_bytes, rate, big):
+        fmt = jvm.javax.sound.sampled.AudioFormat(
+            Enc.PCM_SIGNED, float(rate), 16, 1, 2, float(rate), big
+        )
+        bais = jvm.java.io.ByteArrayInputStream(bytearray(pcm_bytes))
+        return jvm.javax.sound.sampled.AudioInputStream(
+            bais, fmt, len(pcm_bytes) // 2
+        )
+
+    def write(ais, ftype):
+        baos = jvm.java.io.ByteArrayOutputStream()
+        AS.write(ais, ftype, baos)
+        return bytes(baos.toByteArray())
+
+    def jdk_decode(payload):
+        src = AS.getAudioInputStream(
+            jvm.java.io.ByteArrayInputStream(bytearray(payload))
+        )
+        f = src.getFormat()
+        tgt = jvm.javax.sound.sampled.AudioFormat(
+            Enc.PCM_SIGNED, f.getSampleRate(), 16, f.getChannels(),
+            2 * f.getChannels(), f.getSampleRate(), False,
+        )
+        raw = bytes(AS.getAudioInputStream(tgt, src).readAllBytes())
+        return np.frombuffer(raw, dtype="<i2").astype(np.float64) / 32768.0
+
+    rng = np.random.RandomState(73)
+    s16 = rng.randint(-32768, 32768, 256).astype(np.int16)
+
+    for pcm, big, ftype in (
+        (s16.astype("<i2").tobytes(), False, Types.WAVE),
+        (s16.astype(">i2").tobytes(), True, Types.AIFF),
+        (s16.astype(">i2").tobytes(), True, Types.AU),
+    ):
+        wv, sr = decode_audio(write(ais_from(pcm, 8000, big), ftype))
+        assert sr == 8000 and np.array_equal(wv, s16 / 32768.0)
+
+    for enc, ftype in ((Enc.ULAW, Types.AU), (Enc.ALAW, Types.WAVE)):
+        g711_fmt = jvm.javax.sound.sampled.AudioFormat(
+            enc, 8000.0, 8, 1, 1, 8000.0, False
+        )
+        conv = AS.getAudioInputStream(
+            g711_fmt, ais_from(s16.astype("<i2").tobytes(), 8000, False)
+        )
+        pay = write(conv, ftype)
+        wv, sr = decode_audio(pay)
+        assert sr == 8000 and np.array_equal(wv, jdk_decode(pay))
+
+
 def test_events_ewma_matches_recursive_definition(spark):
     """r11: the closed-form integer-shift EWMA (plans/
     relational_queries.q_events_ewma_smoothing) equals the recursive
@@ -2472,6 +4415,43 @@ def test_events_ewma_matches_recursive_definition(spark):
         r = got[uid]
         assert r["n_events_used"] == min(len(xs), 32)
         assert abs(r["ewma_value"] - s) < 1e-9, (uid, r["ewma_value"], s)
+
+
+def test_bmp_rle4_decodes():
+    """r11: RLE4 BMP — encoded runs alternating val's two nibbles,
+    hi-first word-aligned absolute runs, EOL/delta/EOB — against an
+    independent stream."""
+    import struct
+
+    import numpy as np
+
+    from cdc_historical_warehouse_platform_spark.operators.multimodal import (
+        bmp_decoder,
+    )
+
+    pal = [(200, 0, 0), (0, 200, 0), (0, 0, 200), (7, 7, 7)]
+    h, w = 3, 7
+    want = np.zeros((h, w), dtype=np.uint8)
+    stream = bytearray()
+    # bottom row: 5-px encoded run of val 0x12 -> 1,2,1,2,1; then 2 px of 3
+    stream += bytes([5, 0x12, 2, 0x33, 0, 0])
+    want[0, :5] = [1, 2, 1, 2, 1]
+    want[0, 5:7] = 3
+    # middle row: absolute 3 px [2,0,1] (2 bytes, padded to word)
+    stream += bytes([0, 3, 0x20, 0x10, 0, 0])
+    want[1, :3] = [2, 0, 1]
+    # top row (y already 2 after the second EOL): delta dx=1, then 2 px of 2
+    stream += bytes([0, 2, 1, 0, 2, 0x22, 0, 1])
+    want[2, 1:3] = 2
+
+    pal_bytes = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
+    off = 14 + 40 + len(pal_bytes)
+    hdr = b"BM" + struct.pack("<IHHI", off + len(stream), 0, 0, off)
+    info = struct.pack(
+        "<IiiHHIIiiII", 40, w, h, 1, 4, 2, len(stream), 0, 0, len(pal), 0
+    )
+    got = bmp_decoder(hdr + info + pal_bytes + bytes(stream))
+    assert np.array_equal(got, np.array(pal, np.uint8)[want[::-1]])
 
 
 def test_bloom_prefilter_no_false_negatives_and_exact_flags(spark):

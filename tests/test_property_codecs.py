@@ -1,4 +1,4 @@
-"""Property-based round-trips for the r9 stdlib codec tier: for ANY
+"""Property-based round-trips for the stdlib codec tier: for ANY
 random image/audio payload the independent in-test encoders (defined
 in test_datapipe.py — container writers + separate compressors) must
 round-trip bit-exactly through the repo decoders. No Spark involved —
@@ -14,27 +14,16 @@ from hypothesis import strategies as st
 from test_datapipe import (
     _encode_aiff,
     _encode_au,
-    _encode_avi,
     _encode_bmp24,
-    _encode_gif,
     _encode_ppm,
-    _encode_tiff,
 )
 
-from cdc_historical_warehouse_platform_spark.operators.gif import (
-    gif_animation_decoder,
-    gif_decoder,
-)
 from cdc_historical_warehouse_platform_spark.operators.multimodal import (
     aiff_decoder,
     au_decoder,
     bmp_decoder,
-    decode_image,
     ppm_decoder,
 )
-from cdc_historical_warehouse_platform_spark.operators.tiff import tiff_decoder
-from cdc_historical_warehouse_platform_spark.operators.video import avi_decoder
-
 dims = st.tuples(st.integers(1, 33), st.integers(1, 33))
 
 
@@ -51,74 +40,6 @@ def test_bmp_ppm_roundtrip_any_size(seed, hw):
     assert np.array_equal(bmp_decoder(_encode_bmp24(rgb)), rgb)
     assert np.array_equal(ppm_decoder(_encode_ppm(rgb)), rgb)
     assert np.array_equal(ppm_decoder(_encode_ppm(rgb[:, :, :1])), rgb[:, :, :1])
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    hw=dims,
-    pal_bits=st.integers(1, 8),
-    interlace=st.booleans(),
-    version=st.sampled_from([b"GIF87a", b"GIF89a"]),
-)
-def test_gif_roundtrip_any_size_palette_interlace(seed, hw, pal_bits, interlace, version):
-    h, w = hw
-    n = 1 << pal_bits
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, (n, 3)).astype(np.uint8)
-    idx = rng.randint(0, n, (h, w)).astype(np.uint8)
-    payload = _encode_gif(
-        w, h, [{"idx": idx, "interlace": interlace}], gct=pal, version=version
-    )
-    assert np.array_equal(gif_decoder(payload), pal[idx])
-    assert np.array_equal(decode_image(payload), pal[idx])
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    hw=st.tuples(st.integers(4, 24), st.integers(4, 24)),
-    n_frames=st.integers(2, 5),
-    every_n=st.integers(1, 3),
-)
-def test_gif_animation_full_frame_sequence(seed, hw, n_frames, every_n):
-    """Full-screen frames (no transparency): each composited canvas
-    equals its own frame's palette mapping; sampling honors every_n."""
-    h, w = hw
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    idxs = [rng.randint(0, 16, (h, w)).astype(np.uint8) for _ in range(n_frames)]
-    payload = _encode_gif(w, h, [{"idx": i} for i in idxs], gct=pal)
-    got = gif_animation_decoder(payload, every_n=every_n)
-    assert [i for i, _ in got] == list(range(0, n_frames, every_n))
-    for fi, frame in got:
-        assert np.array_equal(frame, pal[idxs[fi]])
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    hw=dims,
-    endian=st.sampled_from(["<", ">"]),
-    compression=st.sampled_from([1, 5, 32773]),
-    channels=st.sampled_from([1, 3, 4]),
-    rps=st.integers(1, 40),
-    predictor=st.booleans(),
-)
-def test_tiff_roundtrip_any_shape(seed, hw, endian, compression, channels, rps, predictor):
-    h, w = hw
-    arr = _arr(seed, h, w, channels)
-    photometric = 1 if channels == 1 else 2
-    pred = 2 if (predictor and compression == 5) else 1
-    payload = _encode_tiff(
-        arr,
-        endian=endian,
-        compression=compression,
-        photometric=photometric,
-        rows_per_strip=min(rps, h),
-        predictor=pred,
-    )
-    assert np.array_equal(tiff_decoder(payload), arr)
 
 
 @settings(max_examples=25, deadline=None)
@@ -153,35 +74,10 @@ def test_aiff_au_roundtrip_any_width(seed, n, bits, nch, rate):
     assert np.array_equal(w, w2)
 
 
-@settings(max_examples=10, deadline=None)
-@given(
-    seed=st.integers(0, 2**31 - 1),
-    hw=st.tuples(st.integers(2, 20), st.integers(2, 20)),
-    n_frames=st.integers(1, 4),
-)
-def test_avi_raw_dib_roundtrip_any_geometry(seed, hw, n_frames):
-    h, w = hw
-    rng = np.random.RandomState(seed)
-    frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8) for _ in range(n_frames)]
-    row_bytes = ((24 * w + 31) // 32) * 4
-    pad = row_bytes - w * 3
-
-    def dib(a):
-        return b"".join(
-            a[y, :, ::-1].tobytes() + b"\x00" * pad for y in range(h - 1, -1, -1)
-        )
-
-    payload = _encode_avi([dib(f) for f in frames], w, h, "raw")
-    got = avi_decoder(payload)
-    assert len(got) == n_frames
-    for (_, img), src in zip(got, frames):
-        assert np.array_equal(img, src)
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     seed=st.integers(0, 2**31 - 1),
-    kind=st.sampled_from(["gif", "tiff", "bmp", "ppm", "aiff", "au", "avi"]),
+    kind=st.sampled_from(["bmp", "ppm", "aiff", "au"]),
     n_flips=st.integers(1, 12),
 )
 def test_decoders_survive_random_corruption(seed, kind, n_flips):
@@ -190,14 +86,7 @@ def test_decoders_survive_random_corruption(seed, kind, n_flips):
     error — never hang, loop, or escape with an unexpected crash."""
     rng = np.random.RandomState(seed)
     h, w = 9, 7
-    if kind == "gif":
-        pal = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-        idx = rng.randint(0, 16, (h, w)).astype(np.uint8)
-        payload, dec = _encode_gif(w, h, [{"idx": idx}], gct=pal), gif_decoder
-    elif kind == "tiff":
-        arr = _arr(seed, h, w, 3)
-        payload, dec = _encode_tiff(arr, compression=5, photometric=2), tiff_decoder
-    elif kind == "bmp":
+    if kind == "bmp":
         payload, dec = _encode_bmp24(_arr(seed, h, w, 3)), bmp_decoder
     elif kind == "ppm":
         payload, dec = _encode_ppm(_arr(seed, h, w, 3)), ppm_decoder
@@ -207,15 +96,6 @@ def test_decoders_survive_random_corruption(seed, kind, n_flips):
     elif kind == "au":
         raw = rng.randint(-32768, 32768, 40).astype(">i2").tobytes()
         payload, dec = _encode_au(raw, 3, 8000, 1), au_decoder
-    else:
-        frames = [rng.randint(0, 256, (h, w, 3)).astype(np.uint8)]
-        row_bytes = ((24 * w + 31) // 32) * 4
-        pad = row_bytes - w * 3
-        dib = b"".join(
-            frames[0][y, :, ::-1].tobytes() + b"\x00" * pad
-            for y in range(h - 1, -1, -1)
-        )
-        payload, dec = _encode_avi([dib], w, h, "raw"), avi_decoder
 
     corrupted = bytearray(payload)
     for _ in range(n_flips):
