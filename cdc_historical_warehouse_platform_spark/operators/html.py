@@ -177,8 +177,8 @@ def parse_blocks_stdlib(html: str) -> list[tuple[str, int]]:
 # Boilerplate removal only needs (tag-open, tag-close, data) events, so
 # this scanner re-implements HTMLParser.goahead + parse_starttag/
 # parse_endtag/parse_html_declaration for the ONE-SHOT feed+close case,
-# using the SAME module-level regexes (imported from html.parser /
-# _markupbase) so tokenization is byte-identical — including the
+# using the SAME regexes as html.parser and its ParserBase (copied
+# below) so tokenization is byte-identical — including the
 # tolerant/bogus-markup paths and their odd corners (data chunk
 # boundaries matter: _link_chars strips per chunk). Equality with
 # parse_blocks_stdlib is pinned by a differential fuzz test over
@@ -187,16 +187,41 @@ def parse_blocks_stdlib(html: str) -> list[tuple[str, int]]:
 
 from html import unescape as _unescape  # noqa: E402
 
-from html.parser import (  # noqa: E402
-    attrfind_tolerant as _attrfind,
-    endtagfind as _endtagfind,
-    locatestarttagend_tolerant as _locatestarttagend,
-    tagfind_tolerant as _tagfind,
-)
-
 import re as _re  # noqa: E402
 
-import _markupbase as _mb  # noqa: E402
+# Copied from CPython 3.11.7 (Lib/html/parser.py and the ParserBase
+# module it builds on) rather than imported: those names are private
+# to the stdlib and may change between Python releases. The
+# differential fuzz test pins the scanner against the stdlib parser
+# of whatever Python runs it.
+_tagfind = _re.compile(r"([a-zA-Z][^\t\n\r\f />\x00]*)(?:\s|/(?!>))*")
+_attrfind = _re.compile(
+    r'((?<=[\'"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*'
+    r'(\'[^\']*\'|"[^"]*"|(?![\'"])[^>\s]*))?(?:\s|/(?!>))*'
+)
+_locatestarttagend = _re.compile(
+    r"""
+  <[a-zA-Z][^\t\n\r\f />\x00]*       # tag name
+  (?:[\s/]*                          # optional whitespace before attribute name
+    (?:(?<=['"\s/])[^\s/>][^\s/=>]*  # attribute name
+      (?:\s*=+\s*                    # value indicator
+        (?:'[^']*'                   # LITA-enclosed value
+          |"[^"]*"                   # LIT-enclosed value
+          |(?!['"])[^>\s]*           # bare value
+         )
+        \s*                          # possibly followed by a space
+       )?(?:\s|/(?!>))*
+     )*
+   )?
+  \s*                                # trailing whitespace
+""",
+    _re.VERBOSE,
+)
+_endtagfind = _re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
+_commentclose = _re.compile(r"--\s*>")
+_declname_match = _re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*").match
+_markedsectionclose = _re.compile(r"]\s*]\s*>")
+_msmarkedsectionclose = _re.compile(r"]\s*>")
 
 _ASCII_LETTERS = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
@@ -364,7 +389,7 @@ def parse_blocks(html: str) -> list[tuple[str, int]]:
                 continue
             i = gt + 1  # bogus comment (s[i+1]=='/' so gt >= i+2)
         elif s.startswith("<!--", i):
-            m = _mb._commentclose.search(s, i + 4)
+            m = _commentclose.search(s, i + 4)
             if not m:
                 i = recover(i)
                 continue
@@ -383,7 +408,7 @@ def parse_blocks(html: str) -> list[tuple[str, int]]:
                 if i + 3 == n:
                     i = recover(i)
                     continue
-                nm = _mb._declname_match(s, i + 3)
+                nm = _declname_match(s, i + 3)
                 if not nm:
                     raise AssertionError(
                         "expected name token at %r" % s[i : i + 20]
@@ -393,9 +418,9 @@ def parse_blocks(html: str) -> list[tuple[str, int]]:
                     continue
                 sect = nm.group().strip().lower()
                 if sect in _STD_SECTIONS:
-                    m = _mb._markedsectionclose.search(s, i + 3)
+                    m = _markedsectionclose.search(s, i + 3)
                 elif sect in _MS_SECTIONS:
-                    m = _mb._msmarkedsectionclose.search(s, i + 3)
+                    m = _msmarkedsectionclose.search(s, i + 3)
                 else:
                     raise AssertionError(
                         "unknown status keyword %r in marked section"

@@ -25,11 +25,10 @@ Everything is integer/bit arithmetic (shift/and/or) — JVM codegen on
 the Spark side and expressible 1:1 in DuckDB SQL, so the key
 computation itself is oracle-checkable bit-for-bit.
 
-Division of labor with operators/clustering.py: clustering.py is the
-generic N-column float-bounds layout job over plain parquet; this
-module owns the shared interleave core, the integer-exact 2×16-bit
-key (``zorder_key2(a, b)`` ≡ ``interleave([b, a], 16)`` — a's bits
-odd, b's even), and the VersionedTable stats/skipping tier.
+This is the package's one Z-order layout job. It holds the generic
+interleave core, the integer-exact 2×16-bit key (``zorder_key2(a, b)``
+≡ ``interleave([b, a], 16)`` — a's bits odd, b's even), and the
+VersionedTable stats/skipping tier.
 """
 
 from __future__ import annotations
@@ -105,9 +104,8 @@ def zorder_key2(a: Column, b: Column) -> Column:
 def interleave(quantized: list[Column], bits: int) -> Column:
     """Generic N-column Morton interleave of pre-quantized
     ``[0, 2^bits)`` long columns — column ``j``'s bit ``i`` lands at
-    position ``i*n + j``. The shared core under both this module's
-    2×16-bit fast path and operators/clustering.py's float-bounds
-    N-column key. ``bits * n`` must fit 63 bits."""
+    position ``i*n + j``. Tests pin the 2×16-bit fast path
+    :func:`zorder_key2` equal to it. ``bits * n`` must fit 63 bits."""
     n = len(quantized)
     if bits * n > 63:
         raise ValueError(f"bits*cols = {bits * n} exceeds 63")

@@ -50,7 +50,6 @@ __all__ = [
     "encode_pq",
     "pq_adc_topk",
     "pq_adc_topk_bulk",
-    "pq_code_schema",
 ]
 
 _PICO = 1e12
@@ -202,10 +201,6 @@ def train_pq_codebooks(
                 if vals:  # empty code keeps its previous centroid
                     cb[s][c] = [vals[p] for p in sorted(vals)]
     return cb
-
-
-def pq_code_schema(code_col: str = "__codes") -> str:
-    return f"{code_col} array<int>"
 
 
 def encode_pq(

@@ -58,7 +58,6 @@ __all__ = [
     "dedupe_latest_per_key",
     "scd2_merge",
     "scd2_merge_tagged",
-    "scd2_merge_parts",
     "scd2_build_from_change_log",
     "empty_dim",
 ]
@@ -156,14 +155,13 @@ def scd2_merge(
 
     The history partition passes through untouched — storage layers that
     keep history append-only (sources/dim_store.SCD2DimStore) should
-    call :func:`scd2_merge_parts` instead and never materialize it.
+    call :func:`scd2_merge_tagged` on the current slice instead and
+    never materialize it.
     """
     current = dim.filter(F.col("is_current"))
     historical = dim.filter(~F.col("is_current"))
-    new_current, expired = scd2_merge_parts(
-        current, changes, batch_id, business_key, change_key
-    )
-    return historical.unionByName(expired).unionByName(new_current)
+    tagged = scd2_merge_tagged(current, changes, batch_id, business_key, change_key)
+    return historical.unionByName(tagged.drop(PART_COLUMN))
 
 
 PART_COLUMN = "__part"
@@ -309,36 +307,6 @@ def scd2_merge_tagged(
 
     # Union is plan concatenation — no shuffle.
     return from_current.unionByName(inserts)
-
-
-def scd2_merge_parts(
-    current: DataFrame,
-    changes: DataFrame,
-    batch_id: str | None = None,
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
-) -> tuple[DataFrame, DataFrame]:
-    """The merge against ONLY the current slice, returning
-    ``(new_current_slice, newly_expired_rows)``.
-
-    This is the O(current + batch) formulation: the (unbounded) history
-    never enters the plan, so a storage layer can overwrite the current
-    slice and append the expired rows — per-batch cost is independent
-    of history depth, which is what survives a 100 TB dimension.
-
-    Thin filter over :func:`scd2_merge_tagged`. NOTE: consuming the two
-    returned DataFrames in separate actions re-executes the merge plan
-    once each; a storage layer that wants the single-scan guarantee
-    should write the tagged output in one ``partitionBy(__part)`` job
-    instead (see SCD2DimStore.apply_batch).
-    """
-    tagged = scd2_merge_tagged(
-        current, changes, batch_id, business_key, change_key
-    )
-    dim_cols = [c for c in tagged.columns if c != PART_COLUMN]
-    new_current = tagged.filter(F.col(PART_COLUMN) == "current").select(*dim_cols)
-    expired = tagged.filter(F.col(PART_COLUMN) == "expired").select(*dim_cols)
-    return new_current, expired
 
 
 def scd2_build_from_change_log(

@@ -28,10 +28,8 @@ __all__ = [
     "ngram_list_from_tokens",
     "dup_ngram_fraction",
     "word_ngrams",
-    "char_ngrams",
     "punct_ratio",
     "digit_ratio",
-    "whitespace_ratio",
     "stopword_ratio",
     "avg_token_len",
     "quality_score",
@@ -132,15 +130,6 @@ def word_ngrams(col: Column, n: int = 3) -> Column:
     return ngrams_from_tokens(tokens(col), n)
 
 
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(col) - (n - 1)),
-        lambda i: F.substring(col, i, n),
-    )
-    empty = F.array().cast("array<string>")
-    return F.array_distinct(F.when(F.length(col) >= n, grams).otherwise(empty))
-
-
 def _count_matches(col: Column, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(col, F.lit(pattern), 0))
 
@@ -151,10 +140,6 @@ def punct_ratio(col: Column) -> Column:
 
 def digit_ratio(col: Column) -> Column:
     return _count_matches(col, r"[0-9]") / F.greatest(F.length(col), F.lit(1))
-
-
-def whitespace_ratio(col: Column) -> Column:
-    return _count_matches(col, r"\s") / F.greatest(F.length(col), F.lit(1))
 
 
 def stopword_ratio(col: Column) -> Column:

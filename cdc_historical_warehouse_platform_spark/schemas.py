@@ -20,7 +20,6 @@ __all__ = [
     "PIPELINE_METADATA_SCHEMA",
     "TESTDATA_TABLES",
     "load_table",
-    "load_all_tables",
     "register_testdata_views",
 ]
 
@@ -157,10 +156,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:

@@ -30,7 +30,6 @@ __all__ = [
     "read_change_stream",
     "start_scd2_stream",
     "windowed_event_counts",
-    "sliding_event_value",
     "streaming_exact_dedup",
     "streaming_corpus_keep",
     "sessionized_event_counts",
@@ -42,21 +41,36 @@ __all__ = [
 ]
 
 
-def read_change_stream(
-    spark: SparkSession, cdc_dir: str | Path, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def read_change_stream(spark: SparkSession, cdc_dir: str | Path) -> DataFrame:
     """File-source stream over jsonl-format batch directories
     (``<cdc_dir>/changes_*/part-*.json``). Explicit schema — streams
     never infer (SURVEY.md §1.3)."""
-    reader = (
+    raw = (
         spark.readStream.schema(CHANGE_JSON_SCHEMA)
         .option("pathGlobFilter", "part-*")
         .option("recursiveFileLookup", "false")
+        .json(str(Path(cdc_dir) / "changes_*"))
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.json(str(Path(cdc_dir) / "changes_*"))
     return cast_json_changes(raw)
+
+
+def _start_foreach_batch(
+    stream: DataFrame,
+    fn,
+    checkpoint_dir: str | Path,
+    available_now: bool,
+    processing_time: str,
+) -> StreamingQuery:
+    """The tail every maintainer stream shares: run ``fn(batch_df,
+    epoch_id)`` per micro-batch under ``checkpoint_dir``, either as a
+    one-shot ``availableNow`` drain or on a ``processingTime``
+    trigger."""
+    writer = stream.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", str(checkpoint_dir)
+    )
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=processing_time).start()
 
 
 def start_scd2_stream(
@@ -116,14 +130,9 @@ def start_scd2_stream(
             batch_id=batch_id,
         )
 
-    writer = changes.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return _start_foreach_batch(
+        changes, _merge, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def windowed_event_counts(
@@ -148,21 +157,6 @@ def windowed_event_counts(
             "n",
             "total_value",
         )
-    )
-
-
-def sliding_event_value(
-    events: DataFrame,
-    window: str = "15 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """ST8 sliding window variant."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n")
     )
 
 
@@ -363,8 +357,6 @@ def start_substr_index_stream(
     Per-epoch cost is O(batch + candidates) — the streaming twin of
     ``substr-append``; spans/clean read the same store either way.
     """
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -396,14 +388,9 @@ def start_substr_index_stream(
             return
         index.append(fresh)
 
-    writer = docs.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return _start_foreach_batch(
+        docs, _admit, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_corpus_append_stream(
@@ -439,8 +426,6 @@ def start_corpus_append_stream(
     Per-trigger cost is O(batch + candidates), never O(corpus) — on a
     bucketed-state corpus, batches past ``bulk_probe_doc_limit`` probe
     co-partitioned exactly like the batch path."""
-    from pyspark.sql import types as T
-
     from cdc_historical_warehouse_platform_spark.pipeline.corpus_build import corpus_append
 
     schema = T.StructType(
@@ -482,14 +467,9 @@ def start_corpus_append_stream(
             stream_batch_id=bid,
         )
 
-    writer = docs.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return _start_foreach_batch(
+        docs, _admit, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_ann_index_stream(
@@ -551,11 +531,6 @@ def start_ann_index_stream(
         txn = f"ann_stream_{sig['n']}_{int(sig['h'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}"
         idx.append(batch, txn_id=txn)
 
-    writer = vectors.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", str(checkpoint_dir)
+    return _start_foreach_batch(
+        vectors, _admit, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

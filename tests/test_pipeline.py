@@ -117,8 +117,14 @@ def test_jsonl_batch_roundtrip(tmp_path, spark):
     )
     p = write_change_batch(changes, tmp_path, extracted_at=ts(5), fmt="jsonl")
     assert p.is_dir()
+    assert not list(tmp_path.glob(".*tmp"))  # the staging dir was renamed away
     back = read_change_batch(spark, p)
-    assert back.count() == 3
+    cols = [f.name for f in CHANGE_SCHEMA.fields]
+    assert sorted(back.select(*cols).collect()) == sorted(changes.collect())
+    import json
+
+    meta = json.loads((p / "_batch_metadata.json").read_text())
+    assert meta["change_count"] == back.count() == 3
     # nullability is lost through JSON round-trips; names+types must hold
     assert [(f.name, f.dataType) for f in back.schema.fields] == [
         (f.name, f.dataType) for f in CHANGE_SCHEMA.fields

@@ -124,6 +124,35 @@ def test_rapid_updates_collapse_to_latest(spark, change_df):
     assert_invariants(out)
 
 
+def test_same_timestamp_delete_outranks_update(spark, change_df):
+    """A DELETE and an UPDATE of one key with the same cdc_timestamp:
+    the op-priority tiebreak makes DELETE win in either arrival order,
+    both inside one batch (keys 1, 2 never become current) and onto an
+    existing key (keys 3, 4 lose their current version, no successor)."""
+    existing = scd2_merge(
+        empty_dim(spark), change_df([make_change(k, "INSERT", ts(0)) for k in (3, 4)])
+    )
+
+    def delete(k):
+        return make_change(k, "DELETE", ts(5))
+
+    def update(k):
+        return make_change(k, "UPDATE", ts(5), quantity=7, status="confirmed")
+
+    batch = change_df(
+        [
+            make_change(1, "INSERT", ts(0)), delete(1), update(1),
+            make_change(2, "INSERT", ts(0)), update(2), delete(2),
+            delete(3), update(3),
+            update(4), delete(4),
+        ]
+    )
+    out = scd2_merge(existing, batch).collect()
+    got = sorted((r["order_key"], r["is_current"], r["valid_to"]) for r in out)
+    assert got == [(3, False, ts(5)), (4, False, ts(5))]
+    assert_invariants(out)
+
+
 def test_rapid_updates_onto_existing_key(spark, change_df):
     dim = scd2_merge(empty_dim(spark), change_df([make_change(5, "INSERT", ts(0))]))
     batch = change_df(

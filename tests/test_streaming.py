@@ -164,101 +164,6 @@ def test_windowed_event_counts_streaming_matches_batch(tmp_path, spark):
     assert stream_out == batch_out
 
 
-def test_stateful_current_state_operator(tmp_path, spark):
-    """ST5: applyInPandasWithState per-key state across two triggers."""
-    from cdc_historical_warehouse_platform_spark.streaming.stateful import streaming_current_state
-    from cdc_historical_warehouse_platform_spark.streaming.pipeline import read_change_stream
-
-    cdc_dir = tmp_path / "cdc"
-    cdc_dir.mkdir()
-    collected: dict[int, dict] = {}
-
-    def _run():
-        stream = read_change_stream(spark, cdc_dir)
-        out = streaming_current_state(stream)
-
-        def _sink(df, epoch):
-            for r in df.collect():
-                collected[r["order_key"]] = r.asDict()
-
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    b1 = [
-        make_change(1, "INSERT", ts(0), quantity=1, status="pending"),
-        make_change(1, "UPDATE", ts(1), quantity=2, status="confirmed"),
-        make_change(2, "INSERT", ts(2)),
-    ]
-    write_change_batch(
-        spark.createDataFrame(b1, CHANGE_SCHEMA), cdc_dir, extracted_at=ts(3), fmt="jsonl"
-    )
-    _run()
-    assert collected[1]["quantity"] == 2 and collected[1]["n_versions"] == 2
-    assert collected[2]["n_versions"] == 1 and not collected[2]["is_deleted"]
-
-    # second trigger: state persists in the checkpointed store
-    b2 = [
-        make_change(1, "UPDATE", ts(10), quantity=9, status="shipped"),
-        make_change(2, "DELETE", ts(11)),
-    ]
-    write_change_batch(
-        spark.createDataFrame(b2, CHANGE_SCHEMA), cdc_dir, extracted_at=ts(12), fmt="jsonl"
-    )
-    _run()
-    assert collected[1]["quantity"] == 9 and collected[1]["n_versions"] == 3
-    assert collected[2]["is_deleted"] is True
-
-
-def test_stateful_same_timestamp_tiebreak_matches_batch(tmp_path, spark):
-    """Same-timestamp DELETE+UPDATE delivered in adversarial order:
-    the streaming fold must apply the batch path's op-priority tiebreak
-    (DELETE wins), not arrival order — both paths end with the key
-    deleted."""
-    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim, scd2_merge
-    from cdc_historical_warehouse_platform_spark.streaming.stateful import streaming_current_state
-    from cdc_historical_warehouse_platform_spark.streaming.pipeline import read_change_stream
-
-    changes = [
-        make_change(1, "INSERT", ts(0), quantity=1),
-        # DELETE first in arrival order, UPDATE second — same cdc_timestamp
-        make_change(1, "DELETE", ts(5), quantity=1),
-        make_change(1, "UPDATE", ts(5), quantity=7, status="confirmed"),
-    ]
-    cdf = spark.createDataFrame(changes, CHANGE_SCHEMA)
-
-    # batch path: merge into an empty dim — DELETE outranks the
-    # same-timestamp UPDATE, so no current version survives
-    dim = scd2_merge(empty_dim(spark), cdf)
-    assert dim.filter(F.col("is_current")).filter(F.col("order_key") == 1).count() == 0
-
-    # streaming path over the identical rows
-    cdc_dir = tmp_path / "cdc"
-    cdc_dir.mkdir()
-    write_change_batch(cdf, cdc_dir, extracted_at=ts(6), fmt="jsonl")
-    collected: dict[int, dict] = {}
-
-    def _sink(df, epoch):
-        for r in df.collect():
-            collected[r["order_key"]] = r.asDict()
-
-    q = (
-        streaming_current_state(read_change_stream(spark, cdc_dir))
-        .writeStream.outputMode("update")
-        .foreachBatch(_sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt_tiebreak"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert collected[1]["is_deleted"] is True
-
-
 def test_watermark_drops_late_events(tmp_path, spark):
     """ST3: an event arriving in a later trigger, older than the
     watermark, must NOT reopen its (already finalized) window in
@@ -414,48 +319,6 @@ def test_streaming_corpus_keep_filters_then_dedups(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect())
     assert got == [1]  # junk filtered, duplicate dropped
-
-
-def test_stateful_no_phantom_state_or_reemission(tmp_path, spark):
-    """A DELETE of a never-seen key must create no state and emit no
-    row, and an all-duplicate redelivery must emit nothing (update-mode
-    sinks would otherwise upsert phantom or unchanged images)."""
-    from cdc_historical_warehouse_platform_spark.streaming.stateful import streaming_current_state
-    from cdc_historical_warehouse_platform_spark.streaming.pipeline import read_change_stream
-
-    cdc_dir = tmp_path / "cdc"
-    cdc_dir.mkdir()
-    emitted: list[dict] = []
-
-    def _run():
-        stream = read_change_stream(spark, cdc_dir)
-        out = streaming_current_state(stream)
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(lambda df, _e: emitted.extend(r.asDict() for r in df.collect()))
-            .option("checkpointLocation", str(tmp_path / "ckpt_ph"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    b1 = [
-        make_change(7, "INSERT", ts(0), quantity=4),
-        make_change(99, "DELETE", ts(1)),  # never inserted
-    ]
-    write_change_batch(
-        spark.createDataFrame(b1, CHANGE_SCHEMA), cdc_dir, extracted_at=ts(2), fmt="jsonl"
-    )
-    _run()
-    assert {r["order_key"] for r in emitted} == {7}  # no phantom row for 99
-
-    # identical redelivery: suppressed everywhere, nothing re-emitted
-    before = len(emitted)
-    write_change_batch(
-        spark.createDataFrame([b1[0]], CHANGE_SCHEMA), cdc_dir, extracted_at=ts(3), fmt="jsonl"
-    )
-    _run()
-    assert len(emitted) == before
 
 
 def test_streaming_interval_join_matches_batch(tmp_path, spark):
@@ -931,90 +794,3 @@ def test_ann_index_stream_matches_batch_and_survives_restart(spark, tmp_path):
         for r in b_idx.probe(spark, queries, k=5, n_probes=2).collect()
     )
     assert got_s == got_b
-
-
-def test_streaming_throttle_matches_batch(tmp_path, spark):
-    """r10: the stateful time-window throttle (applyInPandasWithState,
-    one int64 of state per key) keeps exactly the events the BATCH lag
-    query keeps, across two checkpointed triggers — the gap base
-    survives the trigger boundary in the state store, so an event
-    arriving in trigger 2 right after a trigger-1 event is dropped."""
-    import json
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from cdc_historical_warehouse_platform_spark.streaming.stateful import (
-        streaming_throttle,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-    events_dir = tmp_path / "events"
-    events_dir.mkdir()
-
-    def ev(i, u, et, sec):
-        return {
-            "event_id": i, "user_id": u, "event_type": et,
-            "ts": f"2024-01-01T00:{sec // 60:02d}:{sec % 60:02d}",
-        }
-
-    wave1 = [
-        ev(1, 1, "click", 0),     # kept (first)
-        ev(2, 1, "click", 30),    # dropped (gap 30 s < 120)
-        ev(3, 1, "click", 200),   # kept (gap 170 s vs event 2)
-        ev(4, 1, "view", 10),     # kept (different type stream)
-        ev(5, 2, "click", 5),     # kept (different user)
-    ]
-    wave2 = [
-        ev(6, 1, "click", 260),   # dropped (gap 60 s vs event 3 — ACROSS triggers)
-        ev(7, 1, "click", 500),   # kept
-        ev(8, 2, "click", 6),     # dropped (gap 1 s vs event 5)
-    ]
-    kept_ids: set[int] = set()
-
-    def _run():
-        stream = spark.readStream.schema(schema).json(str(events_dir))
-        out = streaming_throttle(stream)
-
-        def _sink(df, epoch):
-            kept_ids.update(r["event_id"] for r in df.collect())
-
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(_sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt_throttle"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (events_dir / "w1.jsonl").write_text("\n".join(json.dumps(e) for e in wave1))
-    _run()
-    assert kept_ids == {1, 3, 4, 5}
-    (events_dir / "w2.jsonl").write_text("\n".join(json.dumps(e) for e in wave2))
-    _run()
-    assert kept_ids == {1, 3, 4, 5, 7}
-
-    # streaming == batch: the same lag query over the union keeps the
-    # same set (the oracle row's semantics)
-    batch = spark.createDataFrame(
-        [tuple(e.values()) for e in wave1 + wave2],
-        "event_id long, user_id long, event_type string, ts string",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    gap = F.unix_micros(F.col("ts")) - F.lag(F.unix_micros(F.col("ts"))).over(w)
-    batch_kept = {
-        r["event_id"]
-        for r in batch.withColumn("gap", gap)
-        .filter(F.col("gap").isNull() | (F.col("gap") >= 120_000_000))
-        .collect()
-    }
-    assert batch_kept == kept_ids
