@@ -25,13 +25,14 @@ from __future__ import annotations
 
 import datetime as _dt
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "detect_changes",
     "classify_operation",
     "next_watermark",
+    "watermark_column",
     "DEFAULT_LOOKBACK",
 ]
 
@@ -77,6 +78,20 @@ def detect_changes(
     ).withColumn("extracted_at", stamp.cast("timestamp"))
 
 
+def watermark_column(
+    changes: DataFrame,
+    updated_col: str = "last_updated",
+    event_col: str | None = None,
+) -> Column:
+    """A5's per-row event time: ``updated_col``, or the ``greatest`` of
+    it and ``event_col`` when that column is present in the batch. Its
+    ``max`` over a batch is the next watermark (:func:`next_watermark`)."""
+    ts = F.col(updated_col).cast("timestamp")
+    if event_col is not None and event_col in changes.columns:
+        ts = F.greatest(ts, F.col(event_col).cast("timestamp"))
+    return ts
+
+
 def next_watermark(
     changes: DataFrame,
     updated_col: str = "last_updated",
@@ -91,8 +106,6 @@ def next_watermark(
     is re-extracted every cycle (reference advances over all extracted
     event times, log_extractor.py:253-261).
     """
-    ts = F.col(updated_col).cast("timestamp")
-    if event_col is not None and event_col in changes.columns:
-        ts = F.greatest(ts, F.col(event_col).cast("timestamp"))
+    ts = watermark_column(changes, updated_col, event_col)
     row = changes.agg(F.max(ts).alias("wm")).collect()[0]
     return row["wm"]

@@ -19,7 +19,12 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cdc_historical_warehouse_platform_spark.operators.cdc import detect_changes, next_watermark
+# next_watermark stays a name of this module: cdcbench/tracer.py patches it here
+from cdc_historical_warehouse_platform_spark.operators.cdc import (
+    detect_changes,
+    next_watermark,
+    watermark_column,
+)
 from cdc_historical_warehouse_platform_spark.pipeline.state import Watermark
 from cdc_historical_warehouse_platform_spark.sources.change_batches import write_change_batch
 from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
@@ -85,18 +90,25 @@ class CDCExtractor:
         path (None when no changes)."""
         now = now or _dt.datetime.utcnow()
         wm = self.watermark.get(now)
-        # Materialize the batch ONCE: isEmpty, the batch write, and the
-        # watermark agg would otherwise each re-run the source query —
-        # against a live JDBC source, a row committed between the write
-        # and the watermark scan would advance the watermark past data
-        # never written (permanent loss).
+        # Materialize the batch ONCE: the batch write and the count /
+        # watermark aggregate would otherwise each re-run the source
+        # query — against a live JDBC source, a row committed between
+        # the write and the watermark scan would advance the watermark
+        # past data never written (permanent loss).
         changes = self._detect(wm, now).localCheckpoint(eager=True)
-        if changes.isEmpty():
+        # one aggregate answers both "empty?" and "next watermark". The
+        # count decides emptiness: a batch whose rows all have a null
+        # last_updated (admitted by created_at > wm) has a null max but
+        # must still be written.
+        n, new_wm = changes.agg(
+            F.count(F.lit(1)),
+            F.max(watermark_column(changes, event_col="cdc_timestamp")),
+        ).first()
+        if n == 0:
             return None
         batch = write_change_batch(
             changes, self.cdc_dir, extracted_at=now, watermark=wm, fmt=self.fmt
         )
-        new_wm = next_watermark(changes, event_col="cdc_timestamp")
         if new_wm is not None:
             self.watermark.set(new_wm)
         return batch

@@ -12,7 +12,6 @@ batch publishes atomically at the store's pointer swap (V6 for free).
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -24,7 +23,7 @@ from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimSto
 
 __all__ = [
     "SCD2Loader",
-    "maintain_rollups",
+    "rollup_calls",
     "maintain_summary_store",
     "maintain_distinct_sketch_store",
     "maintain_histogram_store",
@@ -68,19 +67,21 @@ def maintain_summary_store(spark, dim_store, summary_store, changes, txn_id: str
     """Incremental-view maintenance of a summary table for one batch,
     BEFORE the dimension advances (the delta is defined against the
     pre-batch current slice). Shared by the batch loader and the
-    streaming foreachBatch path (both through :func:`maintain_rollups`)
+    streaming foreachBatch path (both through :func:`rollup_calls`)
     so both engines carry ONE copy of the bootstrap + commit-ordering
     rules.
 
     Crash/replay safety without a cross-store transaction: the rollups
-    commit concurrently, the dimension commits last, all under the
-    same txn_id.
-    - crash after some rollups landed, before the dim: the dim still
-      holds the pre-batch current slice, so the replay's landed
+    and the dimension's stage write run concurrently, and only the
+    dimension's adopts and pointer swap wait for all of them, so the
+    dimension commits last, all under the same txn_id.
+    - crash after some rollups landed, before the dim's pointer swap
+      (a rollup or the stage write failed, or an adopt did): the dim
+      still holds the pre-batch current slice, so the replay's landed
       rollups are txn no-ops, the others apply against the same
-      pre-batch state, and the dim applies — converged.
-    - replay after all landed (ledger/checkpoint unmarked): every
-      store is a txn no-op.
+      pre-batch state, and the dim restages and applies — converged.
+    - replay after all landed (ledger/checkpoint unmarked): the dim's
+      txn guard returns before any rollup runs.
     The delta algebra itself is also idempotent against an
     already-advanced dimension (every term cancels), so even a lost
     summary txn file degrades to a zero-delta commit."""
@@ -101,9 +102,10 @@ def maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id:
     order-value bucket) histogram (operators/incremental_agg.py
     histogram tier), the distribution sibling of
     maintain_summary_store. Shared by the batch loader and the
-    streaming foreachBatch path; identical crash/replay posture —
-    histogram commits before the dim under the dim's txn_id, and the
-    delta algebra is idempotent against an already-advanced dimension."""
+    streaming foreachBatch path; identical crash/replay posture — the
+    histogram commits beside the dim's stage write and before the dim's
+    adopts and pointer swap, under the dim's txn_id, and the delta
+    algebra is idempotent against an already-advanced dimension."""
     from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
         empty_histogram,
         group_histogram,
@@ -147,7 +149,7 @@ def maintain_distinct_sketch_store(spark, sketch_store, changes, txn_id: str) ->
     sketch_store.commit(state, txn_id=txn_id)
 
 
-def maintain_rollups(
+def rollup_calls(
     spark,
     dim_store,
     changes,
@@ -155,19 +157,17 @@ def maintain_rollups(
     summary_store=None,
     sketch_store=None,
     histogram_store=None,
-) -> None:
-    """Maintain every configured rollup store for one batch, BEFORE the
-    dimension advances — the one step the batch loader and the
-    streaming foreachBatch path share.
-
-    The maintainers run concurrently: each reads only the pre-batch
-    current slice and the batch, and writes only its own table, and
-    their jobs are small and bound by driver round trips, so running
-    them one after another leaves the cores idle. Every maintainer
-    finishes before this returns (the first error in submission order
-    is then re-raised), so the dimension's pointer swap stays the last
-    commit of the batch and the crash/replay argument in
-    :func:`maintain_summary_store` holds unchanged."""
+) -> list:
+    """The maintainer call of every configured rollup store for one
+    batch, as zero-argument callables; nothing runs here. The batch
+    loader and the streaming foreachBatch path both hand them to
+    :meth:`SCD2DimStore.apply_batch`, which runs them beside the
+    dimension's stage write and commits the dimension after all of
+    them (the crash/replay argument is in
+    :func:`maintain_summary_store`). Each reads only the pre-batch
+    current slice and the batch and writes only its own table. The
+    maintainers are looked up in this module when a call runs, not
+    when it is built."""
     calls = []
     if summary_store is not None:
         calls.append(
@@ -181,14 +181,7 @@ def maintain_rollups(
         calls.append(
             lambda: maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id)
         )
-    if not calls:
-        return
-    with ThreadPoolExecutor(max_workers=len(calls), thread_name_prefix="rollup") as pool:
-        futures = [pool.submit(call) for call in calls]
-    # leaving the block waited for every maintainer
-    for error in [f.exception() for f in futures]:
-        if error is not None:
-            raise error
+    return calls
 
 
 class SCD2Loader:
@@ -303,15 +296,6 @@ class SCD2Loader:
         if drift is not None and any(drift.values()):
             self.drift_events.append({"batch": batch_path.name, **drift})
         txn_id = f"{batch_path.name}|{batch_id}"
-        maintain_rollups(
-            self.spark,
-            self.dim,
-            changes,
-            txn_id,
-            summary_store=self.summary,
-            sketch_store=self.sketches,
-            histogram_store=self.histograms,
-        )
         # the store's txn guard backs the ledger: a crash between the
         # pointer swap and the mark leaves the replay a no-op
         applied = self.dim.apply_batch(
@@ -319,6 +303,15 @@ class SCD2Loader:
             changes,
             txn_id=txn_id,
             batch_id=batch_id,
+            rollups=rollup_calls(
+                self.spark,
+                self.dim,
+                changes,
+                txn_id,
+                summary_store=self.summary,
+                sketch_store=self.sketches,
+                histogram_store=self.histograms,
+            ),
         )
         self.ledger.mark(batch_path.name, batch_id)
         if applied:

@@ -22,10 +22,12 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from cdc_historical_warehouse_platform_spark.operators.scd2 import (
     PART_COLUMN,
@@ -101,6 +103,25 @@ def _reclaim_stages(root: Path) -> None:
         if pid is not None and pid != own and _pid_alive(pid):
             continue
         shutil.rmtree(stale, ignore_errors=True)
+
+
+def _run_concurrently(spark: SparkSession, calls) -> list:
+    """Run every call in its own pool thread and return their results.
+
+    Each call keeps the caller's Spark local properties (job group,
+    description, scheduler pool): a pool thread otherwise starts with
+    none, and its jobs would be cancelled, grouped and attributed apart
+    from the batch that ran them. Every call finishes before this
+    returns; the first error in submission order is then re-raised."""
+    # one wrap per call: each thread gets its own copy of the properties
+    targets = [inheritable_thread_target(spark)(call) for call in calls]
+    with ThreadPoolExecutor(max_workers=len(targets), thread_name_prefix="rollup") as pool:
+        futures = [pool.submit(target) for target in targets]
+    # leaving the block waited for every call
+    for error in [f.exception() for f in futures]:
+        if error is not None:
+            raise error
+    return [f.result() for f in futures]
 
 
 class SCD2DimStore:
@@ -185,7 +206,12 @@ class SCD2DimStore:
     # --- the one write path -------------------------------------------------
 
     def apply_batch(
-        self, spark: SparkSession, changes: DataFrame, txn_id: str, batch_id: str | None = None
+        self,
+        spark: SparkSession,
+        changes: DataFrame,
+        txn_id: str,
+        batch_id: str | None = None,
+        rollups=(),
     ) -> bool:
         """Merge one change batch; returns False for a replayed txn.
 
@@ -195,13 +221,29 @@ class SCD2DimStore:
         partition directories are then *adopted* (filesystem moves, no
         second job) as the next history segment and current version.
 
-        Write order: stage job first, then history adopt, then current
-        adopt, then the pointer. A crash before the pointer swap leaves
-        readers on the previous consistent pair; the replay (same
-        ``txn_id``) recomputes the stage and re-adopts (the sub-tables'
-        txn guards make half-done adopts no-ops) and finally swaps the
-        pointer. Stale stage dirs from crashed runs are reclaimed on
-        entry (single-writer, like the extractor's .tmp reclaim).
+        ``rollups`` are zero-argument callables that maintain the
+        batch's rollup stores (pipeline/loader.rollup_calls). They must
+        read only the pre-batch dimension and the batch and write only
+        their own tables under ``txn_id``.
+
+        Write order: the stage (plan build + stage job) runs in one
+        thread pool beside every rollup — their jobs are small and
+        bound by driver round trips, so running them one after another
+        leaves the cores idle. Only after all of them have finished do
+        the history adopt, the current adopt and the pointer swap run,
+        in that order, so the pointer swap stays the batch's last
+        commit. The adopts wait because moving ``current``
+        to a new version while a rollup still reads the pre-batch
+        version would turn that read into an older-version read. A
+        failure anywhere before the pointer swap leaves readers on the
+        previous consistent pair; the replay (same ``txn_id``) finds
+        the landed rollups' txns (no-ops), recomputes the stage,
+        re-adopts (the sub-tables' txn guards make half-done adopts
+        no-ops) and finally swaps the pointer. A txn already in the
+        store's ledger returns before any rollup runs: the dimension
+        commits last, so every rollup of that txn has landed. Stale
+        stage dirs from crashed runs are reclaimed on entry
+        (single-writer, like the extractor's .tmp reclaim).
         """
         meta = self._read_pointer()
         txns = list(meta.get("txns", [])) if meta else []
@@ -209,15 +251,19 @@ class SCD2DimStore:
             return False
 
         _reclaim_stages(self.path)
-
-        tagged = _seed_or_merge_tagged(
-            self.read_current(spark), changes, batch_id, first=meta is None
-        )
-        dim_schema = tagged.drop(PART_COLUMN).schema
-        dim_columns = [c for c in tagged.columns if c != PART_COLUMN]
-
         stage = self.path / f"._stage_{os.getpid()}"
-        tagged.write.mode("overwrite").partitionBy(PART_COLUMN).parquet(str(stage))
+
+        def _stage():
+            if meta is None:
+                cur = empty_dim(spark)
+            else:
+                cur = self.current.read(spark, version=meta["current_version"])
+            tagged = _seed_or_merge_tagged(cur, changes, batch_id, first=meta is None)
+            tagged.write.mode("overwrite").partitionBy(PART_COLUMN).parquet(str(stage))
+            return tagged.drop(PART_COLUMN).schema
+
+        dim_schema = _run_concurrently(spark, [_stage, *rollups])[0]
+        dim_columns = dim_schema.fieldNames()
 
         expired_dir = stage / f"{PART_COLUMN}=expired"
         current_dir = stage / f"{PART_COLUMN}=current"

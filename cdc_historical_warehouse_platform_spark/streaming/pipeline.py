@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from cdc_historical_warehouse_platform_spark.pipeline.loader import maintain_rollups
+from cdc_historical_warehouse_platform_spark.pipeline.loader import rollup_calls
 from cdc_historical_warehouse_platform_spark.pipeline.state import generate_batch_id
 from cdc_historical_warehouse_platform_spark.schemas import CHANGE_JSON_SCHEMA
 from cdc_historical_warehouse_platform_spark.sources.change_batches import cast_json_changes
@@ -100,12 +100,14 @@ def start_scd2_stream(
     register-max idempotence of the sketch union itself — and
     ``histogram_store`` for the per-(customer, value-bucket)
     distribution. All three go through the loader's shared step
-    (pipeline/loader.maintain_rollups): the rollups commit
-    concurrently, the dimension commits last, all under the epoch's txn
-    id, so a crash anywhere in the epoch replays to txn no-ops on the
-    stores that landed and a first apply on the rest — streaming gets
-    the batch path's incremental-view-maintenance guarantee with zero
-    new algebra.
+    (pipeline/loader.rollup_calls) into the one
+    ``SCD2DimStore.apply_batch`` call: the rollups run concurrently
+    beside the merge's stage write, and only the dimension's adopts and
+    pointer swap wait for them, so the dimension commits last, all
+    under the epoch's txn id. A crash anywhere in the epoch replays to
+    txn no-ops on the stores that landed and a first apply on the rest
+    — streaming gets the batch path's incremental-view-maintenance
+    guarantee with zero new algebra.
     """
     changes = read_change_stream(spark, cdc_dir)
 
@@ -114,20 +116,20 @@ def start_scd2_stream(
         if batch_id is None:
             return
         txn_id = f"epoch:{epoch_id}:{batch_id}"
-        maintain_rollups(
-            spark,
-            dim_store,
-            batch_df,
-            txn_id,
-            summary_store=summary_store,
-            sketch_store=sketch_store,
-            histogram_store=histogram_store,
-        )
         dim_store.apply_batch(
             spark,
             batch_df,
             txn_id=txn_id,
             batch_id=batch_id,
+            rollups=rollup_calls(
+                spark,
+                dim_store,
+                batch_df,
+                txn_id,
+                summary_store=summary_store,
+                sketch_store=sketch_store,
+                histogram_store=histogram_store,
+            ),
         )
 
     return _start_foreach_batch(

@@ -569,20 +569,22 @@ def test_histogram_store_maintenance_batch_and_stream(tmp_path, spark):
     assert _hist_rows(unpack_histogram(hist2.read(spark))) == stream_rows
 
 
-def test_concurrent_rollups_crash_before_dim_replays_exactly_once(tmp_path, spark):
-    """The loader's concurrent rollup step under a crash: the histogram
-    store's commit fails while the summary and sketch maintainers run
-    beside it. The run fails only after every maintainer has finished
-    (the others' txns landed, no pool thread outlives the run) and the
-    dimension has not moved. A fresh loader's replay is a txn no-op on
-    the landed rollups, applies the histogram and the dimension once,
-    and converges to a clean run."""
+def test_concurrent_rollups_crash_before_dim_replays_exactly_once(tmp_path, spark, monkeypatch):
+    """The concurrent section of a batch under a crash, in two cases:
+    the histogram store's commit fails while the summary and sketch
+    maintainers and the dimension's stage write run beside it, or the
+    stage write fails while all three rollups land. The run fails only
+    after every task has finished (the others' txns landed, no pool
+    thread outlives the run) and the dimension has not moved. A fresh
+    loader's replay is a txn no-op on the landed rollups, applies the
+    rest and the dimension once, and converges to a clean run."""
     import datetime as dt
     import shutil
     import threading
 
     from cdc_historical_warehouse_platform_spark.pipeline.loader import SCD2Loader
     from cdc_historical_warehouse_platform_spark.schemas import CHANGE_SCHEMA
+    from cdc_historical_warehouse_platform_spark.sources import dim_store as dim_store_module
     from cdc_historical_warehouse_platform_spark.sources.change_batches import write_change_batch
     from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimStore
     from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
@@ -615,52 +617,61 @@ def test_concurrent_rollups_crash_before_dim_replays_exactly_once(tmp_path, spar
             sketch_store=sketch, histogram_store=hist,
         )
 
-    clean, crash = tmp_path / "clean", tmp_path / "crash"
-    write_change_batch(spark.createDataFrame(b1, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(9))
-    assert loader(clean).load_pending()["processed"] == 1
-    write_change_batch(spark.createDataFrame(b2, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(13))
-    shutil.copytree(clean, crash)
-    assert loader(clean).load_pending()["processed"] == 1
-
-    dim, summary, sketch, hist = stores(crash)
-    summary_txns, sketch_txns, hist_txns = (
-        t.committed_txns() for t in (summary, sketch, hist)
-    )
-    dim_version, dim_txns, hist_version = dim.version(), dim.committed_txns(), hist.version()
-
-    crashing = loader(crash)
-
     def boom(*_a, **_k):
         raise RuntimeError("injected crash")
 
-    crashing.histograms.commit = boom
-    res = crashing.load_pending()
-    assert res["status"] == "failed" and "injected crash" in res["error"]
-    assert not [t for t in threading.enumerate() if t.name.startswith("rollup")]
-    (txn,) = summary.committed_txns() - summary_txns
-    assert sketch.committed_txns() - sketch_txns == {txn}
-    assert hist.committed_txns() == hist_txns
-    assert dim.version() == dim_version and dim.committed_txns() == dim_txns
-
-    summary_version, sketch_version = summary.version(), sketch.version()
-    res = loader(crash).load_pending()
-    assert res["status"] == "completed" and res["processed"] == 1
-    assert (summary.version(), sketch.version()) == (summary_version, sketch_version)
-    assert hist.version() == hist_version + 1 and txn in hist.committed_txns()
-    assert dim.version() == dim_version + 1 and dim.committed_txns() == dim_txns | {txn}
-
-    current = dim.read_current(spark)
-    assert _rows(summary.read(spark)) == _rows(group_summary(current))
-    assert _hist_rows(unpack_histogram(hist.read(spark))) == _hist_rows(
-        unpack_histogram(group_histogram(current))
-    )
+    clean = tmp_path / "clean"
+    write_change_batch(spark.createDataFrame(b1, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(9))
+    assert loader(clean).load_pending()["processed"] == 1
+    write_change_batch(spark.createDataFrame(b2, CHANGE_SCHEMA), clean / "cdc", extracted_at=sts(13))
+    for case in ("histogram", "stage"):
+        shutil.copytree(clean, tmp_path / case)
+    assert loader(clean).load_pending()["processed"] == 1
     clean_dim, _, clean_sketch, _ = stores(clean)
-    assert sorted(map(str, dim.read(spark).collect())) == sorted(
-        map(str, clean_dim.read(spark).collect())
-    )
-    assert sorted(map(str, sketch.read(spark).collect())) == sorted(
-        map(str, clean_sketch.read(spark).collect())
-    )
+
+    for case in ("histogram", "stage"):
+        crash = tmp_path / case
+        dim, summary, sketch, hist = stores(crash)
+        rollups = {"summary": summary, "sketch": sketch, "hist": hist}
+        landing = {"histogram": ("summary", "sketch"), "stage": ("summary", "sketch", "hist")}[case]
+        txns = {name: t.committed_txns() for name, t in rollups.items()}
+        dim_version, dim_txns = dim.version(), dim.committed_txns()
+
+        crashing = loader(crash)
+        with monkeypatch.context() as m:
+            if case == "histogram":
+                m.setattr(crashing.histograms, "commit", boom)
+            else:  # the stage task fails before its write
+                m.setattr(dim_store_module, "_seed_or_merge_tagged", boom)
+            res = crashing.load_pending()
+        assert res["status"] == "failed" and "injected crash" in res["error"], case
+        assert not [t for t in threading.enumerate() if t.name.startswith("rollup")]
+        (txn,) = summary.committed_txns() - txns["summary"]
+        for name, table in rollups.items():
+            landed = {txn} if name in landing else set()
+            assert table.committed_txns() - txns[name] == landed, (case, name)
+        assert dim.version() == dim_version and dim.committed_txns() == dim_txns, case
+
+        versions = {name: t.version() for name, t in rollups.items()}
+        res = loader(crash).load_pending()
+        assert res["status"] == "completed" and res["processed"] == 1, case
+        for name, table in rollups.items():
+            bump = 0 if name in landing else 1
+            assert table.version() == versions[name] + bump, (case, name)
+            assert txn in table.committed_txns(), (case, name)
+        assert dim.version() == dim_version + 1 and dim.committed_txns() == dim_txns | {txn}
+
+        current = dim.read_current(spark)
+        assert _rows(summary.read(spark)) == _rows(group_summary(current))
+        assert _hist_rows(unpack_histogram(hist.read(spark))) == _hist_rows(
+            unpack_histogram(group_histogram(current))
+        )
+        assert sorted(map(str, dim.read(spark).collect())) == sorted(
+            map(str, clean_dim.read(spark).collect())
+        )
+        assert sorted(map(str, sketch.read(spark).collect())) == sorted(
+            map(str, clean_sketch.read(spark).collect())
+        )
 
 
 def test_hint_broadcast_off_is_plan_only_not_semantics(spark, change_df):

@@ -452,22 +452,28 @@ def test_delete_can_empty_the_current_slice(spark, change_df, tmp_path):
 
 
 def test_apply_batch_crash_windows_replay_exactly_once(spark, change_df, tmp_path):
-    """A crash in any step after the stage job — the history adopt, the
-    current adopt, or the store pointer swap — leaves readers on the
-    previous state; replaying the same txn_id from a fresh store object
-    then lands the batch exactly once: the dimension equals a clean
-    store's and the history manifest gained exactly one segment."""
+    """A crash in any step of a batch — a rollup running beside the
+    stage job, the history adopt, the current adopt, or the store
+    pointer swap — leaves readers on the previous state; replaying the
+    same txn_id from a fresh store object then lands the batch exactly
+    once: the dimension equals a clean store's, the history manifest
+    gained exactly one segment and no stage directory is left. A failed
+    rollup moves no version at all: the adopts wait for every rollup."""
     import shutil
 
     def history_segments(store):
         hv = store._read_pointer()["history_version"]
         return len(store.history._read_pointer()["manifests"][str(hv)])
 
+    def versions(store):
+        return store.version(), store.current.version(), store.history.version()
+
     seeded = SCD2DimStore(tmp_path / "seeded")
     for i, rows in enumerate(DIM_BATCHES[:2]):
         seeded.apply_batch(spark, change_df(rows), txn_id=f"t{i}")
     before_rows = _dim_rows(seeded.read(spark))
     before_segments = history_segments(seeded)
+    before_versions = versions(seeded)
     shutil.copytree(seeded.path, tmp_path / "clean")
     clean = SCD2DimStore(tmp_path / "clean")
     clean.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2")
@@ -476,20 +482,58 @@ def test_apply_batch_crash_windows_replay_exactly_once(spark, change_df, tmp_pat
     def boom(*_a, **_k):
         raise RuntimeError("injected crash")
 
-    for step in ("history", "current", "store"):
+    for step in ("rollup", "history", "current", "store"):
         shutil.copytree(seeded.path, tmp_path / step)
         store = SCD2DimStore(tmp_path / step)
-        target = store if step == "store" else getattr(store, step)
-        target._write_pointer = boom  # the step's publish fails after its move
+        rollups = ()
+        if step == "rollup":
+            rollups = (boom,)
+        else:
+            target = store if step == "store" else getattr(store, step)
+            target._write_pointer = boom  # the step's publish fails after its move
         with pytest.raises(RuntimeError, match="injected crash"):
-            store.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2")
+            store.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2", rollups=rollups)
 
         restarted = SCD2DimStore(tmp_path / step)
         assert _dim_rows(restarted.read(spark)) == before_rows, step
+        if step == "rollup":
+            assert versions(restarted) == before_versions
         assert restarted.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2"), step
         assert _dim_rows(restarted.read(spark)) == expected, step
         assert history_segments(restarted) == before_segments + 1, step
+        assert not list(restarted.path.glob("._stage_*")), step
         assert restarted.apply_batch(spark, change_df(DIM_BATCHES[2]), txn_id="t2") is False
+
+
+def test_apply_batch_pool_threads_keep_the_callers_job_group(spark, change_df, tmp_path):
+    """The stage write and the rollups run in pool threads under the
+    caller's job group: every job the batch launches lands in the
+    group, none runs without one, and a rollup sees the group too."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    store = SCD2DimStore(tmp_path / "dim")
+    store.apply_batch(spark, change_df(DIM_BATCHES[0]), txn_id="t0")
+    spark.range(1).count()  # an ungrouped job: its id bounds the jobs before the batch
+    bus.waitUntilEmpty()
+    last = max(tracker.getJobIdsForGroup(None))
+
+    seen = []
+
+    def rollup():
+        seen.append(sc.getLocalProperty("spark.jobGroup.id"))
+
+    sc.setJobGroup("g", "apply_batch under a job group")
+    try:
+        assert store.apply_batch(
+            spark, change_df(DIM_BATCHES[1]), txn_id="t1", rollups=[rollup]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    bus.waitUntilEmpty()
+    assert seen == ["g"]
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > last] == []
+    assert [j for j in tracker.getJobIdsForGroup("g") if j > last]  # the stage write's
 
 
 def test_loader_reports_corrupt_batch(env, spark):
