@@ -50,95 +50,37 @@ def entry(spark: SparkSession) -> DataFrame:
 # COVERAGE.md §staleness).  _DEMOTED parks recently-green rows past the
 # window; they stay covered by scripts/check_oracle.py + pytest locally.
 _PRIORITY = [
-    # --- r13 rotation (the r12 _DEMOTED deferral notes, honored): the
-    # 23 r09-green rows deferred from the r12 window lead (retiring the
-    # r09 tier), then the first 27 rows of the r10 tier in ledger order.
-    # The remaining 23 r10 rows defer to r14 atop _DEMOTED with family
+    # --- r14 rotation (the r13 _DEMOTED deferral notes, honored): the
+    # 23 r10-green rows deferred from the r13 window lead (retiring the
+    # r10 tier), then the first 27 rows of the r11 tier in ledger order.
+    # The remaining 23 r11 rows defer to r15 atop _DEMOTED with family
     # notes. After this window lands no oracled row's last driver check
-    # is staler than r10. Staleness audit: COVERAGE.md.
-    # r09-stale (the 23 rows deferred from r12 - retire the tier):
-    "corpus_chunk_spans",
-    "corpus_sample_stratified",
-    "knn_cosine_brute",
-    "text_lm_surprisal",
-    "agg_linear_regression",
-    "ann_sq_topk",
-    "events_resample_ffill",
-    "join_top_quarter_supplier",
-    "multimodal_frame_sample",
-    "scd2_flag_consistency_check",
-    "corpus_sample_quality_weighted",
-    "corpus_length_buckets",
-    "agg_cube",
-    "agg_important_parts",
-    "text_rolling_fingerprint",
-    "text_pii_redaction",
-    "join_anti",
-    "window_lag_lead",
-    "subquery_in_having",
-    "scd2_incremental_extrema",
-    "scd2_timestamp_continuity",
-    "dedup_exact_groups",
-    "setop_union_by_name",
-    # r10-stale (27 of 50; the 23 deferred to r14 sit atop _DEMOTED):
-    "text_html_extract",
-    "text_gopher_rules",
-    "text_c4_filters",
-    "text_unicode_sanitize",
-    "ann_two_stage_rerank",
-    "dedup_url_normalized",
-    "events_throttle_dedup",
-    "subquery_exists",
-    "subquery_not_exists",
-    "events_tumbling_window",
-    "scd2_version_timeline",
-    "text_token_stats",
-    "join_unshipped_revenue",
-    "agg_grouping_sets",
-    "ann_lsh_topk",
-    "sort_pagination",
-    "scalar_string_functions",
-    "dedup_simhash",
-    "setop_all_variants",
-    "corpus_pack_sequences",
-    "window_salted_topk",
-    "window_small_quantity_revenue",
-    "embedding_near_dup",
-    "array_functions_sweep",
-    "text_bigram_surprisal",
-    "dedup_keep_list",
-    "tpch_q6_forecast_revenue",
-]
-_DEMOTED = [
-    # --- 23 r10-green rows deferred to the r14 window (displaced by the
-    # 23 r09-deferred leads); each one's operator family stays in-window
-    # per the note. ---
-    "tpch_q10_returned_items",  # last green r10; TPC-H family in-window via tpch_q6_forecast_revenue
-    "tpch_q13_customer_distribution",  # last green r10; TPC-H family in-window via tpch_q6_forecast_revenue
-    "tpch_q14_promo_revenue",  # last green r10; TPC-H family in-window via tpch_q6_forecast_revenue
-    "events_funnel_steps",  # last green r10; events family in-window via events_throttle_dedup + events_tumbling_window + events_resample_ffill
-    "join_full_outer",  # last green r10; join family in-window via join_unshipped_revenue + join_anti + join_top_quarter_supplier
-    "events_sliding_window",  # last green r10; events family in-window via events_tumbling_window
-    "agg_pivot",  # last green r10; agg family in-window via agg_grouping_sets + agg_cube
-    "window_rank_dense",  # last green r10; window family in-window via window_salted_topk + window_lag_lead + window_small_quantity_revenue
-    "filter_key_history",  # last green r10; filter/scan family in-window via sort_pagination + scd2_version_timeline
-    "agg_rollup",  # last green r10; agg family in-window via agg_grouping_sets + agg_cube
-    "join_semi",  # last green r10; join family in-window via join_anti + join_unshipped_revenue
-    "sql_api_revenue_by_segment",  # last green r10; SQL-API surface in-window via scalar_string_functions
-    "corpus_exact_substring_spans",  # last green r10; substring family in-window via corpus_chunk_spans (+ bench row regression-tracks it)
-    "corpus_substring_clean",  # last green r10; substring family in-window via corpus_chunk_spans
-    "events_gap_islands",  # last green r10; events family in-window via events_resample_ffill + events_tumbling_window
-    "agg_mode_frequent",  # last green r10; agg family in-window via agg_important_parts + agg_cube
-    "events_anomaly_zscore",  # last green r10; events family in-window via events_throttle_dedup
-    "graph_pagerank_top",  # last green r10; graph family pytest-pinned (test_graph.py) + khop last green r11
-    "join_fuzzy_part_names",  # last green r10; join family in-window via join_top_quarter_supplier
-    "basket_brand_pairs",  # last green r10; basket/report family pytest-pinned; agg family in-window
-    "agg_higher_moments",  # last green r10; agg family in-window via agg_linear_regression + agg_cube
-    "agg_listagg_ordered",  # last green r10; agg family in-window via agg_important_parts
-    "agg_boolean_aggregates",  # last green r10; agg family in-window via agg_cube + agg_grouping_sets
-    # --- everything below is driver-green r11-r12.
-    # agg_distinct_sketch_rollup is rows-only BY DESIGN (HLL has no
-    # DuckDB twin); pytest-pinned. ---
+    # is staler than r11. Staleness audit: COVERAGE.md.
+    # r10-stale (the 23 rows deferred from r13 - retire the tier):
+    "tpch_q10_returned_items",
+    "tpch_q13_customer_distribution",
+    "tpch_q14_promo_revenue",
+    "events_funnel_steps",
+    "join_full_outer",
+    "events_sliding_window",
+    "agg_pivot",
+    "window_rank_dense",
+    "filter_key_history",
+    "agg_rollup",
+    "join_semi",
+    "sql_api_revenue_by_segment",
+    "corpus_exact_substring_spans",
+    "corpus_substring_clean",
+    "events_gap_islands",
+    "agg_mode_frequent",
+    "events_anomaly_zscore",
+    "graph_pagerank_top",
+    "join_fuzzy_part_names",
+    "basket_brand_pairs",
+    "agg_higher_moments",
+    "agg_listagg_ordered",
+    "agg_boolean_aggregates",
+    # r11-stale (27 of 50; the 23 deferred to r15 sit atop _DEMOTED):
     "events_resample_interpolate",
     "graph_khop_distance",
     "window_cumulative_revenue",
@@ -166,29 +108,37 @@ _DEMOTED = [
     "scalar_functions",
     "filter_point_lookup_current",
     "window_top_per_customer",
-    "scd2_change_frequency",
-    "join_revenue_by_nation",
-    "scd2_as_of",
-    "agg_pricing_summary",
-    "setop_except_intersect",
-    "events_session_windows",
-    "ivm_join_view",
-    "customer_rfm_segments",
-    "scalar_map_functions",
-    "layout_zorder_tiles",
-    "corpus_dsir_weights",
-    "text_bpe_pair_counts",
-    "agg_bitwise",
-    "corpus_dsir_resample",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q7_volume_shipping",
-    "tpch_q9_product_profit",
-    "tpch_q12_priority_by_class",
-    "tpch_q16_supplier_relationship",
-    "tpch_q19_disjunctive_brackets",
-    "tpch_q20_excess_shippers",
-    "text_heavy_hitters",
-    "scd2_incremental_histogram",
+]
+_DEMOTED = [
+    # --- 23 r11-green rows deferred to the r15 window (displaced by the
+    # 23 r10-deferred leads); each one's operator family stays in-window
+    # per the note. ---
+    "scd2_change_frequency",  # last green r11; scd2 family in-window via scd2_current_state + scd2_time_travel
+    "join_revenue_by_nation",  # last green r11; join family in-window via join_full_outer + join_semi + join_asof_events
+    "scd2_as_of",  # last green r11; scd2 family in-window via scd2_time_travel + scd2_current_state
+    "agg_pricing_summary",  # last green r11; agg family in-window via agg_rollup + agg_pivot + agg_conditional_counts
+    "setop_except_intersect",  # last green r11; set-difference semantics in-window via join_semi + join_full_outer
+    "events_session_windows",  # last green r11; events family in-window via events_gap_islands + events_sliding_window
+    "ivm_join_view",  # last green r11; IVM family pytest-pinned (test_ivm_join.py); join family in-window via join_full_outer
+    "customer_rfm_segments",  # last green r11; window/rank family in-window via window_rank_dense + window_top_per_customer
+    "scalar_map_functions",  # last green r11; scalar family in-window via scalar_functions
+    "layout_zorder_tiles",  # last green r11; layout pytest-pinned (test_layout.py); sort family in-window via sort_topk_orders
+    "corpus_dsir_weights",  # last green r11; corpus family in-window via corpus_sample_weighted_wor + corpus_export_manifest
+    "text_bpe_pair_counts",  # last green r11; BPE pytest-pinned (test_bpe.py); BPE merges in-window via corpus_export_manifest
+    "agg_bitwise",  # last green r11; agg family in-window via agg_boolean_aggregates
+    "corpus_dsir_resample",  # last green r11; corpus-sampling family in-window via corpus_sample_weighted_wor
+    "tpch_q2_min_cost_supplier",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q7_volume_shipping",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q9_product_profit",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q12_priority_by_class",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q16_supplier_relationship",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q19_disjunctive_brackets",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "tpch_q20_excess_shippers",  # last green r11; TPC-H family in-window via tpch_q10_returned_items + tpch_q13_customer_distribution + tpch_q14_promo_revenue
+    "text_heavy_hitters",  # last green r11; text family in-window via text_bm25_topk + text_lang_confusion; test_heavy_hitters.py pins it
+    "scd2_incremental_histogram",  # last green r11; scd2-incremental family in-window via scd2_time_travel; test_incremental_agg.py pins it
+    # --- everything below is driver-green r12-r13.
+    # agg_distinct_sketch_rollup is rows-only BY DESIGN (HLL has no
+    # DuckDB twin); pytest-pinned. ---
     "agg_distinct_sketch_rollup",
     "scd2_histogram_quantiles",
     "events_cohort_retention",
@@ -240,6 +190,56 @@ _DEMOTED = [
     "subquery_correlated_scalar",
     "subquery_sole_late_supplier",
     "text_quality_scores",
+    "corpus_chunk_spans",
+    "corpus_sample_stratified",
+    "knn_cosine_brute",
+    "text_lm_surprisal",
+    "agg_linear_regression",
+    "ann_sq_topk",
+    "events_resample_ffill",
+    "join_top_quarter_supplier",
+    "multimodal_frame_sample",
+    "scd2_flag_consistency_check",
+    "corpus_sample_quality_weighted",
+    "corpus_length_buckets",
+    "agg_cube",
+    "agg_important_parts",
+    "text_rolling_fingerprint",
+    "text_pii_redaction",
+    "join_anti",
+    "window_lag_lead",
+    "subquery_in_having",
+    "scd2_incremental_extrema",
+    "scd2_timestamp_continuity",
+    "dedup_exact_groups",
+    "setop_union_by_name",
+    "text_html_extract",
+    "text_gopher_rules",
+    "text_c4_filters",
+    "text_unicode_sanitize",
+    "ann_two_stage_rerank",
+    "dedup_url_normalized",
+    "events_throttle_dedup",
+    "subquery_exists",
+    "subquery_not_exists",
+    "events_tumbling_window",
+    "scd2_version_timeline",
+    "text_token_stats",
+    "join_unshipped_revenue",
+    "agg_grouping_sets",
+    "ann_lsh_topk",
+    "sort_pagination",
+    "scalar_string_functions",
+    "dedup_simhash",
+    "setop_all_variants",
+    "corpus_pack_sequences",
+    "window_salted_topk",
+    "window_small_quantity_revenue",
+    "embedding_near_dup",
+    "array_functions_sweep",
+    "text_bigram_surprisal",
+    "dedup_keep_list",
+    "tpch_q6_forecast_revenue",
 ]
 
 

@@ -64,11 +64,6 @@ _AUTO_STATE_MIN_DOCS = 2_000_000
 _AUTO_STATE_DOCS_PER_BUCKET = 1_000_000
 _AUTO_STATE_MAX_BUCKETS = 4096
 
-# newest N stream_batch_ids kept in the marker (r9 streaming
-# maintainer): bounds the marker size; a later replay only loses the
-# short-circuit, never correctness (fp/LSH dedup catches the content)
-_STREAM_ID_RETENTION = 64
-
 
 def resolve_state_buckets(state_buckets, n_kept: int) -> int | None:
     """Resolve the ``state_buckets`` setting to a concrete layout:
@@ -443,7 +438,6 @@ def corpus_append(
     quality_model: dict | None = None,
     quality_model_threshold: float | None = None,
     bulk_probe_doc_limit: int = 500_000,
-    stream_batch_id: str | None = None,
 ) -> dict:
     """Incremental load: quality-gate the NEW batch, dedup it against
     the persisted state (exact-fingerprint + LSH; the existing corpus
@@ -466,20 +460,7 @@ def corpus_append(
     than this probes the fp/LSH state CO-PARTITIONED against the
     bucketed files instead of broadcasting its key sets — no broadcast
     ceiling, state never re-shuffled. Small batches keep the cheaper
-    broadcast probes; plain-state corpora always do.
-
-    ``stream_batch_id`` (r9, the streaming maintainer's exactly-once
-    hook): a CONTENT-DERIVED batch id (hash of the batch's (doc_id,
-    text) pairs + count — the substr_index txn-id pattern). When the
-    committed marker's recent-ids ledger already lists it, the whole
-    append short-circuits BEFORE any computation ({"appended": 0,
-    "replayed": true}); otherwise the id commits atomically WITH the
-    epoch marker, so a checkpoint-recovery replay of a crashed-after-
-    commit micro-batch is a no-op. The ledger keeps the newest
-    ``_STREAM_ID_RETENTION`` ids; a replay arriving later than that
-    only loses the short-circuit — the fingerprint/LSH state still
-    dedups its content to zero, so semantics never depend on the
-    window."""
+    broadcast probes; plain-state corpora always do."""
     out = Path(output)
     if not (out / "_lsh_index").exists():
         raise FileNotFoundError(f"no corpus state under {output}; run corpus_build first")
@@ -490,16 +471,6 @@ def corpus_append(
     # setting, and the epoch counter must observe the SAME committed
     # marker (repair just reconciled disk against it)
     marker = read_marker(out) or {"epoch": 0}
-    if stream_batch_id and stream_batch_id in marker.get("stream_batch_ids", []):
-        # committed-epoch replay: the marker is this append's
-        # completion marker, so presence == every state write landed
-        return {
-            "new_docs": 0,
-            "appended": 0,
-            "replayed": True,
-            "repaired_files": len(repaired["removed"]),
-            "output": output,
-        }
     stored_buckets = spark.read.parquet(str(out / "_lsh_index"))
     stored_docs = spark.read.parquet(str(out / "_kept_docs"))
     # gate on data files, not the directory: repair() after a torn
@@ -724,12 +695,6 @@ def corpus_append(
     if quality_model is not None:
         extra["quality_model"] = quality_model
         extra["quality_model_threshold"] = quality_model_threshold
-    if stream_batch_id:
-        # the id commits in the SAME atomic rename as the epoch: a
-        # replay after this line short-circuits, before it recomputes
-        extra["stream_batch_ids"] = (
-            marker.get("stream_batch_ids", []) + [stream_batch_id]
-        )[-_STREAM_ID_RETENTION:]
     write_marker(out, epoch=marker["epoch"] + 1, extra=extra or None)
     # kept's cardinality falls out of the shard manifest delta — the
     # shards hold exactly kept's rows, so no extra count job (except on

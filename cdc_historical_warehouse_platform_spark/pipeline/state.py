@@ -20,6 +20,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_historical_warehouse_platform_spark.sources.tables import atomic_write_text
+
 __all__ = ["Watermark", "ProcessedLedger", "generate_batch_id"]
 
 
@@ -39,9 +41,7 @@ class Watermark:
             return now - self.lookback
 
     def set(self, value: _dt.datetime) -> None:
-        tmp = self.path.with_suffix(".tmp")
-        tmp.write_text(value.isoformat())
-        tmp.replace(self.path)
+        atomic_write_text(self.path, value.isoformat())
 
 
 class ProcessedLedger:

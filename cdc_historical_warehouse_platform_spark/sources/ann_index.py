@@ -264,22 +264,19 @@ class IVFIndex:
         new_vectors: DataFrame,
         corpus_id: str = "vec_id",
         corpus_vec: str = "embedding",
-        txn_id: str | None = None,
-        dedup_ids: bool = True,
     ) -> tuple[int, int]:
         """Assign new vectors with the STORED quantizer and append a
         segment — the existing index is never read or rewritten. The
         pointer advances only after the segment lands.
 
-        CDC semantics on the id column (``dedup_ids``): vectors whose
-        id is already indexed are dropped via a left-anti join against
-        a column-pruned scan of the stored ids, so re-delivering a
+        CDC semantics on the id column: vectors whose id is already
+        indexed are dropped via a left-anti join against a
+        column-pruned scan of the stored ids, so re-delivering a
         batch — or overlapping batches — never duplicates index
         entries (a duplicated id would surface the same neighbor
         twice in every probe top-k it reaches). The anti-join shuffles
         bare ids only, the same shape as the loader's ledger
-        anti-filter; pass ``dedup_ids=False`` when the feed is already
-        id-disjoint and the id scan is worth skipping.
+        anti-filter.
 
         Returns ``(assignments_version, n_appended)``; an
         all-duplicate batch is a no-op that leaves the version
@@ -288,19 +285,16 @@ class IVFIndex:
         if meta is None:
             raise FileNotFoundError(f"IVF index {self.path} has no committed build")
         cents = self.centroids()
-        fresh = new_vectors
-        if dedup_ids:
-            existing = self.assignments.read(
-                new_vectors.sparkSession, version=meta["assignments_version"]
-            ).select(F.col("vec_id").alias("__indexed_id"))
-            fresh = new_vectors.join(
-                existing, F.col(corpus_id) == F.col("__indexed_id"), "left_anti"
-            )
-            # materialize the anti-join once: n_appended's count() and the
-            # segment write below would otherwise each re-run the
-            # new-vector scan + id scan + anti-join — and could disagree
-            # if the source is live between the two jobs
-            fresh = fresh.localCheckpoint(eager=True)
+        existing = self.assignments.read(
+            new_vectors.sparkSession, version=meta["assignments_version"]
+        ).select(F.col("vec_id").alias("__indexed_id"))
+        # materialize the anti-join once: n_appended's count() and the
+        # segment write below would otherwise each re-run the
+        # new-vector scan + id scan + anti-join — and could disagree
+        # if the source is live between the two jobs
+        fresh = new_vectors.join(
+            existing, F.col(corpus_id) == F.col("__indexed_id"), "left_anti"
+        ).localCheckpoint(eager=True)
         n_appended = fresh.count()
         if n_appended == 0:
             return meta["assignments_version"], 0
@@ -314,7 +308,6 @@ class IVFIndex:
                 self._codebooks() if meta.get("quantize") == "pq" else None,
                 meta.get("prefix_dims"),
             ),
-            txn_id=txn_id,
         )
         self._write_pointer({**meta, "assignments_version": v})
         return v, n_appended

@@ -362,9 +362,9 @@ class ExactSubstrIndex:
         # docs commits LAST, after every gram table resolved: a doc's
         # presence in admitted_ids then IMPLIES its grams/flags are
         # committed, which is what makes the admitted-ids anti-join
-        # (CLI substr-append, the streaming maintainer) a sound
-        # re-delivery filter — an anti against a concurrently-committed
-        # docs table could mask a torn txn's missing gram state forever.
+        # (CLI substr-append) a sound re-delivery filter — an anti
+        # against a concurrently-committed docs table could mask a
+        # torn txn's missing gram state forever.
         # The cheap sequential tail (~0.2 s) buys that completion-marker
         # property; flagged/dup/unique still run concurrently under the
         # order-free pre-txn replay contract.

@@ -79,8 +79,9 @@ def change_df(spark):
 # its duration: the SCD2 store and merge tests (first-batch bulk path,
 # change-log bulk build, random-sequence property invariants), the
 # end-to-end pipeline tests (deletes, lineage report), the availableNow
-# stream, and the incremental-view-maintenance tests that check the
-# rollups and the join view against a recompute.
+# SCD2 streams (the only foreachBatch maintainer), and the
+# incremental-view-maintenance tests that check the rollups and the join
+# view against a recompute.
 _SLOW_TESTS = {
     "test_ann_index.py::test_append_uses_stored_quantizer",
     "test_ann_index.py::test_build_once_probe_equals_inline_rebuild",
@@ -112,7 +113,6 @@ _SLOW_TESTS = {
     "test_property_datapipe.py::test_incremental_dedup_invariants_for_random_batches",
     "test_property_datapipe.py::test_incremental_substr_any_split_any_probe_schedule",
     "test_rangejoin.py::test_matches_naive_on_boundary_dense_data",
-    "test_streaming.py::test_corpus_append_stream_matches_batch_and_survives_restart",
     "test_ann_index.py::test_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_pq_bulk_probe_matches_broadcast_and_avoids_query_broadcast",
     "test_ann_index.py::test_rebuild_crash_leaves_consistent_pair",

@@ -385,8 +385,16 @@ def test_int8_index_zero_vector_append_idempotent(spark, tmp_path):
     assert n1 == 2  # the zero vector IS stored
     _, n2 = index.append(zero_batch)
     assert n2 == 0  # re-delivery is a no-op, zero vector included
-    stored = {r["vec_id"] for r in index.assignments.read(spark).select("vec_id").collect()}
-    assert 100 in stored
+    # an OVERLAPPING delivery appends only its unseen id
+    overlap = spark.createDataFrame(
+        [(101, [1.0, 2.0, 3.0, 4.0]), (102, [4.0, 3.0, 2.0, 1.0])],
+        ["vec_id", "embedding"],
+    )
+    _, n3 = index.append(overlap)
+    assert n3 == 1
+    ids = [r["vec_id"] for r in index.assignments.read(spark).select("vec_id").collect()]
+    assert len(ids) == len(set(ids)) == 11
+    assert 100 in ids
     q = base.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )

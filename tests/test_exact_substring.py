@@ -183,6 +183,11 @@ def test_incremental_append_replay_is_idempotent(spark, tmp_path):
         idx.unique.read(spark).count(),
     )
     assert before == after
+    # re-delivery under a NEW txn: the admitted-ids anti-join that
+    # substr-append runs first leaves nothing to append
+    redelivered = _docs(spark, b1 + [(3, _w("c", 6))])
+    fresh = redelivered.join(idx.admitted_ids(spark), "doc_id", "anti")
+    assert [r["doc_id"] for r in fresh.collect()] == [3]
 
 
 def test_incremental_compact_preserves_spans_and_drops_dead_rows(spark, tmp_path):

@@ -12,6 +12,7 @@ from cdc_historical_warehouse_platform_spark.pipeline.extractor import CDCExtrac
 from cdc_historical_warehouse_platform_spark.pipeline.loader import SCD2Loader
 from cdc_historical_warehouse_platform_spark.pipeline.metadata import PipelineMetadataManager
 from cdc_historical_warehouse_platform_spark.pipeline.simulator import OrderSimulator
+from cdc_historical_warehouse_platform_spark.pipeline.state import Watermark
 from cdc_historical_warehouse_platform_spark.sources.change_batches import (
     read_change_batch,
     write_change_batch,
@@ -191,6 +192,27 @@ def test_extractor_watermark_advances(env, spark):
     sim.mutate_once(now=ts(5))
     ext.run_once(now=ts(6))
     assert ext.watermark.get() >= wm1
+
+
+def test_watermark_set_failure_keeps_old_value_and_no_temp_file(tmp_path, monkeypatch):
+    """A watermark write that fails at the replace leaves the committed
+    watermark readable and no temp file behind in the cdc dir."""
+    import os
+
+    cdc_dir = tmp_path / "cdc_logs"
+    cdc_dir.mkdir()
+    wm = Watermark(cdc_dir / ".watermark")
+    wm.set(ts(0))
+
+    def _fail(*_a, **_k):
+        raise OSError("replace failed")
+
+    monkeypatch.setattr(os, "replace", _fail)
+    with pytest.raises(OSError):
+        wm.set(ts(9))
+    monkeypatch.undo()
+    assert wm.get() == ts(0)
+    assert [p.name for p in cdc_dir.iterdir()] == [".watermark"]
 
 
 def test_delete_newer_than_updates_extracted_once(env, spark):
