@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_historical_warehouse_platform_spark.operators.scd2 import BUSINESS_KEY, dedupe_latest_per_key
+from cdc_historical_warehouse_platform_spark.session import empty_frame
 
 __all__ = [
     "SUMMARY_MEASURE_TYPE",
@@ -90,7 +91,7 @@ def empty_summary(
 ) -> DataFrame:
     """An empty maintained summary (group, n_orders, measure_sum)."""
     field = group_field or T.StructField("customer_id", T.IntegerType(), True)
-    return spark.createDataFrame([], _summary_schema(field))
+    return empty_frame(spark, _summary_schema(field))
 
 
 def group_summary(
@@ -525,7 +526,7 @@ def empty_histogram(
 ) -> DataFrame:
     """An empty maintained histogram (struct(group,bucket), n, sum)."""
     field = group_field or T.StructField("customer_id", T.IntegerType(), True)
-    return spark.createDataFrame([], _summary_schema(_hist_group_field(field)))
+    return empty_frame(spark, _summary_schema(_hist_group_field(field)))
 
 
 def group_histogram(

@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cdc_historical_warehouse_platform_spark.session import empty_frame
+
 __all__ = [
     "BUSINESS_KEY",
     "TRACKED_COLUMNS",
@@ -136,7 +138,7 @@ def empty_dim(spark, schema=None) -> DataFrame:
     """An empty dimension with the canonical schema."""
     from cdc_historical_warehouse_platform_spark.schemas import DIM_HISTORY_SCHEMA
 
-    return spark.createDataFrame([], schema or DIM_HISTORY_SCHEMA)
+    return empty_frame(spark, schema or DIM_HISTORY_SCHEMA)
 
 
 def scd2_merge(

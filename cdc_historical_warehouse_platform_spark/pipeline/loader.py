@@ -18,6 +18,7 @@ from pyspark.sql import SparkSession
 
 from cdc_historical_warehouse_platform_spark.pipeline.metadata import PipelineMetadataManager
 from cdc_historical_warehouse_platform_spark.pipeline.state import ProcessedLedger, generate_batch_id
+from cdc_historical_warehouse_platform_spark.session import codegen_compiles
 from cdc_historical_warehouse_platform_spark.sources.change_batches import discover_batches, read_change_batch
 from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimStore
 
@@ -323,6 +324,7 @@ class SCD2Loader:
         returns run summary (scd2_loader.py:550-659 semantics)."""
         run_id = None
         t0 = time.time()
+        compiles0 = codegen_compiles(self.spark)
         self.drift_events = []
         self.quarantined = 0
         self.rows_loaded = 0
@@ -366,6 +368,10 @@ class SCD2Loader:
                 performance_metrics={
                     "elapsed_sec": round(time.time() - t0, 3),
                     "rows_loaded": self.rows_loaded,
+                    # Janino compiles over the run (driver-side on a
+                    # cluster); a steady-state batch stays in single
+                    # digits, a codegen-cache regression shows here
+                    "codegen_compiles": codegen_compiles(self.spark) - compiles0,
                     **(
                         {"batches_with_drift": len(self.drift_events)}
                         if self.drift_policy == "report"

@@ -13,10 +13,12 @@ import json
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_historical_warehouse_platform_spark.schemas import PIPELINE_METADATA_SCHEMA
+from cdc_historical_warehouse_platform_spark.session import empty_frame
 from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
 
 __all__ = ["PipelineMetadataManager"]
@@ -30,7 +32,7 @@ class PipelineMetadataManager:
 
     def _runs(self) -> DataFrame:
         if not self.table.exists():
-            return self.spark.createDataFrame([], PIPELINE_METADATA_SCHEMA)
+            return empty_frame(self.spark, PIPELINE_METADATA_SCHEMA)
         return self.table.read(self.spark)
 
     # --- lifecycle (pipeline_metadata.py:112-253) ---------------------------
@@ -38,8 +40,16 @@ class PipelineMetadataManager:
     def start_run(self, run_id: str | None = None, now: _dt.datetime | None = None) -> str:
         run_id = run_id or f"{self.pipeline_name}_{uuid.uuid4().hex[:12]}"
         now = now or _dt.datetime.utcnow()
+        # the row travels as Arrow (a JVM-side LocalRelation, no Python
+        # worker) and as data, not as a literal: a literal ``now`` would
+        # make every run compile a fresh class. Arrow reads a naive
+        # timestamp in the session time zone, while update_run's literal
+        # reads it in the host's local time, so hand Arrow the instant in
+        # UTC (pyarrow keeps the wall clock of any other offset).
+        start = now.astimezone(_dt.timezone.utc)
+        values = (run_id, self.pipeline_name, start, None, "running", 0, 0, 0, None, None)
         row = self.spark.createDataFrame(
-            [(run_id, self.pipeline_name, now, None, "running", 0, 0, 0, None, None)],
+            pa.Table.from_pylist([dict(zip(PIPELINE_METADATA_SCHEMA.names, values))]),
             PIPELINE_METADATA_SCHEMA,
         )
         self.table.commit(self._runs().unionByName(row), txn_id=f"start:{run_id}")

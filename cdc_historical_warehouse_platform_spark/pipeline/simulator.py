@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_historical_warehouse_platform_spark.schemas import ORDERS_SCHEMA
+from cdc_historical_warehouse_platform_spark.session import empty_frame
 from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
 
 __all__ = ["OrderSimulator", "STATUSES"]
@@ -60,7 +61,7 @@ class OrderSimulator:
     def _orders(self) -> DataFrame:
         if self.source.exists():
             return self.source.read(self.spark)
-        return self.spark.createDataFrame([], ORDERS_SCHEMA)
+        return empty_frame(self.spark, ORDERS_SCHEMA)
 
     def seed_orders(self, n: int = 5, now: _dt.datetime | None = None) -> None:
         """Initial rows (init-scripts/01-init-orders-table.sql:21-26)."""
@@ -136,7 +137,7 @@ class OrderSimulator:
                 base = (
                     self.deleted.read(self.spark)
                     if self.deleted.exists()
-                    else self.spark.createDataFrame([], tomb.schema)
+                    else empty_frame(self.spark, tomb.schema)
                 )
                 self.deleted.commit(base.unionByName(tomb))
             df = df.filter(~F.col("id").isin(del_ids))

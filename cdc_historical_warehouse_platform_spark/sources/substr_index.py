@@ -58,6 +58,7 @@ from cdc_historical_warehouse_platform_spark.operators.dedup import (
     remove_duplicate_spans,
     substring_spans_from_flagged,
 )
+from cdc_historical_warehouse_platform_spark.session import empty_frame
 from cdc_historical_warehouse_platform_spark.sources.tables import (
     BucketedSegmentTable,
     VersionedTable,
@@ -129,7 +130,7 @@ class ExactSubstrIndex:
     def _read_or_empty(self, spark: SparkSession, tbl: VersionedTable, schema):
         if tbl.exists():
             return tbl.read(spark)
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
 
     def _read_pre_txn(
         self, spark: SparkSession, tbl: VersionedTable, schema, txn_id: str
@@ -140,7 +141,7 @@ class ExactSubstrIndex:
         replay: delta recomputation always sees the same pre-txn state
         no matter which subset of the tables a crash let commit."""
         if not tbl.exists():
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         # txn_version_checked raises PrunedTxnVersionError when the txn
         # IS committed here but its version entry fell out of retention
         # (128+ later appends before the torn txn replayed) — reading
@@ -151,7 +152,7 @@ class ExactSubstrIndex:
         if v is None:
             return tbl.read(spark)
         if v == 0:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         return tbl.read(spark, version=v - 1)
 
     def _segments_pre_txn(
@@ -160,15 +161,15 @@ class ExactSubstrIndex:
         """Pre-txn flavor of ``BucketedSegmentTable.segments`` (same
         replay contract as :meth:`_read_pre_txn`)."""
         if not tbl.exists():
-            return [spark.createDataFrame([], schema)]
+            return [empty_frame(spark, schema)]
         v = tbl.txn_version_checked(txn_id)
         if v is None:
             segs = tbl.segments(spark)
         elif v == 0:
-            return [spark.createDataFrame([], schema)]
+            return [empty_frame(spark, schema)]
         else:
             segs = tbl.segments(spark, version=v - 1)
-        return segs or [spark.createDataFrame([], schema)]
+        return segs or [empty_frame(spark, schema)]
 
     def spans(self, spark: SparkSession) -> DataFrame:
         """Merged duplicate spans over every doc ever appended —

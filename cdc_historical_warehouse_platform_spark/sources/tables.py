@@ -35,6 +35,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from cdc_historical_warehouse_platform_spark.session import empty_frame
+
 __all__ = [
     "VersionedTable",
     "atomic_write_text",
@@ -337,7 +339,7 @@ class VersionedTable:
                 )
             )
         if not parts:
-            return spark.createDataFrame([], schema)
+            return empty_frame(spark, schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -4,6 +4,7 @@ the Spark twin of tests/verify_scd2.py's live-Postgres flow."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -775,3 +776,179 @@ def test_kpis_report_true_record_throughput(spark, tmp_path, change_df):
     assert k["failed_batch_rate"] == 0.0
     assert "watermark_lag_sec > 300" in k["alerts"]
     assert k["sustained_throughput_rps"] is None or k["sustained_throughput_rps"] > 0
+
+
+def test_empty_builders_are_zero_partition_frames_of_the_exact_schema(spark, tmp_path):
+    """Every empty builder returns a frame of its intended schema,
+    nullability included, over zero partitions: counting or writing it
+    schedules no task, so no Python worker starts."""
+    from pyspark.sql import types as T
+
+    from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
+        empty_histogram,
+        empty_summary,
+    )
+    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim
+    from cdc_historical_warehouse_platform_spark.schemas import (
+        DIM_HISTORY_SCHEMA,
+        ORDERS_SCHEMA,
+        PIPELINE_METADATA_SCHEMA,
+    )
+    from cdc_historical_warehouse_platform_spark.session import empty_frame
+    from cdc_historical_warehouse_platform_spark.sources.substr_index import (
+        _UNIQUE_SCHEMA,
+        ExactSubstrIndex,
+    )
+
+    group = T.StructField("customer_id", T.IntegerType(), True)
+    summary_schema = T.StructType(
+        [
+            group,
+            T.StructField("n_orders", T.LongType(), False),
+            T.StructField("measure_sum", T.DecimalType(38, 2), True),
+        ]
+    )
+    hist_key = T.StructField(
+        "__hist_key",
+        T.StructType([group, T.StructField("bucket", T.IntegerType(), False)]),
+        False,
+    )
+    xs = ExactSubstrIndex(tmp_path / "xs")
+    missing = VersionedTable(tmp_path / "missing")
+    sim = OrderSimulator(spark, missing, None, seed=1)
+    built = [
+        (empty_frame(spark, CHANGE_SCHEMA), CHANGE_SCHEMA),
+        (empty_dim(spark), DIM_HISTORY_SCHEMA),
+        (empty_summary(spark), summary_schema),
+        (empty_histogram(spark), T.StructType([hist_key, *summary_schema.fields[1:]])),
+        (PipelineMetadataManager(spark, tmp_path / "meta")._runs(), PIPELINE_METADATA_SCHEMA),
+        (sim._orders(), ORDERS_SCHEMA),
+        (xs._read_or_empty(spark, missing, _UNIQUE_SCHEMA), _UNIQUE_SCHEMA),
+        (xs._read_pre_txn(spark, missing, _UNIQUE_SCHEMA, "t"), _UNIQUE_SCHEMA),
+        (xs._segments_pre_txn(spark, missing, _UNIQUE_SCHEMA, "t")[0], _UNIQUE_SCHEMA),
+    ]
+    for df, schema in built:
+        assert df.schema.json() == schema.json()
+        assert df._jdf.rdd().getNumPartitions() == 0
+        assert df.count() == 0
+
+    # a committed empty frame still publishes its schema
+    table = VersionedTable(tmp_path / "empty")
+    table.commit(empty_dim(spark))
+    assert table.read(spark).count() == 0
+    assert table.read(spark).columns == DIM_HISTORY_SCHEMA.names
+
+
+@pytest.fixture
+def host_clock_off_utc(monkeypatch):
+    """Pin the host's local time zone to UTC-5 for the test."""
+    monkeypatch.setenv("TZ", "EST5")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_run_rows_and_pointer_schema_round_trip(spark, tmp_path, host_clock_off_utc):
+    """start_run builds its row through Arrow rather than a Python
+    worker; the run table reads back the same rows, and its pointer
+    carries the same schema JSON, as when the row came from a Python
+    list: the declared schema after the first start_run, every field
+    nullable once update_run has re-read the table. The host clock is
+    off UTC: Arrow reads a naive timestamp in the session time zone
+    (UTC) while update_run's literal reads it in local time, so a naive
+    start_time handed to Arrow would shift every run duration by the
+    host's UTC offset."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from cdc_historical_warehouse_platform_spark.schemas import PIPELINE_METADATA_SCHEMA
+
+    meta = PipelineMetadataManager(spark, tmp_path / "meta")
+
+    def pointer_schema():
+        return json.loads((tmp_path / "meta" / "_LATEST").read_text())["schema"]
+
+    # recent, so stats()' trailing window holds it
+    t = (dt.datetime.utcnow() - dt.timedelta(hours=1)).replace(microsecond=250000)
+    assert meta.start_run(run_id="r1", now=t) == "r1"
+    assert pointer_schema() == PIPELINE_METADATA_SCHEMA.json()
+    assert [r.asDict() for r in meta.table.read(spark).collect()] == [
+        {
+            "run_id": "r1",
+            "pipeline_name": "scd2_loader",
+            "start_time": t,
+            "end_time": None,
+            "status": "running",
+            "records_processed": 0,
+            "records_successful": 0,
+            "records_failed": 0,
+            "error_message": None,
+            "performance_metrics": None,
+        }
+    ]
+
+    meta.update_run(
+        "r1", "completed", 3, 2, 1,
+        performance_metrics={"a": 1}, now=t + dt.timedelta(seconds=5),
+    )
+    meta.start_run(run_id="r2", now=t + dt.timedelta(seconds=9))
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in PIPELINE_METADATA_SCHEMA.fields]
+    )
+    assert pointer_schema() == nullable.json()
+    rows = sorted(meta.table.read(spark).collect(), key=lambda r: r.run_id)
+    assert [tuple(r) for r in rows] == [
+        ("r1", "scd2_loader", t, t + dt.timedelta(seconds=5), "completed", 3, 2, 1, None, '{"a": 1}'),
+        ("r2", "scd2_loader", t + dt.timedelta(seconds=9), None, "running", 0, 0, 0, None, None),
+    ]
+    # durations are end minus start: 5 s, not 5 s plus the UTC offset
+    assert meta.stats()["avg_duration_sec"] == 5.0
+    k = meta.kpis(now=t + dt.timedelta(seconds=10))
+    assert k["batch_processing_p95_sec"] == 5.0
+    assert "batch_processing_p95_sec > 120" not in k["alerts"]
+
+
+def test_steady_state_batch_compiles_almost_nothing(spark, change_df, tmp_path):
+    """Two loader batches of the same shape, with all three rollup
+    stores: the second reuses the first's generated classes from the
+    codegen cache. What it still compiles are the classes that inline
+    a per-run timestamp literal (update_run's ``now``), a handful; a
+    cache too small for the working set (the engine's default of 100)
+    recompiled ~140 classes here."""
+    import json
+
+    from cdc_historical_warehouse_platform_spark.session import codegen_compiles
+
+    cdc = tmp_path / "cdc"
+    meta = PipelineMetadataManager(spark, tmp_path / "meta")
+    loader = SCD2Loader(
+        spark, SCD2DimStore(tmp_path / "dim"), cdc, metadata=meta,
+        summary_store=VersionedTable(tmp_path / "summary"),
+        sketch_store=VersionedTable(tmp_path / "sketch"),
+        histogram_store=VersionedTable(tmp_path / "hist"),
+    )
+
+    def batch(n, first_id, updated):
+        at = ts(10 * n)
+        rows = [
+            make_change(i, "INSERT", at, quantity=n, customer_id=100 + i % 5)
+            for i in range(first_id, first_id + 6)
+        ]
+        rows += [
+            make_change(i, "UPDATE", at, quantity=n + 1, customer_id=100 + i % 5, status="shipped")
+            for i in updated
+        ]
+        write_change_batch(change_df(rows), cdc, extracted_at=at)
+        before = codegen_compiles(spark)
+        assert loader.load_pending()["processed"] == 1
+        return codegen_compiles(spark) - before
+
+    batch(0, 1, [])  # seeds the store: the bulk-build path
+    batch(1, 100, [1, 2, 3])  # first merge: compiles the merge working set
+    second = batch(2, 200, [4, 5, 6])  # same shape
+    assert second <= 10, second
+    recorded = json.loads(meta.last_run()["performance_metrics"])["codegen_compiles"]
+    assert 0 <= recorded <= second
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
