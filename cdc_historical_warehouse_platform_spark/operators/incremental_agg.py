@@ -14,8 +14,11 @@ Semantics are in lockstep with scd2_merge_tagged (operators/scd2.py):
 latest-per-key dedup, advisory op reroutes (INSERT onto an existing key
 updates; UPDATE onto a missing key inserts), DELETE removes the current
 contribution, and the late-event guard skips changes older than the
-current version's ``valid_from``. No-op updates need no special case —
-their −old/+new contributions cancel exactly, counts included.
+current version's ``valid_from`` (a NULL on either side is not late, as
+in the merge). No-op updates need no special case — their −old/+new
+contributions cancel exactly, counts included. Every maintainer reads
+the same columns: the change key ``id``, the group ``customer_id`` and
+the measure ``total_amount`` (NULL counts as 0).
 
 Measures aggregate in DECIMAL, so the maintained value is bit-equal to
 a from-scratch recompute in ANY engine regardless of how the history
@@ -30,7 +33,11 @@ Scale shape: ONE batch probe of a column-pruned current slice
 same trick as scd2_merge_tagged's key-membership subtree), batch-local
 work for everything else, and a summary upsert that joins
 summary-sized inputs only — the wide dimension is never rescanned and
-never shuffled.
+never shuffled. The sum and extrema maintainers build that probe and
+its late guard in one helper (``_probe``). The per-customer summary is
+the per-(customer, bucket) histogram summed over buckets, so
+``maintain_summary_and_histogram`` advances both from one probe: the
+histogram's delta, and that delta summed by customer.
 
 ``hint_broadcast`` (default True, mirroring scd2_merge_tagged's
 micro-batch contract) force-broadcasts every batch-derived probe side
@@ -44,11 +51,15 @@ to a shuffle join for bulk ones — the graceful-degradation plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cdc_historical_warehouse_platform_spark.operators.scd2 import BUSINESS_KEY, dedupe_latest_per_key
+from cdc_historical_warehouse_platform_spark.operators.scd2 import (
+    BUSINESS_KEY,
+    CHANGE_KEY,
+    dedupe_latest_per_key,
+)
 from cdc_historical_warehouse_platform_spark.session import empty_frame
 
 __all__ = [
@@ -65,6 +76,7 @@ __all__ = [
     "empty_histogram",
     "group_histogram",
     "maintain_group_histogram",
+    "maintain_summary_and_histogram",
     "unpack_histogram",
     "histogram_quantile",
 ]
@@ -74,6 +86,14 @@ __all__ = [
 # delta path, and the DuckDB oracle so every engine agrees bit-for-bit.
 SUMMARY_MEASURE_TYPE = "decimal(28,2)"
 _SUM_TYPE = "decimal(38,2)"  # Spark's SUM(decimal(28,2)) result type
+
+# The group and the order value every rollup reads.
+_GROUP_COL = "customer_id"
+_GROUP_FIELD = T.StructField(_GROUP_COL, T.IntegerType(), True)
+_MEASURE_COL = "total_amount"
+# The histogram's composite (group, bucket) key and its default buckets.
+_HIST_KEY = "__hist_key"
+_HIST_LO, _HIST_HI, _HIST_NB = 0.0, 6_000_000.0, 24
 
 
 def _summary_schema(group_field: T.StructField) -> T.StructType:
@@ -86,37 +106,64 @@ def _summary_schema(group_field: T.StructField) -> T.StructType:
     )
 
 
-def empty_summary(
-    spark: SparkSession, group_field: T.StructField | None = None
-) -> DataFrame:
-    """An empty maintained summary (group, n_orders, measure_sum)."""
-    field = group_field or T.StructField("customer_id", T.IntegerType(), True)
-    return empty_frame(spark, _summary_schema(field))
+def empty_summary(spark: SparkSession) -> DataFrame:
+    """An empty maintained summary (customer_id, n_orders, measure_sum)."""
+    return empty_frame(spark, _summary_schema(_GROUP_FIELD))
 
 
-def group_summary(
-    current: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-) -> DataFrame:
+def _measure() -> Column:
+    """The order value every rollup aggregates, NULL as 0."""
+    return F.coalesce(F.col(_MEASURE_COL), F.lit(0)).cast(SUMMARY_MEASURE_TYPE)
+
+
+def group_summary(current: DataFrame, group_col: str = _GROUP_COL) -> DataFrame:
     """From-scratch summary over the current slice — the recompute twin
     the incremental path must equal (and the bootstrap for adopting an
     existing dimension into maintenance)."""
     return current.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(
-            F.coalesce(F.col(measure_col), F.lit(0)).cast(SUMMARY_MEASURE_TYPE)
-        ).alias("measure_sum"),
+        F.sum(_measure()).alias("measure_sum"),
     )
+
+
+def _probe(current: DataFrame, changes: DataFrame, group_col: str, hint_broadcast: bool):
+    """``(staged, cur_slim, matched, maybe_bcast)``: the latest change
+    per key as ``__b_*`` columns, the column-pruned current slice as
+    ``__c_*`` columns, their one broadcast-batch inner probe, and the
+    hint. ``matched.__late`` is the merge's late guard, never NULL: a
+    NULL timestamp is not late, since scd2_merge_tagged applies it."""
+    latest = dedupe_latest_per_key(changes)
+    # Pinned: the staged batch feeds several delta branches, and without
+    # the pin its latest-per-key window re-runs once per branch (sf1
+    # rehearsal, revenue batch: 7.4 s pinned vs 11.7 s unpinned).
+    # Batch-sized, so the checkpoint is bounded at any scale.
+    staged = latest.select(
+        F.col(CHANGE_KEY).cast("long").alias("__b_key"),
+        F.col(group_col).alias("__b_group"),
+        _measure().alias("__b_measure"),
+        F.col("operation_type").alias("__b_op"),
+        F.col("cdc_timestamp").alias("__b_ts"),
+    ).localCheckpoint(eager=False)
+    cur_slim = current.select(
+        F.col(BUSINESS_KEY).alias("__c_key"),
+        F.col(group_col).alias("__c_group"),
+        _measure().alias("__c_measure"),
+        F.col("valid_from").alias("__c_from"),
+    )
+    maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
+    # The one probe of the (column-pruned) current slice.
+    matched = cur_slim.join(
+        maybe_bcast(staged), F.col("__c_key") == F.col("__b_key"), "inner"
+    ).withColumn(
+        "__late", F.coalesce(F.col("__b_ts") < F.col("__c_from"), F.lit(False))
+    )
+    return staged, cur_slim, matched, maybe_bcast
 
 
 def summary_delta(
     current: DataFrame,
     changes: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
+    group_col: str = _GROUP_COL,
     hint_broadcast: bool = True,
 ) -> DataFrame:
     """Per-group (Δcount, Δsum) of ONE CDC batch against the PRE-batch
@@ -137,45 +184,18 @@ def summary_delta(
     Updates that move a row between groups transfer it, no-ops cancel
     exactly, deletes subtract, late events net to zero, and DELETEs of
     missing keys fall out silently — all matching the merge."""
-    latest = dedupe_latest_per_key(changes, key=change_key)
-    # Pinned: the staged batch feeds several delta branches, and without
-    # the pin its latest-per-key window re-runs once per branch (sf1
-    # rehearsal, revenue batch: 7.4 s pinned vs 11.7 s unpinned).
-    # Batch-sized, so the checkpoint is bounded at any scale.
-    staged = latest.select(
-        F.col(change_key).cast("long").alias("__b_key"),
-        F.col(group_col).alias("__b_group"),
-        F.coalesce(F.col(measure_col), F.lit(0))
-        .cast(SUMMARY_MEASURE_TYPE)
-        .alias("__b_measure"),
-        F.col("operation_type").alias("__b_op"),
-        F.col("cdc_timestamp").alias("__b_ts"),
-    ).localCheckpoint(eager=False)
-    cur_slim = current.select(
-        F.col(business_key).alias("__c_key"),
-        F.col(group_col).alias("__c_group"),
-        F.coalesce(F.col(measure_col), F.lit(0))
-        .cast(SUMMARY_MEASURE_TYPE)
-        .alias("__c_measure"),
-        F.col("valid_from").alias("__c_from"),
-    )
+    staged, _, matched, _ = _probe(current, changes, group_col, hint_broadcast)
     plus_all = staged.filter(F.col("__b_op") != "DELETE").select(
         F.col("__b_group").alias(group_col),
         F.lit(1).cast("long").alias("__dn"),
         F.col("__b_measure").alias("__dm"),
     )
-    maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
-    # The one probe of the (column-pruned) current slice.
-    matched = cur_slim.join(
-        maybe_bcast(staged), F.col("__c_key") == F.col("__b_key"), "inner"
-    )
-    is_late = F.col("__b_ts") < F.col("__c_from")
-    minus_old = matched.filter(~is_late).select(
+    minus_old = matched.filter(~F.col("__late")).select(
         F.col("__c_group").alias(group_col),
         F.lit(-1).cast("long").alias("__dn"),
         (-F.col("__c_measure")).cast(SUMMARY_MEASURE_TYPE).alias("__dm"),
     )
-    revoke_late = matched.filter(is_late & (F.col("__b_op") != "DELETE")).select(
+    revoke_late = matched.filter(F.col("__late") & (F.col("__b_op") != "DELETE")).select(
         F.col("__b_group").alias(group_col),
         F.lit(-1).cast("long").alias("__dn"),
         (-F.col("__b_measure")).cast(SUMMARY_MEASURE_TYPE).alias("__dm"),
@@ -192,7 +212,7 @@ def summary_delta(
 
 
 def apply_summary_delta(
-    summary: DataFrame, delta: DataFrame, group_col: str = "customer_id"
+    summary: DataFrame, delta: DataFrame, group_col: str = _GROUP_COL
 ) -> DataFrame:
     """Upsert the per-group delta into the maintained summary: full
     outer on the group key (summary-sized inputs only), coalesce-add,
@@ -232,10 +252,6 @@ def maintain_group_summary(
     summary: DataFrame,
     current: DataFrame,
     changes: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
     hint_broadcast: bool = True,
 ) -> DataFrame:
     """One maintenance step: S_k = apply(S_{k-1}, Δ(current_{k-1}, batch_k)).
@@ -244,11 +260,7 @@ def maintain_group_summary(
     before (or independently of) advancing the dimension.
     ``hint_broadcast=False`` for dimension-sized bulk waves (module
     docstring)."""
-    delta = summary_delta(
-        current, changes, group_col, measure_col, business_key, change_key,
-        hint_broadcast=hint_broadcast,
-    )
-    return apply_summary_delta(summary, delta, group_col)
+    return apply_summary_delta(summary, summary_delta(current, changes, hint_broadcast=hint_broadcast))
 
 
 # --- MIN/MAX maintenance (the non-delta-maintainable class) ----------------
@@ -263,16 +275,12 @@ def maintain_group_summary(
 # O(batch + dirty-group contents), with dirty groups <= batch keys.
 
 
-def group_extrema(
-    current: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-) -> DataFrame:
-    """From-scratch per-group (count, min, max) over the current slice —
-    the recompute twin maintain_group_extrema must equal. NULL measures
-    coalesce to 0, matching group_summary's SUM semantics."""
-    m = F.coalesce(F.col(measure_col), F.lit(0)).cast(SUMMARY_MEASURE_TYPE)
-    return current.groupBy(group_col).agg(
+def group_extrema(current: DataFrame) -> DataFrame:
+    """From-scratch per-customer (count, min, max) over the current
+    slice — the recompute twin maintain_group_extrema must equal. NULL
+    measures count as 0, matching group_summary's SUM semantics."""
+    m = _measure()
+    return current.groupBy(_GROUP_COL).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.min(m).alias("measure_min"),
         F.max(m).alias("measure_max"),
@@ -283,10 +291,6 @@ def maintain_group_extrema(
     prev: DataFrame,
     current: DataFrame,
     changes: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
     hint_broadcast: bool = True,
 ) -> DataFrame:
     """One extrema-maintenance step against the PRE-batch current slice
@@ -301,42 +305,19 @@ def maintain_group_extrema(
     bounded by the batch, never the dimension. Clean groups update with
     pure column arithmetic (count delta + least/greatest against the
     additions' per-group extrema)."""
-    latest = dedupe_latest_per_key(changes, key=change_key)
-    # pinned for the same reason as in summary_delta
-    staged = latest.select(
-        F.col(change_key).cast("long").alias("__b_key"),
-        F.col(group_col).alias("__b_group"),
-        F.coalesce(F.col(measure_col), F.lit(0))
-        .cast(SUMMARY_MEASURE_TYPE)
-        .alias("__b_measure"),
-        F.col("operation_type").alias("__b_op"),
-        F.col("cdc_timestamp").alias("__b_ts"),
-    ).localCheckpoint(eager=False)
-    cur_slim = current.select(
-        F.col(business_key).alias("__c_key"),
-        F.col(group_col).alias("__c_group"),
-        F.coalesce(F.col(measure_col), F.lit(0))
-        .cast(SUMMARY_MEASURE_TYPE)
-        .alias("__c_measure"),
-        F.col("valid_from").alias("__c_from"),
-    )
-    maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
     # probe #1: the one by-key probe of the current slice
-    matched = cur_slim.join(
-        maybe_bcast(staged), F.col("__c_key") == F.col("__b_key"), "inner"
-    )
-    not_late = ~(F.col("__b_ts") < F.col("__c_from"))
+    staged, cur_slim, matched, maybe_bcast = _probe(current, changes, _GROUP_COL, hint_broadcast)
     # rows leaving their group: every matched non-late change removes
     # the old version (DELETE removes it for good, UPDATE/INSERT-reroute
     # replaces it — possibly in another group)
-    removals = matched.filter(not_late).select(
+    removals = matched.filter(~F.col("__late")).select(
         F.col("__b_key").alias("__r_key"),
         F.col("__c_group").alias("__g"),
         F.col("__c_measure").alias("__old_m"),
     )
     # rows entering a group: every non-DELETE change except matched-late
     # no-ops (anti on the late key set keeps this batch-local)
-    late_keys = matched.filter(~not_late).select(F.col("__b_key").alias("__l_key"))
+    late_keys = matched.filter(F.col("__late")).select(F.col("__b_key").alias("__l_key"))
     additions = (
         staged.filter(F.col("__b_op") != "DELETE")
         .join(
@@ -352,7 +333,7 @@ def maintain_group_extrema(
     additions = additions.localCheckpoint(eager=False)
 
     p = prev.select(
-        F.col(group_col).alias("__g"),
+        F.col(_GROUP_COL).alias("__g"),
         F.col("n_rows").alias("__p_n"),
         F.col("measure_min").alias("__p_min"),
         F.col("measure_max").alias("__p_max"),
@@ -443,7 +424,7 @@ def maintain_group_extrema(
         - F.coalesce(F.col("__rm_n"), F.lit(0))
     ).cast("long")
     out = merged.select(
-        F.col("__mg").alias(group_col),
+        F.col("__mg").alias(_GROUP_COL),
         F.when(is_dirty, F.coalesce(F.col("__r_n"), F.lit(0)).cast("long"))
         .otherwise(n_clean)
         .alias("n_rows"),
@@ -502,77 +483,87 @@ def histogram_bucket_sql(measure_sql: str, lo: float, hi: float, nb: int) -> str
     )
 
 
-def _hist_group_field(group_field: T.StructField) -> T.StructField:
-    return T.StructField(
-        "__hist_key",
-        T.StructType([group_field, T.StructField("bucket", T.IntegerType(), False)]),
-        False,
-    )
-
-
-def _with_hist_key(df: DataFrame, group_col: str, measure_col: str, lo, hi, nb) -> DataFrame:
+def _with_hist_key(df: DataFrame, group_col: str, lo, hi, nb) -> DataFrame:
     return df.withColumn(
-        "__hist_key",
+        _HIST_KEY,
         F.struct(
             F.col(group_col).alias(group_col),
-            histogram_bucket(measure_col, lo, hi, nb).alias("bucket"),
+            histogram_bucket(_MEASURE_COL, lo, hi, nb).alias("bucket"),
         ),
     )
 
 
-def empty_histogram(
-    spark: SparkSession,
-    group_field: T.StructField | None = None,
-) -> DataFrame:
-    """An empty maintained histogram (struct(group,bucket), n, sum)."""
-    field = group_field or T.StructField("customer_id", T.IntegerType(), True)
-    return empty_frame(spark, _summary_schema(_hist_group_field(field)))
+def empty_histogram(spark: SparkSession) -> DataFrame:
+    """An empty maintained histogram (struct(customer_id, bucket), n, sum)."""
+    key = T.StructType([_GROUP_FIELD, T.StructField("bucket", T.IntegerType(), False)])
+    return empty_frame(spark, _summary_schema(T.StructField(_HIST_KEY, key, False)))
 
 
 def group_histogram(
     current: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-    lo: float = 0.0,
-    hi: float = 6_000_000.0,
-    nb: int = 24,
+    group_col: str = _GROUP_COL,
+    lo: float = _HIST_LO,
+    hi: float = _HIST_HI,
+    nb: int = _HIST_NB,
 ) -> DataFrame:
     """From-scratch per-(group, bucket) counts + sums over the current
     slice — the recompute twin the incremental path must equal."""
-    keyed = _with_hist_key(current, group_col, measure_col, lo, hi, nb)
-    return group_summary(keyed, "__hist_key", measure_col)
+    return group_summary(_with_hist_key(current, group_col, lo, hi, nb), _HIST_KEY)
+
+
+def _histogram_delta(current, changes, group_col, lo, hi, nb, hint_broadcast=True) -> DataFrame:
+    """summary_delta on the composite (group, bucket) key."""
+    keyed = [_with_hist_key(df, group_col, lo, hi, nb) for df in (current, changes)]
+    return summary_delta(*keyed, _HIST_KEY, hint_broadcast)
 
 
 def maintain_group_histogram(
     hist: DataFrame,
     current: DataFrame,
     changes: DataFrame,
-    group_col: str = "customer_id",
-    measure_col: str = "total_amount",
-    lo: float = 0.0,
-    hi: float = 6_000_000.0,
-    nb: int = 24,
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
+    group_col: str = _GROUP_COL,
+    lo: float = _HIST_LO,
+    hi: float = _HIST_HI,
+    nb: int = _HIST_NB,
     hint_broadcast: bool = True,
 ) -> DataFrame:
     """One histogram-maintenance step against the PRE-batch current
     slice (same contract and batch semantics as maintain_group_summary;
     a version moving between buckets transfers exactly like a row
     moving between groups)."""
-    cur_keyed = _with_hist_key(current, group_col, measure_col, lo, hi, nb)
-    chg_keyed = _with_hist_key(changes, group_col, measure_col, lo, hi, nb)
-    return maintain_group_summary(
-        hist, cur_keyed, chg_keyed, "__hist_key", measure_col, business_key,
-        change_key, hint_broadcast=hint_broadcast,
+    delta = _histogram_delta(current, changes, group_col, lo, hi, nb, hint_broadcast)
+    return apply_summary_delta(hist, delta, _HIST_KEY)
+
+
+def maintain_summary_and_histogram(
+    summary: DataFrame | None,
+    hist: DataFrame | None,
+    current: DataFrame,
+    changes: DataFrame,
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """The next summary and histogram (default buckets; a None state
+    stays None) from ONE probe of the PRE-batch current slice. Every row
+    has exactly one clamped bucket, NULL and out-of-range amounts
+    included, so the summary's delta is the histogram's summed by
+    customer; the pinned delta feeds both."""
+    delta = _histogram_delta(
+        current, changes, _GROUP_COL, _HIST_LO, _HIST_HI, _HIST_NB
+    ).localCheckpoint(eager=False)
+    by_customer = delta.groupBy(F.col(f"{_HIST_KEY}.{_GROUP_COL}").alias(_GROUP_COL)).agg(
+        F.sum("__dn").alias("__dn"),
+        F.sum("__dm").cast(_SUM_TYPE).alias("__dm"),
+    )
+    return (
+        None if summary is None else apply_summary_delta(summary, by_customer),
+        None if hist is None else apply_summary_delta(hist, delta, _HIST_KEY),
     )
 
 
-def unpack_histogram(hist: DataFrame, group_col: str = "customer_id") -> DataFrame:
+def unpack_histogram(hist: DataFrame, group_col: str = _GROUP_COL) -> DataFrame:
     """Flatten the maintained struct key back to report columns."""
     return hist.select(
-        F.col(f"__hist_key.{group_col}").alias(group_col),
-        F.col("__hist_key.bucket").alias("bucket"),
+        F.col(f"{_HIST_KEY}.{group_col}").alias(group_col),
+        F.col(f"{_HIST_KEY}.bucket").alias("bucket"),
         F.col("n_orders"),
         F.col("measure_sum"),
     )
@@ -581,10 +572,10 @@ def unpack_histogram(hist: DataFrame, group_col: str = "customer_id") -> DataFra
 def histogram_quantile(
     hist: DataFrame,
     p: float,
-    group_col: str = "customer_id",
-    lo: float = 0.0,
-    hi: float = 6_000_000.0,
-    nb: int = 24,
+    group_col: str = _GROUP_COL,
+    lo: float = _HIST_LO,
+    hi: float = _HIST_HI,
+    nb: int = _HIST_NB,
 ) -> DataFrame:
     """Per-group interpolated p-quantile estimate read straight off the
     maintained bucket counts (no data scan). Error ≤ one bucket width.

@@ -55,6 +55,7 @@ from cdc_historical_warehouse_platform_spark.session import empty_frame
 
 __all__ = [
     "BUSINESS_KEY",
+    "CHANGE_KEY",
     "TRACKED_COLUMNS",
     "PART_COLUMN",
     "dedupe_latest_per_key",
@@ -65,6 +66,8 @@ __all__ = [
 ]
 
 BUSINESS_KEY = "order_key"
+# The change record's key column; the merge stores it as BUSINESS_KEY.
+CHANGE_KEY = "id"
 
 # Columns whose change forces a new version (scd2_loader.py:343-350
 # compares every payload column of the row image).
@@ -96,7 +99,7 @@ def _op_priority(col: Column) -> Column:
 
 def dedupe_latest_per_key(
     changes: DataFrame,
-    key: str = "id",
+    key: str = CHANGE_KEY,
     ts: str = "cdc_timestamp",
 ) -> DataFrame:
     """W1: keep only the latest change per business key.
@@ -145,8 +148,6 @@ def scd2_merge(
     dim: DataFrame,
     changes: DataFrame,
     batch_id: str | None = None,
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
 ) -> DataFrame:
     """Apply one CDC batch to the dimension, returning the new dimension.
 
@@ -162,7 +163,7 @@ def scd2_merge(
     """
     current = dim.filter(F.col("is_current"))
     historical = dim.filter(~F.col("is_current"))
-    tagged = scd2_merge_tagged(current, changes, batch_id, business_key, change_key)
+    tagged = scd2_merge_tagged(current, changes, batch_id)
     return historical.unionByName(tagged.drop(PART_COLUMN))
 
 
@@ -173,8 +174,6 @@ def scd2_merge_tagged(
     current: DataFrame,
     changes: DataFrame,
     batch_id: str | None = None,
-    business_key: str = BUSINESS_KEY,
-    change_key: str = "id",
     hint_broadcast: bool = True,
 ) -> DataFrame:
     """Single-probe merge: the current slice is scanned ONCE.
@@ -212,12 +211,12 @@ def scd2_merge_tagged(
     should use :func:`scd2_build_from_change_log` instead.
     """
     maybe_bcast = F.broadcast if hint_broadcast else (lambda df: df)
-    latest = dedupe_latest_per_key(changes, key=change_key)
+    latest = dedupe_latest_per_key(changes)
 
     # Stage the batch in __b_-prefixed vocabulary so join output is
     # unambiguous next to the dim columns.
     staged = latest.select(
-        F.col(change_key).cast("long").alias("__b_key"),
+        F.col(CHANGE_KEY).cast("long").alias("__b_key"),
         *[F.col(c).alias(f"__b_{c}") for c in _PAYLOAD_COLUMNS],
         F.col("operation_type").alias("__b_operation_type"),
         F.col("cdc_timestamp").alias("__b_cdc_timestamp"),
@@ -228,7 +227,7 @@ def scd2_merge_tagged(
     # J1: current slice ⟕ broadcast(batch) — the ONE wide probe.
     joined = current.join(
         maybe_bcast(staged),
-        current[business_key] == staged["__b_key"],
+        current[BUSINESS_KEY] == staged["__b_key"],
         "left_outer",
     )
 
@@ -267,7 +266,7 @@ def scd2_merge_tagged(
             "cdc_timestamp": F.col("__b_cdc_timestamp"),
             "batch_id": F.lit(batch_id).cast("string"),
             "surrogate_key": _surrogate_key(
-                F.col(business_key), F.col("__b_cdc_timestamp")
+                F.col(BUSINESS_KEY), F.col("__b_cdc_timestamp")
             ),
         },
     )
@@ -283,7 +282,7 @@ def scd2_merge_tagged(
     # Brand-new keys: batch rows whose key has no current version.
     # ``matched`` reads only the business-key column of the dimension
     # (skinny scan) and is at most |batch| rows — broadcastable.
-    matched = current.select(F.col(business_key).alias("__b_key")).join(
+    matched = current.select(F.col(BUSINESS_KEY).alias("__b_key")).join(
         maybe_bcast(staged.select("__b_key")), "__b_key", "left_semi"
     )
     inserts = (
@@ -291,7 +290,7 @@ def scd2_merge_tagged(
         # DELETE of a missing key succeeds silently (scd2_loader.py:441-446)
         .filter(F.col("__b_operation_type") != "DELETE")
         .select(
-            F.col("__b_key").alias(business_key),
+            F.col("__b_key").alias(BUSINESS_KEY),
             *[F.col(f"__b_{c}").alias(c) for c in _PAYLOAD_COLUMNS],
             F.col("__b_cdc_timestamp").alias("valid_from"),
             F.lit(None).cast("timestamp").alias("valid_to"),
@@ -301,7 +300,7 @@ def scd2_merge_tagged(
             F.lit(batch_id).cast("string").alias("batch_id"),
         )
         .withColumn(
-            "surrogate_key", _surrogate_key(F.col(business_key), F.col("valid_from"))
+            "surrogate_key", _surrogate_key(F.col(BUSINESS_KEY), F.col("valid_from"))
         )
         .withColumn(PART_COLUMN, F.lit("current"))
         .select(*dim_cols, PART_COLUMN)

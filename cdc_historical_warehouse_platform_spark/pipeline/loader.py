@@ -25,9 +25,8 @@ from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimSto
 __all__ = [
     "SCD2Loader",
     "rollup_calls",
-    "maintain_summary_store",
+    "maintain_delta_stores",
     "maintain_distinct_sketch_store",
-    "maintain_histogram_store",
 ]
 
 
@@ -40,89 +39,73 @@ def _empty_mark(batch_path: Path) -> str:
     return f"empty:{st.st_size}:{st.st_mtime_ns}"
 
 
-def _maintain_delta_store(
-    spark, dim_store, store, changes, txn_id: str, empty, recompute, maintain
+def maintain_delta_stores(
+    spark, dim_store, changes, txn_id: str, summary_store, histogram_store
 ) -> None:
-    """The one body of the delta-algebra rollups: read the pre-batch
-    current slice, bootstrap a missing ``store`` (``recompute`` over
-    the current slice when adopting an existing dimension, else
-    ``empty(spark)``), and commit ``maintain(prev, current, changes)``
-    under the dimension's txn_id."""
-    from pyspark.sql import functions as F
+    """Incremental-view maintenance of the per-customer summary and the
+    per-(customer, order-value bucket) histogram
+    (operators/incremental_agg.py) for one batch, BEFORE the dimension
+    advances; either store may be None. Shared by the batch loader and
+    the streaming foreachBatch path (both through :func:`rollup_calls`).
+    One read and one probe of the pre-batch current slice serve both
+    stores. A missing store is bootstrapped: a recompute over the
+    current slice when adopting an existing dimension, else empty. The
+    summary commits before the histogram, both under the dim's txn_id.
 
-    from cdc_historical_warehouse_platform_spark.operators.scd2 import empty_dim
-
-    has_dim = dim_store.exists()
-    if has_dim:
-        current = dim_store.read_current(spark)
-    else:
-        current = empty_dim(spark).filter(F.col("is_current"))
-    if store.exists():
-        prev = store.read(spark)
-    else:
-        prev = recompute(current) if has_dim else empty(spark)
-    store.commit(maintain(prev, current, changes), txn_id=txn_id)
-
-
-def maintain_summary_store(spark, dim_store, summary_store, changes, txn_id: str) -> None:
-    """Incremental-view maintenance of a summary table for one batch,
-    BEFORE the dimension advances (the delta is defined against the
-    pre-batch current slice). Shared by the batch loader and the
-    streaming foreachBatch path (both through :func:`rollup_calls`)
-    so both engines carry ONE copy of the bootstrap + commit-ordering
-    rules.
-
-    Crash/replay safety without a cross-store transaction: the rollups
-    and the dimension's stage write run concurrently, and only the
-    dimension's adopts and pointer swap wait for all of them, so the
-    dimension commits last, all under the same txn_id.
-    - crash after some rollups landed, before the dim's pointer swap
-      (a rollup or the stage write failed, or an adopt did): the dim
-      still holds the pre-batch current slice, so the replay's landed
-      rollups are txn no-ops, the others apply against the same
-      pre-batch state, and the dim restages and applies — converged.
+    Crash/replay safety without a cross-store transaction: this call,
+    the sketch's and the dimension's stage write run concurrently, and
+    only the dimension's adopts and pointer swap wait for all of them,
+    so the dimension commits last, all under the same txn_id.
+    - crash before the dim's pointer swap (a rollup commit failed, e.g.
+      the histogram's after the summary's landed, or the stage write or
+      an adopt did): the dim still holds the pre-batch current slice,
+      so the replay's landed commits are txn no-ops, the others apply
+      against the same pre-batch state, and the dim restages and
+      applies — converged.
     - replay after all landed (ledger/checkpoint unmarked): the dim's
       txn guard returns before any rollup runs.
     The delta algebra itself is also idempotent against an
     already-advanced dimension (every term cancels), so even a lost
-    summary txn file degrades to a zero-delta commit."""
-    from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
-        empty_summary,
-        group_summary,
-        maintain_group_summary,
-    )
-
-    _maintain_delta_store(
-        spark, dim_store, summary_store, changes, txn_id,
-        empty_summary, group_summary, maintain_group_summary,
-    )
-
-
-def maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id: str) -> None:
-    """Distribution-shaped IVM for one batch: the per-(customer,
-    order-value bucket) histogram (operators/incremental_agg.py
-    histogram tier), the distribution sibling of
-    maintain_summary_store. Shared by the batch loader and the
-    streaming foreachBatch path; identical crash/replay posture — the
-    histogram commits beside the dim's stage write and before the dim's
-    adopts and pointer swap, under the dim's txn_id, and the delta
-    algebra is idempotent against an already-advanced dimension."""
+    rollup txn file degrades to a zero-delta commit."""
     from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
         empty_histogram,
+        empty_summary,
         group_histogram,
-        maintain_group_histogram,
+        group_summary,
+        maintain_summary_and_histogram,
     )
 
-    _maintain_delta_store(
-        spark, dim_store, histogram_store, changes, txn_id,
-        empty_histogram, group_histogram, maintain_group_histogram,
+    has_dim = dim_store.exists()
+    current = dim_store.read_current(spark)
+
+    def prev(store, empty, recompute):
+        if store is None:
+            return None
+        if store.exists():
+            return store.read(spark)
+        return recompute(current) if has_dim else empty(spark)
+
+    summary, hist = maintain_summary_and_histogram(
+        prev(summary_store, empty_summary, group_summary),
+        prev(histogram_store, empty_histogram, group_histogram),
+        current,
+        changes,
     )
+    if summary is not None:
+        summary_store.commit(summary, txn_id=txn_id)
+    if hist is not None:
+        histogram_store.commit(hist, txn_id=txn_id)
+
+
+# cdcbench's tracer patches both names in this module, so they stay;
+# both are the one body, and rollup_calls calls it by the first.
+maintain_summary_store = maintain_histogram_store = maintain_delta_stores
 
 
 def maintain_distinct_sketch_store(spark, sketch_store, changes, txn_id: str) -> None:
     """Mergeable-sketch maintenance for one batch: distinct products
     EVER observed per customer (operators/sketches.py), the
-    COUNT(DISTINCT) sibling of maintain_summary_store. Shared by the
+    COUNT(DISTINCT) sibling of maintain_delta_stores. Shared by the
     batch loader and the streaming foreachBatch path.
 
     Sketches cannot retract, so the metric is ever-seen distinct (the
@@ -159,28 +142,27 @@ def rollup_calls(
     sketch_store=None,
     histogram_store=None,
 ) -> list:
-    """The maintainer call of every configured rollup store for one
-    batch, as zero-argument callables; nothing runs here. The batch
-    loader and the streaming foreachBatch path both hand them to
-    :meth:`SCD2DimStore.apply_batch`, which runs them beside the
-    dimension's stage write and commits the dimension after all of
-    them (the crash/replay argument is in
-    :func:`maintain_summary_store`). Each reads only the pre-batch
-    current slice and the batch and writes only its own table. The
+    """The maintainer calls of the configured rollup stores for one
+    batch, as zero-argument callables; nothing runs here. At most two:
+    the summary and histogram share one call (:func:`maintain_delta_stores`)
+    and the sketch has its own. The batch loader and the streaming
+    foreachBatch path both hand them to :meth:`SCD2DimStore.apply_batch`,
+    which runs them beside the dimension's stage write and commits the
+    dimension after all of them (the crash/replay argument is in
+    :func:`maintain_delta_stores`). Each reads only the pre-batch
+    current slice and the batch and writes only its own tables. The
     maintainers are looked up in this module when a call runs, not
     when it is built."""
     calls = []
-    if summary_store is not None:
+    if summary_store is not None or histogram_store is not None:
         calls.append(
-            lambda: maintain_summary_store(spark, dim_store, summary_store, changes, txn_id)
+            lambda: maintain_summary_store(
+                spark, dim_store, changes, txn_id, summary_store, histogram_store
+            )
         )
     if sketch_store is not None:
         calls.append(
             lambda: maintain_distinct_sketch_store(spark, sketch_store, changes, txn_id)
-        )
-    if histogram_store is not None:
-        calls.append(
-            lambda: maintain_histogram_store(spark, dim_store, histogram_store, changes, txn_id)
         )
     return calls
 

@@ -75,13 +75,16 @@ def start_scd2_stream(
     ``histogram_store`` for the per-(customer, value-bucket)
     distribution. All three go through the loader's shared step
     (pipeline/loader.rollup_calls) into the one
-    ``SCD2DimStore.apply_batch`` call: the rollups run concurrently
-    beside the merge's stage write, and only the dimension's adopts and
-    pointer swap wait for them, so the dimension commits last, all
-    under the epoch's txn id. A crash anywhere in the epoch replays to
-    txn no-ops on the stores that landed and a first apply on the rest
-    — streaming gets the batch path's incremental-view-maintenance
-    guarantee with zero new algebra.
+    ``SCD2DimStore.apply_batch`` call as at most two rollup calls: the
+    summary and histogram share one probe and commit in that order, and
+    the sketch has its own. Both run concurrently beside the merge's
+    stage write, and only the dimension's adopts and pointer swap wait
+    for them, so the dimension commits last, all under the epoch's txn
+    id. A crash anywhere in the epoch replays to txn no-ops on the
+    stores that landed and a first apply on the rest — streaming gets
+    the batch path's incremental-view-maintenance guarantee with zero
+    new algebra. Each epoch that applied a batch then compacts the
+    history as the loader does after a run (``compact_history``).
     """
     changes = read_change_stream(spark, cdc_dir)
 
@@ -90,7 +93,7 @@ def start_scd2_stream(
         if batch_id is None:
             return
         txn_id = f"epoch:{epoch_id}:{batch_id}"
-        dim_store.apply_batch(
+        if dim_store.apply_batch(
             spark,
             batch_df,
             txn_id=txn_id,
@@ -104,7 +107,8 @@ def start_scd2_stream(
                 sketch_store=sketch_store,
                 histogram_store=histogram_store,
             ),
-        )
+        ):  # applied; a stream never ends a run, so compact per epoch
+            dim_store.compact_history(spark)
 
     writer = changes.writeStream.foreachBatch(_merge).option(
         "checkpointLocation", str(checkpoint_dir)

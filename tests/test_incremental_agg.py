@@ -723,3 +723,117 @@ def test_hint_broadcast_off_is_plan_only_not_semantics(spark, change_df):
         else:
             assert _rows(s) == want_s
             assert sorted(map(tuple, e.collect())) == want_e
+
+
+def _nullable_changes(spark, rows):
+    """Change rows at CHANGE_SCHEMA's types with every field nullable, so
+    a test can feed the NULLs a batch file can carry."""
+    from pyspark.sql import types as T
+
+    from cdc_historical_warehouse_platform_spark.schemas import CHANGE_SCHEMA
+
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in CHANGE_SCHEMA.fields])
+    return spark.createDataFrame(rows, schema)
+
+
+def test_null_timestamp_change_is_not_late_in_every_maintainer(spark):
+    """A matched change with a NULL cdc_timestamp is applied by the merge
+    (its late test is NULL, not true), so every maintainer must remove
+    the old row too: summary, histogram and extrema each equal their
+    recompute over scd2_merge's current slice."""
+    from decimal import Decimal
+
+    from cdc_historical_warehouse_platform_spark.operators.incremental_agg import (
+        group_extrema,
+        maintain_group_extrema,
+    )
+
+    b1 = _nullable_changes(
+        spark,
+        [
+            make_change(1, "INSERT", ts(1), quantity=5),
+            make_change(2, "INSERT", ts(1), quantity=4),
+            make_change(3, "INSERT", ts(1), quantity=7, customer_id=101),
+        ],
+    )
+    b2 = _nullable_changes(
+        spark,
+        [
+            {**make_change(1, "UPDATE", ts(5), quantity=1), "cdc_timestamp": None},
+            {**make_change(3, "DELETE", ts(5), customer_id=101), "cdc_timestamp": None},
+        ],
+    )
+    dim1 = scd2_merge(empty_dim(spark), b1, "b1").localCheckpoint(eager=True)
+    cur1 = dim1.filter(F.col("is_current"))
+    cur2 = scd2_merge(dim1, b2, "b2").filter(F.col("is_current")).localCheckpoint(eager=True)
+
+    summary = maintain_group_summary(group_summary(cur1), cur1, b2)
+    assert _rows(summary) == _rows(group_summary(cur2)) == [(100, 2, Decimal("50.00"))]
+    hist = maintain_group_histogram(
+        group_histogram(cur1, lo=_HLO, hi=_HHI, nb=_HNB), cur1, b2, lo=_HLO, hi=_HHI, nb=_HNB
+    )
+    assert _hist_rows(unpack_histogram(hist)) == _hist_rows(
+        unpack_histogram(group_histogram(cur2, lo=_HLO, hi=_HHI, nb=_HNB))
+    )
+    ext = maintain_group_extrema(group_extrema(cur1), cur1, b2)
+    assert _ext_rows(ext) == _ext_rows(group_extrema(cur2))
+
+
+def test_loader_delta_stores_probe_once_and_fold_exactly(tmp_path, spark, monkeypatch):
+    """One loader batch with summary and histogram stores reads the
+    pre-batch current slice once for both. Rows with a NULL amount, a
+    NULL customer, a negative amount and one above the histogram's
+    ``hi`` all land in a clamped bucket, so after every batch the
+    summary equals the histogram summed by customer and a recompute."""
+    from cdc_historical_warehouse_platform_spark.pipeline.loader import SCD2Loader
+    from cdc_historical_warehouse_platform_spark.sources.change_batches import write_change_batch
+    from cdc_historical_warehouse_platform_spark.sources.dim_store import SCD2DimStore
+    from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
+
+    batches = [
+        [
+            make_change(1, "INSERT", ts(1), quantity=2),
+            make_change(2, "INSERT", ts(1), customer_id=None),
+            make_change(3, "INSERT", ts(1), unit_price="-5.00", customer_id=101),
+            make_change(4, "INSERT", ts(1), unit_price="7000000.00", customer_id=101),
+            {**make_change(5, "INSERT", ts(1), customer_id=102), "total_amount": None},
+        ],
+        [
+            make_change(1, "UPDATE", ts(5), quantity=3, customer_id=None),
+            make_change(5, "UPDATE", ts(5), quantity=3, customer_id=102),
+            make_change(3, "DELETE", ts(5), customer_id=101),
+            make_change(6, "INSERT", ts(5), unit_price="9999999.99"),
+            {**make_change(2, "UPDATE", ts(5), customer_id=None), "total_amount": None},
+        ],
+        [
+            make_change(4, "UPDATE", ts(9), unit_price="-1.00", customer_id=101),
+            make_change(7, "INSERT", ts(9), unit_price="0.01", customer_id=None),
+        ],
+    ]
+    dim = SCD2DimStore(tmp_path / "dim")
+    summary = VersionedTable(tmp_path / "summary")
+    hist = VersionedTable(tmp_path / "hist")
+    loader = SCD2Loader(spark, dim, tmp_path / "cdc", summary_store=summary, histogram_store=hist)
+
+    reads = []
+    read_current = SCD2DimStore.read_current
+    monkeypatch.setattr(
+        SCD2DimStore, "read_current", lambda self, s: reads.append(1) or read_current(self, s)
+    )
+
+    def rows(df):
+        return {(r["customer_id"], r["n_orders"], r["measure_sum"]) for r in df.collect()}
+
+    for i, batch in enumerate(batches):
+        write_change_batch(_nullable_changes(spark, batch), tmp_path / "cdc", extracted_at=ts(10 * i + 10))
+        reads.clear()
+        assert loader.load_pending()["processed"] == 1
+        assert len(reads) == 1, i
+        maintained = rows(summary.read(spark))
+        folded = rows(
+            unpack_histogram(hist.read(spark))
+            .groupBy("customer_id")
+            .agg(F.sum("n_orders").alias("n_orders"), F.sum("measure_sum").alias("measure_sum"))
+        )
+        assert maintained == folded == rows(group_summary(read_current(dim, spark))), i
+    assert {r["customer_id"] for r in summary.read(spark).collect()} == {None, 100, 101, 102}

@@ -128,6 +128,37 @@ def test_scd2_stream_maintains_summary(tmp_path, spark):
     check()
 
 
+def test_stream_compacts_history_after_each_applied_epoch(tmp_path, spark, monkeypatch):
+    """Like the loader after a run, the stream calls compact_history
+    after every epoch that applied a batch, and not after an epoch whose
+    input was empty."""
+    cdc_dir = tmp_path / "cdc"
+    cdc_dir.mkdir()
+    dim = SCD2DimStore(tmp_path / "dim")
+    calls = []
+    compact = SCD2DimStore.compact_history
+    monkeypatch.setattr(
+        SCD2DimStore,
+        "compact_history",
+        lambda self, s, *a, **k: calls.append(self.version()) or compact(self, s, *a, **k),
+    )
+
+    def drain(rows, extracted_at):
+        write_change_batch(
+            spark.createDataFrame(rows, CHANGE_SCHEMA), cdc_dir, extracted_at=extracted_at, fmt="jsonl"
+        )
+        q = start_scd2_stream(spark, cdc_dir, dim, tmp_path / "ckpt", available_now=True)
+        q.awaitTermination(120)
+        return len([f for f in (tmp_path / "ckpt" / "commits").iterdir() if f.name.isdigit()])
+
+    assert drain([make_change(i, "INSERT", ts(i)) for i in range(1, 4)], ts(4)) == 1
+    assert calls == [0]
+    assert drain([], ts(5)) == 2  # the empty epoch ran, applied nothing
+    assert calls == [0]
+    assert drain([make_change(1, "UPDATE", ts(10), quantity=7)], ts(11)) == 3
+    assert calls == [0, 1]
+
+
 def test_windowed_event_counts_streaming_matches_batch(tmp_path, spark):
     """Run the ST8 tumbling-window agg as a real stream over the events
     parquet and compare to the batch run of the same function."""
