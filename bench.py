@@ -121,6 +121,16 @@ IO_CANARY_FLOOR_FALLBACK = 2.0  # clean min-of-3 measured 1.83-2.07 s on
 # poison the floor for every future round.
 CANARY_SANITY_MIN = 0.45
 IO_CANARY_SANITY_MIN = 1.0
+# Floors are keyed by core count: every artifact records the `cpus` it
+# ran on, and a fixed job on fewer cores is slower by design, not
+# loaded (against the local[32] floors, every 4-core run shipped
+# loaded:true). The fallbacks and sanity bands above were measured at
+# FALLBACK_CPUS; at another core count with no artifact of its own the
+# fallbacks scale linearly (perfect scaling, so an upper bound on the
+# floor: the legs stay quiet rather than flag every run). The first
+# artifact recorded at that core count replaces them. The sanity bands
+# only screen out mangled numbers and do not scale.
+FALLBACK_CPUS = 32
 
 # Spread-triggered re-sample (r12, verdict task #3): rows whose warm
 # spread exceeds this bar get up to MAX_EXTRA_SAMPLES additional
@@ -139,12 +149,15 @@ def _spread_best3(vals: list[float]) -> float:
     return (max(best) - min(best)) / max(min(best), 1e-9)
 
 
-def _canary_floor(repo: Path, field: str, fallback: float, sanity_min: float) -> float:
-    """Cleanest `field` ever recorded in BENCH_r*.json history; the
-    fallback applies only when history carries no plausible value.
+def _canary_floor(
+    repo: Path, field: str, fallback: float, sanity_min: float, cpus: int
+) -> float:
+    """Cleanest `field` ever recorded in the BENCH_r*.json artifacts of
+    a `cpus`-core run; the fallback, scaled to `cpus`, applies only when
+    that history carries no plausible value.
 
     The driver wraps bench output (sometimes front-truncating the JSON
-    line into a "tail" field), so scan raw text for the field instead
+    line into a "tail" field), so scan raw text for the fields instead
     of parsing — floors must survive artifact mangling.
     """
     import re
@@ -155,11 +168,14 @@ def _canary_floor(repo: Path, field: str, fallback: float, sanity_min: float) ->
             text = artifact.read_text()
         except OSError:
             continue
+        recorded = re.search(r'"cpus\\?":\s*([0-9]+)', text)
+        if recorded is None or int(recorded.group(1)) != cpus:
+            continue
         for m in re.finditer(rf'"{field}\\?":\s*([0-9.]+)', text):
             v = float(m.group(1))
             if v >= sanity_min:
                 history.append(v)
-    return min(history) if history else fallback
+    return min(history) if history else round(fallback * FALLBACK_CPUS / cpus, 3)
 
 
 def _canary_probe(spark) -> float:
@@ -431,11 +447,12 @@ def main() -> None:
     import shutil
     import tempfile
 
+    cpus = spark.sparkContext.defaultParallelism
     canary_floor = _canary_floor(
-        REPO, "canary_sec", CANARY_FLOOR_FALLBACK, CANARY_SANITY_MIN
+        REPO, "canary_sec", CANARY_FLOOR_FALLBACK, CANARY_SANITY_MIN, cpus
     )
     io_canary_floor = _canary_floor(
-        REPO, "io_canary_sec", IO_CANARY_FLOOR_FALLBACK, IO_CANARY_SANITY_MIN
+        REPO, "io_canary_sec", IO_CANARY_FLOOR_FALLBACK, IO_CANARY_SANITY_MIN, cpus
     )
     io_workdir = tempfile.mkdtemp(prefix="bench_iocanary_")
     try:
@@ -650,6 +667,7 @@ def main() -> None:
                 "io_canary_floor": io_canary_floor,
                 "io_canary_ratio": io_canary_ratio,
                 "loaded": loaded_run,
+                "cpus": cpus,
                 "sf": sf,
             }
         )

@@ -173,12 +173,9 @@ def write_zordered(
         key.asc()
     )
     version = table.commit(clustered, txn_id=txn_id)
-    spark = df.sparkSession
-    meta = table._read_pointer()
-    segments = meta.get("manifests", {}).get(str(version), [f"v{version}"])
     stats = []
-    for seg in segments:
-        stats.extend(collect_file_stats(spark, table.path / seg, stats_cols))
+    for seg in table.segment_dirs(version):
+        stats.extend(collect_file_stats(df.sparkSession, seg, stats_cols))
     _stats_file(table, version).write_text(json.dumps(stats))
     return version
 
@@ -279,12 +276,9 @@ def read_pruned(
 
     Files without stats for a predicate column are conservatively
     kept. Falls back to the full read when no stats manifest exists."""
-    meta = table._read_pointer()
-    if meta is None:
-        raise FileNotFoundError(f"table {table.path} has no committed version")
-    v = meta["version"] if version is None else version
+    v = table.version() if version is None else version
+    full = table.read(spark, version=v)  # FileNotFoundError on an empty table
     sfile = _stats_file(table, v)
-    full = table.read(spark, version=v)
     cond = _pred_condition(predicates)
     if not sfile.exists():
         return full.where(cond), {"files_total": None, "files_read": None}

@@ -7,8 +7,8 @@ cross-directory transaction, so a crash between writes would silently
 diverge the dedup state from the shard layout — later appends would
 re-admit near-dups or carry buckets for docs never written.
 
-The fix is the same marker pattern the table layer uses (tables.py
-``_LATEST``, change_batches' .tmp-rename): a single ``_corpus_commit``
+The fix is the same marker pattern the table layer uses (tables.py's
+pointer file, change_batches' .tmp-rename): a single ``_corpus_commit``
 JSON, atomically replaced AFTER every write of an epoch succeeds,
 listing every committed data file. On the next append, any data file on
 disk that the marker does not list is a torn-epoch leftover and is

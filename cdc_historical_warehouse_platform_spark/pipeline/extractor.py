@@ -113,18 +113,6 @@ class CDCExtractor:
             self.watermark.set(new_wm)
         return batch
 
-    def run_loop(self, interval_s: float = 10.0, max_cycles: int | None = None) -> int:
-        """ST2: the micro-batch trigger loop (log_extractor.py:229-276).
-        ``max_cycles`` bounds it for tests; production uses the
-        streaming wrapper instead."""
-        cycles = 0
-        while max_cycles is None or cycles < max_cycles:
-            self.run_once()
-            cycles += 1
-            if max_cycles is None or cycles < max_cycles:
-                time.sleep(interval_s)
-        return cycles
-
     def cleanup_old_batches(self, max_age_hours: float = 24.0) -> int:
         """ST6 retention (log_extractor.py:212-227). Covers both batch
         shapes (reference .json files AND jsonl directories — the old

@@ -267,7 +267,6 @@ class SCD2Loader:
             return True
         if self.ledger.is_processed(batch_path.name, batch_id):
             return False
-        n_rows = changes.count()
         # quarantine sink: append AFTER the replay check so re-loads do
         # not duplicate rows; a crash between this write and the ledger
         # mark can re-append (at-least-once — a diagnostics sink, keyed
@@ -298,7 +297,7 @@ class SCD2Loader:
         )
         self.ledger.mark(batch_path.name, batch_id)
         if applied:
-            self.rows_loaded += n_rows
+            self.rows_loaded += batch_id.rows
         return applied
 
     def load_pending(self) -> dict:
@@ -314,6 +313,7 @@ class SCD2Loader:
             run_id = self.metadata.start_run()
         processed = skipped = failed = 0
         error: str | None = None
+        batch = None
         try:
             seen_ids: dict[str, set[str]] = {}
             for name, bid in self.ledger.entries():
@@ -334,7 +334,9 @@ class SCD2Loader:
                     skipped += 1
         except Exception as e:  # noqa: BLE001
             failed += 1
-            error = f"{type(e).__name__}: {e}"
+            # the run's error names the batch that raised
+            where = f"{batch.name}: " if batch is not None else ""
+            error = f"{where}{type(e).__name__}: {e}"
         status = "completed" if failed == 0 else "failed"
         if failed == 0 and self.dim.exists():
             # ST6-style maintenance: bound the history manifest length

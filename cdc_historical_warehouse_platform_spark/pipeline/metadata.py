@@ -16,12 +16,18 @@ from pathlib import Path
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cdc_historical_warehouse_platform_spark.schemas import PIPELINE_METADATA_SCHEMA
 from cdc_historical_warehouse_platform_spark.session import empty_frame
 from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
 
 __all__ = ["PipelineMetadataManager"]
+
+# the fields update_run replaces, keyed by run_id
+_OUTCOME_SCHEMA = T.StructType(
+    [f for f in PIPELINE_METADATA_SCHEMA.fields if f.name not in ("pipeline_name", "start_time")]
+)
 
 
 class PipelineMetadataManager:
@@ -37,21 +43,21 @@ class PipelineMetadataManager:
 
     # --- lifecycle (pipeline_metadata.py:112-253) ---------------------------
 
+    def _row(self, schema, values) -> DataFrame:
+        """One row as data: it travels as Arrow (a JVM-side
+        LocalRelation, no Python worker), not as literals, which would
+        make every run compile fresh classes. Arrow reads a naive
+        timestamp in the session time zone, so callers hand it instants
+        in UTC (pyarrow keeps the wall clock of any other offset)."""
+        return self.spark.createDataFrame(
+            pa.Table.from_pylist([dict(zip(schema.names, values))]), schema
+        )
+
     def start_run(self, run_id: str | None = None, now: _dt.datetime | None = None) -> str:
         run_id = run_id or f"{self.pipeline_name}_{uuid.uuid4().hex[:12]}"
-        now = now or _dt.datetime.utcnow()
-        # the row travels as Arrow (a JVM-side LocalRelation, no Python
-        # worker) and as data, not as a literal: a literal ``now`` would
-        # make every run compile a fresh class. Arrow reads a naive
-        # timestamp in the session time zone, while update_run's literal
-        # reads it in the host's local time, so hand Arrow the instant in
-        # UTC (pyarrow keeps the wall clock of any other offset).
-        start = now.astimezone(_dt.timezone.utc)
+        start = (now or _dt.datetime.utcnow()).astimezone(_dt.timezone.utc)
         values = (run_id, self.pipeline_name, start, None, "running", 0, 0, 0, None, None)
-        row = self.spark.createDataFrame(
-            pa.Table.from_pylist([dict(zip(PIPELINE_METADATA_SCHEMA.names, values))]),
-            PIPELINE_METADATA_SCHEMA,
-        )
+        row = self._row(PIPELINE_METADATA_SCHEMA, values)
         self.table.commit(self._runs().unionByName(row), txn_id=f"start:{run_id}")
         return run_id
 
@@ -66,22 +72,33 @@ class PipelineMetadataManager:
         performance_metrics: dict | None = None,
         now: _dt.datetime | None = None,
     ) -> None:
+        """Replace the run's outcome fields; its start_time and
+        pipeline_name stay as the table has them."""
         now = now or _dt.datetime.utcnow()
-        runs = self._runs()
-        target = F.col("run_id") == run_id
-        updated = runs.select(
+        values = (
+            run_id,
+            now.astimezone(_dt.timezone.utc),
+            status,
+            records_processed,
+            records_successful,
+            records_failed,
+            error_message,
+            json.dumps(performance_metrics) if performance_metrics else None,
+        )
+        outcome = _OUTCOME_SCHEMA.names[1:]
+        ended = self._row(_OUTCOME_SCHEMA, values).select(
+            "run_id", F.lit(True).alias("__ended"), *[F.col(c).alias(f"__{c}") for c in outcome]
+        )
+        # a left join keeps the table's partitioning: one file per
+        # partition, as before, and every other run's row as it was
+        updated = self._runs().join(ended, "run_id", "left").select(
             "run_id",
             "pipeline_name",
             "start_time",
-            F.when(target, F.lit(now)).otherwise(F.col("end_time")).alias("end_time"),
-            F.when(target, F.lit(status)).otherwise(F.col("status")).alias("status"),
-            F.when(target, F.lit(records_processed)).otherwise(F.col("records_processed")).alias("records_processed"),
-            F.when(target, F.lit(records_successful)).otherwise(F.col("records_successful")).alias("records_successful"),
-            F.when(target, F.lit(records_failed)).otherwise(F.col("records_failed")).alias("records_failed"),
-            F.when(target, F.lit(error_message)).otherwise(F.col("error_message")).alias("error_message"),
-            F.when(target, F.lit(json.dumps(performance_metrics) if performance_metrics else None))
-            .otherwise(F.col("performance_metrics"))
-            .alias("performance_metrics"),
+            *[
+                F.when(F.col("__ended"), F.col(f"__{c}")).otherwise(F.col(c)).alias(c)
+                for c in outcome
+            ],
         )
         self.table.commit(updated, txn_id=f"update:{run_id}:{status}:{now.isoformat()}")
 

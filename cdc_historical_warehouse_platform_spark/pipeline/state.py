@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from cdc_historical_warehouse_platform_spark.sources.tables import atomic_write_text
 
-__all__ = ["Watermark", "ProcessedLedger", "generate_batch_id"]
+__all__ = ["BatchId", "Watermark", "ProcessedLedger", "generate_batch_id"]
 
 
 class Watermark:
@@ -91,7 +91,14 @@ class ProcessedLedger:
         self._cache, self._cache_key = cache, (st.st_mtime_ns, st.st_size)
 
 
-def generate_batch_id(changes: DataFrame, id_col: str = "id") -> str | None:
+class BatchId(str):
+    """A batch id that also carries ``rows``, the batch's row count
+    from the same aggregate, so callers need no ``count`` job."""
+
+    rows: int
+
+
+def generate_batch_id(changes: DataFrame, id_col: str = "id") -> BatchId | None:
     """F7: deterministic content-hash batch id (the reference hashes
     the JSON of the sorted id list, scd2_loader.py:184-187), or None
     for an empty batch — the aggregate's row count doubles as the
@@ -102,18 +109,35 @@ def generate_batch_id(changes: DataFrame, id_col: str = "id") -> str | None:
     DECIMAL(38,0) plus count/min/max, then md5 of that fixed-size
     summary. Commutative aggregation means partition order can't
     perturb it, and nothing proportional to the batch ever reaches the
-    driver — a backfill batch can hold billions of rows."""
+    driver — a backfill batch can hold billions of rows.
+
+    A change batch (one with a ``cdc_timestamp`` column) is rejected
+    with ValueError if any change lacks its timestamp: the SCD2 merge
+    orders a key's versions by it, and a NULL one would leave an
+    expired row with no ``valid_to`` and a current row with no
+    ``valid_from``. The same aggregate counts them."""
     idc = F.col(id_col).cast("long")
-    row = changes.agg(
+    aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum(F.xxhash64(idc).cast("decimal(38,0)")).alias("h1"),
         F.sum(F.xxhash64(idc, F.lit(1)).cast("decimal(38,0)")).alias("h2"),
         F.min(idc).alias("lo"),
         F.max(idc).alias("hi"),
-    ).collect()[0]
+    ]
+    if "cdc_timestamp" in changes.columns:
+        aggs.append(F.count("cdc_timestamp").alias("timestamped"))
+    row = changes.agg(*aggs).collect()[0].asDict()
     if row["n"] == 0:
         return None
+    untimed = row["n"] - row.get("timestamped", row["n"])
+    if untimed:
+        raise ValueError(
+            f"{untimed} of {row['n']} changes have no cdc_timestamp; "
+            "the batch is rejected before any commit"
+        )
     digest = json.dumps(
         [int(row["n"]), str(row["h1"]), str(row["h2"]), row["lo"], row["hi"]]
     )
-    return hashlib.md5(digest.encode()).hexdigest()
+    batch_id = BatchId(hashlib.md5(digest.encode()).hexdigest())
+    batch_id.rows = int(row["n"])
+    return batch_id

@@ -30,8 +30,8 @@ codebooks living in the same epoch sidecar as the coarse centroids so
 one pointer swap keeps (centroids, codebooks, assignments) a
 consistent triple.
 
-Atomicity (the dim_store pattern): readers resolve ONE ``_LATEST``
-pointer naming a (centroids file, assignments version) pair; writes
+Atomicity (the dim_store pattern): readers resolve ONE pointer
+(tables.read_pointer) naming a (centroids file, assignments version) pair; writes
 land data first (epoch-named centroid sidecar, assignments commit or
 append — old versions stay readable until vacuum) and swap the pointer
 last with an atomic replace. A crash anywhere before the swap leaves
@@ -60,12 +60,11 @@ from cdc_historical_warehouse_platform_spark.operators.similarity import (
 )
 from cdc_historical_warehouse_platform_spark.sources.tables import (
     VersionedTable,
-    atomic_write_text,
+    read_pointer,
+    write_pointer,
 )
 
 __all__ = ["IVFIndex"]
-
-_POINTER = "_LATEST"
 
 
 class IVFIndex:
@@ -77,13 +76,10 @@ class IVFIndex:
     # --- pointer / state ---------------------------------------------------
 
     def _read_pointer(self) -> dict | None:
-        try:
-            return json.loads((self.path / _POINTER).read_text())
-        except FileNotFoundError:
-            return None
+        return read_pointer(self.path)
 
     def _write_pointer(self, meta: dict) -> None:
-        atomic_write_text(self.path / _POINTER, json.dumps(meta))
+        write_pointer(self.path, meta)
 
     def exists(self) -> bool:
         meta = self._read_pointer()

@@ -64,7 +64,6 @@ def write_change_batch(
     extracted_at: _dt.datetime,
     watermark: _dt.datetime | None = None,
     fmt: str = "reference",
-    append_running_log: bool = True,
 ) -> Path:
     """Write one batch; returns the batch file (or directory) path.
 
@@ -92,7 +91,7 @@ def write_change_batch(
         tmp = out_dir / f".{name}.json.tmp"
         # byte-identical to json.dumps({"batch_metadata": meta,
         # "changes": rows}, indent=2), built incrementally
-        log = (out_dir / RUNNING_LOG).open("a") if append_running_log and n else None
+        log = (out_dir / RUNNING_LOG).open("a") if n else None
         try:
             with tmp.open("w") as f:
                 head = json.dumps({"batch_metadata": meta}, indent=2)
@@ -281,10 +280,11 @@ def read_change_batch_with_quarantine(
 
     A row quarantines when a critical field was PRESENT on the wire
     but failed its cast (id/quantity/unit_price/cdc_timestamp), when
-    id is missing entirely, or when operation_type is missing or not
-    INSERT/UPDATE/DELETE. ``quarantined`` carries the ORIGINAL wire
-    strings plus a ``quarantine_reason`` column listing every failed
-    check — the operator sees exactly what the producer sent.
+    id or cdc_timestamp is missing entirely, or when operation_type is
+    missing or not INSERT/UPDATE/DELETE. ``quarantined`` carries the
+    ORIGINAL wire strings plus a ``quarantine_reason`` column listing
+    every failed check — the operator sees exactly what the producer
+    sent.
 
     Scale shape: one read, one Project with the cast expressions and
     the reason array — the split is two filters over the same typed
@@ -300,6 +300,9 @@ def read_change_batch_with_quarantine(
     }
     checks = [
         F.when(F.col("id").isNull(), F.lit("missing:id")),
+        # the merge orders a key's versions by it (state.generate_batch_id
+        # rejects a batch that still carries such a change)
+        F.when(F.col("cdc_timestamp").isNull(), F.lit("missing:cdc_timestamp")),
         F.when(
             F.col("operation_type").isNull()
             | ~F.col("operation_type").isin(*_QUARANTINE_OPS),

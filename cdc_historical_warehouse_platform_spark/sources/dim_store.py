@@ -37,12 +37,11 @@ from cdc_historical_warehouse_platform_spark.operators.scd2 import (
 )
 from cdc_historical_warehouse_platform_spark.sources.tables import (
     VersionedTable,
-    atomic_write_text,
+    read_pointer,
+    write_pointer,
 )
 
 __all__ = ["SCD2DimStore"]
-
-_POINTER = "_LATEST"
 
 
 def _pid_alive(pid: int) -> bool:
@@ -134,10 +133,7 @@ class SCD2DimStore:
     # --- pointer ------------------------------------------------------------
 
     def _read_pointer(self) -> dict | None:
-        try:
-            return json.loads((self.path / _POINTER).read_text())
-        except FileNotFoundError:
-            return None
+        return read_pointer(self.path)
 
     def _write_pointer(self, meta: dict) -> None:
         # time-travel log: remember the last few versions' sub-table
@@ -154,8 +150,7 @@ class SCD2DimStore:
             if len(log) <= 8:
                 break
             del log[str(v)]
-        meta = {**meta, "pointer_log": log}
-        atomic_write_text(self.path / _POINTER, json.dumps(meta))
+        write_pointer(self.path, {**meta, "pointer_log": log})
 
     # --- table facade (VersionedTable-compatible where it matters) ---------
 
@@ -307,9 +302,7 @@ class SCD2DimStore:
         meta = self._read_pointer()
         if meta is None or meta["history_version"] < 0:
             return False
-        hmeta = self.history._read_pointer()
-        segments = hmeta.get("manifests", {}).get(str(meta["history_version"]), [])
-        if len(segments) <= max_segments:
+        if len(self.history.segment_dirs(meta["history_version"])) <= max_segments:
             return False
         hist = self.history.read(spark, version=meta["history_version"])
         # the consolidated rewrite is the moment layout is free: range-

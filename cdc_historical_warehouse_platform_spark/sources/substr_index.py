@@ -439,9 +439,8 @@ class ExactSubstrIndex:
         # back to one on the same maintenance cadence (commit resets
         # the manifest to a single segment)
         merged_dup = 0
-        dup_meta = self.duphash._read_pointer()
-        if dup_meta is not None:
-            dup_segs = dup_meta.get("segments", [dup_meta["dir"]])
+        if self.duphash.exists():
+            dup_segs = self.duphash.segment_dirs()
             if len(dup_segs) > 1:
                 merged_dup = len(dup_segs)
                 self.duphash.commit(

@@ -16,12 +16,13 @@ pipeline needs (SURVEY.md §4 "Transactionality"):
   txn_id was already committed (the Delta ``txnAppId/txnVersion``
   idea) — this is what makes foreachBatch exactly-once.
 
-Scale notes: a version directory is ordinary partitioned parquet —
-``partition_by`` flows through to ``partitionBy`` so the dimension can
-be laid out by ``is_current`` (the merge reads only the current slice)
-and bucketed/sorted within partitions. The pointer file is tiny; at
-1000 executors contention is on the object store's rename, same as any
-lakehouse commit protocol.
+The pointer format and the list of segments that make up a version
+live only here: :func:`read_pointer` / :func:`write_pointer` are the one
+pointer I/O (the dimension store and the IVF index keep their own
+fields in the same kind of file), and ``VersionedTable._segment_dirs``
+the one segment lookup. The pointer file is tiny; at 1000 executors
+contention is on the object store's rename, same as any lakehouse
+commit protocol.
 """
 
 from __future__ import annotations
@@ -35,15 +36,15 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdc_historical_warehouse_platform_spark.session import empty_frame
-
 __all__ = [
     "VersionedTable",
     "atomic_write_text",
     "BucketedSegmentTable",
     "PrunedTxnVersionError",
+    "read_pointer",
     "register_bucketed_dir",
     "write_bucketed_dir",
+    "write_pointer",
 ]
 
 
@@ -78,12 +79,26 @@ def atomic_write_text(path: Path, text: str) -> None:
         raise
 
 
+def read_pointer(root: str | Path) -> dict | None:
+    """The pointer of the table rooted at ``root``, or None before its
+    first commit."""
+    try:
+        return json.loads((Path(root) / _POINTER).read_text())
+    except FileNotFoundError:
+        return None
+
+
+def write_pointer(root: str | Path, meta: dict) -> None:
+    """Publish ``meta`` as the pointer of the table rooted at ``root``
+    (an atomic replace: readers see the old pointer or the new one)."""
+    atomic_write_text(Path(root) / _POINTER, json.dumps(meta))
+
+
 def _pruned_txn_versions(txn_versions: dict) -> dict:
     if len(txn_versions) <= _TXN_VERSION_RETENTION:
         return txn_versions
     keep = sorted(txn_versions.items(), key=lambda kv: kv[1])
     return dict(keep[-_TXN_VERSION_RETENTION:])
-
 
 
 class VersionedTable:
@@ -99,26 +114,46 @@ class VersionedTable:
         return self.path / _POINTER
 
     def _read_pointer(self) -> dict | None:
-        try:
-            return json.loads(self._pointer_file().read_text())
-        except FileNotFoundError:
-            return None
+        return read_pointer(self.path)
 
     def _write_pointer(self, meta: dict) -> None:
-        atomic_write_text(self._pointer_file(), json.dumps(meta))
+        write_pointer(self.path, meta)
+
+    def _committed(self) -> dict:
+        meta = self._read_pointer()
+        if meta is None:
+            raise FileNotFoundError(f"table {self.path} has no committed version")
+        return meta
+
+    def _segment_names(self, meta: dict, version: int | None) -> list[str]:
+        v = meta["version"] if version is None else version
+        try:
+            return meta["manifests"][str(v)]
+        except KeyError:
+            raise FileNotFoundError(f"table {self.path} has no version {v}") from None
+
+    def _segment_dirs(self, meta: dict, version: int | None) -> list[Path]:
+        """The segment directories that make up ``version`` (None: the
+        latest) under pointer ``meta``. Raises FileNotFoundError for
+        a version the table never had, or for a segment that is no
+        longer on disk (vacuumed)."""
+        dirs = [self.path / s for s in self._segment_names(meta, version)]
+        for d in dirs:
+            if not d.exists():
+                raise FileNotFoundError(f"segment {d.name} of {self.path} missing (vacuumed?)")
+        return dirs
+
+    def segment_dirs(self, version: int | None = None) -> list[Path]:
+        """:meth:`_segment_dirs` at the table's current pointer."""
+        return self._segment_dirs(self._committed(), version)
 
     # --- physical write hook --------------------------------------------------
 
-    def _write_version_dir(
-        self, df: DataFrame, vdir: Path, partition_by: list[str] | None
-    ) -> None:
+    def _write_version_dir(self, df: DataFrame, vdir: Path) -> None:
         """Write one immutable version/segment directory. Subclasses
         override to change the physical layout (e.g. bucketed files);
         the pointer/txn protocol above is layout-agnostic."""
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(vdir))
+        df.write.mode("overwrite").parquet(str(vdir))
 
     # --- public API ---------------------------------------------------------
 
@@ -180,7 +215,6 @@ class VersionedTable:
         txn_id: str | None,
         *,
         extend: bool,
-        partition_by: list[str] | None = None,
     ) -> int:
         """The one commit protocol: read the pointer, skip a txn that is
         already committed (the reference's ledger check,
@@ -193,8 +227,6 @@ class VersionedTable:
         replacing them. Returns the new version, or the current one for
         a replayed txn."""
         meta = self._read_pointer()
-        if extend and meta and meta.get("partition_by"):
-            raise ValueError("append not supported on partitioned tables")
         txns = list(meta.get("txns", [])) if meta else []
         if txn_id is not None and txn_id in txns:
             return meta["version"]
@@ -206,43 +238,35 @@ class VersionedTable:
                 shutil.rmtree(vdir)
             shutil.move(str(src), str(vdir))
         else:
-            self._write_version_dir(src, vdir, partition_by)
+            self._write_version_dir(src, vdir)
         segments = [vdir.name]
         if extend and meta:
-            segments = list(meta.get("segments", [meta["dir"]])) + segments
+            segments = self._segment_names(meta, None) + segments
         txn_versions = dict(meta.get("txn_versions", {})) if meta else {}
         if txn_id is not None:
             txns.append(txn_id)
             txn_versions[txn_id] = new_version
-        manifests = dict(meta.get("manifests", {})) if meta else {}
+        manifests = dict(meta["manifests"]) if meta else {}
         manifests[str(new_version)] = segments
         self._write_pointer(
             {
                 "version": new_version,
                 "dir": vdir.name,
-                "segments": segments,
                 "manifests": manifests,
                 "committed_at": time.time(),
                 "txns": txns,
                 "txn_versions": _pruned_txn_versions(txn_versions),
                 "schema": schema_json,
                 "columns": columns,
-                "partition_by": list(partition_by or []),
             }
         )
         return new_version
 
-    def commit(
-        self,
-        df: DataFrame,
-        txn_id: str | None = None,
-        partition_by: list[str] | None = None,
-    ) -> int:
+    def commit(self, df: DataFrame, txn_id: str | None = None) -> int:
         """Write ``df`` as the next version; returns the version number.
         A replayed ``txn_id`` is a no-op returning the current version."""
         return self._publish(
-            df, df.schema.json(), list(df.columns), txn_id,
-            extend=False, partition_by=partition_by,
+            df, df.schema.json(), list(df.columns), txn_id, extend=False
         )
 
     def append(self, df: DataFrame, txn_id: str | None = None) -> int:
@@ -250,9 +274,6 @@ class VersionedTable:
         grows by one directory; old segments are immutable). This is
         what keeps per-batch work O(batch) for append-only data like
         SCD2 history — a 100 TB history never gets rewritten.
-
-        Unpartitioned only (append + partition reconstruction would need
-        per-segment metadata; history tables don't need partitions).
         """
         return self._publish(
             df, df.schema.json(), list(df.columns), txn_id, extend=True
@@ -261,7 +282,7 @@ class VersionedTable:
     def commit_dir(
         self, src: Path, schema_json: str, columns: list[str], txn_id: str | None = None
     ) -> int:
-        """Adopt an already-written (unpartitioned) parquet directory as
+        """Adopt an already-written parquet directory as
         the next version — a filesystem move, no Spark job.
 
         This is what lets one Spark write produce segments for several
@@ -288,62 +309,12 @@ class VersionedTable:
         version's schema, so a time-travel read of an older version,
         which may predate a schema change, still infers from its
         footers.
-
-        Partitioned versions are reconstructed as a union of
-        per-partition-directory reads with the partition column re-added
-        at its ORIGINAL type (Spark's partition-value inference would
-        surface e.g. booleans as strings). A filter on the partition
-        column pushes into every union branch and constant-folds the
-        non-matching branches to empty scans — path-level pruning with
-        exact types.
         """
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        meta = self._read_pointer()
-        if meta is None:
-            raise FileNotFoundError(f"table {self.path} has no committed version")
-        v = meta["version"] if version is None else version
-        segments = meta.get("manifests", {}).get(str(v), [f"v{v}"])
-        for seg in segments:
-            if not (self.path / seg).exists():
-                raise FileNotFoundError(
-                    f"segment {seg} of {self.path}@v{v} missing (vacuumed?)"
-                )
-        vdir = self.path / segments[0]
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        part_cols = meta.get("partition_by") or []
+        meta = self._committed()
         reader = spark.read
-        if v == meta["version"]:
-            reader = reader.schema(
-                T.StructType([f for f in schema.fields if f.name not in part_cols])
-            )
-
-        if not part_cols:
-            return reader.parquet(*[str(self.path / s_) for s_ in segments])
-
-        if len(part_cols) != 1:
-            raise NotImplementedError("only single-level partitioning supported")
-        pcol = part_cols[0]
-        ptype = schema[pcol].dataType
-
-        parts = []
-        for sub in sorted(vdir.iterdir()):
-            if not sub.is_dir() or "=" not in sub.name:
-                continue
-            raw = sub.name.split("=", 1)[1]
-            value = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
-            parts.append(
-                reader.parquet(str(sub)).withColumn(
-                    pcol, F.lit(value).cast(ptype)
-                )
-            )
-        if not parts:
-            return empty_frame(spark, schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.select(*meta["columns"])
+        if version is None or version == meta["version"]:
+            reader = reader.schema(_schema(meta))
+        return reader.parquet(*map(str, self._segment_dirs(meta, version)))
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop segment directories not referenced by the manifests of
@@ -352,10 +323,9 @@ class VersionedTable:
         if meta is None:
             return []
         current = meta["version"]
-        manifests = meta.get("manifests", {})
         keep: set[str] = set()
         for v in range(max(0, current - keep_last + 1), current + 1):
-            keep.update(manifests.get(str(v), [f"v{v}"]))
+            keep.update(self._segment_names(meta, v))
         removed = []
         for vdir in sorted(self.path.glob("v*")):
             try:
@@ -367,6 +337,12 @@ class VersionedTable:
                 removed.append(v)
         return removed
 
+
+def _schema(meta: dict):
+    """The latest version's schema, as its pointer records it."""
+    from pyspark.sql import types as T
+
+    return T.StructType.fromJson(json.loads(meta["schema"]))
 
 
 def register_bucketed_dir(
@@ -466,11 +442,7 @@ class BucketedSegmentTable(VersionedTable):
         h = hashlib.sha1(str(self.path.resolve()).encode()).hexdigest()[:16]
         return f"bseg_{h}_{vdir_name}"
 
-    def _write_version_dir(
-        self, df: DataFrame, vdir: Path, partition_by: list[str] | None
-    ) -> None:
-        if partition_by:
-            raise ValueError("bucketed segments do not support partition_by")
+    def _write_version_dir(self, df: DataFrame, vdir: Path) -> None:
         # overwrite doubles as crash-replay hygiene: a torn write may
         # have left a catalog entry and/or files for this
         # not-yet-committed version
@@ -483,12 +455,9 @@ class BucketedSegmentTable(VersionedTable):
             mode="overwrite",
         )
 
-    def _register_segment(self, spark: SparkSession, vdir_name: str, schema_json: str):
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(schema_json))
+    def _register_segment(self, spark: SparkSession, vdir_name: str, meta: dict):
         cols = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            f"`{f.name}` {f.dataType.simpleString()}" for f in _schema(meta).fields
         )
         return register_bucketed_dir(
             spark,
@@ -507,14 +476,10 @@ class BucketedSegmentTable(VersionedTable):
         meta = self._read_pointer()
         if meta is None:
             return []
-        v = meta["version"] if version is None else version
-        segs = meta.get("manifests", {}).get(str(v), [f"v{v}"])
-        for seg in segs:
-            if not (self.path / seg).exists():
-                raise FileNotFoundError(
-                    f"segment {seg} of {self.path}@v{v} missing (vacuumed?)"
-                )
-        return [self._register_segment(spark, s, meta["schema"]) for s in segs]
+        return [
+            self._register_segment(spark, d.name, meta)
+            for d in self._segment_dirs(meta, version)
+        ]
 
     def commit_dir(self, *a, **k):  # pragma: no cover - contract guard
         raise NotImplementedError(
@@ -531,19 +496,7 @@ class BucketedSegmentTable(VersionedTable):
         delta produces zero data files (the bucket router writes no
         file for an empty bucket), so schema inference can fail — the
         pointer's recorded schema is authoritative here."""
-        from pyspark.sql import types as T
-
-        meta = self._read_pointer()
-        if meta is None:
-            raise FileNotFoundError(f"table {self.path} has no committed version")
-        v = meta["version"] if version is None else version
-        segs = meta.get("manifests", {}).get(str(v), [f"v{v}"])
-        for seg in segs:
-            if not (self.path / seg).exists():
-                raise FileNotFoundError(
-                    f"segment {seg} of {self.path}@v{v} missing (vacuumed?)"
-                )
-        schema = T.StructType.fromJson(json.loads(meta["schema"]))
-        return spark.read.schema(schema).parquet(
-            *[str(self.path / s) for s in segs]
+        meta = self._committed()
+        return spark.read.schema(_schema(meta)).parquet(
+            *map(str, self._segment_dirs(meta, version))
         )

@@ -300,9 +300,9 @@ def test_batch_id_distributed_and_order_insensitive(tmp_path, spark):
 def test_read_at_pointer_schema_launches_no_job(tmp_path, spark):
     """Reading a table's latest version takes the schema its pointer
     records instead of inferring it from parquet footers: no Spark job,
-    and the same schema inference gives — for an unpartitioned, a
-    multi-segment (append) and a partitioned table. An older version
-    keeps its own schema."""
+    and the same schema inference gives — for a single-segment and a
+    multi-segment (append) table. An older version keeps its own
+    schema."""
     from decimal import Decimal
 
     from pyspark.sql import types as T
@@ -324,8 +324,6 @@ def test_read_at_pointer_schema_launches_no_job(tmp_path, spark):
     appended = VersionedTable(tmp_path / "appended")
     appended.append(df)
     appended.append(df.filter(F.col("k") > 2))
-    parted = VersionedTable(tmp_path / "parted")
-    parted.commit(df, partition_by=["p"])
 
     sc = spark.sparkContext
     group = "versioned-table-read"
@@ -334,7 +332,6 @@ def test_read_at_pointer_schema_launches_no_job(tmp_path, spark):
         for table, dirs in [
             (plain, ["v0"]),
             (appended, ["v0", "v1"]),
-            (parted, ["v0"]),
         ]:
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             got = table.read(spark)
@@ -353,25 +350,62 @@ def test_read_at_pointer_schema_launches_no_job(tmp_path, spark):
     assert "extra" in plain.read(spark).columns
 
 
-def test_partitioned_commit_type_fidelity_and_pruning(tmp_path, spark):
-    """Boolean partition columns must come back as booleans, and a
-    filter on the partition column must prune the other branch."""
-    t = VersionedTable(tmp_path / "pt")
-    df = spark.createDataFrame(
-        [(1, True, "a"), (2, False, "b"), (3, True, "c")], ["k", "flag", "v"]
+def test_segment_lookup_time_travel_and_missing_versions(tmp_path, spark):
+    """A version reads exactly the segments it was committed with: an
+    appended table's older versions keep their shorter segment lists,
+    a commit resets the list to one segment, and a version the table
+    never had or whose segment was vacuumed raises FileNotFoundError."""
+    t = VersionedTable(tmp_path / "t")
+    with pytest.raises(FileNotFoundError, match="no committed version"):
+        t.segment_dirs()
+    t.append(spark.range(0, 3))
+    t.append(spark.range(3, 5))
+    t.append(spark.range(5, 6))
+    assert [d.name for d in t.segment_dirs(0)] == ["v0"]
+    assert [d.name for d in t.segment_dirs(1)] == ["v0", "v1"]
+    assert [d.name for d in t.segment_dirs()] == ["v0", "v1", "v2"]
+    for v, n in [(0, 3), (1, 5), (2, 6)]:
+        assert sorted(r.id for r in t.read(spark, version=v).collect()) == list(range(n))
+    t.commit(spark.range(10, 12))
+    assert [d.name for d in t.segment_dirs()] == ["v3"]
+    assert sorted(r.id for r in t.read(spark).collect()) == [10, 11]
+    assert t.read(spark, version=2).count() == 6
+
+    for v in (4, -1):
+        with pytest.raises(FileNotFoundError, match=f"no version {v}"):
+            t.read(spark, version=v)
+    assert t.vacuum(keep_last=1) == [0, 1, 2]
+    with pytest.raises(FileNotFoundError, match="vacuumed"):
+        t.read(spark, version=1)
+    assert t.read(spark).count() == 2
+
+
+def test_bucketed_table_empty_append_reads_back_at_older_version(tmp_path, spark):
+    """A bucketed append of an empty frame writes no data file; the
+    table still reads at the pointer's schema, and time travel to the
+    version before the empty append reads the same rows."""
+    from pyspark.sql import types as T
+
+    from cdc_historical_warehouse_platform_spark.sources.tables import (
+        BucketedSegmentTable,
     )
-    t.commit(df, partition_by=["flag"])
-    back = t.read(spark)
-    assert dict(back.dtypes)["flag"] == "boolean"
-    assert back.count() == 3
-    cur = back.filter(F.col("flag"))
-    assert {r["k"] for r in cur.collect()} == {1, 3}
-    # pruning: the filter constant-folds the false branch away — the
-    # optimized plan scans exactly ONE parquet relation and carries the
-    # partition value as a literal
-    plan = cur._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Relation") == 1
-    assert "true AS flag" in plan
+
+    schema = T.StructType(
+        [T.StructField("g", T.LongType()), T.StructField("v", T.StringType())]
+    )
+    t = BucketedSegmentTable(tmp_path / "b", "g", num_buckets=4)
+    t.append(spark.createDataFrame([(i, f"s{i}") for i in range(6)], schema))
+    t.append(spark.createDataFrame([], schema))
+    assert [d.name for d in t.segment_dirs()] == ["v0", "v1"]
+    assert not list((tmp_path / "b" / "v1").glob("*.parquet"))
+    latest = sorted(t.read(spark).collect())
+    older = sorted(t.read(spark, version=0).collect())
+    assert latest == older and len(older) == 6
+    assert t.read(spark, version=0).schema == schema
+    assert len(t.segments(spark, version=0)) == 1
+    assert len(t.segments(spark)) == 2
+    with pytest.raises(FileNotFoundError, match="no version 2"):
+        t.segments(spark, version=2)
 
 
 def test_dim_store_history_is_append_only(tmp_path, spark):
@@ -573,6 +607,51 @@ def test_loader_reports_corrupt_batch(env, spark):
     assert res["status"] == "failed" and res["failed"] == 1
     assert meta.last_run()["status"] == "failed"
     assert sorted(map(str, dim.read(spark).collect())) == good
+
+
+def test_null_timestamp_change_is_rejected_before_any_commit(spark, change_df, tmp_path):
+    """A change without a cdc_timestamp cannot be ordered among its
+    key's versions. The loader fails the run and names the batch file
+    before any rollup or dimension commit, and a stream epoch fails the
+    same way. Applied, it left an expired row with no valid_to and a
+    current row with no valid_from."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import types as T
+
+    from cdc_historical_warehouse_platform_spark.streaming.pipeline import start_scd2_stream
+
+    cdc = tmp_path / "cdc"
+    write_change_batch(
+        change_df([make_change(1, "INSERT", ts(0))]), cdc, extracted_at=ts(1), fmt="jsonl"
+    )
+    untimed = {**make_change(1, "UPDATE", ts(5), quantity=3), "cdc_timestamp": None}
+    nullable = T.StructType([T.StructField(f.name, f.dataType) for f in CHANGE_SCHEMA.fields])
+    bad = write_change_batch(
+        spark.createDataFrame([untimed], nullable), cdc, extracted_at=ts(6), fmt="jsonl"
+    )
+
+    dim = SCD2DimStore(tmp_path / "dim")
+    summary = VersionedTable(tmp_path / "summary")
+    meta = PipelineMetadataManager(spark, tmp_path / "meta")
+    loader = SCD2Loader(spark, dim, cdc, metadata=meta, summary_store=summary)
+    for _ in range(2):  # the rejected batch is not marked: a rerun fails again
+        res = loader.load_pending()
+        assert res["status"] == "failed", res
+        assert res["error"].startswith(f"{bad.name}: ValueError"), res["error"]
+        assert "cdc_timestamp" in res["error"]
+        assert meta.last_run()["error_message"] == res["error"]
+        assert (dim.version(), summary.version()) == (0, 0)
+        rows = dim.read(spark).collect()
+        assert_invariants(rows)
+        assert [(r["order_key"], r["quantity"], r["is_current"]) for r in rows] == [(1, 1, True)]
+
+    streamed = SCD2DimStore(tmp_path / "streamed")
+    q = start_scd2_stream(spark, cdc, streamed, tmp_path / "ckpt", available_now=True)
+    with pytest.raises(StreamingQueryException, match="cdc_timestamp"):
+        q.awaitTermination(120)
+    assert streamed.version() <= 0
+    if streamed.exists():
+        assert_invariants(streamed.read(spark).collect())
 
 
 def test_lineage_report_artifact(env, spark, tmp_path):
@@ -908,6 +987,41 @@ def test_run_rows_and_pointer_schema_round_trip(spark, tmp_path, host_clock_off_
     k = meta.kpis(now=t + dt.timedelta(seconds=10))
     assert k["batch_processing_p95_sec"] == 5.0
     assert "batch_processing_p95_sec > 120" not in k["alerts"]
+
+
+def test_update_run_replaces_one_row_and_compiles_nothing_when_warm(spark, tmp_path):
+    """update_run rewrites only its own run's outcome: the run's
+    start_time and pipeline_name stay as the table has them, and the
+    other runs' rows are unchanged. Its values travel as data, so a
+    second update of the same shape compiles no class."""
+    from cdc_historical_warehouse_platform_spark.session import codegen_compiles
+
+    meta = PipelineMetadataManager(spark, tmp_path / "meta")
+    t = (dt.datetime.utcnow() - dt.timedelta(hours=1)).replace(microsecond=0)
+    for i, run in enumerate("abc"):
+        meta.start_run(run_id=run, now=t + dt.timedelta(seconds=i))
+
+    def rows():
+        return {r.run_id: tuple(r) for r in meta.table.read(spark).collect()}
+
+    meta.update_run("a", "completed", 4, 4, 0, performance_metrics={"n": 4}, now=t + dt.timedelta(seconds=10))
+    before = rows()
+    assert before["a"] == (
+        "a", "scd2_loader", t, t + dt.timedelta(seconds=10), "completed", 4, 4, 0, None, '{"n": 4}'
+    )
+    compiles = codegen_compiles(spark)
+    meta.update_run(
+        "b", "failed", 2, 1, 1, error_message="boom",
+        performance_metrics={"n": 1}, now=t + dt.timedelta(seconds=20),
+    )
+    assert codegen_compiles(spark) - compiles == 0
+    after = rows()
+    assert after["a"] == before["a"] and after["c"] == before["c"]
+    assert after["b"] == (
+        "b", "scd2_loader", t + dt.timedelta(seconds=1), t + dt.timedelta(seconds=20),
+        "failed", 2, 1, 1, "boom", '{"n": 1}',
+    )
+    assert len(after) == 3
 
 
 def test_steady_state_batch_compiles_almost_nothing(spark, change_df, tmp_path):

@@ -250,9 +250,9 @@ def test_quarantine_split_partitions_every_batch(spark, rows, tmp_path_factory):
         ok_id = r["id"] is not None and r["id"].isdigit()
         ok_qty = r["quantity"] is None or r["quantity"].isdigit()
         ok_op = r["operation_type"] in ("INSERT", "UPDATE", "DELETE")
-        # a null cdc_timestamp is absent-on-wire (missing, not
-        # uncastable) and only the present-but-malformed case routes
-        ok_ts = r["cdc_timestamp"] != "not-a-ts"
+        # a null cdc_timestamp routes as missing, a malformed one as
+        # uncastable: the merge cannot order a change without one
+        ok_ts = r["cdc_timestamp"] not in (None, "not-a-ts")
         return ok_id and ok_qty and ok_op and ok_ts
 
     assert n_good == sum(1 for r in rows if valid(r))
