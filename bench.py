@@ -221,8 +221,8 @@ def _settle(spark, gc: bool = True) -> None:
     between samples, not inside one).
 
     ``gc=False`` (r12, verdict task #1): READ/score-shaped rows must
-    sync WITHOUT the GC. The r12 interleaved 4-protocol A/B
-    (scripts/ab_pq_settle.py, 5 rotated rounds on one host) measured
+    sync WITHOUT the GC. The r12 interleaved 4-protocol A/B (5
+    rotated rounds on one host) measured
     the PQ bulk probe at min/median = none 2.88/3.09, sync-only
     2.87/3.22, gc-only 3.21/3.83, sync+gc 3.38/3.51 — a full GC
     between samples re-chills the JIT'd ADC-fold codegen and costs

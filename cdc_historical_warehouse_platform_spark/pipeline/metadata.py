@@ -53,12 +53,19 @@ class PipelineMetadataManager:
             pa.Table.from_pylist([dict(zip(schema.names, values))]), schema
         )
 
+    def _commit(self, runs: DataFrame, txn_id: str) -> None:
+        """Every commit rewrites the whole run table, so drop all but
+        the newest two versions: disk use then grows with the number
+        of runs, not with its square."""
+        self.table.commit(runs, txn_id=txn_id)
+        self.table.vacuum(keep_last=2)
+
     def start_run(self, run_id: str | None = None, now: _dt.datetime | None = None) -> str:
         run_id = run_id or f"{self.pipeline_name}_{uuid.uuid4().hex[:12]}"
         start = (now or _dt.datetime.utcnow()).astimezone(_dt.timezone.utc)
         values = (run_id, self.pipeline_name, start, None, "running", 0, 0, 0, None, None)
         row = self._row(PIPELINE_METADATA_SCHEMA, values)
-        self.table.commit(self._runs().unionByName(row), txn_id=f"start:{run_id}")
+        self._commit(self._runs().unionByName(row), f"start:{run_id}")
         return run_id
 
     def update_run(
@@ -100,7 +107,7 @@ class PipelineMetadataManager:
                 for c in outcome
             ],
         )
-        self.table.commit(updated, txn_id=f"update:{run_id}:{status}:{now.isoformat()}")
+        self._commit(updated, f"update:{run_id}:{status}:{now.isoformat()}")
 
     # --- queries (W2, A4) ---------------------------------------------------
 

@@ -25,6 +25,9 @@ __all__ = ["OrderSimulator", "STATUSES"]
 
 STATUSES = ("pending", "confirmed", "shipped", "completed", "cancelled")
 
+# the most ids one mutation cycle collects to the driver
+SAMPLE_POOL = 1024
+
 DELETED_COLUMNS = [f.name for f in ORDERS_SCHEMA.fields] + ["deleted_at", "deletion_reason"]
 
 
@@ -35,24 +38,12 @@ class OrderSimulator:
         source: VersionedTable,
         deleted_table: VersionedTable | None = None,
         seed: int = 42,
-        sample_pool: int | None = None,
     ):
-        """``sample_pool`` (default None = exact reference parity,
-        db_mutator.py:83 collects every id): when set, each mutation
-        cycle draws its update/delete targets from a deterministic
-        pseudo-random LIMIT sample of that size, so driver memory stays
-        bounded no matter how big the source table is. The default
-        stays None because even for small tables the hash-ordered LIMIT
-        sample visits ids in a different order than the parity collect,
-        so flipping it would silently change which rows every existing
-        same-seed run mutates; call sites that can face large tables
-        opt in explicitly (run_pipeline.py does)."""
         self.spark = spark
         self.source = source
         self.deleted = deleted_table
         self.rng = random.Random(seed)
         self._next_id = 1
-        self.sample_pool = sample_pool
         self._cycle = 0
 
     def _now(self, now: _dt.datetime | None) -> _dt.datetime:
@@ -92,27 +83,23 @@ class OrderSimulator:
         now = self._now(now)
         orders = self._orders()
         self._cycle += 1
-        if self.sample_pool is None:
-            # exact reference parity (db_mutator.py:83): collect every id
-            ids = [r["id"] for r in orders.select("id").collect()]
-            n_rows = len(ids)
-            self._next_id = (max(ids) + 1) if ids else self._next_id
-        else:
-            # bounded driver memory: max/count in one agg row, targets
-            # from a per-cycle deterministic pseudo-random LIMIT sample
-            stats = orders.agg(
-                F.max("id").alias("mx"), F.count(F.lit(1)).alias("n")
-            ).collect()[0]
-            n_rows = stats["n"]
-            if stats["mx"] is not None:
-                self._next_id = stats["mx"] + 1
-            ids = [
-                r["id"]
-                for r in orders.select("id")
-                .orderBy(F.xxhash64(F.col("id"), F.lit(self._cycle)), F.col("id"))
-                .limit(self.sample_pool)
-                .collect()
-            ]
+        # max/count in one agg row; update/delete targets from a
+        # per-cycle deterministic pseudo-random LIMIT sample, so driver
+        # memory stays bounded however big the source table is (the
+        # reference collects every id, db_mutator.py:83)
+        stats = orders.agg(
+            F.max("id").alias("mx"), F.count(F.lit(1)).alias("n")
+        ).collect()[0]
+        n_rows = stats["n"]
+        if stats["mx"] is not None:
+            self._next_id = stats["mx"] + 1
+        ids = [
+            r["id"]
+            for r in orders.select("id")
+            .orderBy(F.xxhash64(F.col("id"), F.lit(self._cycle)), F.col("id"))
+            .limit(SAMPLE_POOL)
+            .collect()
+        ]
 
         n_ins = self.rng.randint(1, 3) if self.rng.random() < 0.3 else 0
         n_upd = min(len(ids), self.rng.randint(1, 3)) if self.rng.random() < 0.4 else 0

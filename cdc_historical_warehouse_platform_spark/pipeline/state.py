@@ -75,9 +75,6 @@ class ProcessedLedger:
         self._cache, self._cache_key = out, key
         return out
 
-    def processed_names(self) -> set[str]:
-        return {name for name, _ in self.entries()}
-
     def is_processed(self, filename: str, batch_id: str) -> bool:
         return (filename, batch_id) in self.entries()
 

@@ -2542,7 +2542,7 @@ def q_corpus_substring_spans_incremental(spark: SparkSession, sf: str) -> DataFr
     equality IS the rebuild-equivalence proof, including old docs whose
     grams only duplicate when a later batch lands (the 1→2 frontier
     transition). Also pinned by tests/test_exact_substring.py and the
-    substr-* CLI; bulk-scale evidence in scripts/stress_substr.py.
+    substr-* CLI.
 
     Scale shape per append: map-only gram build of the batch, one scan
     of each stored table with NO store shuffle in either mode, one

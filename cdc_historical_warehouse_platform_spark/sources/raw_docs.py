@@ -473,8 +473,7 @@ def _warc_doc_batches(
     ``flush_docs`` docs / ``flush_chars`` extracted chars, so a
     WET-heavy archive — conversion records are ~pass-through text —
     can never accumulate its whole extracted output in the task. This
-    is the exact unit the streaming reader's mapInPandas closure runs
-    AND the unit scripts/stress_warc.py measures under tracemalloc."""
+    is the exact unit the streaming reader's mapInPandas closure runs."""
     import pandas as pd
 
     out: list = []

@@ -96,14 +96,10 @@ def _env(
     deleted = VersionedTable(workdir / "deleted_orders")
     dim = SCD2DimStore(workdir / "dim_orders_history")
     meta = PipelineMetadataManager(spark, workdir / "pipeline_metadata")
-    # production CLI can face arbitrarily large source tables, so it
-    # opts into the bounded mutation-target sample (tests/parity runs
-    # construct OrderSimulator with the default exact-collect behavior)
     sim = OrderSimulator(
         spark,
         source if source_url is None else VersionedTable(workdir / "source_orders"),
         deleted,
-        sample_pool=1024,
     )
     ext = CDCExtractor(spark, source, workdir / "cdc_logs", deleted_table=deleted)
     loader = SCD2Loader(spark, dim, workdir / "cdc_logs", metadata=meta)

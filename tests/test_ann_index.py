@@ -189,6 +189,34 @@ def test_two_stage_probe_matryoshka_layout(spark, tmp_path):
         plain.probe_two_stage(spark, q)
 
 
+def test_two_stage_probe_finds_planted_copies(spark, tmp_path):
+    """Each query's near-copy (every dim scaled by 1.001, so cosine ~1
+    in prefix and full space alike) survives the narrow prefix stage,
+    which scans only the prefix column: it is rank 1 of the two-stage
+    probe, the one-stage full-dim probe agrees on every top-1, and the
+    shuffled candidate join returns the broadcast path's top-k."""
+    emb = _emb(spark)
+    q = _queries(emb)
+    copies = q.select(
+        (F.col("query_id") + 10_000_000).alias("vec_id"),
+        F.transform("query_vec", lambda x: (x * F.lit(1.001)).cast("float")).alias("embedding"),
+    )
+    index = IVFIndex.build(
+        emb.select("vec_id", "embedding").unionByName(copies),
+        tmp_path / "ivf", n_lists=4, prefix_dims=16,
+    )
+    two = index.probe_two_stage(spark, q, k=5, k1=20, n_probes=2)
+    # stage 1 scans the prefix column without the full embedding
+    plan = two._jdf.queryExecution().executedPlan().toString().splitlines()
+    assert any("FileScan" in ln and "prefix" in ln and "embedding" not in ln for ln in plan)
+    top1 = {r["query_id"]: r["neighbor_id"] for r in two.collect() if r["rank"] == 1}
+    assert top1 == {i: i + 10_000_000 for i in range(5)}
+    one = index.probe(spark, q, k=5, n_probes=2)
+    assert {r["query_id"]: r["neighbor_id"] for r in one.collect() if r["rank"] == 1} == top1
+    shuffled = index.probe_two_stage(spark, q, k=5, k1=20, n_probes=2, broadcast_probe=False)
+    assert _rows(shuffled) == _rows(two)
+
+
 def test_semdedup_accepts_prebuilt_centroids(spark, tmp_path):
     """semdedup(centroids=...) must skip the inline re-fit and give the
     same verdicts as the rebuild path (same deterministic quantizer)."""

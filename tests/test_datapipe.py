@@ -167,6 +167,20 @@ def test_banded_near_dup_equals_brute_force(spark, jittered_vecs, threshold):
     assert banded == exact
 
 
+def test_banded_near_dup_finds_planted_copies(spark, jittered_vecs):
+    """Recall floor of the corpus-scale configuration (BLAS signatures,
+    banding sized by n_hint): every planted jittered copy is found, and
+    no pair falls below the threshold."""
+    pairs = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in banded_embedding_near_dup(
+            jittered_vecs, threshold=0.99, signature="arrow", n_hint=80
+        ).collect()
+    }
+    assert {(i * 2, i * 2 + 1) for i in range(40)} <= set(pairs)
+    assert min(pairs.values()) >= 0.99
+
+
 def test_tune_banding_extremes():
     # threshold 1.0: p=1 ⇒ pr=1 for every r — must not raise (log(0))
     # and must return a zero-miss single-band scheme
@@ -2197,6 +2211,49 @@ def test_bucketed_state_corpus_end_to_end(spark, tmp_path):
     # manifest and corpus agree
     m = _json.loads((tmp_path / "b" / "_manifest.json").read_text())
     assert m["total_rows"] == spark.read.parquet(buck).count()
+
+
+def test_bulk_probe_append_dedups_exactly(spark, tmp_path):
+    """A bucketed-state corpus takes a mixed batch (exact duplicates of
+    stored docs under new ids, plus fresh docs) through the forced
+    co-partitioned bulk probes: every duplicate is dropped, every fresh
+    doc kept, a re-delivery appends 0, and the corpus leaves no file a
+    repair would remove."""
+    from cdc_historical_warehouse_platform_spark.pipeline.corpus_build import (
+        corpus_append,
+        corpus_build,
+    )
+    from cdc_historical_warehouse_platform_spark.pipeline.corpus_state import repair
+
+    def docs(lo, hi):
+        # md5 tokens are unique per (doc, position): the only duplicate
+        # structure is the one planted below
+        def token(i):
+            return F.substring(F.md5(F.concat_ws("_", F.col("id").cast("string"), i)), 1, 10)
+
+        body = F.array_join(F.transform(F.sequence(F.lit(1), F.lit(40)), token), " ")
+        return spark.range(lo, hi).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("The document begins. "), body, F.lit(". It ends here.")).alias("text"),
+            F.lit("en").alias("lang"),
+            F.concat(F.lit("src"), F.col("id") % 7).alias("source"),
+            F.length(body).cast("int").alias("n_chars"),
+        )
+
+    docs(0, 40).write.parquet(str(tmp_path / "in" / "documents.parquet"))
+    out = str(tmp_path / "c")
+    corpus_build(spark, str(tmp_path / "in"), out, state_buckets=4)
+    batch = (
+        docs(0, 20)
+        .unionByName(docs(40, 60))
+        .withColumn("doc_id", F.col("doc_id") + 1000)
+        .localCheckpoint(eager=True)
+    )
+    assert corpus_append(spark, batch, out, bulk_probe_doc_limit=0)["appended"] == 20
+    kept = {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
+    assert kept == set(range(40)) | set(range(1040, 1060))
+    assert corpus_append(spark, batch, out, bulk_probe_doc_limit=0)["appended"] == 0
+    assert repair(tmp_path / "c")["removed"] == []
 
 
 def test_corpus_compact_state_dirs(spark, tmp_path):

@@ -800,16 +800,22 @@ def test_cleanup_covers_jsonl_directories(env, spark):
     assert not batch.exists()
 
 
-def test_simulator_sample_pool_bounds_driver_collect(spark, tmp_path):
-    """sample_pool mode must mutate correctly while collecting at most
-    pool-size ids per cycle (the big-table-safe variant of the
-    reference's full id collect)."""
-    from cdc_historical_warehouse_platform_spark.pipeline.simulator import OrderSimulator
+def test_simulator_sample_bounds_driver_collect(spark, tmp_path, monkeypatch):
+    """A mutation cycle collects at most SAMPLE_POOL ids to the driver
+    (the big-table-safe variant of the reference's full id collect) and
+    still mutates correctly; the pool is shrunk below the table size so
+    the bound binds."""
+    from cdc_historical_warehouse_platform_spark.pipeline import simulator
     from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
 
+    assert simulator.SAMPLE_POOL == 1024
+    monkeypatch.setattr(simulator, "SAMPLE_POOL", 5)
     src = VersionedTable(tmp_path / "orders")
-    sim = OrderSimulator(spark, src, seed=7, sample_pool=5)
+    sim = simulator.OrderSimulator(spark, src, seed=7)
     sim.seed_orders(25)
+    pools = []
+    draw = sim.rng.sample
+    monkeypatch.setattr(sim.rng, "sample", lambda ids, k: pools.append(len(ids)) or draw(ids, k))
     before = src.read(spark).count()
     total_ops = {"inserts": 0, "updates": 0, "deletes": 0}
     for _ in range(5):
@@ -818,6 +824,7 @@ def test_simulator_sample_pool_bounds_driver_collect(spark, tmp_path):
             total_ops[k] += ops[k]
     after = src.read(spark).count()
     assert after == before + total_ops["inserts"] - total_ops["deletes"]
+    assert pools and max(pools) <= 5
     # ids keep advancing past the seeded range (max-id agg, not collect)
     assert sim._next_id > 25
 
@@ -1022,6 +1029,30 @@ def test_update_run_replaces_one_row_and_compiles_nothing_when_warm(spark, tmp_p
         "failed", 2, 1, 1, "boom", '{"n": 1}',
     )
     assert len(after) == 3
+
+
+def test_run_table_keeps_two_versions_on_disk(spark, tmp_path):
+    """Every start_run / update_run rewrites the whole run table; the
+    versions it supersedes are vacuumed, so 20 runs leave two version
+    directories (not 40, whose total size grows with the square of the
+    run count) and the queries read the same runs."""
+    meta = PipelineMetadataManager(spark, tmp_path / "meta")
+    t = (dt.datetime.utcnow() - dt.timedelta(hours=1)).replace(microsecond=0)
+    for i in range(20):
+        run = meta.start_run(run_id=f"r{i:02d}", now=t + dt.timedelta(seconds=10 * i))
+        meta.update_run(
+            run, "completed" if i % 4 else "failed", i, i, 0,
+            now=t + dt.timedelta(seconds=10 * i + 2),
+        )
+    assert len(list((tmp_path / "meta").glob("v*"))) <= 2
+    last = meta.last_run()
+    assert (last["run_id"], last["status"], last["records_processed"]) == ("r19", "completed", 19)
+    assert last["end_time"] - last["start_time"] == dt.timedelta(seconds=2)
+    stats = meta.stats()
+    assert (stats["total_runs"], stats["successful_runs"], stats["failed_runs"]) == (20, 15, 5)
+    assert stats["avg_duration_sec"] == 2.0
+    assert stats["total_records_processed"] == sum(range(20))
+    assert stats["last_completion"] == t + dt.timedelta(seconds=192)
 
 
 def test_steady_state_batch_compiles_almost_nothing(spark, change_df, tmp_path):

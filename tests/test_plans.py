@@ -245,6 +245,50 @@ def test_exported_operator_defaults_plan_no_unpartitioned_window(spark):
     assert offenders == {}
 
 
+# Order statistics come from a running count over the (group, distinct
+# value) table, so each window reads an aggregate bounded by the value
+# domain and never sorts the fact table.
+DOMAIN_BOUNDED_WINDOWS = ("agg_winsorized_stats", "agg_weighted_median", "events_mann_whitney_u")
+
+
+def test_order_statistic_windows_read_an_aggregate(registry_plans):
+    passthrough = {"SortExec", "ShuffleExchangeExec", *_UNWRAP}
+    for name in DOMAIN_BOUNDED_WINDOWS:
+        windows = [
+            n for n in _walk(registry_plans[name][1])
+            if n.getClass().getSimpleName() == "WindowExec"
+        ]
+        assert windows, name
+        for node in windows:
+            node = node.children().apply(0)
+            while node.getClass().getSimpleName() in passthrough:
+                node = node.children().apply(0)
+            assert node.getClass().getSimpleName() == "HashAggregateExec", (name, node.nodeName())
+
+
+# Rows whose values no other default-tier test checks: integer-exact
+# order statistics, z-score flags and gaps-and-islands, each against
+# its DuckDB oracle through the oracle sweep's own comparison.
+@pytest.mark.parametrize(
+    "name",
+    [*DOMAIN_BOUNDED_WINDOWS, "events_anomaly_zscore", "events_gap_islands"],
+)
+def test_row_matches_its_duckdb_oracle(spark, name):
+    import duckdb
+
+    from cdc_historical_warehouse_platform_spark.schemas import TESTDATA_TABLES
+    from tests.test_scripts import load_script
+
+    mod = _entry_module()
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+    got = mod.queries()[name](spark, SF_DIR).toPandas()
+    want = con.execute(mod.oracle_sql()[name]).fetchdf()
+    assert len(got) > 0
+    assert load_script("check_oracle").compare(name, got, want) == []
+
+
 def test_registry_contract():
     mod = _entry_module()
     q = mod.queries()

@@ -1,6 +1,6 @@
 """SCD2 merge semantics — mirrors the reference's validation suite
-(verify_scd2.py:291-342, technical_audit.py tests 1-4,
-scripts/test_rapid_updates.py) as fast local-Spark unit tests."""
+(verify_scd2.py:291-342, technical_audit.py tests 1-4 and its
+rapid-update test) as fast local-Spark unit tests."""
 
 from __future__ import annotations
 

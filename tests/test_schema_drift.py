@@ -36,6 +36,7 @@ def test_missing_and_extra_columns(spark):
     )
     aligned, report = align_to_schema(df, target)
     assert aligned.columns == ["id", "name", "gone_col"]
+    assert "Exchange" not in aligned._jdf.queryExecution().executedPlan().toString()
     assert report["missing"] == ["gone_col"]
     assert report["extra"] == ["new_col"]
     assert report["widened"] == []  # src == dst is handled before widening
@@ -83,6 +84,8 @@ def test_narrowing_rejected_then_try_cast(spark):
     assert report["narrowed"] == [("v", "bigint", "int")]
     vals = {r["v"] for r in aligned.collect()}
     assert vals == {None, 7}  # 2**40 unrepresentable -> NULL, not a crash
+    # the try_cast is one projection: aligning costs no pass of its own
+    assert "Exchange" not in aligned._jdf.queryExecution().executedPlan().toString()
 
 
 def test_decimal_policy(spark):
