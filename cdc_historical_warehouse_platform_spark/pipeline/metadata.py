@@ -1,9 +1,25 @@
 """Pipeline-run metadata — re-expresses pipeline_metadata.py (332 LoC of
-psycopg2) as a VersionedTable of run rows + pure DataFrame stats.
+psycopg2) as an append-only VersionedTable of run events + pure
+DataFrame stats.
 
 Statuses follow the reference's CHECK constraint plus the loader's
 extra value: running / completed / failed / cancelled /
 completed_with_errors (pipeline_metadata.py:74, scd2_loader.py:622).
+
+The reference INSERTs a row when a run starts and UPDATEs it when the
+run ends. Here each of those writes is one event row, written by
+pyarrow on the driver into a hidden stage and adopted as a new append
+segment (a filesystem move), so a load run launches no Spark job for
+its metadata. Reads fold the events into one row per run, the way
+Structured Streaming's file-sink log is replayed: ``pipeline_name``
+and ``start_time`` from the run's start event, every outcome field from
+its newest event. Events are ordered by ``seq``, the table version each
+was appended as, never by wall clock, so a host clock that steps back
+cannot fold a finished run back to ``running``. Once the latest version
+holds more than ``_MAX_SEGMENTS`` segments, the next append first
+commits the folded runs as one segment (the bound
+``SCD2DimStore.compact_history`` keeps), and every append vacuums the
+table to its newest two versions, so disk and pointer stay bounded.
 """
 
 from __future__ import annotations
@@ -14,20 +30,29 @@ import uuid
 from pathlib import Path
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from cdc_historical_warehouse_platform_spark.schemas import PIPELINE_METADATA_SCHEMA
 from cdc_historical_warehouse_platform_spark.session import empty_frame
-from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable
+from cdc_historical_warehouse_platform_spark.sources.tables import VersionedTable, fresh_stage
 
 __all__ = ["PipelineMetadataManager"]
 
-# the fields update_run replaces, keyed by run_id
-_OUTCOME_SCHEMA = T.StructType(
-    [f for f in PIPELINE_METADATA_SCHEMA.fields if f.name not in ("pipeline_name", "start_time")]
+# an event is a run row with every field nullable (an update event has
+# no start fields) plus the sequence number that orders a run's events
+_EVENT_SCHEMA = T.StructType(
+    [T.StructField(f.name, f.dataType, True) for f in PIPELINE_METADATA_SCHEMA.fields]
+    + [T.StructField("seq", T.LongType(), True)]
 )
+# timestamps as UTC instants, which Spark reads back as TimestampType
+_ARROW_EVENT_SCHEMA = to_arrow_schema(_EVENT_SCHEMA, timestamp_utc=True)
+_START_FIELDS = ("pipeline_name", "start_time")
+_MAX_SEGMENTS = 32
 
 
 class PipelineMetadataManager:
@@ -36,36 +61,70 @@ class PipelineMetadataManager:
         self.table = VersionedTable(path)
         self.pipeline_name = pipeline_name
 
-    def _runs(self) -> DataFrame:
+    # --- the event table ------------------------------------------------------
+
+    def _folded(self) -> pa.Table | None:
+        """One row per run at the event schema, ``seq`` its newest
+        event's; None before the first event. A run with no start event
+        is left out, as the reference's UPDATE of an unknown run
+        changes nothing."""
         if not self.table.exists():
+            return None
+        files = [str(f) for d in self.table.segment_dirs() for f in d.glob("*.parquet")]
+        events = pq.read_table(files, schema=_ARROW_EVENT_SCHEMA).sort_by("seq")
+        # "last" in seq order: start fields skip the update events' nulls,
+        # outcome fields take the newest event's value, null or not
+        newest = pc.ScalarAggregateOptions(skip_nulls=False)
+        started = pc.ScalarAggregateOptions(skip_nulls=True)
+        fields = _ARROW_EVENT_SCHEMA.names[1:]
+        runs = events.group_by("run_id", use_threads=False).aggregate(
+            [(c, "last", started if c in _START_FIELDS else newest) for c in fields]
+        )
+        runs = pa.table(
+            [runs["run_id"], *(runs[f"{c}_last"] for c in fields)], schema=_ARROW_EVENT_SCHEMA
+        )
+        return runs.filter(pc.is_valid(runs["start_time"]))
+
+    def _adopt(self, rows: pa.Table, adopt) -> None:
+        """Write ``rows`` into a fresh stage with pyarrow and hand it to
+        ``adopt`` (the table's ``append_dir`` or ``commit_dir``): no
+        Spark job, and readers never see a half-written file."""
+        stage = fresh_stage(self.table.path)
+        stage.mkdir()
+        pq.write_table(rows, stage / "part-0.parquet")
+        adopt(stage, _EVENT_SCHEMA.json(), _EVENT_SCHEMA.names)
+
+    def _append(self, event: dict) -> None:
+        if self.table.exists() and len(self.table.segment_dirs()) > _MAX_SEGMENTS:
+            self._adopt(self._folded(), self.table.commit_dir)
+        row = {**event, "seq": self.table.version() + 1}
+        self._adopt(pa.Table.from_pylist([row], _ARROW_EVENT_SCHEMA), self.table.append_dir)
+        self.table.vacuum(keep_last=2)
+
+    def _runs(self) -> DataFrame:
+        runs = self._folded()
+        if runs is None:
             return empty_frame(self.spark, PIPELINE_METADATA_SCHEMA)
-        return self.table.read(self.spark)
+        # Arrow rows travel as a JVM-side LocalRelation: no Python worker
+        return self.spark.createDataFrame(runs.drop_columns("seq"), PIPELINE_METADATA_SCHEMA)
 
     # --- lifecycle (pipeline_metadata.py:112-253) ---------------------------
-
-    def _row(self, schema, values) -> DataFrame:
-        """One row as data: it travels as Arrow (a JVM-side
-        LocalRelation, no Python worker), not as literals, which would
-        make every run compile fresh classes. Arrow reads a naive
-        timestamp in the session time zone, so callers hand it instants
-        in UTC (pyarrow keeps the wall clock of any other offset)."""
-        return self.spark.createDataFrame(
-            pa.Table.from_pylist([dict(zip(schema.names, values))]), schema
-        )
-
-    def _commit(self, runs: DataFrame, txn_id: str) -> None:
-        """Every commit rewrites the whole run table, so drop all but
-        the newest two versions: disk use then grows with the number
-        of runs, not with its square."""
-        self.table.commit(runs, txn_id=txn_id)
-        self.table.vacuum(keep_last=2)
+    # A naive datetime is local time to pyspark, but Arrow would store
+    # its wall clock as UTC, so both events hand Arrow UTC instants.
 
     def start_run(self, run_id: str | None = None, now: _dt.datetime | None = None) -> str:
         run_id = run_id or f"{self.pipeline_name}_{uuid.uuid4().hex[:12]}"
-        start = (now or _dt.datetime.utcnow()).astimezone(_dt.timezone.utc)
-        values = (run_id, self.pipeline_name, start, None, "running", 0, 0, 0, None, None)
-        row = self._row(PIPELINE_METADATA_SCHEMA, values)
-        self._commit(self._runs().unionByName(row), f"start:{run_id}")
+        self._append(
+            {
+                "run_id": run_id,
+                "pipeline_name": self.pipeline_name,
+                "start_time": (now or _dt.datetime.utcnow()).astimezone(_dt.timezone.utc),
+                "status": "running",
+                "records_processed": 0,
+                "records_successful": 0,
+                "records_failed": 0,
+            }
+        )
         return run_id
 
     def update_run(
@@ -79,35 +138,22 @@ class PipelineMetadataManager:
         performance_metrics: dict | None = None,
         now: _dt.datetime | None = None,
     ) -> None:
-        """Replace the run's outcome fields; its start_time and
-        pipeline_name stay as the table has them."""
-        now = now or _dt.datetime.utcnow()
-        values = (
-            run_id,
-            now.astimezone(_dt.timezone.utc),
-            status,
-            records_processed,
-            records_successful,
-            records_failed,
-            error_message,
-            json.dumps(performance_metrics) if performance_metrics else None,
+        """Record the run's outcome fields; its start_time and
+        pipeline_name stay as its start event has them."""
+        self._append(
+            {
+                "run_id": run_id,
+                "end_time": (now or _dt.datetime.utcnow()).astimezone(_dt.timezone.utc),
+                "status": status,
+                "records_processed": records_processed,
+                "records_successful": records_successful,
+                "records_failed": records_failed,
+                "error_message": error_message,
+                "performance_metrics": (
+                    json.dumps(performance_metrics) if performance_metrics else None
+                ),
+            }
         )
-        outcome = _OUTCOME_SCHEMA.names[1:]
-        ended = self._row(_OUTCOME_SCHEMA, values).select(
-            "run_id", F.lit(True).alias("__ended"), *[F.col(c).alias(f"__{c}") for c in outcome]
-        )
-        # a left join keeps the table's partitioning: one file per
-        # partition, as before, and every other run's row as it was
-        updated = self._runs().join(ended, "run_id", "left").select(
-            "run_id",
-            "pipeline_name",
-            "start_time",
-            *[
-                F.when(F.col("__ended"), F.col(f"__{c}")).otherwise(F.col(c)).alias(c)
-                for c in outcome
-            ],
-        )
-        self._commit(updated, f"update:{run_id}:{status}:{now.isoformat()}")
 
     # --- queries (W2, A4) ---------------------------------------------------
 

@@ -16,6 +16,12 @@ driver harness, streaming jobs) gets identical semantics:
   ``cdc_microbatch`` (each body once per classloader); the engine's
   default of 100 evicts all of it every cycle, so Janino recompiled
   ~140 classes per batch. 1000 is ~3× the largest working set.
+- whole-stage classes named without their codegen stage id — AQE
+  numbers a query's stages as they are re-planned, so the id of one
+  pipeline depends on which of its concurrent shuffles finished first;
+  with the id in the class name, the same plan missed the cache in
+  about half of the steady-state batches of
+  ``tests/test_pipeline.py::test_steady_state_batch_compiles_almost_nothing``.
 """
 
 from __future__ import annotations
@@ -66,6 +72,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Codec + scan-split knobs (r12 optimization round, guide
         # §2.3/§6): the local defaults ARE the engine defaults — zstd
         # shuffle/parquet codecs and 512m-1g splits were A/B'd at sf0.1

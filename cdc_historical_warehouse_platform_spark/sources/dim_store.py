@@ -19,7 +19,6 @@ without a distributed log).
 from __future__ import annotations
 
 import json
-import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -37,21 +36,12 @@ from cdc_historical_warehouse_platform_spark.operators.scd2 import (
 )
 from cdc_historical_warehouse_platform_spark.sources.tables import (
     VersionedTable,
+    fresh_stage,
     read_pointer,
     write_pointer,
 )
 
 __all__ = ["SCD2DimStore"]
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # alive, owned by someone else
-    return True
 
 
 def _seed_or_merge_tagged(
@@ -83,25 +73,6 @@ def _seed_or_merge_tagged(
     return scd2_merge_tagged(
         cur, changes, batch_id=batch_id, hint_broadcast=not first
     )
-
-
-def _reclaim_stages(root: Path) -> None:
-    """Reclaim ``._stage_{pid}`` dirs left by CRASHED runs without
-    destroying a live concurrent writer's in-progress stage: our own
-    pid's stage is always removed (we are about to rewrite it); another
-    pid's stage only when that pid no longer exists. The store is
-    contractually single-writer — this just makes the failure mode of a
-    violated contract a clean losing race instead of a corrupted
-    partial-stage adoption."""
-    own = os.getpid()
-    for stale in root.glob("._stage_*"):
-        try:
-            pid = int(stale.name.rsplit("_", 1)[-1])
-        except ValueError:
-            pid = None
-        if pid is not None and pid != own and _pid_alive(pid):
-            continue
-        shutil.rmtree(stale, ignore_errors=True)
 
 
 def _run_concurrently(spark: SparkSession, calls) -> list:
@@ -245,8 +216,7 @@ class SCD2DimStore:
         if txn_id in txns:
             return False
 
-        _reclaim_stages(self.path)
-        stage = self.path / f"._stage_{os.getpid()}"
+        stage = fresh_stage(self.path)
 
         def _stage():
             if meta is None:

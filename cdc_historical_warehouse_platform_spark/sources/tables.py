@@ -40,6 +40,7 @@ __all__ = [
     "VersionedTable",
     "atomic_write_text",
     "BucketedSegmentTable",
+    "fresh_stage",
     "PrunedTxnVersionError",
     "read_pointer",
     "register_bucketed_dir",
@@ -94,6 +95,41 @@ def write_pointer(root: str | Path, meta: dict) -> None:
     atomic_write_text(Path(root) / _POINTER, json.dumps(meta))
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # alive, owned by someone else
+    return True
+
+
+def fresh_stage(root: str | Path) -> Path:
+    """The caller's hidden staging directory under ``root``
+    (``._stage_{pid}``, which Hadoop listings and ``vacuum`` skip), to
+    be filled and then adopted by ``commit_dir`` / ``append_dir``.
+
+    Stages left by CRASHED writers are reclaimed first, without
+    destroying a live concurrent writer's in-progress stage: our own
+    pid's stage is always removed (we are about to rewrite it); another
+    pid's stage only when that pid no longer exists. Tables are
+    contractually single-writer — this just makes the failure mode of a
+    violated contract a clean losing race instead of a corrupted
+    partial-stage adoption."""
+    root = Path(root)
+    own = os.getpid()
+    for stale in root.glob("._stage_*"):
+        try:
+            pid = int(stale.name.rsplit("_", 1)[-1])
+        except ValueError:
+            pid = None
+        if pid is not None and pid != own and _pid_alive(pid):
+            continue
+        shutil.rmtree(stale, ignore_errors=True)
+    return root / f"._stage_{own}"
+
+
 def _pruned_txn_versions(txn_versions: dict) -> dict:
     if len(txn_versions) <= _TXN_VERSION_RETENTION:
         return txn_versions
@@ -130,6 +166,8 @@ class VersionedTable:
         try:
             return meta["manifests"][str(v)]
         except KeyError:
+            if 0 <= v < meta["version"]:  # vacuum dropped its entry
+                raise FileNotFoundError(f"version {v} of {self.path} was vacuumed") from None
             raise FileNotFoundError(f"table {self.path} has no version {v}") from None
 
     def _segment_dirs(self, meta: dict, version: int | None) -> list[Path]:
@@ -318,7 +356,9 @@ class VersionedTable:
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop segment directories not referenced by the manifests of
-        the newest ``keep_last`` versions."""
+        the newest ``keep_last`` versions, and the manifest entry of
+        every version that loses a segment, so the pointer lists only
+        versions that can still be read."""
         meta = self._read_pointer()
         if meta is None:
             return []
@@ -335,6 +375,13 @@ class VersionedTable:
             if vdir.name not in keep:
                 shutil.rmtree(vdir)
                 removed.append(v)
+        manifests = {
+            v: segments
+            for v, segments in meta["manifests"].items()
+            if keep.issuperset(segments)
+        }
+        if len(manifests) < len(meta["manifests"]):
+            self._write_pointer({**meta, "manifests": manifests})
         return removed
 
 
